@@ -1,19 +1,22 @@
 """Distributed inverted-index build.
 
-Dataflow (default strategy="sortmerge"):
+Dataflow:
 
   docs(doc_id, text)
-    -[mapInPandas: vectorized tokenize+count]-> tokens(doc_id, term, occ)
-    tokens += tf (byte-saturated), dfc (df contribution)      [pure SQL]
-    term_df   = tokens groupBy(term) sum(dfc)                  [shuffle 1]
+    -[mapInPandas: fused tokenize + map-side partial encode]->
+              partials(term, df, n_docs, payload, weights): one
+              compressed posting partial per (input partition, term),
+              + one per-partition doc-length sidecar row
+    term_df   = partials groupBy(term) sum(df)                 [shuffle 1]
     stop set  = df > stop_term_limit, written BY SPARK and anti-joined on
                 the cluster (AQE picks broadcast when small); the driver
                 collects only a bounded 100-term manifest sample
-    doc_stats = live groupBy(doc_id) sum(tf)                   [shuffle 2]
-    postings  = live repartition(term-bucket)                  [shuffle 3]
-                -> sortWithinPartitions(term, packed)          [spillable sort]
-                -> streaming Arrow pass: run-length group by term,
-                   delta+varint encode, per-block byte offsets + max scores
+    doc_stats = sidecar dl - stop partials' tf, groupBy(doc_id) [shuffle 2]
+    postings  = live partials repartition(bucket, term-hash x4) [shuffle 3]
+                -> sortWithinPartitions(term-hash, term)       [spillable sort]
+                -> streaming Arrow merge: concat a term's partials,
+                   re-sort by doc id, delta+varint encode, per-block byte
+                   offsets + max scores
     concurrent aux jobs (one shared thread pool; their stages fill
             scheduler gaps): prefixes/champions/doc_meta, and the word
             family (ONE normalize+split pass -> persisted (doc, word)
@@ -28,21 +31,19 @@ Dataflow (default strategy="sortmerge"):
             variants/, term_dict/, MANIFEST.json, checkpoints/ (per-bucket
             lineage + metrics rows)
 
-Skew (Zipfian 3-grams at 10^12 docs):
-- tokens are pre-aggregated per doc inside the Arrow batch, so shuffles
-  carry one row per (doc, unique term), not per token occurrence;
-- stop-term pruning caps any single term's postings at stop_term_limit;
-- the sort-merge path has no per-key buffers: a hot term is just a longer
-  sorted run inside a spillable Tungsten sort, so no salting is required
-  for correctness or memory;
-- strategy="salted-agg" keeps the explicit alternative: collect_list
-  aggregation where the Zipf head (df > hot_df_threshold) goes through a
-  salted two-stage partial merge — useful when a downstream consumer
-  wants materialized posting arrays instead of encoded payloads;
+Skew (Zipfian 3-grams at 10^12 docs) is handled by one path:
+- per-doc pre-aggregation: tokens are counted per doc inside the Arrow
+  batch and encoded into one partial per (partition, term), so the
+  exchange carries vocabulary-granular compressed rows, not one row per
+  posting or token occurrence;
+- the stop-term cap (stop_term_limit) bounds any single term's postings;
+- the exchange key is (bucket, term-hash x4): every partial of a term
+  lands in one partition while the sub-split evens out partition sizes;
+- a hot term is just a longer run inside a spillable Tungsten sort, so
+  no per-key buffers and no salting are needed for correctness or memory;
 - bucket partitioning on crc32(term) + sortWithinPartitions(term) gives
   the query path partition pruning + parquet min/max row-group skipping;
-  the bucket is a bare expression at shuffle time (never a column on the
-  posting-granular rows) and is recomputed per output term by the encoder.
+  the merge recomputes the bucket once per output term.
 
 Checkpoint/resume: postings are written one bucket-group at a time; each
 completed group appends per-bucket checkpoint rows (lineage: input
@@ -52,6 +53,7 @@ completed buckets.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -62,23 +64,17 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from infidex_spark.build.codec import encode_postings_batch
-from infidex_spark.build.tokenizer import tokenize_batch_frames
 from infidex_spark.kernel.engine import DEFAULT_FIELD_WEIGHT, DEFAULT_STOP_TERM_LIMIT
+from infidex_spark.kernel.strings import factorize_strings
 from infidex_spark.kernel.tokenize import DEFAULT_INDEX_SIZES, DEFAULT_START_PAD
-
-TOKENS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("occ", T.LongType(), False),
-    ]
-)
 
 # parquet row-group size for POINT-READ tables (postings, prefixes,
 # wm_words, variants, ...): the reader's to_table(filter=key==x) calls
@@ -120,186 +116,6 @@ def _tf_cap(field_weight: float) -> int:
     return int(math.floor(255.0 - field_weight)) + 1
 
 
-def tokenize_docs(
-    docs: DataFrame,
-    sizes: tuple[int, ...] = DEFAULT_INDEX_SIZES,
-    start_pad: int = DEFAULT_START_PAD,
-    synonym_map=None,
-) -> DataFrame:
-    """docs(doc_id, text) -> tokens(doc_id, term, occ), Arrow-vectorized.
-    synonym_map (kernel.synonyms.SynonymMap) canonicalizes word tokens
-    before shingling, exactly as at query time."""
-
-    from infidex_spark.kernel.normalize import normalize_series
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy()
-            texts = normalize_series(pdf["text"].fillna("")).str.lower()
-            if synonym_map is not None and synonym_map.has_mappings:
-                texts = synonym_map.canonicalize_series(texts)
-            for frame in tokenize_batch_frames(
-                texts, sizes=sizes, start_pad=start_pad, prenormalized=True
-            ):
-                frame["doc_id"] = ids[frame["doc_idx"].to_numpy()]
-                yield frame[["doc_id", "term", "occ"]]
-
-    return docs.select("doc_id", "text").mapInPandas(run, schema=TOKENS_SCHEMA)
-
-
-FIELDS_TOKENS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("term", T.StringType(), False),
-        T.StructField("tf", T.LongType(), False),
-        T.StructField("dfc", T.LongType(), False),
-    ]
-)
-
-
-def tokenize_docs_fields(
-    docs: DataFrame,
-    fields: list[tuple[str, int]],
-    sizes: tuple[int, ...] = DEFAULT_INDEX_SIZES,
-    start_pad: int = DEFAULT_START_PAD,
-    synonym_map=None,
-) -> DataFrame:
-    """Multi-field tokenization: docs carrying the field columns ->
-    (doc_id, term, tf, dfc) with the tf byte-saturating fold applied
-    per occurrence at its field's weight, exactly as the kernel's
-    FirstCycleAdd port (reference: DocumentFields.cs:124 '§' concat,
-    VectorModel.cs:96-128 DetermineFieldWeight + per-token weight).
-
-    tf depends on the ORDER of occurrence weights (round-to-even at every
-    accumulate), so it cannot be a closed form of the occurrence count;
-    the whole batch folds in numpy (build.tokenizer.tokenize_fields_batch
-    — no per-row Python; the rounds loop advances every multi-occurrence
-    (doc, term) group at once). Weight indices: 0=High(1.5) 1=Med(1.25)
-    2=Low(1.0)."""
-    from infidex_spark.build.tokenizer import tokenize_fields_batch
-    from infidex_spark.kernel.engine import FIELD_DELIM
-
-    cols = [c for c, _ in fields]
-    widxs = [int(w) for _, w in fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].to_numpy()
-            fvals = [pdf[c].fillna("").astype(str) for c in cols]
-            # '§'-concatenated raw text + per-doc boundary offsets
-            # (field_boundaries semantics, vectorized: boundary j starts
-            # at sum of previous raw lengths + j delimiters)
-            raw = fvals[0].str.cat(fvals[1:], sep=FIELD_DELIM) if len(cols) > 1 else fvals[0]
-            bpos = np.zeros((len(pdf), len(cols)), dtype=np.int64)
-            acc = np.zeros(len(pdf), dtype=np.int64)
-            for j in range(len(cols) - 1):
-                acc += fvals[j].str.len().to_numpy(dtype=np.int64) + 1
-                bpos[:, j + 1] = acc
-            out = tokenize_fields_batch(
-                raw, bpos, widxs, sizes, start_pad, synonym_map
-            )
-            if len(out) == 0:
-                continue
-            out["doc_id"] = ids[out["doc_idx"].to_numpy()]
-            yield out[["doc_id", "term", "tf", "dfc"]]
-
-    return docs.select("doc_id", *cols).mapInPandas(run, schema=FIELDS_TOKENS_SCHEMA)
-
-
-def _encode_sorted_stream(n_buckets: int):
-    """mapInPandas encoder over a bucket-partitioned, term-sorted token
-    stream: rows (term, packed, dfc) sorted by (term, packed) within the
-    partition. Groups are detected by term change; the rows of each
-    batch's final term are carried into the next batch (a hot term's
-    postings may span Arrow batches), so no group is ever split.
-
-    This is the sort-merge merge step: one shuffle (by term bucket), one
-    sort, one streaming numpy pass — no collect_list materialization.
-
-    The bucket is recomputed here (one crc32 per OUTPUT term, matching
-    the query driver's term_bucket) instead of riding the shuffle as a
-    column: shuffle rows are posting-granular, so every dropped 8-byte
-    field saves n_postings * 8 bytes of shuffle I/O — the least
-    core-scalable resource on a node.
-    """
-    import zlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pend_term: str | None = None
-        pend_packed: list[np.ndarray] = []
-        pend_dfc = 0
-
-        def encode_group(terms, packed_lists, dfs) -> pd.DataFrame:
-            enc = encode_postings_batch(packed_lists)
-            return pd.DataFrame(
-                {
-                    "term": terms,
-                    "df": np.asarray(dfs, dtype=np.int64),
-                    "n_docs": enc["n_docs"],
-                    "max_tf": enc["max_tf"],
-                    "payload": enc["payload"],
-                    "weights": enc["weights"],
-                    "block_last_doc": enc["block_last_doc"],
-                    "block_max_w": enc["block_max_w"],
-                    "block_offsets": enc["block_offsets"],
-                    "bucket": np.asarray(
-                        [zlib.crc32(t.encode("utf-8")) % n_buckets for t in terms],
-                        dtype=np.int32,
-                    ),
-                }
-            )
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            terms = pdf["term"].to_numpy()
-            packed = pdf["packed"].to_numpy()
-            dfc = pdf["dfc"].to_numpy()
-            # group boundaries by term change
-            change = np.empty(len(terms), dtype=bool)
-            change[0] = True
-            change[1:] = terms[1:] != terms[:-1]
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], len(terms))
-
-            out_terms, out_lists, out_dfs = [], [], []
-            for gi in range(len(starts)):
-                s, e = int(starts[gi]), int(ends[gi])
-                t = terms[s]
-                is_last = gi == len(starts) - 1
-                if pend_term is not None and t == pend_term:
-                    pend_packed.append(packed[s:e])
-                    pend_dfc += int(dfc[s:e].sum())
-                    if not is_last:
-                        out_terms.append(pend_term)
-                        out_lists.append(np.concatenate(pend_packed))
-                        out_dfs.append(pend_dfc)
-                        pend_term, pend_packed, pend_dfc = None, [], 0
-                    continue
-                if pend_term is not None:
-                    # pending term ended at the batch boundary
-                    out_terms.append(pend_term)
-                    out_lists.append(np.concatenate(pend_packed))
-                    out_dfs.append(pend_dfc)
-                    pend_term, pend_packed, pend_dfc = None, [], 0
-                if is_last:
-                    pend_term = t
-                    pend_packed = [packed[s:e]]
-                    pend_dfc = int(dfc[s:e].sum())
-                else:
-                    out_terms.append(t)
-                    out_lists.append(packed[s:e])
-                    out_dfs.append(int(dfc[s:e].sum()))
-            if out_terms:
-                yield encode_group(out_terms, out_lists, out_dfs)
-        if pend_term is not None:
-            yield encode_group(
-                [pend_term], [np.concatenate(pend_packed)], [pend_dfc]
-            )
-
-    return run
-
-
 # fused tokenize->partial-encode output: term partials (kind 0: term,
 # partial df, n_docs, varint payload + tf weights) + one per-partition
 # doc-length sidecar row (kind 1, the
@@ -338,9 +154,9 @@ def _fused_tokenize_partials(
     (~30x fewer rows, ~20x fewer bytes) plus one per-partition doc->
     total-dl sidecar row, so doc_stats needs no token table either
     (guide §4.1: control how many columns/rows cross; §2.3: shuffle
-    fewer bytes). Grouping/encoding is identical to the former
-    _partial_encode_stream — the merge stage and every downstream table
-    are bit-identical (asserted by the build parity tests)."""
+    fewer bytes). After the merge, every postings row is byte-equal to
+    encoding the kernel's posting list for that term (asserted by the
+    build parity tests)."""
     from infidex_spark.kernel.normalize import normalize_series
     from infidex_spark.build.tokenizer import (
         tokenize_batch_frames,
@@ -366,9 +182,7 @@ def _fused_tokenize_partials(
                 codes = term_col.cat.codes.to_numpy().astype(np.int64)
                 cats = term_col.cat.categories.to_numpy()
             else:
-                codes, cats = pd.factorize(term_col.to_numpy())
-                codes = codes.astype(np.int64)
-                cats = np.asarray(cats, dtype=object)
+                codes, cats = factorize_strings(term_col.to_numpy())
             codes_l.append(codes + offset)
             offset += len(cats)
             cats_l.append(cats)
@@ -434,7 +248,7 @@ def _fused_tokenize_partials(
         # unify the per-frame term dictionaries (vocab-sized, not
         # posting-sized), then group exactly as the partial encoder did
         all_cats = np.concatenate(cats_l)
-        ucodes, uterms = pd.factorize(all_cats)
+        ucodes, uterms = factorize_strings(all_cats)
         codes = ucodes[np.concatenate(codes_l)]
         packed = np.concatenate(packed_l)
         dfc = np.concatenate(dfc_l)
@@ -478,12 +292,12 @@ def _fused_tokenize_partials(
 
 def _merge_partial_stream(n_buckets: int):
     """Reduce-side merge of partial posting blobs into the final encoded
-    rows (bit-identical to encoding the raw sorted stream: doc ids are
-    unique per term, so sort-after-concat reproduces the global doc
-    order). Rows arrive term-contiguous (sorted by xxhash64(term), term);
-    a term's partials may span Arrow batches, so the last group of each
-    batch is carried forward — the same no-split invariant as
-    _encode_sorted_stream.
+    rows (bit-identical to encoding the term's whole posting list at
+    once: doc ids are unique per term, so sort-after-concat reproduces
+    the global doc order). Rows arrive term-contiguous (sorted by
+    xxhash64(term), term); a term's partials may span Arrow batches, so
+    the last group of each batch is carried forward and no term is ever
+    split across output rows.
 
     Vectorized whole-batch merge (guide §4.2 — batch work through numpy,
     not per-row Python): ALL partial payloads of a batch decode in ONE
@@ -610,13 +424,35 @@ def _merge_partial_stream(n_buckets: int):
     return run
 
 
+# thread-local Spark properties build_index sets on the calling thread
+_BUILD_LOCAL_PROPERTIES = ("spark.job.description", "spark.scheduler.pool")
+
+
+def _restores_local_properties(fn):
+    """Decorator: restore the caller's thread-local job description and
+    scheduler pool when fn returns or raises (unset ones are unset
+    again)."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, *args, **kwargs):
+        sc = spark.sparkContext
+        saved = [(k, sc.getLocalProperty(k)) for k in _BUILD_LOCAL_PROPERTIES]
+        try:
+            return fn(spark, *args, **kwargs)
+        finally:
+            for k, v in saved:
+                sc.setLocalProperty(k, v)
+
+    return run
+
+
+@_restores_local_properties
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
     out_dir: str,
     n_buckets: int = 32,
     salts: int = 8,
-    hot_df_threshold: int = 100_000,
     bucket_groups: int = 1,
     stop_term_limit: int = DEFAULT_STOP_TERM_LIMIT,
     field_weight: float = DEFAULT_FIELD_WEIGHT,
@@ -624,10 +460,7 @@ def build_index(
     start_pad: int = DEFAULT_START_PAD,
     max_prefix_docs: int = 100_000,
     resume: bool = False,
-    keep_tokens: bool = False,
     aux: bool = True,
-    tokens_storage: str = "auto",
-    strategy: str = "sortmerge",
     synonym_map=None,
     fields: list[tuple[str, int]] | None = None,
     html_col: str | None = None,
@@ -650,10 +483,13 @@ def build_index(
     short-query path, LD1 variant dictionary for fuzzy expansion) — the
     BM25 core (postings + doc stats + stop terms) is always built.
 
-    tokens_storage: "parquet" materializes the token table on disk (needed
-    for resume and for very large inputs), "memory" uses a persisted
-    DataFrame (MEMORY_AND_DISK — fewer write/read round-trips), "auto"
-    picks parquet when resume/bucket_groups>1, else memory.
+    The fused tokenize stage's partials table is materialized once and
+    read by the term_df, doc_stats and postings jobs: as parquet under
+    out_dir/tokens when resume or bucket_groups > 1 (a resumed build
+    reuses it; removed at build end), else as a persisted DataFrame
+    (MEMORY_AND_DISK — fewer write/read round-trips).
+
+    salts is accepted for older callers and ignored.
 
     short_precompute: build the pattern_scores short-query aggregates
     (one extra postings-sized pass). None (default) enables it only at
@@ -791,32 +627,19 @@ def build_index(
         docs = docs.withColumn("text", F.concat(*parts))
 
     cap = _tf_cap(field_weight)
-    if tokens_storage == "auto":
-        tokens_storage = "parquet" if (resume or bucket_groups > 1) else "memory"
+    tokens_on_disk = resume or bucket_groups > 1
     tokens_path = os.path.join(out_dir, "tokens")
-    # sortmerge (default) runs the FUSED tokenize->partial-encode stage:
-    # the materialized table is vocabulary-granular compressed partials
-    # (+ per-partition dl sidecars), not the posting-granular token rows
-    # — ~30x fewer rows over the Python boundary and into the cache. The
-    # salted-agg strategy aggregates raw packed token rows with
-    # collect_list, so it keeps the legacy token table.
-    fused_mode = strategy != "salted-agg"
-    if fused_mode:
-        sel_cols = ["doc_id"] + (
-            [c for c, _ in fields] if fields is not None else ["text"]
-        )
-        tokens = docs.select(*sel_cols).mapInPandas(
-            _fused_tokenize_partials(sizes, start_pad, synonym_map, cap, fields),
-            schema=FUSED_SCHEMA,
-        )
-    elif fields is not None:
-        tokens = tokenize_docs_fields(docs, fields, sizes, start_pad, synonym_map)
-    else:
-        tokens = tokenize_docs(docs, sizes, start_pad, synonym_map).withColumn(
-            "tf", F.least(F.col("occ"), F.lit(cap))
-        )
-        # df contribution per (term, doc): occ - successful accumulates
-        tokens = tokens.withColumn("dfc", F.col("occ") - F.col("tf") + F.lit(1))
+    # the FUSED tokenize->partial-encode stage: the materialized table is
+    # vocabulary-granular compressed partials (+ per-partition dl
+    # sidecars), not posting-granular token rows — ~30x fewer rows over
+    # the Python boundary and into the cache
+    sel_cols = ["doc_id"] + (
+        [c for c, _ in fields] if fields is not None else ["text"]
+    )
+    tokens = docs.select(*sel_cols).mapInPandas(
+        _fused_tokenize_partials(sizes, start_pad, synonym_map, cap, fields),
+        schema=FUSED_SCHEMA,
+    )
     # ---- docs-derived aux jobs submit BEFORE the tokens materialization:
     # _build_prefixes and _build_word_family read only the persisted docs
     # input, so their stages overlap the tokenize pass. At low
@@ -870,7 +693,7 @@ def build_index(
     )
 
     spark.sparkContext.setJobDescription("build:tokenize")
-    if tokens_storage == "parquet":
+    if tokens_on_disk:
         if not (resume and os.path.isdir(tokens_path)):
             tokens.write.mode("overwrite").parquet(tokens_path)
         tokens = spark.read.parquet(tokens_path)
@@ -888,15 +711,12 @@ def build_index(
     # 100-term sample for the manifest — at 10^12 docs nearly the whole
     # vocabulary clears any fixed threshold, so an unbounded head collect
     # is a scale-killer (VERDICT r1 'What's wrong' #6).
-    if fused_mode:
-        # partials are vocabulary-granular: their per-partition dfs sum
-        # to exactly the token-level sum(dfc)
-        partials_all = tokens.filter(F.col("kind") == 0).select(
-            "term", "df", "n_docs", "payload", "weights"
-        )
-        term_df = partials_all.groupBy("term").agg(F.sum("df").alias("df"))
-    else:
-        term_df = tokens.groupBy("term").agg(F.sum("dfc").alias("df"))
+    # partials are vocabulary-granular: their per-partition dfs sum to
+    # exactly the token-level df
+    partials_all = tokens.filter(F.col("kind") == 0).select(
+        "term", "df", "n_docs", "payload", "weights"
+    )
+    term_df = partials_all.groupBy("term").agg(F.sum("df").alias("df"))
     stop_dir = os.path.join(out_dir, "stop_terms")
     spark.sparkContext.setJobDescription("build:term_df_stop")
     term_df.filter(F.col("df") > stop_term_limit).select("term").write.mode(
@@ -925,16 +745,11 @@ def build_index(
         if n_stop
         else None
     )
-    if fused_mode:
-        live = (
-            partials_all.join(stop_tdf, "term", "left_anti")
-            if n_stop
-            else partials_all
-        )
-    elif n_stop:
-        live = tokens.join(stop_tdf, "term", "left_anti")
-    else:
-        live = tokens
+    live = (
+        partials_all.join(stop_tdf, "term", "left_anti")
+        if n_stop
+        else partials_all
+    )
     _mark("term_df_stop")
 
     agg_row = fut_agg.result()
@@ -960,72 +775,51 @@ def build_index(
             stacklevel=2,
         )
 
-    # skew head for the salted-agg alternative: threshold scales with N
-    # (fixed floor at small corpora keeps behavior identical there) and
-    # the set itself is capped — the salting exists for the extreme head,
-    # not the whole Zipf body.
-    hot_rows: list[str] = []
-    if strategy == "salted-agg":
-        hot_df_eff = max(hot_df_threshold, n_docs_total // 100)
-        hot_rows = [
-            r.term
-            for r in term_df.filter(
-                (F.col("df") > hot_df_eff) & (F.col("df") <= stop_term_limit)
-            )
-            .orderBy(F.desc("df"), "term")
-            .limit(10_000)
-            .select("term", "df")
-            .collect()
-        ]
-
     # ---- doc stats (shuffle 2): needs the live token stream, so it
     # submits here; prefixes/word_family are already running (above)
 
     def _doc_stats_job() -> float:
-        if fused_mode:
-            # dl per doc = (all-terms dl sidecar) - (stop terms' tf,
-            # decoded from just the stop partials). Both legs are exact
-            # integer sums, identical to summing tf over live token rows.
-            dl_all = (
-                tokens.filter(F.col("kind") == 1)
-                .select(F.explode(F.arrays_zip("doc_ids", "dls")).alias("z"))
-                .select(
-                    F.col("z.doc_ids").alias("doc_id"),
-                    F.col("z.dls").alias("dl"),
-                )
+        # dl per doc = (all-terms dl sidecar) - (stop terms' tf,
+        # decoded from just the stop partials). Both legs are exact
+        # integer sums, identical to summing tf over live token rows.
+        dl_all = (
+            tokens.filter(F.col("kind") == 1)
+            .select(F.explode(F.arrays_zip("doc_ids", "dls")).alias("z"))
+            .select(
+                F.col("z.doc_ids").alias("doc_id"),
+                F.col("z.dls").alias("dl"),
             )
-            if n_stop:
-                from infidex_spark.build.codec import decode_postings
+        )
+        if n_stop:
+            from infidex_spark.build.codec import decode_postings
 
-                def decode_neg(
-                    batches: Iterator[pd.DataFrame],
-                ) -> Iterator[pd.DataFrame]:
-                    idl: list[np.ndarray] = []
-                    wl: list[np.ndarray] = []
-                    for pdf in batches:
-                        for p, w, nn in zip(
-                            pdf["payload"], pdf["weights"], pdf["n_docs"]
-                        ):
-                            i_, w_ = decode_postings(p, w, int(nn))
-                            idl.append(i_)
-                            wl.append(w_)
-                    if not idl:
-                        return
-                    ids = np.concatenate(idl)
-                    ws = np.concatenate(wl).astype(np.float64)
-                    u, inv = np.unique(ids, return_inverse=True)
-                    sums = np.bincount(inv, weights=ws).astype(np.int64)
-                    yield pd.DataFrame({"doc_id": u, "dl": -sums})
+            def decode_neg(
+                batches: Iterator[pd.DataFrame],
+            ) -> Iterator[pd.DataFrame]:
+                idl: list[np.ndarray] = []
+                wl: list[np.ndarray] = []
+                for pdf in batches:
+                    for p, w, nn in zip(
+                        pdf["payload"], pdf["weights"], pdf["n_docs"]
+                    ):
+                        i_, w_ = decode_postings(p, w, int(nn))
+                        idl.append(i_)
+                        wl.append(w_)
+                if not idl:
+                    return
+                ids = np.concatenate(idl)
+                ws = np.concatenate(wl).astype(np.float64)
+                u, inv = np.unique(ids, return_inverse=True)
+                sums = np.bincount(inv, weights=ws).astype(np.int64)
+                yield pd.DataFrame({"doc_id": u, "dl": -sums})
 
-                stop_parts = partials_all.join(
-                    stop_tdf, "term", "left_semi"
-                ).select("payload", "weights", "n_docs")
-                dl_all = dl_all.unionByName(
-                    stop_parts.mapInPandas(decode_neg, "doc_id long, dl long")
-                )
-            dl_df = dl_all.groupBy("doc_id").agg(F.sum("dl").alias("dl"))
-        else:
-            dl_df = live.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+            stop_parts = partials_all.join(
+                stop_tdf, "term", "left_semi"
+            ).select("payload", "weights", "n_docs")
+            dl_all = dl_all.unionByName(
+                stop_parts.mapInPandas(decode_neg, "doc_id long, dl long")
+            )
+        dl_df = dl_all.groupBy("doc_id").agg(F.sum("dl").alias("dl"))
         doc_stats = (
             docs.select("doc_id", "doc_key")
             .join(dl_df, "doc_id", "left")
@@ -1039,56 +833,14 @@ def build_index(
     fut_doc_stats = pool.submit(_timed, "doc_stats", _doc_stats_job)
     _mark("doc_stats_submit")
 
-    # ---- postings: skew-aware agg + encode
-    # (doc_id, tf) packed into one BIGINT (doc_id<<8 | tf): aggregation
-    # runs on primitive long arrays (no struct boxing), one array_sort at
-    # the end orders by doc_id (tf sits in the low bits; doc_ids are
-    # unique per term so ordering is unaffected).
-    packed = (
-        live.withColumn("packed", F.shiftleft(F.col("doc_id"), 8) + F.col("tf"))
-        if not fused_mode
-        else None
-    )
+    # ---- postings: term-bucket shuffle of the live partials + merge
     # crc32 (not xxhash64): the query driver computes the same bucket in
     # pure Python (zlib.crc32) for partition pruning on point lookups.
     # Used as a bare expression for filter/repartition so the bucket never
-    # rides the posting-granular shuffle rows (8 bytes * n_postings saved;
-    # the encoder recomputes it once per output term).
+    # rides the shuffle rows (the merge recomputes it once per output term).
     bucket_expr = F.pmod(F.crc32(F.encode("term", "utf-8")), F.lit(n_buckets)).cast(
         "int"
     )
-
-    if strategy == "salted-agg":
-        # Alternative physical plan kept for comparison: collect_list
-        # aggregation with explicit salting of the Zipf head (terms with
-        # df > hot_df_threshold, already collected with the stop set) —
-        # two-stage partial merge for hot terms, single-stage for the tail.
-        packed_b = packed.withColumn("bucket", bucket_expr)
-        if hot_rows:
-            hot_terms = spark.createDataFrame([(t,) for t in hot_rows], "term string")
-            cold_src = packed_b.join(F.broadcast(hot_terms), "term", "left_anti")
-            hot_src = packed_b.join(F.broadcast(hot_terms), "term", "left_semi")
-        else:
-            cold_src, hot_src = packed_b, None
-        cold = cold_src.groupBy("term", "bucket").agg(
-            F.array_sort(F.collect_list("packed")).alias("postings"),
-            F.sum("dfc").alias("df"),
-        )
-        merged = cold
-        if hot_src is not None:
-            hot = (
-                hot_src.withColumn(
-                    "salt", F.pmod(F.col("doc_id"), F.lit(salts)).cast("int")
-                )
-                .groupBy("term", "bucket", "salt")
-                .agg(F.collect_list("packed").alias("part"), F.sum("dfc").alias("pdf"))
-                .groupBy("term", "bucket")
-                .agg(
-                    F.array_sort(F.flatten(F.collect_list("part"))).alias("postings"),
-                    F.sum("pdf").alias("df"),
-                )
-            )
-            merged = cold.unionByName(hot)
 
     postings_path = os.path.join(out_dir, "postings")
     group_size = max(1, n_buckets // max(1, bucket_groups))
@@ -1096,26 +848,6 @@ def build_index(
         list(range(g, min(g + group_size, n_buckets)))
         for g in range(0, n_buckets, group_size)
     ]
-    if strategy == "salted-agg":
-        # feed the aggregated arrays through the same streaming encoder by
-        # re-exposing them as sorted rows (df rides on the first row)
-        src = (
-            merged.select(
-                "term", "bucket", "df", F.posexplode("postings").alias("pos", "packed")
-            )
-            .withColumn(
-                "dfc", F.when(F.col("pos") == 0, F.col("df")).otherwise(F.lit(0))
-            )
-            .select("term", "packed", "dfc")
-        )
-    elif fused_mode:
-        # live partials ARE the map-side-encoded stream: the fused
-        # tokenize stage already produced them, so the group loop goes
-        # straight to the term-bucket shuffle + reduce-side merge
-        src = live
-    else:
-        src = packed.select("term", "packed", "dfc")
-
     bucket_metrics = []
     ck_futs = []
     # checkpoints append to ONE directory: concurrent append jobs share
@@ -1130,62 +862,42 @@ def build_index(
             continue
         g0 = time.monotonic()
         spark.sparkContext.setJobDescription("build:postings")
-        if strategy == "salted-agg":
-            part_df = (
-                # bucket as a bare expression: evaluated for partitioning
-                # but never materialized into the shuffle rows
-                src.filter(bucket_expr.isin(todo))
-                .repartition(max(len(todo), 1), bucket_expr)
-                # leading 64-bit hash makes the Tungsten sort radix-
-                # friendly; term as secondary key keeps equal terms
-                # contiguous under hash collisions (encoder groups by term
-                # change, so the arbitrary hash order across terms is fine)
-                .sortWithinPartitions(F.xxhash64("term"), "term", "packed")
-                .mapInPandas(_encode_sorted_stream(n_buckets), schema=POSTINGS_SCHEMA)
-                # bucket must LEAD the sort (same reason as the sortmerge
-                # branch below): partitionBy("bucket") otherwise inserts
-                # its own sort-by-bucket that destroys the term order, so
-                # salted-agg-built indexes silently never got the exact
-                # point-read fast path (ADVICE r6)
-                .sortWithinPartitions("bucket", "term")
+        part_df = (
+            # the live partials are the map-side-encoded stream: the
+            # Exchange ships term-granular compressed partials (~2
+            # B/posting, not ~40 B/row) -> reduce-side merge.
+            # Partition key is (bucket, term-hash sub-split): hashing
+            # only the ~64 distinct bucket values into as many
+            # partitions leaves ~1/e of them empty and stacks 2-3
+            # buckets on others — straggler waves that a 4N-core run
+            # pays in full while an N-core run packs around them. The
+            # sub-split keeps every partial of a term in one
+            # partition (same bucket, same term hash) while cutting
+            # partition-size variance 4x; the encoder derives the
+            # bucket column from the term itself, so file layout is
+            # unchanged.
+            live.filter(bucket_expr.isin(todo))
+            .repartition(
+                max(len(todo), 1) * 4,
+                bucket_expr,
+                F.pmod(F.xxhash64("term"), F.lit(4)),
             )
-        else:
-            part_df = (
-                # sortmerge default: map-side partial encode -> the
-                # Exchange ships term-granular compressed partials (~2
-                # B/posting, not ~40 B/row) -> reduce-side merge.
-                # Partition key is (bucket, term-hash sub-split): hashing
-                # only the ~64 distinct bucket values into as many
-                # partitions leaves ~1/e of them empty and stacks 2-3
-                # buckets on others — straggler waves that a 4N-core run
-                # pays in full while an N-core run packs around them. The
-                # sub-split keeps every partial of a term in one
-                # partition (same bucket, same term hash) while cutting
-                # partition-size variance 4x; the encoder derives the
-                # bucket column from the term itself, so file layout is
-                # unchanged.
-                src.filter(bucket_expr.isin(todo))
-                .repartition(
-                    max(len(todo), 1) * 4,
-                    bucket_expr,
-                    F.pmod(F.xxhash64("term"), F.lit(4)),
-                )
-                # partials of one term need only contiguity; their
-                # relative order is irrelevant (merge re-sorts by doc id)
-                .sortWithinPartitions(F.xxhash64("term"), "term")
-                .mapInPandas(_merge_partial_stream(n_buckets), schema=POSTINGS_SCHEMA)
-                # re-sort the compact per-term rows by term so parquet
-                # row-group min/max stats stay selective for point lookups.
-                # bucket MUST lead the sort keys: partitionBy("bucket")
-                # requires child ordering to start with the partition
-                # column, and when it doesn't Spark inserts its own
-                # sort-by-bucket that DESTROYS the term order (observed:
-                # unsorted term stats in every row group). (bucket, term)
-                # satisfies the writer's requirement, so no extra sort is
-                # inserted and rows inside each bucket file stay
-                # term-sorted.
-                .sortWithinPartitions("bucket", "term")
-            )
+            # partials of one term need only contiguity; their
+            # relative order is irrelevant (merge re-sorts by doc id)
+            .sortWithinPartitions(F.xxhash64("term"), "term")
+            .mapInPandas(_merge_partial_stream(n_buckets), schema=POSTINGS_SCHEMA)
+            # re-sort the compact per-term rows by term so parquet
+            # row-group min/max stats stay selective for point lookups.
+            # bucket MUST lead the sort keys: partitionBy("bucket")
+            # requires child ordering to start with the partition
+            # column, and when it doesn't Spark inserts its own
+            # sort-by-bucket that DESTROYS the term order (observed:
+            # unsorted term stats in every row group). (bucket, term)
+            # satisfies the writer's requirement, so no extra sort is
+            # inserted and rows inside each bucket file stay
+            # term-sorted.
+            .sortWithinPartitions("bucket", "term")
+        )
         # non-resume runs cleared the dir up front, so append is always safe
         part_df.write.mode("append").options(**POINT_READ_WRITE_OPTS).partitionBy("bucket").parquet(postings_path)
         elapsed = time.monotonic() - g0
@@ -1322,10 +1034,10 @@ def build_index(
         # the duplicate text columns from doc_meta
         _timed("slim_doc_meta", _slim_doc_meta, out_dir)
     _mark("variants")
-    if tokens_storage == "memory":
-        tokens.unpersist()
-    elif not keep_tokens:
+    if tokens_on_disk:
         shutil.rmtree(tokens_path, ignore_errors=True)
+    else:
+        tokens.unpersist()
     if docs_repart_handle is not None:
         docs_repart_handle.unpersist()
 
@@ -1362,9 +1074,6 @@ def build_index(
         "index_sizes": list(sizes),
         "start_pad": start_pad,
         "n_buckets": n_buckets,
-        "salts": salts,
-        "hot_df_threshold": hot_df_threshold,
-        "strategy": strategy,
         "max_prefix_docs": max_prefix_docs,
         "build_wall_sec": wall,
         "docs_per_sec": (n_docs_total / wall) if wall > 0 else 0.0,
@@ -1442,7 +1151,7 @@ def _word_list_partial(n_buckets: int | None, key: str = "word"):
             return
         words = np.concatenate(w_l)
         docs = np.concatenate(d_l)
-        codes, uniq = pd.factorize(words)
+        codes, uniq = factorize_strings(words)
         order = np.lexsort((docs, codes))
         codes_s, docs_s = codes[order], docs[order]
         change = np.empty(codes_s.size, dtype=bool)
@@ -1586,7 +1295,7 @@ def _word_pairs_extract(synonym_map=None):
             if not w_starts.size:
                 continue
             docpos = np.searchsorted(doc_ends, w_starts, side="right")
-            codes, uniq = pd.factorize(_strings_of_runs(cps, w_starts, rlens))
+            codes, uniq = factorize_strings(_strings_of_runs(cps, w_starts, rlens))
             packed = (docpos.astype(np.int64) << 32) | codes
             upacked = np.unique(packed)
             ids = pdf["doc_id"].to_numpy()
@@ -1629,7 +1338,7 @@ def _build_word_family(
     deduped (doc_id, word) pair stream is computed ONCE and persisted
     (columnar-compressed, MEMORY_AND_DISK) for the three consumers. At
     extreme corpus sizes the same stream would go to parquet instead,
-    the tokens_storage trade-off."""
+    as the fused partials table does for resumable builds."""
     spark = docs.sparkSession
 
     from pyspark import StorageLevel
@@ -1648,8 +1357,7 @@ def _build_word_family(
     # df rows — and the reduce is a k-way array merge, not a
     # posting-granular Tungsten sort. The sort leads with bucket so the
     # partitionBy writer inserts NO extra sort (an inserted bucket sort
-    # silently destroyed word order in hash-colliding partitions — the
-    # same defect ADVICE r6 found in the salted-agg postings leg — which
+    # silently destroyed word order in hash-colliding partitions, which
     # cost those files their point-read stats pruning).
     n_buckets = 32
     spark.sparkContext.setJobDescription("build:wm_words")
@@ -1792,11 +1500,32 @@ def _prefix_pairs_extract(synonym_map=None):
     return extract
 
 
+def _dense_strings(values: pa.Array, ids: np.ndarray, n: int) -> pa.Array:
+    """Doc-id-indexed Arrow strings: values[j] at ids[j], null at every
+    other id. NULL rides Arrow's validity bitmap, never an in-band fill
+    value, and Arrow compares whole strings — numpy's fixed-width str
+    dtype drops trailing NULs, so "a\x00" would equal "a" there."""
+    slot = np.full(n, -1, dtype=np.int64)
+    slot[ids] = np.arange(ids.size)
+    return values.take(pa.array(slot, mask=slot < 0))
+
+
+def _str_eq(strings: pa.Array, idx: np.ndarray, other) -> np.ndarray:
+    """strings[idx] == other elementwise (other: str or a same-length
+    string array); a NULL entry is never equal (the Catalyst plan's
+    NULL == x -> no precedence bit)."""
+    if not isinstance(other, str):
+        other = pa.array(other, pa.string())
+    eq = pc.equal(strings.take(pa.array(idx)), other)
+    return eq.fill_null(False).to_numpy(zero_copy_only=False)
+
+
 def _champions_sidecar(spark, docs: DataFrame, meta_path: str):
     """Per-doc arrays for the champions map-side top-k: doc_id-indexed
-    n_tokens / tiny_text / doc_key (~24 B/doc). Returns None when the
-    corpus exceeds the broadcast cap or the id space is grossly sparse —
-    the caller then uses the fully distributed join+window plan."""
+    n_tokens / tiny_text (Arrow, NULL where absent) / doc_key (~24
+    B/doc). Returns None when the corpus exceeds the broadcast cap or the
+    id space is grossly sparse — the caller then uses the fully
+    distributed join+window plan."""
     import pyarrow.dataset as pads
 
     try:
@@ -1814,10 +1543,7 @@ def _champions_sidecar(spark, docs: DataFrame, meta_path: str):
         return None
     ntok = np.zeros(n, dtype=np.int64)
     ntok[ids] = tb["n_tokens"].to_numpy()
-    # '\x00' sentinel: never equals a 1-3 char prefix, reproducing the
-    # NULL tiny_text -> no precedence bit of the Catalyst plan
-    tiny = np.full(n, "\x00", dtype="<U3")
-    tiny[ids] = tb["tiny_text"].to_pandas().fillna("\x00").to_numpy(dtype="<U3")
+    tiny = _dense_strings(tb["tiny_text"].combine_chunks(), ids, n)
     keys = docs.select("doc_id", "doc_key").toPandas()
     key = np.zeros(n, dtype=np.int64)
     key[keys["doc_id"].to_numpy()] = keys["doc_key"].to_numpy()
@@ -2042,14 +1768,13 @@ def _build_prefixes(
                 n_exact = np.concatenate(cols["n_exact"])
                 first_exact = np.concatenate(cols["first_exact"])
                 ntok = b["ntok"][doc_id]
-                tiny = b["tiny"][doc_id]
                 key = b["key"][doc_id]
                 prec = (
                     128
                     + 64 * (first_pos == 0)
                     + 32 * ((n_exact > 0) | (ntok <= 3))
                     + 16 * first_exact
-                    + 8 * (tiny == prefix.astype("<U3"))
+                    + 8 * _str_eq(b["tiny"], doc_id, prefix)
                 ).astype(np.int64)
                 base = np.clip(
                     (255 - np.minimum(first_pos * 16, 240))
@@ -2058,7 +1783,7 @@ def _build_prefixes(
                     255,
                 )
                 score = ((prec << 8) + base).astype(np.int64)
-                codes, _ = pd.factorize(prefix)
+                codes, _ = factorize_strings(prefix)
                 order = np.lexsort((key, -score, codes))
                 codes_s = codes[order]
                 grp = np.empty(codes_s.size, dtype=bool)
@@ -2517,8 +2242,9 @@ SQ_TOPK_BROADCAST_DOCS = 8_000_000  # fold-path sidecar cap (~40 B/doc)
 
 def _sq_topk_sidecar(spark: SparkSession, out_dir: str) -> dict:
     """Per-doc precedence sidecar for the fold path: doc-id-indexed
-    numpy arrays (doc_key, first-2 chars, first word <=3 chars,
-    whitespace-trimmed tiny text <=3 chars, n_tokens). The text-column
+    arrays (numpy doc_key and n_tokens; Arrow strings, NULL where absent,
+    for the first-2 chars, first word <=3 chars and whitespace-trimmed
+    tiny text <=3 chars). The text-column
     scanning (substring/strip/first-word) runs as a SPARK projection —
     parallel, so it scales with the cluster instead of serializing on
     the driver (the round-3-style driver pandas pass cost ~10 s of
@@ -2557,12 +2283,10 @@ def _sq_topk_sidecar(spark: SparkSession, out_dir: str) -> dict:
     n = int(ids.max()) + 1
     key_arr = np.zeros(n, dtype=np.int64)
     key_arr[ids] = side["doc_key"].to_numpy()
-    first2 = np.full(n, "", dtype="<U2")
-    first2[ids] = side["first2"].fillna("").to_numpy(dtype="<U2")
-    fw3 = np.full(n, "\x00", dtype="<U3")
-    fw3[ids] = side["fw3"].fillna("\x00").to_numpy(dtype="<U3")
-    tiny = np.full(n, "\x00", dtype="<U3")
-    tiny[ids] = side["tiny"].fillna("\x00").to_numpy(dtype="<U3")
+    first2, fw3, tiny = (
+        _dense_strings(pa.array(side[c], pa.string()), ids, n)
+        for c in ("first2", "fw3", "tiny")
+    )
     ntok = np.zeros(n, dtype=np.int32)
     ntok[ids] = side["ntok"].to_numpy().astype(np.int32)
     return {
@@ -2788,9 +2512,9 @@ def _sq_topk_fold(
                 any_w = _mem(member.get(q, empty_i64), rep)
                 prec = (
                     any_w * 1
-                    + (fw3[rep] == q) * 4
-                    + (first2[rep] == q) * 2
-                    + (tiny[rep] == q) * 8
+                    + _str_eq(fw3, rep, q) * 4
+                    + _str_eq(first2, rep, q) * 2
+                    + _str_eq(tiny, rep, q) * 8
                 ).astype(np.int64)
             max_score = float(scores.max())
             norm = scores / max_score if max_score > 0 else scores / 255.0

@@ -27,6 +27,7 @@ import numpy as np
 import pandas as pd
 
 from infidex_spark.kernel.normalize import normalize_series
+from infidex_spark.kernel.strings import factorize_strings
 from infidex_spark.kernel.tokenize import (
     DEFAULT_INDEX_SIZES,
     DEFAULT_START_PAD,
@@ -194,7 +195,7 @@ def tokenize_batch_frames(
             if w_starts is not None
             else w_strs[lsel]
         )
-        codes, uniq = pd.factorize(lw_strs)
+        codes, uniq = factorize_strings(lw_strs)
         d, k, c = _count_pairs(w_doc[lsel], codes.astype(np.uint64))
         yield pd.DataFrame(
             {
@@ -409,7 +410,7 @@ def tokenize_fields_batch(
     for L in np.unique(klen):
         lsel = klen == L
         if L == 0:
-            w_codes, uniq_w = pd.factorize(long_words)
+            w_codes, uniq_w = factorize_strings(long_words)
             code[lsel] = offset + w_codes
             categories.extend(uniq_w.tolist())
             offset += len(uniq_w)

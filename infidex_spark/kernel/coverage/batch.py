@@ -15,8 +15,8 @@ FusionSignals for a whole candidate batch at once, exploiting two facts:
 2. the per-candidate cascade only needs the doc's token *code sequence*
    (plus char offsets for output fields), so candidate texts are
    tokenized in one vectorized pass (numpy delimiter mask for offsets +
-   one C-level findall + pandas factorize for codes) with no per-token
-   Python objects, and the per-doc views (first-occurrence dedupe,
+   one C-level findall + one Arrow dictionary encode for codes) with no
+   per-token Python objects, and the per-doc views (first-occurrence dedupe,
    length-desc order, long-token counts) are built with a handful of
    global numpy ops for the whole batch.
 
@@ -52,6 +52,7 @@ from infidex_spark.kernel.coverage.matchers import (
 from infidex_spark.kernel.coverage.metrics import damerau_restricted
 from infidex_spark.kernel.coverage.scorer import CoverageFeatures, calculate_final_score
 from infidex_spark.kernel.coverage.state import _WORD_RE
+from infidex_spark.kernel.strings import factorize_strings
 from infidex_spark.kernel.tokenize import DELIMITERS
 
 # interner size cap: beyond this the per-query tables (a few float64/bool
@@ -192,15 +193,13 @@ def build_views(
     ops: one numpy pass for offsets, one findall for words, one
     factorize for codes, one np.unique for first-occurrence dedupe, one
     lexsort for the length-desc matcher order."""
-    import pandas as pd
-
     n_texts = len(texts)
     views = [DocView() for _ in range(n_texts)]
     blob = " ".join(texts)
     starts = _token_starts(blob)
     words = _WORD_RE.findall(blob)
     # factorize -> small unique set, then map through the interner once
-    codes_local, uniq_words = pd.factorize(np.asarray(words, dtype=object))
+    codes_local, uniq_words = factorize_strings(words)
     wid_of = interner.intern_many(uniq_words)
     codes = (
         wid_of[codes_local]

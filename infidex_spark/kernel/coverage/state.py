@@ -38,34 +38,6 @@ def _raw_tokens(text: str, min_word_size: int) -> list[Token]:
     ]
 
 
-def _raw_tokens_batch(texts: list[str]) -> list[list[Token]]:
-    """Batch _raw_tokens(t, 0) over many texts: ONE C-level regex scan
-    over a single ' '-joined blob (space is a delimiter, so no token can
-    span a join point), split back by text boundaries. Output is
-    identical to [_raw_tokens(t, 0) for t in texts] (tested); the win is
-    per-text Python call/setup overhead on the rerank's cold path, where
-    hundreds of candidate docs tokenize at once."""
-    if not texts:
-        return []
-    blob = " ".join(texts)
-    bounds = []
-    off = 0
-    for t in texts:
-        bounds.append(off)
-        off += len(t) + 1
-    out: list[list[Token]] = [[] for _ in texts]
-    idx = 0
-    n = len(texts)
-    nxt = bounds[1] if n > 1 else len(blob) + 1
-    for m in _WORD_RE.finditer(blob):
-        s = m.start()
-        while s >= nxt:
-            idx += 1
-            nxt = bounds[idx + 1] if idx + 1 < n else len(blob) + 1
-        out[idx].append(Token(m.group(), s - bounds[idx]))
-    return out
-
-
 def tokenize_coverage(
     text: str, min_word_size: int, dedupe: bool = True
 ) -> tuple[list[Token], int]:

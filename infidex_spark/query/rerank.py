@@ -15,9 +15,10 @@ from __future__ import annotations
 import numpy as np
 
 from infidex_spark.kernel.bm25 import compute_idf
+from infidex_spark.kernel.coverage.batch import BatchCoverage
 from infidex_spark.kernel.coverage.config import CoverageConfig
 from infidex_spark.kernel.coverage.engine import CoverageEngine
-from infidex_spark.kernel.coverage.fusion_scorer import fusion_calculate
+from infidex_spark.kernel.coverage.fusion_scorer import fusion_calculate_batch
 from infidex_spark.kernel.coverage.metrics import lcs_tolerant
 from infidex_spark.kernel.normalize import normalize
 from infidex_spark.kernel.tokenize import word_tokens
@@ -101,18 +102,13 @@ class RerankExecutor:
         reader: IndexReader,
         setup: CoverageConfig | None = None,
         word_vocab_cap: int = WORD_VOCAB_CAP,
-        use_batch: bool = True,
     ):
         self.r = reader
         self.setup = setup or CoverageConfig()
         # cross-candidate batch coverage (kernel/coverage/batch.py):
-        # bit-identical to the scalar cascade, vectorized per unique word
-        if use_batch:
-            from infidex_spark.kernel.coverage.batch import BatchCoverage
-
-            self.batch = BatchCoverage(self.setup)
-        else:
-            self.batch = None
+        # bit-identical to the kernel's scalar cascade, vectorized per
+        # unique word
+        self.batch = BatchCoverage(self.setup)
         self.stage1 = QueryExecutor(reader)
         # store-open prewarm: postings footer metadata (the parquet-stats
         # term dictionary) loads here, not on the first query
@@ -161,9 +157,9 @@ class RerankExecutor:
                 stacklevel=2,
             )
         self._df_cache: dict[str, int] = {}
-        # per-doc [text, doc_view] cache (the reference keeps documents
-        # parsed in memory; this is the bounded point-read analogue)
-        self._doc_cache: dict[int, list] = {}
+        # per-doc text cache (the reference keeps documents in memory;
+        # this is the bounded point-read analogue)
+        self._doc_cache: dict[int, str] = {}
         self.DOC_CACHE_CAP = 1_000_000
         self.engine = CoverageEngine(
             setup=self.setup,
@@ -211,22 +207,8 @@ class RerankExecutor:
             got = self.r.doc_texts(missing)
             if len(cache) + len(got) > self.DOC_CACHE_CAP:
                 cache.clear()
-            for i, t in got.items():
-                cache[i] = [t, None]  # doc_view filled lazily
-        out = {}
-        for i in doc_ids:
-            entry = cache.get(i)
-            if entry is not None:
-                out[i] = entry[0]
-        return out
-
-    def _doc_view(self, internal_id: int, text: str):
-        entry = self._doc_cache.get(internal_id)
-        if entry is None:
-            return self.engine.doc_view(text)
-        if entry[1] is None:
-            entry[1] = self.engine.doc_view(entry[0])
-        return entry[1]
+            cache.update(got)
+        return {i: cache[i] for i in doc_ids if i in cache}
 
     def _word_matcher_docs(self, q: str) -> np.ndarray:
         """WordMatcher candidate docs (exact ∪ LD1 ∪ affix) for the query
@@ -417,129 +399,68 @@ class RerankExecutor:
         hits_by_key: dict[int, int] = {}
         max_word_hits = 0
 
-        if self.batch is not None:
-            # batch path: compute every uncached candidate's features in
-            # one cross-candidate pass. The per-key LCS values are
-            # resolved first IN PROCESS ORDER (the first id seen for a
-            # key donates its text), exactly as the scalar loop would.
-            order: list[tuple[int, int]] = [(i, key_of[i]) for i in wm_overlap]
-            order += [(i, key_of[i]) for i in wm_unique]
-            for key, _s in s1:
-                internal = key_to_id.get(key)
-                if internal is not None:
-                    order.append((internal, key))
-            items: list[tuple[int, str, int]] = []
-            queued: set[int] = set()
-            for i, key in order:
-                cached = ctx_feats.get(i)
-                if cached is not None:
-                    if key not in lcs_by_key:
-                        lcs_by_key[key] = cached[1]
-                    continue
-                if i in queued:
-                    continue
-                lcs = lcs_by_key.get(key)
-                if lcs is None:
-                    lcs = min(lcs_tolerant(q, texts.get(i, ""), tol), 255)
-                    lcs_by_key[key] = lcs
-                queued.add(i)
-                items.append((i, texts.get(i, ""), lcs))
-            if items:
-                feats_map = self.batch.compute(self.engine, ctx, items)
-                if len(ctx_feats) >= 100_000:
-                    # the trips read below fetches ctx_feats[i] for every
-                    # id in `order` — re-seed the entries this query still
-                    # needs across the wipe or cached candidates KeyError
-                    keep = {i: ctx_feats[i] for i, _ in order if i in ctx_feats}
-                    ctx_feats.clear()
-                    ctx_feats.update(keep)
-                for i, text, lcs in items:
-                    ctx_feats[i] = (feats_map[i], lcs, text)
-        else:
-            # scalar path: batch the raw tokenization for every view this
-            # query will build — one C-level regex pass over the joined
-            # candidate texts instead of a per-candidate call
-            pend_views = [
-                (i, e)
-                for i in sorted(need_texts)
-                if (e := self._doc_cache.get(i)) is not None and e[1] is None
-            ]
-            if pend_views:
-                from infidex_spark.kernel.coverage.state import _raw_tokens_batch
-
-                raws = _raw_tokens_batch([e[0] for _, e in pend_views])
-                for (_, e), raw in zip(pend_views, raws):
-                    e[1] = self.engine.doc_view(e[0], d_raw=raw)
-
-        def process(internal_id: int, key: int, base: float) -> None:
-            nonlocal max_word_hits
-            cached = ctx_feats.get(internal_id)
-            if cached is None:
-                text = texts.get(internal_id, "")
-                lcs = lcs_by_key.get(key)
-                if lcs is None:
-                    lcs = min(lcs_tolerant(q, text, tol), 255)
-                feats = self.engine.calculate_features(
-                    ctx, text, lcs, d_view=self._doc_view(internal_id, text)
+        # candidates in process order: WordMatcher overlap, WordMatcher
+        # unique, then stage-1 hits with their normalized BM25 base
+        calls: list[tuple[int, int, float]] = [
+            (i, key_of[i], 0.0) for i in wm_overlap
+        ]
+        calls += [(i, key_of[i], 0.0) for i in wm_unique]
+        for key, score in s1:
+            internal = key_to_id.get(key)
+            if internal is not None:
+                calls.append(
+                    (internal, key, score / max_tfidf if max_tfidf > 0 else 0.0)
                 )
-                if len(ctx_feats) >= 100_000:
-                    ctx_feats.clear()
-                cached = (feats, lcs, text)
-                ctx_feats[internal_id] = cached
-            feats, lcs, text = cached
-            if key not in lcs_by_key:
+        # compute every uncached candidate's features in one
+        # cross-candidate pass. The per-key LCS values are resolved
+        # first IN PROCESS ORDER (the first id seen for a key donates
+        # its text), exactly as the kernel's scalar loop does.
+        items: list[tuple[int, str, int]] = []
+        queued: set[int] = set()
+        for i, key, _b in calls:
+            cached = ctx_feats.get(i)
+            if cached is not None:
+                if key not in lcs_by_key:
+                    lcs_by_key[key] = cached[1]
+                continue
+            if i in queued:
+                continue
+            lcs = lcs_by_key.get(key)
+            if lcs is None:
+                lcs = min(lcs_tolerant(q, texts.get(i, ""), tol), 255)
                 lcs_by_key[key] = lcs
-            score, tie = fusion_calculate(q, text, feats, base, min_size)
-            if key not in hits_by_key:
-                hits_by_key[key] = min(feats.word_hits, 255)
-            max_word_hits = max(max_word_hits, feats.word_hits)
-            entries.append((score, tie, key))
-
-        if self.batch is not None:
-            # vectorized fusion over the whole candidate list (identical
-            # per-element arithmetic; bit-parity-tested vs the scalar)
-            from infidex_spark.kernel.coverage.fusion_scorer import (
-                fusion_calculate_batch,
+            queued.add(i)
+            items.append((i, texts.get(i, ""), lcs))
+        if items:
+            feats_map = self.batch.compute(self.engine, ctx, items)
+            if len(ctx_feats) >= 100_000:
+                # the fusion read below fetches ctx_feats[i] for every
+                # candidate — re-seed the entries this query still
+                # needs across the wipe or cached candidates KeyError
+                keep = {i: ctx_feats[i] for i, _, _ in calls if i in ctx_feats}
+                ctx_feats.clear()
+                ctx_feats.update(keep)
+            for i, text, lcs in items:
+                ctx_feats[i] = (feats_map[i], lcs, text)
+        # vectorized fusion over the whole candidate list (identical
+        # per-element arithmetic; bit-parity-tested vs the kernel's
+        # scalar fusion)
+        if calls:
+            trips = [ctx_feats[i] for i, _, _ in calls]
+            scored = fusion_calculate_batch(
+                len(q),
+                [len(t[2]) for t in trips],
+                [t[0] for t in trips],
+                [b for _, _, b in calls],
             )
-
-            calls: list[tuple[int, int, float]] = [
-                (i, key_of[i], 0.0) for i in wm_overlap
-            ]
-            calls += [(i, key_of[i], 0.0) for i in wm_unique]
-            for key, score in s1:
-                internal = key_to_id.get(key)
-                if internal is not None:
-                    calls.append(
-                        (internal, key, score / max_tfidf if max_tfidf > 0 else 0.0)
-                    )
-            if calls:
-                trips = [ctx_feats[i] for i, _, _ in calls]
-                scored = fusion_calculate_batch(
-                    len(q),
-                    [len(t[2]) for t in trips],
-                    [t[0] for t in trips],
-                    [b for _, _, b in calls],
-                )
-                for (i, key, _b), (feats, lcs, _text), (score, tie) in zip(
-                    calls, trips, scored
-                ):
-                    if key not in lcs_by_key:
-                        lcs_by_key[key] = lcs
-                    if key not in hits_by_key:
-                        hits_by_key[key] = min(feats.word_hits, 255)
-                    if feats.word_hits > max_word_hits:
-                        max_word_hits = feats.word_hits
-                    entries.append((score, tie, key))
-        else:
-            for i in wm_overlap:
-                process(i, key_of[i], 0.0)
-            for i in wm_unique:
-                process(i, key_of[i], 0.0)
-            for key, score in s1:
-                internal = key_to_id.get(key)
-                if internal is None:
-                    continue
-                process(internal, key, score / max_tfidf if max_tfidf > 0 else 0.0)
+            for (_i, key, _b), (feats, _lcs, _text), (score, tie) in zip(
+                calls, trips, scored
+            ):
+                if key not in hits_by_key:
+                    hits_by_key[key] = min(feats.word_hits, 255)
+                if feats.word_hits > max_word_hits:
+                    max_word_hits = feats.word_hits
+                entries.append((score, tie, key))
 
         if max_word_hits == 0 and len(wm_docs) == 0:
             return [(d, s, 0) for d, s in s1[:k]]

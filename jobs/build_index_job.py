@@ -78,7 +78,6 @@ def main() -> None:
         stop_term_limit=args.stop_term_limit,
         aux=not args.no_aux,
         resume=args.resume,
-        tokens_storage="parquet" if args.resume or args.bucket_groups > 1 else "auto",
     )
     print(json.dumps({k: manifest[k] for k in (
         "total_docs", "avgdl", "n_stop_terms", "build_wall_sec", "docs_per_sec",

@@ -143,35 +143,6 @@ def test_batch_incremental_interner_growth():
         assert gd == wd and gf == wf, t
 
 
-def test_rerank_batch_equals_scalar_end_to_end(spark, tmp_path):
-    """RerankExecutor(use_batch=True) returns the identical ranked list
-    (keys, scores, ties) as use_batch=False on a small index."""
-    from infidex_spark.build.indexer import build_index
-    from infidex_spark.fixtures import REFERENCE_DOCS, movie_docs
-    from infidex_spark.query.executor import IndexReader
-    from infidex_spark.query.rerank import RerankExecutor
-
-    for name, corpus in (("ref", REFERENCE_DOCS), ("mov", movie_docs())):
-        d = str(tmp_path / name)
-        df = spark.createDataFrame(
-            [(i, key, text) for i, (key, text) in enumerate(corpus)],
-            "doc_id long, doc_key long, text string",
-        )
-        build_index(spark, df, d, n_buckets=4)
-        rb = RerankExecutor(IndexReader(d), use_batch=True)
-        rs = RerankExecutor(IndexReader(d), use_batch=False)
-        for query in [
-            "batman", "qick fux", "battamam", "gotham city", "quick fox",
-            "Shawshank", "Shaaawshank", "redemption shank", "redemption sh",
-            "dark knight", "goodfelas", "pulp fiction", "sh", "a b",
-        ]:
-            got = rb.search(query, 10)
-            want = rs.search(query, 10)
-            assert got == want, (name, query, got, want)
-            # repeat (warm ctx_feats replay) must also agree
-            assert rb.search(query, 10) == want, (name, query)
-
-
 @pytest.mark.parametrize("seed", [11, 12])
 def test_fusion_batch_equals_scalar(seed):
     """fusion_calculate_batch == fusion_calculate bit for bit over
@@ -292,7 +263,7 @@ def test_batch_feats_cache_wipe_mid_query(spark, tmp_path):
         "doc_id long, doc_key long, text string",
     )
     build_index(spark, df, d, n_buckets=4)
-    rb = RerankExecutor(IndexReader(d), use_batch=True)
+    rb = RerankExecutor(IndexReader(d))
     q = "gotham city"
     want = rb.search(q, 10)
     assert want, "query must produce candidates"

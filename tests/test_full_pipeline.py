@@ -126,6 +126,9 @@ RERANK_QUERIES = [
     ("movies", "redemption sh"),
     ("movies", "dark knight"),
     ("movies", "goodfelas"),
+    ("movies", "pulp fiction"),
+    ("movies", "sh"),
+    ("movies", "a b"),
 ]
 
 
@@ -141,3 +144,5 @@ def test_spark_rerank_matches_kernel_fullsearch(
     for (_, gs, gt), (_, ws, wt) in zip(got, want):
         assert gs == pytest.approx(ws, rel=1e-5)
         assert gt == wt
+    # a repeat replays the per-query feature cache: same list, bit for bit
+    assert ex.search(query, 10) == got, query

@@ -293,38 +293,46 @@ def test_tokenizer_run_words_match_split_words():
 
 
 def test_champions_sidecar_plan_matches_join_plan(tmp_path, spark, reference_docs):
-    """Map-side champions top-k == the join+window plan, bit for bit."""
+    """Map-side champions top-k == the join+window plan, bit for bit.
+    The second input puts NUL-led words next to a NULL tiny_text: NUL
+    must not act as the missing-tiny_text marker (a spurious +8
+    precedence bit for prefix '\\x00')."""
     import pandas as pd
 
     from infidex_spark.build import indexer as I
 
-    docs = spark.createDataFrame(
-        [(i, 7000 + i, text) for i, (_k, text) in enumerate(reference_docs)],
-        "doc_id long, doc_key long, text string",
-    )
-    out_a = str(tmp_path / "idx_sidecar")
-    out_b = str(tmp_path / "idx_join")
-    I.build_index(spark, docs, out_a, n_buckets=4, salts=2, short_precompute=False)
-    orig = I._champions_sidecar
-    I._champions_sidecar = lambda *a, **k: None
-    try:
-        I.build_index(
-            spark, docs, out_b, n_buckets=4, salts=2, short_precompute=False
+    texts = [text for _k, text in reference_docs]
+    nul_texts = texts + [
+        "\x00ab returns to gotham city tonight",
+        "\x00ab",
+        "\x00ab the dark knight rises again",
+    ]
+    for name, corpus in (("plain", texts), ("nul", nul_texts)):
+        docs = spark.createDataFrame(
+            [(i, 7000 + i, text) for i, text in enumerate(corpus)],
+            "doc_id long, doc_key long, text string",
         )
-    finally:
-        I._champions_sidecar = orig
-    a = (
-        pd.read_parquet(out_a + "/champions")
-        .sort_values(["prefix", "rn"])
-        .reset_index(drop=True)
-    )
-    b = (
-        pd.read_parquet(out_b + "/champions")
-        .sort_values(["prefix", "rn"])
-        .reset_index(drop=True)
-    )
-    assert dict(a.dtypes) == dict(b.dtypes)
-    assert a.equals(b)
+        out_a = str(tmp_path / f"idx_sidecar_{name}")
+        out_b = str(tmp_path / f"idx_join_{name}")
+        I.build_index(spark, docs, out_a, n_buckets=4, short_precompute=False)
+        orig = I._champions_sidecar
+        I._champions_sidecar = lambda *a, **k: None
+        try:
+            I.build_index(spark, docs, out_b, n_buckets=4, short_precompute=False)
+        finally:
+            I._champions_sidecar = orig
+        a = (
+            pd.read_parquet(out_a + "/champions")
+            .sort_values(["prefix", "rn"])
+            .reset_index(drop=True)
+        )
+        b = (
+            pd.read_parquet(out_b + "/champions")
+            .sort_values(["prefix", "rn"])
+            .reset_index(drop=True)
+        )
+        assert dict(a.dtypes) == dict(b.dtypes), name
+        assert a.equals(b), name
 
 
 def test_run_word_extraction_keeps_literal_pad_chars():

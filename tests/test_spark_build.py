@@ -164,47 +164,141 @@ def test_wand_equals_exhaustive(built_index, query):
     )
 
 
-def test_partial_merge_identical_to_row_encoder(spark, reference_docs, tmp_path):
-    """The default sortmerge path (map-side partial encode + reduce-side
-    merge) must produce byte-identical postings to the row-granular
-    encoder (salted-agg feeds every posting row through
-    _encode_sorted_stream), including hot terms whose partials span many
-    input partitions."""
+def _postings_rows(out: str) -> list[dict]:
     import pyarrow.dataset as ds
 
+    return ds.dataset(
+        os.path.join(out, "postings"), format="parquet", partitioning="hive"
+    ).to_table().to_pylist()
+
+
+def test_partial_merge_rows_equal_kernel_encoding(spark, reference_docs, tmp_path):
+    """Every postings row is byte-equal to encode_postings_batch of the
+    kernel's (doc_id << 8 | weight) list for its term. ' qj' is in every
+    doc, so with 8 input partitions it has a partial in each, and
+    stop_term_limit=9 stops it (df 10) and nothing else; live terms
+    spread over several partitions (' th', df 8) go through the
+    reduce-side merge. Doc lengths must drop the stopped term's tf."""
+    import zlib
+
+    from infidex_spark.build.codec import encode_postings_batch
+
+    corpus = [(key, text + " qj") for key, text in reference_docs]
+    kern = KernelIndex(stop_term_limit=9)
+    kern.index_documents(corpus)
+    assert sorted(t for t, st in kern.terms.items() if st.df < 0) == [" qj"]
+    live = {t: st for t, st in kern.terms.items() if st.df > 0}
+
+    docs = spark.createDataFrame(
+        [(i, key, text) for i, (key, text) in enumerate(corpus)],
+        "doc_id long, doc_key long, text string",
+    ).repartition(8)
+    out = str(tmp_path / "idx_partial")
+    manifest = build_index(
+        spark, docs, out, n_buckets=2, aux=False, stop_term_limit=9
+    )
+    assert manifest["n_stop_terms"] == 1
+
+    rows = _postings_rows(out)
+    got = {r["term"]: r for r in rows}
+    assert len(got) == len(rows), "one row per term"
+    assert " qj" not in got
+    assert set(got) == set(live)
+    terms = sorted(live)
+    enc = encode_postings_batch(
+        [
+            (np.asarray(live[t].doc_ids, dtype=np.int64) << 8)
+            | np.asarray(live[t].weights, dtype=np.int64)
+            for t in terms
+        ]
+    )
+    for j, t in enumerate(terms):
+        r = got[t]
+        assert r["df"] == live[t].df, t
+        assert r["bucket"] == zlib.crc32(t.encode("utf-8")) % 2, t
+        assert (
+            r["n_docs"], r["max_tf"], r["payload"], r["weights"],
+            r["block_last_doc"], r["block_max_w"], r["block_offsets"],
+        ) == (
+            int(enc["n_docs"][j]), int(enc["max_tf"][j]),
+            bytes(enc["payload"][j]), bytes(enc["weights"][j]),
+            [int(x) for x in enc["block_last_doc"][j]],
+            [int(x) for x in enc["block_max_w"][j]],
+            [int(x) for x in enc["block_offsets"][j]],
+        ), t
+
+    dl, _ = IndexReader(out).doc_lengths(np.arange(len(corpus), dtype=np.int64))
+    assert dl.tolist() == kern.doc_lengths.tolist()
+
+
+def test_embedded_nul_terms_build_and_match_kernel(spark, tmp_path):
+    """Terms that differ only after an embedded NUL stay distinct terms
+    (normalize keeps NUL, as the reference does), and a NUL-led word
+    next to its own NUL-led gram builds."""
+    corpus = [(i, "a\x00b" if i % 2 == 0 else "a\x00c") for i in range(40)]
+    corpus.append((40, "\x00bat"))
+    kern = KernelIndex()
+    kern.index_documents(corpus)
+    docs = spark.createDataFrame(
+        [(i, key, text) for i, (key, text) in enumerate(corpus)],
+        "doc_id long, doc_key long, text string",
+    )
+    out = str(tmp_path / "idx_nul")
+    build_index(spark, docs, out, n_buckets=2, aux=False)
+
+    got = {r["term"]: r["df"] for r in _postings_rows(out)}
+    want = {t: st.df for t, st in kern.terms.items() if st.df > 0}
+    assert got == want
+    assert got["a\x00b"] == got["a\x00c"] == 20
+
+    ex = QueryExecutor(IndexReader(out))
+    for q in ("a\x00c", "a\x00b", "\x00bat"):
+        res = ex.search(q, 10)
+        exp = kern.search(q, 10)
+        assert [d for d, _ in res] == [d for d, _ in exp], q
+        np.testing.assert_allclose(
+            [s for _, s in res], [s for _, s in exp], rtol=1e-5
+        )
+
+
+def test_build_index_restores_caller_local_properties(
+    spark, reference_docs, tmp_path
+):
+    """build_index labels its jobs and pools on the calling thread; the
+    caller's own description and pool come back afterwards, after a
+    failed build too, and unset ones stay unset."""
+    sc = spark.sparkContext
     docs = spark.createDataFrame(
         [(i, key, text) for i, (key, text) in enumerate(reference_docs)],
         "doc_id long, doc_key long, text string",
-    ).repartition(8)  # force multiple partials per term
-    out_a = str(tmp_path / "idx_partial")
-    out_b = str(tmp_path / "idx_rows")
-    build_index(spark, docs, out_a, n_buckets=2, salts=2, aux=False)
-    build_index(
-        spark, docs, out_b, n_buckets=2, salts=2, aux=False,
-        strategy="salted-agg", hot_df_threshold=1,
     )
-
-    def rows(path):
-        t = ds.dataset(
-            os.path.join(path, "postings"), format="parquet", partitioning="hive"
-        ).to_table(
-            columns=["term", "df", "n_docs", "max_tf", "payload", "weights",
-                     "block_last_doc", "block_max_w", "block_offsets", "bucket"]
-        )
-        pdf = t.to_pandas().sort_values("term").reset_index(drop=True)
-        return [
-            (
-                r.term, r.df, r.n_docs, r.max_tf,
-                bytes(r.payload), bytes(r.weights),
-                list(r.block_last_doc), list(r.block_max_w),
-                list(r.block_offsets), r.bucket,
-            )
-            for r in pdf.itertuples()
+    props = ("spark.job.description", "spark.scheduler.pool")
+    try:
+        sc.setJobDescription("caller-desc")
+        sc.setLocalProperty("spark.scheduler.pool", "caller-pool")
+        build_index(spark, docs, str(tmp_path / "idx_props"), n_buckets=2, aux=False)
+        assert [sc.getLocalProperty(k) for k in props] == [
+            "caller-desc", "caller-pool",
         ]
-
-    a, b = rows(out_a), rows(out_b)
-    assert len(a) == len(b) > 0
-    assert a == b
+        with pytest.raises(ValueError):
+            build_index(
+                spark, docs, str(tmp_path / "idx_props_err"), n_buckets=2,
+                fields=[("no_such_column", 0)],
+            )
+        assert [sc.getLocalProperty(k) for k in props] == [
+            "caller-desc", "caller-pool",
+        ]
+        for k in props:
+            sc.setLocalProperty(k, None)
+        with pytest.raises(ValueError):
+            build_index(
+                spark, docs, str(tmp_path / "idx_props_err2"), n_buckets=2,
+                fields=[("no_such_column", 0)],
+            )
+        assert [sc.getLocalProperty(k) for k in props] == [None, None]
+    finally:
+        for k in props:
+            sc.setLocalProperty(k, None)
 
 
 class _FakeTerm:
