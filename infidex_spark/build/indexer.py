@@ -71,7 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from infidex_spark.build.codec import encode_postings_batch
+from infidex_spark.build.codec import FORMAT_VERSION, encode_postings_batch
 from infidex_spark.kernel.engine import DEFAULT_FIELD_WEIGHT, DEFAULT_STOP_TERM_LIMIT
 from infidex_spark.kernel.strings import factorize_strings
 from infidex_spark.kernel.tokenize import DEFAULT_INDEX_SIZES, DEFAULT_START_PAD
@@ -1058,7 +1058,7 @@ def build_index(
                 for f in fs
             )
     manifest = {
-        "format_version": 1,
+        "format_version": FORMAT_VERSION,
         "total_docs": int(n_docs_total),
         "avgdl": avgdl,
         "sum_dl": float(sum_dl),
@@ -1079,9 +1079,6 @@ def build_index(
         "docs_per_sec": (n_docs_total / wall) if wall > 0 else 0.0,
         "table_bytes": table_bytes,
         "index_bytes_total": int(sum(table_bytes.values())),
-        # fmt 2: plen-3 rows are deltas (reader merges the base gram's
-        # own postings); fmt 1 / absent: rows are complete aggregates
-        "pattern_scores_fmt": 2 if (aux and do_ps) else None,
         "bucket_groups": bucket_metrics,
         "step_secs": step_secs,
         "aux_step_secs": aux_secs,
@@ -2213,8 +2210,6 @@ def _write_pattern_store(out_dir: str, cap_docs: int = 5_000_000) -> None:
     from infidex_spark.build.codec import nbit_width, pack_nbit
 
     sc_col = tbl["scores"].combine_chunks()
-    if hasattr(sc_col, "chunk"):
-        sc_col = sc_col.chunk(0) if sc_col.num_chunks else pa.array([], pa.list_(pa.int32()))
     sc_flat = sc_col.values.to_numpy() if len(sc_col) else np.zeros(0, np.int32)
     sc_offs = sc_col.offsets.to_numpy() if len(sc_col) else np.zeros(1, np.int64)
     packed: list[bytes] = []

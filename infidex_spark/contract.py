@@ -16,6 +16,7 @@ SQL-checkable projections of the same math (same formula, same constants).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,14 +50,20 @@ def _words(docs: DataFrame):
 def _contract_index(spark, sf_dir: str) -> str:
     """Build (or reuse) the per-sf_dir contract index. Rebuilds when the
     cached dir predates the current on-disk feature set (sq_fuzzy is
-    the newest table gated by short_precompute)."""
+    the newest table gated by short_precompute) or was written in
+    another index format_version."""
+    from infidex_spark.build.codec import FORMAT_VERSION
     from infidex_spark.build.indexer import build_index
 
     tag = sf_dir.strip("/").replace("/", "_")
     idx_dir = os.path.join(WORK_DIR, f"index_{tag}")
-    fresh = os.path.exists(os.path.join(idx_dir, "MANIFEST.json")) and os.path.isdir(
+    manifest = os.path.join(idx_dir, "MANIFEST.json")
+    fresh = os.path.exists(manifest) and os.path.isdir(
         os.path.join(idx_dir, "sq_fuzzy")
     )
+    if fresh:
+        with open(manifest) as f:
+            fresh = json.load(f).get("format_version") == FORMAT_VERSION
     if not fresh:
         docs = _docs(spark, sf_dir).selectExpr("doc_id", "doc_id as doc_key", "text")
         build_index(

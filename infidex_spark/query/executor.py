@@ -24,7 +24,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
-from infidex_spark.build.codec import BLOCK_SIZE, decode_postings
+from infidex_spark.build.codec import BLOCK_SIZE, FORMAT_VERSION, decode_postings
 from infidex_spark.kernel.bm25 import compute_idf, term_max_score, term_score
 from infidex_spark.kernel.normalize import normalize
 from infidex_spark.kernel.tokenize import search_tokens, word_tokens
@@ -61,8 +61,6 @@ def _list_rows_to_numpy(tbl, key_col: str, val_col: str) -> dict:
         return out
     keys = tbl[key_col].to_pylist()
     col = tbl.column(val_col).combine_chunks()
-    if hasattr(col, "chunk"):  # ChunkedArray on older pyarrow
-        col = col.chunk(0)
     flat = col.values.to_numpy(zero_copy_only=False)
     offs = col.offsets.to_numpy()
     for i, k in enumerate(keys):
@@ -97,46 +95,6 @@ def _short_query_precedence_wtext(titles, wtexts, q: str) -> np.ndarray:
         first_exact = wtexts.str.startswith(f" {q} ").to_numpy()
         any_exact = first_exact | wtexts.str.contains(
             f" {q} ", regex=False
-        ).to_numpy()
-        prec += any_exact * 1 + first_exact * 4
-    prec += titles.str.startswith(q).to_numpy() * 2
-    prec += (titles.str.strip() == q).to_numpy() * 8
-    return prec
-
-
-def _short_query_precedence_vector(titles, q: str) -> np.ndarray:
-    """Vectorized ShortQueryProcessor.ComputePrecedence over a pandas
-    Series of titles — identical bit-for-bit to the kernel's scalar
-    short_query_precedence (parity-tested); regex word boundaries are the
-    tokenizer's delimiter class, so 'word' means a maximal non-delimiter
-    run exactly as word_tokens produces."""
-    import re as _re
-
-    from infidex_spark.kernel.tokenize import DELIMITERS, word_tokens
-
-    D = _re.escape(DELIMITERS)
-    qtokens = word_tokens(q, min_size=1)
-    n = len(titles)
-    if len(qtokens) >= 2:
-        present = np.zeros((n, len(qtokens)), dtype=bool)
-        for j, qt in enumerate(qtokens):
-            pat = f"(?:^|[{D}]){_re.escape(qt)}(?:[{D}]|$)"
-            present[:, j] = titles.str.contains(pat, regex=True).to_numpy()
-        n_match = present.sum(axis=1)
-        all_present = n_match == len(qtokens)
-        n_words = titles.str.count(f"[^{D}]+").to_numpy()
-        return np.where(
-            all_present,
-            8 | np.where(n_words <= len(qtokens) + 1, 2, 0),
-            np.where(n_match > 0, 4, 0),
-        ).astype(np.int64)
-    prec = np.zeros(n, dtype=np.int64)
-    q_is_word = not any(c in DELIMITERS for c in q)
-    if q_is_word:
-        qe = _re.escape(q)
-        first_exact = titles.str.match(f"^[{D}]*{qe}(?:[{D}]|$)").to_numpy()
-        any_exact = first_exact | titles.str.contains(
-            f"(?:^|[{D}]){qe}(?:[{D}]|$)", regex=True
         ).to_numpy()
         prec += any_exact * 1 + first_exact * 4
     prec += titles.str.startswith(q).to_numpy() * 2
@@ -617,7 +575,26 @@ class CompositeTermPostings:
 
 
 class IndexReader:
-    """Random access into the on-disk index."""
+    """Random access into one on-disk index segment.
+
+    Reader contract: IndexReader and MultiReader expose the same names,
+    and QueryExecutor/RerankExecutor call them directly, never probing.
+
+    - Attributes: total_docs, avgdl, sizes, start_pad, stop_terms,
+      stop_term_limit, synonym_map, tombstones (doc_keys dropped from
+      every result; empty unless assigned) and one capability bool,
+      has_short_query_tables: term_dict and doc_meta are both present,
+      so multi-char short queries can take the FST-expansion path.
+    - A missing optional table (aux=False builds, delta segments,
+      tables withheld above a build cap) is reported only by a method's
+      return value: pattern_scores, char_terms, sq_meta, sq_topk,
+      wm_word_docs, sq1_word_docs, sorted_terms, word_df_map,
+      words_with_prefix, words_with_suffix and word_variant_words return
+      None and the caller takes its fallback path.
+
+    Opening checks the manifest's format_version: any value other than
+    FORMAT_VERSION raises ValueError (rebuild with build_index), so the
+    reader carries no branches for layouts older versions wrote."""
 
     DOC_CACHE_LIMIT = 50_000_000  # cache dl/doc_key arrays below this size
 
@@ -625,6 +602,13 @@ class IndexReader:
         self.index_dir = index_dir
         with open(os.path.join(index_dir, "MANIFEST.json")) as f:
             self.manifest = json.load(f)
+        version = self.manifest.get("format_version")
+        if version != FORMAT_VERSION:
+            raise ValueError(
+                f"{index_dir}: index format_version {version!r} is not "
+                f"{FORMAT_VERSION}; rebuild with build_index"
+            )
+        self.tombstones: frozenset[int] = frozenset()
         self.n_buckets = int(self.manifest["n_buckets"])
         self.total_docs = int(self.manifest["total_docs"])
         self.avgdl = np.float32(self.manifest["avgdl"])
@@ -651,10 +635,34 @@ class IndexReader:
         self._champions = ds.dataset(ch) if os.path.isdir(ch) else None
         self._doc_meta = ds.dataset(dm) if os.path.isdir(dm) else None
         self._term_dict = ds.dataset(td) if os.path.isdir(td) else None
+        self.has_short_query_tables = (
+            self._term_dict is not None and self._doc_meta is not None
+        )
         self._wm_buckets = 32  # matches _build_word_family
         self._wm_words = (
             ds.dataset(wm, partitioning="hive") if os.path.isdir(wm) else None
         )
+        self._wm_point = (
+            _KeyedPointReader(self._wm_words, "word")
+            if self._wm_words is not None
+            else None
+        )
+        self._prefix_point = (
+            _KeyedPointReader(self._prefixes, "prefix")
+            if self._prefixes is not None
+            else None
+        )
+        self._prefix_fetch_cache: dict[str, tuple] = {}
+        self._variant_cache: dict[str, list[str]] = {}
+        # postings term dictionaries, filled lazily or by prewarm:
+        # bucket -> fragment list (False = not listed yet, None = not a
+        # bucket=N layout), per-bucket footer stats and exact term columns
+        self._pfrag_idx: dict | None | bool = False
+        self._pb_meta: dict[int, list | None] = {}
+        self._pb_terms: dict[int, list | None] = {}
+        self._term_dict_rows_left = self.TERM_DICT_MAX_ROWS
+        self._term_dict_files_left = self.TERM_DICT_MAX_FILES
+        self._read_pool = None  # ThreadPoolExecutor for multi-file reads
         ps = os.path.join(index_dir, "pattern_scores")
         self._ps_buckets = 16  # matches _build_pattern_scores
         self._pattern_scores = (
@@ -673,11 +681,6 @@ class IndexReader:
         ct = os.path.join(index_dir, "char_terms")
         self._char_terms_ds = ds.dataset(ct) if os.path.isdir(ct) else None
         self._char_terms_cache: dict[str, tuple | None] = {}
-        # fmt >= 2: plen-3 pattern rows are deltas; the executor merges
-        # the base gram's own postings at probe time
-        self.pattern_scores_delta_fmt = (
-            (self.manifest.get("pattern_scores_fmt") or 1) >= 2
-        )
         self._all_terms: list[str] | None = None  # lazy fallback dictionary
         # prefix POP counts are tiny (<= ~alphabet^3 keys): keep them in
         # memory so the candidate selector only touches disk for the rare
@@ -745,10 +748,7 @@ class IndexReader:
         if not missing:
             return out
         cols = ["term", "df", "n_docs", "payload", "weights",
-                "block_last_doc", "block_max_w"]
-        has_offsets = "block_offsets" in self._postings.schema.names
-        if has_offsets:
-            cols.append("block_offsets")
+                "block_last_doc", "block_max_w", "block_offsets"]
         miss_set = set(missing)
         for tbl in self._read_term_rows(missing, cols):
             if tbl.num_rows == 0:
@@ -768,35 +768,21 @@ class IndexReader:
             wts = tbl["weights"]
             bl_f, bl_o = _list_views(tbl["block_last_doc"])
             bm_f, bm_o = _list_views(tbl["block_max_w"])
-            if has_offsets:
-                bo_f, bo_o = _list_views(tbl["block_offsets"])
+            bo_f, bo_o = _list_views(tbl["block_offsets"])
             for i in sel:
                 term = tcol[i]
                 n = int(nds[i])
-                if has_offsets:
-                    # defer decode: WAND/lookup touch only needed blocks
-                    tp = TermPostings(
-                        term=term,
-                        df=int(dfs[i]),
-                        payload=pay[i].as_py(),
-                        weights=wts[i].as_py(),
-                        n_docs=n,
-                        block_last_doc=bl_f[bl_o[i]:bl_o[i + 1]].copy(),
-                        block_max_w=bm_f[bm_o[i]:bm_o[i + 1]].copy(),
-                        block_offsets=bo_f[bo_o[i]:bo_o[i + 1]].copy(),
-                    )
-                else:  # legacy index without block offsets: eager decode
-                    doc_ids, w = decode_postings(
-                        pay[i].as_py(), wts[i].as_py(), n
-                    )
-                    tp = TermPostings(
-                        term=term,
-                        df=int(dfs[i]),
-                        doc_ids=doc_ids,
-                        tfs=w.astype(np.float32),
-                        block_last_doc=bl_f[bl_o[i]:bl_o[i + 1]].copy(),
-                        block_max_w=bm_f[bm_o[i]:bm_o[i + 1]].copy(),
-                    )
+                # defer decode: WAND/lookup touch only needed blocks
+                tp = TermPostings(
+                    term=term,
+                    df=int(dfs[i]),
+                    payload=pay[i].as_py(),
+                    weights=wts[i].as_py(),
+                    n_docs=n,
+                    block_last_doc=bl_f[bl_o[i]:bl_o[i + 1]].copy(),
+                    block_max_w=bm_f[bm_o[i]:bm_o[i + 1]].copy(),
+                    block_offsets=bo_f[bo_o[i]:bo_o[i + 1]].copy(),
+                )
                 out[term] = tp
                 if self._term_cache_size + n > self.TERM_CACHE_MAX_POSTINGS:
                     cache.clear()
@@ -819,20 +805,12 @@ class IndexReader:
             for b in range(self.n_buckets):
                 if self._postings_bucket_terms(b) is None:
                     self._postings_bucket_meta(b)
-            if self._wm_words is not None:
-                self._wm_point = _KeyedPointReader(self._wm_words, "word")
-                self._wm_point.load()
-            if self._prefixes is not None:
-                self._prefix_point = _KeyedPointReader(
-                    self._prefixes, "prefix"
-                )
-                self._prefix_point.load()
+            for pr in (self._wm_point, self._prefix_point):
+                if pr is not None:
+                    pr.load()
             # pre-spawn the read pool's threads: lazy creation would land
             # ~10 ms of thread.start() on the first cold query
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = self._read_pool = ThreadPoolExecutor(max_workers=8)
-            list(pool.map(int, range(16)))
+            list(self._pool().map(int, range(16)))
             # open the remaining lazy one-time stores here too — mmap'd
             # doc/pattern stores and the short-query meta columns are
             # store-open costs (the reference mmaps its segments at index
@@ -849,24 +827,31 @@ class IndexReader:
         per cached postings/wm/prefix file, so many prewarmed segment
         readers could approach the default fd ulimit). The reader stays
         usable — point structures reload lazily on the next query."""
-        pool = getattr(self, "_read_pool", None)
-        if pool is not None:
-            pool.shutdown(wait=False)
+        if self._read_pool is not None:
+            self._read_pool.shutdown(wait=False)
             self._read_pool = None
-        for attr in ("_pb_terms", "_pb_meta"):
-            d = getattr(self, attr, None)
-            if d:
-                d.clear()
-        for attr in ("_wm_point", "_prefix_point"):
-            pr = getattr(self, attr, None)
+        self._pb_terms.clear()
+        self._pb_meta.clear()
+        self._term_dict_rows_left = self.TERM_DICT_MAX_ROWS
+        self._term_dict_files_left = self.TERM_DICT_MAX_FILES
+        for pr in (self._wm_point, self._prefix_point):
             if pr is not None:
                 pr.close()
+
+    def _pool(self):
+        """The thread pool for multi-file row-group reads, created on
+        first use (or by prewarm_postings_meta)."""
+        if self._read_pool is None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            self._read_pool = ThreadPoolExecutor(max_workers=8)
+        return self._read_pool
 
     def _postings_frag_index(self):
         """bucket id -> [parquet fragment, ...] for the postings dataset,
         listed once per reader; None when the layout is not the expected
         hive bucket=N partitioning (callers fall back to a dataset scan)."""
-        idx = getattr(self, "_pfrag_idx", False)
+        idx = self._pfrag_idx
         if idx is not False:
             return idx
         import re as _re
@@ -894,14 +879,11 @@ class IndexReader:
         row groups, so the per-group [min, max] intervals are narrow and
         a point probe touches one or two groups — the columnar analogue
         of the reference's FST term dictionary (term -> posting offsets);
-        here the parquet footer stats ARE the dictionary. Stats bounds
-        stay valid (just wider) on unsorted legacy files, and parquet
+        here the parquet footer stats ARE the dictionary. Parquet
         min/max truncation only ever widens the interval. Returns None
         when stats are unavailable — callers fall back to a filtered
         dataset scan."""
-        cache = getattr(self, "_pb_meta", None)
-        if cache is None:
-            cache = self._pb_meta = {}
+        cache = self._pb_meta
         entry = cache.get(b, False)
         if entry is not False:
             return entry
@@ -953,13 +935,9 @@ class IndexReader:
         per term — this is the reference's FST term dictionary (term ->
         postings offset), realised as a sorted column + searchsorted.
         Returns None (stats/scan fallback) when the vocabulary or file
-        count exceeds the budget, a file's rows are not term-sorted
-        (legacy layout), or metadata is unreadable."""
-        cache = getattr(self, "_pb_terms", None)
-        if cache is None:
-            cache = self._pb_terms = {}
-            self._term_dict_rows_left = self.TERM_DICT_MAX_ROWS
-            self._term_dict_files_left = self.TERM_DICT_MAX_FILES
+        count exceeds the budget, a file's rows are not term-sorted, or
+        metadata is unreadable."""
+        cache = self._pb_terms
         entry = cache.get(b, False)
         if entry is not False:
             return entry
@@ -1056,13 +1034,8 @@ class IndexReader:
             # pyarrow releases the GIL per read: overlapping the per-file
             # group reads hides the ~0.8 ms fixed cost per file (a cold
             # multi-gram probe touches ~16 files)
-            from concurrent.futures import ThreadPoolExecutor
-
-            pool = getattr(self, "_read_pool", None)
-            if pool is None:
-                pool = self._read_pool = ThreadPoolExecutor(max_workers=8)
             tbls.extend(
-                pool.map(
+                self._pool().map(
                     lambda d: d[0].read_row_groups(d[1], columns=file_cols),
                     direct,
                 )
@@ -1099,18 +1072,11 @@ class IndexReader:
             return 0, None
         if self._prefix_counts is not None and prefix not in self._prefix_counts:
             return 0, None
-        cache = getattr(self, "_prefix_fetch_cache", None)
-        if cache is None:
-            cache = self._prefix_fetch_cache = {}
+        cache = self._prefix_fetch_cache
         got = cache.get(prefix)
         if got is not None:
             return got
-        pr = getattr(self, "_prefix_point", None)
-        if pr is None:
-            pr = self._prefix_point = _KeyedPointReader(
-                self._prefixes, "prefix"
-            )
-        tbls = pr.fetch([prefix], ["prefix", "n_docs", "doc_ids"])
+        tbls = self._prefix_point.fetch([prefix], ["prefix", "n_docs", "doc_ids"])
         if tbls is None:
             tbl = self._prefixes.to_table(
                 filter=ds.field("prefix") == prefix
@@ -1143,9 +1109,7 @@ class IndexReader:
         fuzzy-expanded query (same rationale as _term_cache)."""
         if self._variants is None:
             return []
-        cache = getattr(self, "_variant_cache", None)
-        if cache is None:
-            cache = self._variant_cache = {}
+        cache = self._variant_cache
         got = cache.get(token)
         if got is not None:
             return list(got)
@@ -1362,17 +1326,17 @@ class IndexReader:
         tbl = d.to_table(filter=ds.field("word").isin(words))
         return dict(zip(tbl["word"].to_pylist(), tbl["df"].to_pylist()))
 
-    def wm_word_docs(self, words: list[str]) -> dict[str, np.ndarray]:
+    def wm_word_docs(self, words: list[str]) -> dict[str, np.ndarray] | None:
         """WordMatcher word-level postings (B9): word -> sorted internal
-        doc ids, independent of gram stop demotion. Exact point fetch on
-        the word-sorted wm_words table via the in-RAM key dictionary,
-        with a filtered dataset scan as the layout fallback."""
-        if self._wm_words is None or not words:
+        doc ids, independent of gram stop demotion; None when the
+        wm_words table is absent. Exact point fetch on the word-sorted
+        table via the in-RAM key dictionary, with a filtered dataset
+        scan as the layout fallback."""
+        if self._wm_words is None:
+            return None
+        if not words:
             return {}
-        pr = getattr(self, "_wm_point", None)
-        if pr is None:
-            pr = self._wm_point = _KeyedPointReader(self._wm_words, "word")
-        tbls = pr.fetch(words, ["word", "doc_ids"])
+        tbls = self._wm_point.fetch(words, ["word", "doc_ids"])
         if tbls is None:
             buckets = sorted(
                 {term_bucket(w, self._wm_buckets) for w in words}
@@ -1413,17 +1377,14 @@ class IndexReader:
             lo, hi = int(offs[row]), int(offs[row + 1])
             if int(n_docs[row]) > hi - lo:
                 return None  # withheld (cap_docs exceeded at build)
-            if scores[0] == "packed":
-                from infidex_spark.build.codec import unpack_nbit
+            from infidex_spark.build.codec import unpack_nbit
 
-                _, buf, poffs, bits = scores
-                sc = unpack_nbit(
-                    buf[int(poffs[row]) : int(poffs[row + 1])],
-                    hi - lo,
-                    int(bits[row]),
-                )
-            else:
-                sc = scores[1][lo:hi]
+            buf, poffs, bits = scores
+            sc = unpack_nbit(
+                buf[int(poffs[row]) : int(poffs[row + 1])],
+                hi - lo,
+                int(bits[row]),
+            )
             return ids_flat[lo:hi], sc
         b = term_bucket(pattern, self._ps_buckets)
         tbl = self._pattern_scores.to_table(
@@ -1440,10 +1401,13 @@ class IndexReader:
         scores = tbl.column("scores").combine_chunks().flatten().to_numpy()
         return ids, scores
 
-    def sq1_word_docs(self, words: list[str]) -> dict[str, np.ndarray]:
+    def sq1_word_docs(self, words: list[str]) -> dict[str, np.ndarray] | None:
         """Single-char word postings (short-query precedence): word ->
-        sorted internal doc ids."""
-        if self._sq_words1 is None or not words:
+        sorted internal doc ids; None when the sq_words1 table is
+        absent."""
+        if self._sq_words1 is None:
+            return None
+        if not words:
             return {}
         if "word" not in self._sq_words1.schema.names:  # empty write: no
             return {}  # 1-char word exists in the corpus
@@ -1515,7 +1479,7 @@ class IndexReader:
     def char_terms(self, ch: str) -> tuple[np.ndarray, np.ndarray] | None:
         """(sorted terms containing ch, word-boundary flags) from the
         build-time char_terms table. None when the table is absent or
-        the char's list was cap-withheld — callers then run the legacy
+        the char's list was cap-withheld — callers then run the
         full-dictionary scan."""
         if self._char_terms_ds is None:
             return None
@@ -1544,16 +1508,12 @@ class IndexReader:
     def sq_meta(self) -> dict | None:
         """In-memory short-query precedence columns (doc-id-sorted numpy
         arrays: n_tokens int64, tiny/first3/first_word3 '<U3') — loaded
-        once from doc_meta. None when the columns are absent (legacy
-        index) or the corpus exceeds the cache cap; callers then use the
-        per-candidate doc_meta point-fetch path."""
+        once from doc_meta. None when doc_meta is absent or the corpus
+        exceeds the cache cap; callers then use the per-candidate
+        doc_meta point-fetch path."""
         if self._sq_meta is not None:
             return self._sq_meta or None
         if self._doc_meta is None or self.total_docs > self.SQ_META_CACHE_LIMIT:
-            self._sq_meta = {}
-            return None
-        names = self._doc_meta.schema.names
-        if "first3" not in names or "first_word3" not in names:
             self._sq_meta = {}
             return None
         tbl = self._doc_meta.to_table(
@@ -1577,10 +1537,11 @@ class IndexReader:
 
     def _open_ps_store(self):
         """Memory-map pattern_scores.arrow once: (sorted pattern '<U4'
-        array + its row permutation, flattened doc ids/scores, list
+        array + its row permutation, flattened doc ids, (packed score
+        bytes, per-row byte offsets, per-row bit widths), doc-id list
         offsets, n_docs) — rows are stored in arrival order (no build
         sort); the tiny pattern column is argsorted here, and a probe is
-        one searchsorted + two zero-copy slices."""
+        one searchsorted, a zero-copy id slice and one row's unpack."""
         if self._ps_store is None:
             path = os.path.join(self.index_dir, "pattern_scores.arrow")
             if not os.path.isfile(path):
@@ -1593,30 +1554,21 @@ class IndexReader:
                 ids_col = tbl["doc_ids"].chunk(0)
                 pats = tbl["pattern"].to_numpy().astype("<U4")
                 order = np.argsort(pats, kind="stable")
-                if "scores_packed" in tbl.schema.names:
-                    # CompactArray rows (n-bit packed scores): keep the
-                    # binary column's flat buffer + offsets; decode the
-                    # probed row's slice only
-                    pk = tbl["scores_packed"].chunk(0)
-                    bufs = pk.buffers()
-                    data = (
-                        np.frombuffer(bufs[2], dtype=np.uint8)
-                        if bufs[2] is not None
-                        else np.zeros(0, dtype=np.uint8)
-                    )
-                    # binary array buffers: [validity, int32 offsets, data]
-                    poffs = np.frombuffer(bufs[1], dtype=np.int32)[
-                        pk.offset : pk.offset + len(pk) + 1
-                    ]
-                    scores = (
-                        "packed",
-                        data,
-                        poffs,
-                        tbl["score_bits"].to_numpy(),
-                    )
-                else:  # legacy int32 list column
-                    sc_col = tbl["scores"].chunk(0)
-                    scores = ("flat", sc_col.values.to_numpy(), None, None)
+                # CompactArray rows (n-bit packed scores): keep the
+                # binary column's flat buffer + offsets; decode the
+                # probed row's slice only
+                pk = tbl["scores_packed"].chunk(0)
+                bufs = pk.buffers()
+                data = (
+                    np.frombuffer(bufs[2], dtype=np.uint8)
+                    if bufs[2] is not None
+                    else np.zeros(0, dtype=np.uint8)
+                )
+                # binary array buffers: [validity, int32 offsets, data]
+                poffs = np.frombuffer(bufs[1], dtype=np.int32)[
+                    pk.offset : pk.offset + len(pk) + 1
+                ]
+                scores = (data, poffs, tbl["score_bits"].to_numpy())
                 self._ps_store = (
                     pats[order],
                     order,
@@ -1628,9 +1580,8 @@ class IndexReader:
         return self._ps_store or None
 
     def _open_doc_store(self):
-        """Memory-map doc_store.arrow once. Returns (sorted doc_id
-        ndarray, row permutation or None when rows are already
-        doc_id-sorted, text column) or None when absent."""
+        """Memory-map doc_store.arrow once (written doc_id-sorted).
+        Returns (doc_id ndarray, text column) or None when absent."""
         if self._doc_store is None:
             path = os.path.join(self.index_dir, "doc_store.arrow")
             if not os.path.isfile(path):
@@ -1640,15 +1591,7 @@ class IndexReader:
 
                 reader = pa.ipc.open_file(pa.memory_map(path))
                 tbl = reader.read_all()  # zero-copy views over the mmap
-                ids = tbl["doc_id"].to_numpy()
-                # builds since round 5 write the store doc_id-sorted;
-                # the O(n) check keeps open cost flat (legacy arrival-
-                # order stores pay the argsort once)
-                if ids.size < 2 or np.all(ids[:-1] <= ids[1:]):
-                    self._doc_store = (ids, None, tbl["text"])
-                else:
-                    order = np.argsort(ids, kind="stable")
-                    self._doc_store = (ids[order], order, tbl["text"])
+                self._doc_store = (tbl["doc_id"].to_numpy(), tbl["text"])
         return self._doc_store or None
 
     def doc_texts(self, doc_ids: list[int]) -> dict[int, str]:
@@ -1660,14 +1603,13 @@ class IndexReader:
             return {}
         store = self._open_doc_store()
         if store is not None:
-            ids_sorted, order, texts = store
+            ids_sorted, texts = store
             want = np.asarray(doc_ids, dtype=np.int64)
             pos = np.searchsorted(ids_sorted, want)
             pos_c = np.clip(pos, 0, max(ids_sorted.size - 1, 0))
             ok = ids_sorted.size > 0
             hit = (ids_sorted[pos_c] == want) if ok else np.zeros(want.size, bool)
-            rows = pos_c[hit] if order is None else order[pos_c[hit]]
-            got = texts.take(rows).to_pylist()
+            got = texts.take(pos_c[hit]).to_pylist()
             return dict(zip(want[hit].tolist(), got))
         if self._doc_meta is None:
             return {}
@@ -1678,19 +1620,18 @@ class IndexReader:
 
     def doc_title_rows(
         self, doc_ids: list[int]
-    ) -> tuple[dict[int, str], dict[int, str] | None]:
-        """(text, words_text) per internal doc id. words_text is the
-        space-joined word stream with sentinel spaces (None when the index
-        predates the column). Slim indexes (doc_meta without the text
-        columns — _slim_doc_meta) serve texts from the doc_store and
-        re-derive words_text with the build's exact delimiter collapse."""
+    ) -> tuple[dict[int, str], dict[int, str]]:
+        """(text, words_text) per internal doc id held by this segment.
+        words_text is the space-joined word stream with sentinel spaces.
+        Slim indexes (doc_meta without the text columns — _slim_doc_meta)
+        serve texts from the doc_store and re-derive words_text with the
+        build's exact delimiter collapse."""
         if self._doc_meta is None or not doc_ids:
-            return {}, None
-        names = self._doc_meta.schema.names
-        if "text" not in names:
+            return {}, {}
+        if "text" not in self._doc_meta.schema.names:
             texts = self.doc_texts(doc_ids)
             if not texts:
-                return {}, None
+                return {}, {}
             import pandas as pd
 
             from infidex_spark.build.tokenizer import _DELIM_SPLIT
@@ -1699,19 +1640,15 @@ class IndexReader:
             joined = ser.str.replace(_DELIM_SPLIT, " ", regex=True).str.strip()
             wt = (" " + joined + " ").where(joined != "", " ")
             return texts, dict(zip(texts.keys(), wt.tolist()))
-        cols = ["doc_id", "text"]
-        has_words = "words_text" in names
-        if has_words:
-            cols.append("words_text")
         tbl = self._doc_meta.to_table(
-            columns=cols, filter=ds.field("doc_id").isin(doc_ids)
+            columns=["doc_id", "text", "words_text"],
+            filter=ds.field("doc_id").isin(doc_ids),
         )
         ids = tbl["doc_id"].to_pylist()
-        texts = dict(zip(ids, tbl["text"].to_pylist()))
-        wtexts = (
-            dict(zip(ids, tbl["words_text"].to_pylist())) if has_words else None
+        return (
+            dict(zip(ids, tbl["text"].to_pylist())),
+            dict(zip(ids, tbl["words_text"].to_pylist())),
         )
-        return texts, wtexts
 
     def ids_for_keys(self, keys: list[int]) -> dict[int, list[int]]:
         """doc_key -> sorted internal doc_ids (all segments of the doc).
@@ -1758,12 +1695,13 @@ class IndexReader:
 
 class MultiReader:
     """Reader over a main segment plus delta segments (streaming ingest)
-    with tombstone deletes. Same interface as IndexReader; per-term data
-    merges across segments (global df = sum; doc-id spaces are disjoint
-    and ordered, so concatenated postings stay sorted). Terms stopped in
-    ANY segment are treated as stopped globally (their true df is
-    unrecoverable there — conservative, matches the reference's permanent
-    stop tombstones)."""
+    with tombstone deletes. Same reader contract as IndexReader (see its
+    docstring); an optional table counts as present only when every
+    segment has it. Per-term data merges across segments (global df =
+    sum; doc-id spaces are disjoint and ordered, so concatenated
+    postings stay sorted). Terms stopped in ANY segment are treated as
+    stopped globally (their true df is unrecoverable there —
+    conservative, matches the reference's permanent stop tombstones)."""
 
     def __init__(self, index_dir: str):
         from infidex_spark.streaming.incremental import (
@@ -1788,6 +1726,13 @@ class MultiReader:
         self.stop_terms = frozenset().union(*(r.stop_terms for r in self.readers))
         self.tombstones = frozenset(load_tombstones(index_dir).tolist())
         self.synonym_map = r0.synonym_map
+        self.has_short_query_tables = all(
+            r.has_short_query_tables for r in self.readers
+        )
+
+    def prewarm_postings_meta(self) -> None:
+        for r in self.readers:
+            r.prewarm_postings_meta()
 
     def fetch_terms(self, terms: list[str]):
         """Per-term merge across segments via CompositeTermPostings —
@@ -1884,19 +1829,19 @@ class MultiReader:
                 return None
         return out
 
-    def wm_word_docs(self, words: list[str]) -> dict[str, np.ndarray]:
-        out: dict[str, list[np.ndarray]] = {}
-        for r in self.readers:
-            for w, ids in r.wm_word_docs(words).items():
-                out.setdefault(w, []).append(ids)
-        return {
-            w: np.sort(np.concatenate(parts)) for w, parts in out.items()
-        }
+    def wm_word_docs(self, words: list[str]) -> dict[str, np.ndarray] | None:
+        return self._merge_word_docs([r.wm_word_docs(words) for r in self.readers])
 
-    def sq1_word_docs(self, words: list[str]) -> dict[str, np.ndarray]:
+    def sq1_word_docs(self, words: list[str]) -> dict[str, np.ndarray] | None:
+        return self._merge_word_docs([r.sq1_word_docs(words) for r in self.readers])
+
+    @staticmethod
+    def _merge_word_docs(per_segment: list) -> dict[str, np.ndarray] | None:
+        if any(got is None for got in per_segment):
+            return None
         out: dict[str, list[np.ndarray]] = {}
-        for r in self.readers:
-            for w, ids in r.sq1_word_docs(words).items():
+        for got in per_segment:
+            for w, ids in got.items():
                 out.setdefault(w, []).append(ids)
         return {
             w: np.sort(np.concatenate(parts)) for w, parts in out.items()
@@ -1906,17 +1851,9 @@ class MultiReader:
         for r in self.readers:
             r.close()
 
-    @property
-    def pattern_scores_delta_fmt(self) -> bool:
-        return all(r.pattern_scores_delta_fmt for r in self.readers)
-
     def pattern_scores(self, pattern: str) -> tuple[np.ndarray, np.ndarray] | None:
         """Per-segment aggregates concatenate (doc-id spaces disjoint and
-        ascending); conservative None when any segment lacks the table or
-        segments mix row formats (complete vs delta rows cannot merge)."""
-        fmts = {r.pattern_scores_delta_fmt for r in self.readers}
-        if len(fmts) > 1:
-            return None
+        ascending); None when any segment lacks the table or the row."""
         ids_l, sc_l = [], []
         for r in self.readers:
             got = r.pattern_scores(pattern)
@@ -1931,30 +1868,16 @@ class MultiReader:
         # precedence path (segment caches would need id-space stitching)
         return None
 
-    @property
-    def _wm_words(self):
-        # rerank capability probe: present iff every segment has the table
-        return (
-            self.readers[0]._wm_words
-            if all(r._wm_words is not None for r in self.readers)
-            else None
-        )
+    # stored champion rows are per segment (their scores anchor to one
+    # segment's max), so a multi-segment index answers short queries live
+    def sq_topk(self, q: str) -> list[tuple[int, float]] | None:
+        return None
 
-    @property
-    def _doc_meta(self):
-        return (
-            self.readers[0]._doc_meta
-            if all(r._doc_meta is not None for r in self.readers)
-            else None
-        )
+    def sq_topk_complete(self, q: str) -> bool:
+        return False
 
-    @property
-    def _term_dict(self):
-        return (
-            self.readers[0]._term_dict
-            if all(r._term_dict is not None for r in self.readers)
-            else None
-        )
+    def char_terms(self, ch: str) -> tuple[np.ndarray, np.ndarray] | None:
+        return None  # the caller scans the merged sorted_terms()
 
     def doc_texts(self, doc_ids: list[int]) -> dict[int, str]:
         out: dict[int, str] = {}
@@ -1962,16 +1885,15 @@ class MultiReader:
             out.update(r.doc_texts(doc_ids))
         return out
 
-    def doc_title_rows(self, doc_ids: list[int]):
+    def doc_title_rows(
+        self, doc_ids: list[int]
+    ) -> tuple[dict[int, str], dict[int, str]]:
         texts: dict[int, str] = {}
-        wtexts: dict[int, str] | None = {}
+        wtexts: dict[int, str] = {}
         for r in self.readers:
             t, w = r.doc_title_rows(doc_ids)
             texts.update(t)
-            if w is None:
-                wtexts = None
-            elif wtexts is not None:
-                wtexts.update(w)
+            wtexts.update(w)
         return texts, wtexts
 
     def terms_with_prefix(self, pattern: str, limit: int) -> list[str]:
@@ -2043,6 +1965,7 @@ class QueryExecutor:
         # precomputes champion lists for the same reason
         self._short_cache: dict[tuple[str, int], list] = {}
         self._terms_ser: tuple | None = None  # fuzzy-fallback term Series
+        self._fuzzy_union_cache: dict[str, TermPostings | None] = {}
 
     def search(
         self, query: str, k: int = 10, use_wand: bool = True
@@ -2051,7 +1974,7 @@ class QueryExecutor:
         block-max MaxScore pruner (lossless — identical results, tested);
         False scores every candidate exhaustively."""
         q = normalize(query.strip()).lower()
-        syn = getattr(self.r, "synonym_map", None)
+        syn = self.r.synonym_map
         if syn is not None and syn.has_mappings:
             q = syn.canonicalize_text(q)
         if not q or self.r.total_docs == 0:
@@ -2065,12 +1988,11 @@ class QueryExecutor:
             # 1-char: positional-prefix champion path; longer non-ngram
             # queries: the FST-expansion short-query processor (D10),
             # falling back to the resolver when term_dict/doc_meta are
-            # absent (aux=False builds, delta segments)
+            # absent (aux=False builds; delta segments have both)
             ck = (q, k)
             got = self._short_cache.get(ck)
             if got is None:
-                if len(q) > 1 and getattr(self.r, "_term_dict", None) is not None \
-                        and getattr(self.r, "_doc_meta", None) is not None:
+                if len(q) > 1 and self.r.has_short_query_tables:
                     # champion lists (build-time full answers) first: one
                     # dict lookup when the query was precomputed and the
                     # stored depth covers k. Tombstones FILTER the stored
@@ -2084,19 +2006,14 @@ class QueryExecutor:
                     # so the filtered row stays exact while it still
                     # covers k (complete rows cover any k).
                     got = None
-                    get_topk = getattr(self.r, "sq_topk", None)
-                    if get_topk is not None:
-                        row = get_topk(q)
-                        tomb = getattr(self.r, "tombstones", frozenset())
-                        if row is not None and tomb:
-                            row = [(d, s) for d, s in row if d not in tomb]
-                        if row is not None and (
-                            k <= len(row)
-                            or getattr(
-                                self.r, "sq_topk_complete", lambda _q: False
-                            )(q)
-                        ):
-                            got = [(int(d), float(s)) for d, s in row[:k]]
+                    row = self.r.sq_topk(q)
+                    tomb = self.r.tombstones
+                    if row is not None and tomb:
+                        row = [(d, s) for d, s in row if d not in tomb]
+                    if row is not None and (
+                        k <= len(row) or self.r.sq_topk_complete(q)
+                    ):
+                        got = [(int(d), float(s)) for d, s in row[:k]]
                     if got is None:
                         got = self._search_short_query(q, k)
                 else:
@@ -2152,7 +2069,7 @@ class QueryExecutor:
 
         # soft deletes: tombstoned docs never reach scoring (reference:
         # Document.Deleted checked in the scoring loop)
-        tomb = getattr(self.r, "tombstones", None)
+        tomb = self.r.tombstones
         if tomb:
             live = ~np.isin(keys, np.fromiter(tomb, dtype=np.int64, count=len(tomb)))
             cand, dl, keys = cand[live], dl[live], keys[live]
@@ -2237,20 +2154,18 @@ class QueryExecutor:
         # ~1.3 s of copies on broad-fuzzy queries at 1M docs
         w_l: list[tuple[np.ndarray, float]] = []
 
-        get_ps = getattr(r, "pattern_scores", None)
-        ps_delta = getattr(r, "pattern_scores_delta_fmt", False)
         live_pats: list[str] = []
         base_pats: list[str] = []
         for pat in patterns:
-            got = get_ps(pat) if get_ps is not None else None
+            got = r.pattern_scores(pat)
             if got is None:
                 live_pats.append(pat)
                 continue
             if got[0].size:
                 ids_l.append(got[0])
                 w_l.append((got[1], 10.0))
-            if ps_delta and len(pat) == 3 and not pat.startswith("￿"):
-                # fmt 2: the row is a delta — the base gram's own
+            if len(pat) == 3 and not pat.startswith("￿"):
+                # plen-3 rows are deltas — the base gram's own
                 # postings (lazily decoded, term-cached) complete it.
                 # Pad-prefixed pattern rows are stored complete.
                 base_pats.append(pat)
@@ -2329,7 +2244,7 @@ class QueryExecutor:
         # rows exactly servable under tombstones: filter + truncate is
         # bit-identical to this live path.
         max_score = float(scores.max())
-        tomb = getattr(r, "tombstones", frozenset())
+        tomb = r.tombstones
         if tomb:
             live = ~np.isin(uk, np.fromiter(tomb, dtype=np.int64, count=len(tomb)))
             uk, scores, rep = uk[live], scores[live], rep[live]
@@ -2366,39 +2281,28 @@ class QueryExecutor:
         cap-withheld."""
         import pandas as pd
 
-        get_ct = getattr(self.r, "char_terms", None)
-        if get_ct is not None and getattr(self.r, "_char_terms_ds", None) is not None:
-            terms_l: list[np.ndarray] = []
-            wb_l: list[np.ndarray] = []
-            ok = True
-            for ch in dict.fromkeys(q):
-                got = get_ct(ch)
-                if got is None:
-                    ok = False
-                    break
-                terms_l.append(got[0])
-                wb_l.append(got[1])
-            if ok:
-                if not terms_l or not sum(len(t) for t in terms_l):
-                    return []
-                tcat = np.concatenate(terms_l)
-                wbcat = np.concatenate(wb_l)
-                uniq, inv = np.unique(tcat, return_inverse=True)
-                wb_any = np.bincount(inv, weights=wbcat.astype(np.float64)) > 0
-                ser = pd.Series(uniq)
-                excl = np.zeros(len(uniq), dtype=bool)
-                for pat in patterns:
-                    excl |= ser.str.startswith(pat).to_numpy()
-                sel = ~excl
-                if not sel.any():
-                    return []
-                mult = np.where(wb_any[sel], 2.0, 1.0)
-                return list(zip(ser[sel].tolist(), mult.tolist()))
+        per_char = [self.r.char_terms(ch) for ch in dict.fromkeys(q)]
+        if all(got is not None for got in per_char):
+            if not sum(len(got[0]) for got in per_char):
+                return []
+            tcat = np.concatenate([got[0] for got in per_char])
+            wbcat = np.concatenate([got[1] for got in per_char])
+            uniq, inv = np.unique(tcat, return_inverse=True)
+            wb_any = np.bincount(inv, weights=wbcat.astype(np.float64)) > 0
+            ser = pd.Series(uniq)
+            excl = np.zeros(len(uniq), dtype=bool)
+            for pat in patterns:
+                excl |= ser.str.startswith(pat).to_numpy()
+            sel = ~excl
+            if not sel.any():
+                return []
+            mult = np.where(wb_any[sel], 2.0, 1.0)
+            return list(zip(ser[sel].tolist(), mult.tolist()))
         all_terms = self.r.sorted_terms()
         if all_terms is None:
             return None
 
-        cached = getattr(self, "_terms_ser", None)
+        cached = self._terms_ser
         if cached is None or cached[0] is not all_terms:
             ser = pd.Series(all_terms)
             self._terms_ser = (all_terms, ser)
@@ -2428,20 +2332,15 @@ class QueryExecutor:
         t1 = sorted({t for t in tokens if len(t) == 1})
         t2 = sorted({t for t in tokens if len(t) >= 2})
         out: dict[str, np.ndarray] = {}
-        if t1:
-            if getattr(r, "_sq_words1", None) is None:
+        for toks, fetch in ((t1, r.sq1_word_docs), (t2, r.wm_word_docs)):
+            if not toks:
+                continue
+            got = fetch(toks)
+            if got is None:
                 return None
-            got = r.sq1_word_docs(t1)
-            for t in t1:
+            for t in toks:
                 out[t] = got.get(t, np.zeros(0, dtype=np.int64))
-        if t2:
-            if getattr(r, "_wm_words", None) is None:
-                return None
-            got = r.wm_word_docs(t2)
-            for t in t2:
-                out[t] = got.get(t, np.zeros(0, dtype=np.int64))
-        cap = getattr(r, "stop_term_limit", 1 << 60)
-        if any(v.size >= cap for v in out.values()):
+        if any(v.size >= r.stop_term_limit for v in out.values()):
             return None
         return out
 
@@ -2456,7 +2355,7 @@ class QueryExecutor:
 
         r = self.r
         qtokens = word_tokens(q, min_size=1)
-        meta = r.sq_meta() if hasattr(r, "sq_meta") else None
+        meta = r.sq_meta()
         fast = meta is not None
         if fast and len(qtokens) < 2 and len(q) > 3:
             # first3/tiny are 3-char columns: they cannot answer
@@ -2519,11 +2418,8 @@ class QueryExecutor:
         texts_map, wtexts_map = r.doc_title_rows(sorted(set(rep.tolist())))
         rep_list = rep.tolist()
         titles = pd.Series([texts_map.get(int(i), "") for i in rep_list])
-        if wtexts_map is not None:
-            wtexts = pd.Series([wtexts_map.get(int(i), " ") for i in rep_list])
-            return _short_query_precedence_wtext(titles, wtexts, q)
-        # legacy index without words_text: regex word boundaries
-        return _short_query_precedence_vector(titles, q)
+        wtexts = pd.Series([wtexts_map.get(int(i), " ") for i in rep_list])
+        return _short_query_precedence_wtext(titles, wtexts, q)
 
     def _short_query(self, q: str, k: int) -> list[tuple[int, float]]:
         """1-3 char queries: positional-prefix resolution (D10) with the
@@ -2531,17 +2427,13 @@ class QueryExecutor:
         hot prefixes whose full rows are not stored."""
         from infidex_spark.kernel.engine import short_query_score
 
-        rows = None
-        get_rows = getattr(self.r, "short_query_rows", None)
-        if get_rows is not None:
-            rows = get_rows(q)
+        tomb = self.r.tombstones
+        rows = self.r.short_query_rows(q)
         if rows is None:
-            champs = getattr(self.r, "champion_list", lambda p: [])(q)
-            out = [(d, s) for d, s in champs if d not in getattr(self.r, "tombstones", ())]
-            return out[:k]
+            champs = self.r.champion_list(q)
+            return [(d, s) for d, s in champs if d not in tomb][:k]
         if not rows or rows["doc_id"].size == 0:
             return []
-        tomb = getattr(self.r, "tombstones", frozenset())
         out = []
         for i in range(rows["doc_id"].size):
             key = int(rows["doc_key"][i])
@@ -2567,9 +2459,7 @@ class QueryExecutor:
         cached per token — it is a pure function of the reader's
         immutable postings, and rebuilding it (concat + unique over the
         matched lists) was a per-call cost on every fuzzy query."""
-        cache = getattr(self, "_fuzzy_union_cache", None)
-        if cache is None:
-            cache = self._fuzzy_union_cache = {}
+        cache = self._fuzzy_union_cache
         if token in cache:
             return cache[token]
         tp = self._fuzzy_union_build(token)

@@ -112,15 +112,9 @@ class RerankExecutor:
         self.stage1 = QueryExecutor(reader)
         # store-open prewarm: postings footer metadata (the parquet-stats
         # term dictionary) loads here, not on the first query
-        for r in getattr(reader, "readers", [reader]):
-            if hasattr(r, "prewarm_postings_meta"):
-                r.prewarm_postings_meta()
+        reader.prewarm_postings_meta()
         self.word_vocab_degraded = False
-        self._words = (
-            reader.word_df_map(word_vocab_cap)
-            if hasattr(reader, "word_df_map")
-            else None
-        )
+        self._words = reader.word_df_map(word_vocab_cap)
         n = reader.total_docs
         word_idf = None
         if self._words is not None:
@@ -133,8 +127,7 @@ class RerankExecutor:
 
             self._affix_vocab = AffixVocab(self._words)
         elif (
-            getattr(reader, "words_with_prefix", None) is not None
-            and reader.words_with_prefix("￿", 1) is not None
+            reader.words_with_prefix("￿", 1) is not None
             and reader.word_variant_words("￿") is not None
         ):
             # vocabulary above the in-memory cap but the sorted word
@@ -215,9 +208,9 @@ class RerankExecutor:
         words, served from the dedicated wm_words word-postings table
         (len >= 2 words, NO df cutoff — WordMatcher.cs keeps its indexes
         independent of gram stop demotion, so len-2 words and stop words
-        still match). Legacy indexes without the table fall back to term
-        postings, where stop-demoted words contribute no candidates
-        (documented delta)."""
+        still match). aux=False builds have no such table and fall back
+        to term postings, where stop-demoted words contribute no
+        candidates (documented delta)."""
         probe_terms: set[str] = set()
         vocab = self._affix_vocab
         for w in set(word_tokens(q, min_size=2)):
@@ -228,17 +221,14 @@ class RerankExecutor:
             if self.setup.cover_prefix_suffix and vocab is not None:
                 # shared 4096-term budget per query word (WordMatcher.cs:41)
                 probe_terms.update(vocab.affix_terms(w))
-        wm = getattr(self.r, "wm_word_docs", None)
-        if wm is not None and getattr(self.r, "_wm_words", None) is not None:
+        wm = self.r.wm_word_docs(sorted(probe_terms))
+        if wm is not None:
             # dedicated word-level postings: no df cutoff (reference
             # WordMatcher semantics — stop words and len-2 words match)
-            arrs = [
-                np.asarray(ids, dtype=np.int64)
-                for ids in wm(sorted(probe_terms)).values()
-            ]
+            arrs = [np.asarray(ids, dtype=np.int64) for ids in wm.values()]
         else:
-            # legacy indexes without wm_words: words >= min gram size are
-            # index terms; stop-demoted terms have no stored postings
+            # aux=False builds without wm_words: words >= min gram size
+            # are index terms; stop-demoted terms have no stored postings
             fetched = self.r.fetch_terms(sorted(probe_terms))
             arrs = [
                 np.asarray(tp.doc_ids, dtype=np.int64)
@@ -297,7 +287,7 @@ class RerankExecutor:
 
     def search(self, query: str, k: int = 10) -> list[tuple[int, float, int]]:
         q = normalize(query.strip()).lower()
-        syn = getattr(self.r, "synonym_map", None)
+        syn = self.r.synonym_map
         if syn is not None and syn.has_mappings:
             q = syn.canonicalize_text(q)
         if not q or self.r.total_docs == 0:
@@ -323,7 +313,7 @@ class RerankExecutor:
             )
             if not is_short or len(s1) >= k:
                 return [(d, s, 0) for d, s in s1[:k]]
-            count = self.r.prefix_count(q) if hasattr(self.r, "prefix_count") else 0
+            count = self.r.prefix_count(q)
             if count == 0 or count > SHORT_QUERY_COVERAGE_DOC_CAP:
                 return [(d, s, 0) for d, s in s1[:k]]
         else:
@@ -377,7 +367,7 @@ class RerankExecutor:
         )
         key_of = dict(zip(proc_ids, proc_keys.tolist()))
         # soft deletes: tombstoned docs never reach the cascade
-        tomb = getattr(self.r, "tombstones", frozenset())
+        tomb = self.r.tombstones
         if tomb:
             wm_overlap = [i for i in wm_overlap if key_of[i] not in tomb]
             wm_unique = [i for i in wm_unique if key_of[i] not in tomb]

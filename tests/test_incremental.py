@@ -65,6 +65,52 @@ def test_multi_segment_matches_single_kernel(incremental_index, query):
     assert [d for d, _ in got] == [d for d, _ in want], (query, got, want)
 
 
+SHORT_QUERIES = ["fo", "ba", "th", "a b", "qz", "t o", "sp", "xq", "f", "a"]
+
+
+@pytest.mark.parametrize("query", SHORT_QUERIES)
+def test_multi_segment_short_query_matches_kernel(incremental_index, query):
+    """1-3 char queries over main+delta rank and score like one kernel
+    index over all docs (runs before the tombstone test below)."""
+    got = QueryExecutor(MultiReader(incremental_index)).search(query, 10)
+    want = _kernel_all().search(query, 10)
+    assert [d for d, _ in got] == [d for d, _ in want], (query, got, want)
+    for (_, gs), (_, ws) in zip(got, want):
+        assert gs == pytest.approx(ws, rel=1e-6), (query, got, want)
+
+
+def test_multireader_title_rows_keep_words_text(incremental_index):
+    """A segment holding none of the requested docs must not turn the
+    merged words_text map into None: ids 0 and 1 live in the main
+    segment only, and the delta segment contributes empty dicts."""
+    texts, wtexts = MultiReader(incremental_index).doc_title_rows([0, 1])
+    assert isinstance(wtexts, dict) and sorted(wtexts) == [0, 1]
+    assert sorted(texts) == [0, 1]
+    assert wtexts[0].startswith(" the quick ")
+
+
+@pytest.mark.parametrize("stale", ["main", "delta"])
+def test_old_format_version_is_refused(incremental_index, tmp_path, stale):
+    """Readers refuse an index whose manifest carries another
+    format_version, naming the fix, instead of misreading old layouts."""
+    import json
+    import shutil
+
+    out = str(tmp_path / "old")
+    shutil.copytree(incremental_index, out)
+    seg = out if stale == "main" else os.path.join(out, "deltas", "delta_000001")
+    path = os.path.join(seg, "MANIFEST.json")
+    with open(path) as f:
+        manifest = json.load(f)
+    manifest["format_version"] = 1
+    with open(path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match="rebuild"):
+        IndexReader(seg)
+    with pytest.raises(ValueError, match="rebuild"):
+        MultiReader(out)
+
+
 def test_multireader_merge_preserves_lazy_decode(incremental_index):
     """fetch_terms over main+delta returns a composite whose per-segment
     parts stay ENCODED: a small lookup block-decodes only what it
