@@ -44,15 +44,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # FAIR scheduling: the index build overlaps its serial critical
         # chain (tokenize->postings->pattern_scores->sq tables) with
-        # wide aux jobs (prefixes, word_family, doc_stats) submitted
-        # first from a thread pool. Under the default FIFO scheduler the
-        # earlier-submitted aux jobs hold every task slot and the chain
-        # STARVES — the wall clock of the build is the chain's, so
-        # backfilling must never come at its expense. Pools are assigned
-        # per job in build_index (build-chain vs build-aux); with equal
-        # weights the chain gets slots the moment it has runnable tasks
-        # (guide §2.6: overlap independent jobs — FIFO back-fill is
-        # right only when the later job is the less urgent one).
+        # wide aux jobs (prefixes, word_family) that start at the same
+        # time. Under the default FIFO scheduler the earlier-submitted
+        # aux jobs hold every task slot and the chain STARVES — the wall
+        # clock of the build is the chain's, so backfilling must never
+        # come at its expense. The build's job runner
+        # (build/jobs.py JobGraph) puts each declared job in pool
+        # build-chain or build-aux; with equal weights the chain gets
+        # slots the moment it has runnable tasks (guide §2.6: overlap
+        # independent jobs — FIFO back-fill is right only when the later
+        # job is the less urgent one).
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch size bounds pandas-UDF memory per task; 10k rows of

@@ -264,30 +264,35 @@ def test_embedded_nul_terms_build_and_match_kernel(spark, tmp_path):
 def test_build_index_restores_caller_local_properties(
     spark, reference_docs, tmp_path
 ):
-    """build_index labels its jobs and pools on the calling thread; the
-    caller's own description and pool come back afterwards, after a
-    failed build too, and unset ones stay unset."""
+    """build_index labels its jobs, pools and job group on its own job
+    threads; the caller's description, pool and group stay as they were
+    after a good build and after failing ones (in a job, and before any
+    job), and unset ones stay unset."""
     sc = spark.sparkContext
     docs = spark.createDataFrame(
         [(i, key, text) for i, (key, text) in enumerate(reference_docs)],
         "doc_id long, doc_key long, text string",
     )
-    props = ("spark.job.description", "spark.scheduler.pool")
+    bad_ids = spark.createDataFrame(
+        [(i - 1, key, text) for i, (key, text) in enumerate(reference_docs)],
+        "doc_id long, doc_key long, text string",
+    )
+    props = ("spark.job.description", "spark.scheduler.pool", "spark.jobGroup.id")
+    caller = ["caller-desc", "caller-pool", "caller-group"]
     try:
-        sc.setJobDescription("caller-desc")
-        sc.setLocalProperty("spark.scheduler.pool", "caller-pool")
+        for k, v in zip(props, caller):
+            sc.setLocalProperty(k, v)
         build_index(spark, docs, str(tmp_path / "idx_props"), n_buckets=2, aux=False)
-        assert [sc.getLocalProperty(k) for k in props] == [
-            "caller-desc", "caller-pool",
-        ]
+        assert [sc.getLocalProperty(k) for k in props] == caller
+        with pytest.raises(ValueError, match="doc_id must be >= 0"):
+            build_index(spark, bad_ids, str(tmp_path / "idx_props_bad"), n_buckets=2)
+        assert [sc.getLocalProperty(k) for k in props] == caller
         with pytest.raises(ValueError):
             build_index(
                 spark, docs, str(tmp_path / "idx_props_err"), n_buckets=2,
                 fields=[("no_such_column", 0)],
             )
-        assert [sc.getLocalProperty(k) for k in props] == [
-            "caller-desc", "caller-pool",
-        ]
+        assert [sc.getLocalProperty(k) for k in props] == caller
         for k in props:
             sc.setLocalProperty(k, None)
         with pytest.raises(ValueError):
@@ -295,10 +300,36 @@ def test_build_index_restores_caller_local_properties(
                 spark, docs, str(tmp_path / "idx_props_err2"), n_buckets=2,
                 fields=[("no_such_column", 0)],
             )
-        assert [sc.getLocalProperty(k) for k in props] == [None, None]
+        assert [sc.getLocalProperty(k) for k in props] == [None, None, None]
     finally:
         for k in props:
             sc.setLocalProperty(k, None)
+
+
+def test_failed_build_stops_every_job_and_releases_its_cache(spark, tmp_path):
+    """A negative doc id fails the build: the id check gates the jobs
+    that index arrays by doc id (champions never starts), the other jobs
+    are cancelled and joined before the error is raised (no Spark job
+    left running, nothing written afterwards), and every frame the build
+    cached is released."""
+    import time
+
+    from infidex_spark.webtext import generate_webtext, with_doc_ids
+
+    sc = spark.sparkContext
+    docs = with_doc_ids(generate_webtext(spark, 400, seed=5)).selectExpr(
+        "doc_id - 1 as doc_id", "doc_id as doc_key", "text"
+    )
+    out = str(tmp_path / "idx_neg")
+    n_cached = sc._jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="doc_id must be >= 0"):
+        build_index(spark, docs, out, n_buckets=4)
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    listing = sorted(os.listdir(out))
+    assert "champions" not in listing
+    time.sleep(5)
+    assert sorted(os.listdir(out)) == listing
+    assert sc._jsc.getPersistentRDDs().size() == n_cached
 
 
 class _FakeTerm:

@@ -49,7 +49,7 @@ def main() -> None:
         result["build_wall_sec"] = round(time.monotonic() - t0, 1)
         result["docs_per_sec"] = round(n_docs / result["build_wall_sec"], 1)
         result["index_mb"] = round(m["index_bytes_total"] / 1e6)
-        result["aux_step_secs"] = m["aux_step_secs"]
+        result["step_secs"] = m["step_secs"]
         spark.stop()
 
     from infidex_spark.query.executor import IndexReader, QueryExecutor
