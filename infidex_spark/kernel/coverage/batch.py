@@ -8,10 +8,15 @@ implementation; this module produces BIT-IDENTICAL MatchState outputs and
 FusionSignals for a whole candidate batch at once, exploiting two facts:
 
 1. every pair decision (query token, doc word) is a pure function of the
-   two texts — so it is computed ONCE PER UNIQUE WORD in the batch and
-   reused across all candidates containing that word (the scalar path's
-   per-query memo does this per pair lookup; here it becomes an array
-   indexed by interned word id);
+   two texts — so it is computed ONCE PER UNIQUE WORD and reused across
+   all candidates containing that word (the scalar path's per-query memo
+   does this per pair lookup; here it becomes an array indexed by
+   interned word id). A query's tables cover only the words its batches
+   probe, and each batch's new words are filled in bulk per query token:
+   Arrow string predicates for the affix/containment/fusion flags and one
+   vectorized bit-parallel Levenshtein (Myers) pass for the edit
+   distances. The scalar pair functions remain the oracle, and the
+   fallback for query tokens longer than 63 chars;
 2. the per-candidate cascade only needs the doc's token *code sequence*
    (plus char offsets for output fields), so candidate texts are
    tokenized in one vectorized pass (numpy delimiter mask for offsets +
@@ -35,29 +40,27 @@ batch path end to end.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from infidex_spark.kernel.coverage.config import CoverageConfig
 from infidex_spark.kernel.coverage.fusion import (
     ANCHOR_STEM_LENGTH,
     MAX_TRAILING_TERM_LENGTH_FOR_BONUS,
     FusionSignals,
-    _sts_token,
-    _stem_pair,
 )
-from infidex_spark.kernel.coverage.matchers import (
-    _exact_affix_pair,
-    _fuzzy_prefix_pair,
-    _token_max_edits,
-)
-from infidex_spark.kernel.coverage.metrics import damerau_restricted
+from infidex_spark.kernel.coverage.matchers import _fuzzy_prefix_pair, _token_max_edits
+from infidex_spark.kernel.coverage.metrics import damerau_restricted, levenshtein
 from infidex_spark.kernel.coverage.scorer import CoverageFeatures, calculate_final_score
 from infidex_spark.kernel.coverage.state import _WORD_RE
 from infidex_spark.kernel.strings import factorize_strings
 from infidex_spark.kernel.tokenize import DELIMITERS
 
-# interner size cap: beyond this the per-query tables (a few float64/bool
-# arrays of length n_words per query token) would grow past ~100 MB; the
-# caller clears interner + views + ctx tables and starts fresh
+# interner size cap. A query's fill work is set by its batches' words,
+# not by the executor's age, but its tables are still arrays indexed by
+# word id (a few float64/bool arrays of length n_words per query token),
+# which beyond this would grow past ~100 MB; the caller clears interner +
+# views + ctx tables and starts fresh
 INTERNER_CAP = 2_000_000
 
 # delimiter lookup table over the BMP (all 22 delimiters are < U+10000;
@@ -311,7 +314,8 @@ class _Probes:
     row, does ANY of the candidate's tokens hit? Computed with one fancy
     index + one reduceat per table over the batch's concatenated token
     codes; the cascade walks a candidate's tokens only when its probe
-    row says there is something to find."""
+    row says there is something to find. Building the probes first fills
+    T for the batch's words."""
 
     __slots__ = (
         "ex", "fp", "fu", "fus", "trail", "ss", "segp", "segs", "jd",
@@ -336,6 +340,9 @@ class _Probes:
         )
         uq_ptr = np.zeros(n + 1, dtype=np.int64)
         np.cumsum([len(v.uniq) for v in views], out=uq_ptr[1:])
+        # every table read below and in the cascade/fusion replays is
+        # indexed by a code of these views, and uqcat holds them all
+        T.ensure(uqcat)
 
         self.ex = _seg_any(T.ex_m[:, mtcat], mt_ptr, n)
         self.fp = _seg_any(T.fp_m[:, mtcat], mt_ptr, n)
@@ -639,11 +646,130 @@ class _StateShim:
     )
 
 
+# longest query token one uint64 Myers mask holds; longer tokens take the
+# scalar pair functions (over the few words their length gates admit)
+_MYERS_MAX = 63
+# char-matrix padding: above every code point, so it never equals a
+# query char (reads stop at the row's length anyway)
+_PAD = np.uint32(0xFFFFFFFF)
+_ONE = np.uint64(1)
+
+
+def _char_matrix(words: list[str], lens: np.ndarray, width: int) -> np.ndarray:
+    """(len(words), width) uint32 code points, _PAD past each word's end:
+    one utf-32 encode of the joined words plus offsets, no per-word loop."""
+    n = len(words)
+    flat = np.frombuffer("".join(words).encode("utf-32-le"), dtype=np.uint32)
+    if not len(flat) or width <= 0:
+        return np.full((n, max(width, 0)), _PAD, dtype=np.uint32)
+    offs = np.zeros(n, dtype=np.int64)
+    np.cumsum(lens[:-1], out=offs[1:])
+    col = np.arange(width)
+    inside = col[None, :] < lens[:, None]
+    idx = np.where(inside, offs[:, None] + col[None, :], 0)
+    return np.where(inside, flat[idx], _PAD)
+
+
+def _myers(qa: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """S[r, j] = levenshtein(q, first j chars of row r) for j in
+    0..C.shape[1]: Myers' bit-parallel edit distance (JACM 1999) in its
+    global form (row 0 of the DP grows by one per column, so Ph shifts in
+    a 1), vectorized across rows. qa holds q's code points, len 1..63."""
+    m = len(qa)
+    n, width = C.shape
+    uq, inv = np.unique(qa, return_inverse=True)
+    masks = np.zeros(len(uq), dtype=np.uint64)
+    np.bitwise_or.at(
+        masks, inv, np.left_shift(_ONE, np.arange(m, dtype=np.uint64))
+    )
+    at = np.minimum(np.searchsorted(uq, C), len(uq) - 1)
+    peq = np.where(uq[at] == C, masks[at], np.uint64(0)).T.copy()
+    top = np.uint64(m - 1)
+    vp = np.full(n, (1 << m) - 1, dtype=np.uint64)
+    vn = np.zeros(n, dtype=np.uint64)
+    score = np.full(n, m, dtype=np.int32)
+    S = np.empty((n, width + 1), dtype=np.int32)
+    S[:, 0] = m
+    for j in range(width):
+        eq = peq[j]
+        xv = eq | vn
+        xh = (((eq & vp) + vp) ^ vp) | eq
+        ph = vn | ~(xh | vp)
+        mh = vp & xh
+        score += ((ph >> top) & _ONE).astype(np.int32)
+        score -= ((mh >> top) & _ONE).astype(np.int32)
+        S[:, j + 1] = score
+        ph = (ph << _ONE) | _ONE
+        mh = mh << _ONE
+        vp = mh | ~(xv | ph)
+        vn = ph & xv
+    return S
+
+
+def _restricted(L, tl, qa, q, Cr, K, words, r) -> np.ndarray:
+    """metrics.damerau_restricted(q, t, K) per row, t = the row's first tl
+    chars, from L = levenshtein(q, t) (exact). Only rows at distance K+1
+    try the reference's one swap at the first mismatch: on the char
+    matrix Cr, and for a remaining budget of 0 the rests must be equal;
+    a budget of >= 1 runs the scalar levenshtein on those few survivors
+    (words[r[k]] is row k's word)."""
+    ql = len(qa)
+    d = np.where(L <= K, L, K + 1)
+    cand = np.flatnonzero((L == K + 1) & (np.abs(tl - ql) <= K))
+    if not len(cand):
+        return d
+    X = Cr[cand]
+    t = tl[cand]
+    w = min(ql, X.shape[1])
+    col = np.arange(w)
+    mism = (X[:, :w] != qa[None, :w]) & (col[None, :] < t[:, None])
+    # the scalar scan looks for the first mismatch at i < len(q) - 1
+    scan = mism & (col[None, :] < ql - 1)
+    p = scan.argmax(axis=1)
+    rr = np.arange(len(cand))
+    ok = (
+        scan.any(axis=1)
+        & (p + 1 < t)
+        & (qa[p] == X[rr, np.minimum(p + 1, X.shape[1] - 1)])
+        & (qa[np.minimum(p + 1, ql - 1)] == X[rr, p])
+    )
+    if K == 1:
+        rest_eq = (t == ql) & ~(mism & (col[None, :] >= (p + 2)[:, None])).any(axis=1)
+        d[cand[ok & rest_eq]] = 1
+        return d
+    for k in np.flatnonzero(ok).tolist():
+        pk = int(p[k])
+        rest = levenshtein(q[pk + 2 :], words[r[cand[k]]][pk + 2 : int(t[k])], K - 1)
+        if rest <= K - 1:
+            d[cand[k]] = 1 + rest
+    return d
+
+
+def _bool(a) -> np.ndarray:
+    return a.to_numpy(zero_copy_only=False).astype(bool, copy=False)
+
+
+def _isin(warr, values: list[str]) -> np.ndarray:
+    return _bool(pc.is_in(warr, value_set=pa.array(values, pa.string())))
+
+
+def _affixes(q: str, lens: list[int], lo: int, hi: int, suffix: bool = False) -> list[str]:
+    """q's prefixes (suffixes) of the lengths in lens within [lo, hi] —
+    only the word lengths the batch has, so a long q costs no more than
+    its batch's words."""
+    n = len(q)
+    ks = [k for k in lens if lo <= k <= hi]
+    return [q[n - k :] for k in ks] if suffix else [q[:k] for k in ks]
+
+
 class QueryTables:
-    """Per-(query, word-id) decision tables. Built lazily: ensure() extends
-    every table when the interner has grown since the last batch. All pair
-    values are produced by the SAME pure functions the scalar matchers
-    memoize, so batch and scalar results are identical by construction."""
+    """Per-(query, word-id) decision tables, filled per batch: ensure()
+    fills them for the batch's words this query has not met yet, in bulk
+    per query token (Arrow string predicates for the affix, containment
+    and fusion flags; one vectorized Myers pass for every edit distance).
+    The scalar pair functions (matchers.py / fusion.py / metrics.py) stay
+    the oracle, and the fallback for query tokens too long for one
+    uint64 mask."""
 
     def __init__(self, ctx: dict, setup: CoverageConfig, interner: WordInterner):
         self.setup = setup
@@ -666,12 +792,25 @@ class QueryTables:
         self.fu_global_max = (
             _token_max_edits(max_q_len, setup)[0] if max_q_len else 0
         )
-        self.fu_token_max: list[int] = []
+        # FuzzyWordMatcher gates: the (tier, min word len, max word len)
+        # each token takes part in
+        self.fu_gates: list[list[tuple[int, int, int]]] = []
         self.fu_special: list[bool] = []
         for t in self.q_texts:
-            tm, sp = _token_max_edits(len(t), setup)
-            self.fu_token_max.append(tm)
+            q_len = len(t)
+            tm, sp = _token_max_edits(q_len, setup)
             self.fu_special.append(sp)
+            self.fu_gates.append([
+                (
+                    tier,
+                    max(setup.min_word_size, q_len - tier),
+                    min(setup.levenshtein_max_word_size, q_len + tier, 63),
+                )
+                for tier in range(1, self.fu_global_max + 1)
+                if q_len >= setup.min_word_size
+                and tier <= tm
+                and not (sp and tier != 1)
+            ])
         # affix eligibility for pass 2 (fuzzy prefix): len>=4, or the
         # final query term with len>=2
         self.fp_eligible = [
@@ -717,7 +856,6 @@ class QueryTables:
         self.qjoin_wids: list[int] = []
         self.qr_wids: list[int] = []
         self._alloc(0)
-        self.ensure()
 
     def _alloc(self, n: int) -> None:
         m = self.m
@@ -749,16 +887,30 @@ class QueryTables:
         self.ss_score = np.zeros(n, dtype=np.float64)
         self.seg_p = np.zeros(n, dtype=bool)
         self.seg_s = np.zeros(n, dtype=bool)
+        # word ids whose entries are computed (the rest hold the fill)
+        self.filled = np.zeros(n, dtype=bool)
 
-    def ensure(self) -> None:
-        """Extend all tables to cover newly interned words."""
+    def ensure(self, wids: np.ndarray) -> None:
+        """Fill every table for the word ids in wids (a batch's view
+        codes) that this query has not filled yet. Each entry is a pure
+        function of (query token, word), so filling only the words a
+        batch probes is exact."""
+        if len(self.interner) > self.n:
+            self._grow()
+        new = np.unique(wids[~self.filled[wids]])
+        if len(new):
+            self._fill(new)
+            self.filled[new] = True
+        # resolve interned ids for query-side exact/joined lookups
+        ids = self.interner.ids
+        self.q_wids = [ids.get(t, -1) for t in self.q_texts]
+        self.qjoin_wids = [ids.get(t, -1) for t in self.qjoin_texts]
+        self.qr_wids = [ids.get(t, -1) for t in self.qr_texts]
+
+    def _grow(self) -> None:
+        """Extend every table to the interner's size (new ids unfilled)."""
         W = len(self.interner)
         n0 = self.n
-        if W <= n0:
-            return
-        words = self.interner.words
-        m = self.m
-        setup = self.setup
 
         def grow(a, fill=0):
             if a.ndim == 1:
@@ -784,80 +936,199 @@ class QueryTables:
         self.ss_score = grow(self.ss_score)
         self.seg_p = grow(self.seg_p)
         self.seg_s = grow(self.seg_s)
-
-        q_texts = self.q_texts
-        qr_texts = self.qr_texts
-        last = self.last_raw
-        min_stem = self.min_stem
-        stem = self.anchor_stem
-        s = len(self.stem_rows)
-        seg = self.seg
-        for c in range(n0, W):
-            w = words[c]
-            wl = len(w)
-            for i in range(m):
-                q = q_texts[i]
-                matched, score, is_pref = _exact_affix_pair(q, w)
-                if matched:
-                    self.ex_m[i, c] = True
-                    self.ex_s[i, c] = score
-                    self.ex_p[i, c] = is_pref
-                if self.fp_eligible[i] and len(q) < wl:
-                    fm, fsc = _fuzzy_prefix_pair(q, w)
-                    if fm:
-                        self.fp_m[i, c] = True
-                        self.fp_s[i, c] = fsc
-                if 0 < wl < len(q):
-                    if q.startswith(w):
-                        self.jp_m[i, c] = True
-                    if q.endswith(w):
-                        self.js_m[i, c] = True
-                # fuzzy tiers (FuzzyWordMatcher gates, encoded per word)
-                q_len = len(q)
-                if q_len >= setup.min_word_size:
-                    token_max = self.fu_token_max[i]
-                    special = self.fu_special[i]
-                    for tier in range(1, self.fu_global_max + 1):
-                        if tier > token_max or (special and tier != 1):
-                            continue
-                        min_len = max(setup.min_word_size, q_len - tier)
-                        max_len = min(setup.levenshtein_max_word_size, q_len + tier, 63)
-                        if wl > max_len or wl < min_len:
-                            continue
-                        if special and (not w or w[0] != q[0]):
-                            continue
-                        dist = damerau_restricted(q, w, tier)
-                        self.fu_d[tier - 1][i, c] = dist
-            # ---- fusion tables (raw q tokens) ----
-            if last:
-                self.fstack[0, c] = w.startswith(last)
-                self.eq_last[c] = w == last
-            self.fstack[1, c] = not any(
-                w.startswith(q) or q.startswith(w) for q in qr_texts
-            )
-            if stem is not None:
-                self.fstack[2, c] = wl >= len(stem) and w.startswith(stem)
-            for r, i in enumerate(self.stem_rows):
-                q = qr_texts[i]
-                self.fstack[3 + r, c] = bool(w) and (w == q or w.startswith(q))
-                self.fstack[3 + s + r, c] = _stem_pair(q, w, min_stem)
-            if self.sc_applicable:
-                for i in range(self.qr_count):
-                    self.contains_q[i, c] = qr_texts[i] in w
-            if self.do_trail:
-                self.trail[c] = w.startswith(last) or (wl > len(last) and last in w)
-            if self.do_ss and wl >= 2:
-                self.ss_score[c] = _sts_token(self.ss_query, w, self.ss_len)
-            if seg is not None and wl >= 3:
-                pf, sf = seg
-                self.seg_p[c] = w.startswith(pf) or pf.startswith(w)
-                self.seg_s[c] = w.endswith(sf) or sf.endswith(w)
+        self.filled = grow(self.filled)
         self.n = W
-        # resolve interned ids for query-side exact/joined lookups
-        ids = self.interner.ids
-        self.q_wids = [ids.get(t, -1) for t in self.q_texts]
-        self.qjoin_wids = [ids.get(t, -1) for t in self.qjoin_texts]
-        self.qr_wids = [ids.get(t, -1) for t in self.qr_texts]
+
+    def _fill(self, c: np.ndarray) -> None:
+        """Compute every table entry for the word ids c, in bulk."""
+        words = list(map(self.interner.words.__getitem__, c.tolist()))
+        wl = self.interner.lens[c].astype(np.int64)
+        warr = pa.array(words, pa.string())
+        ulens = np.unique(wl).tolist()
+        # one char matrix, cut at the widest prefix a distance reads:
+        # len(q) + 1 (fuzzy prefix), a tier's max word length, 32 (sts)
+        need = [0]
+        for i, q in enumerate(self.q_texts):
+            if len(q) <= _MYERS_MAX:
+                if self.fp_eligible[i]:
+                    need.append(len(q) + 1)
+                need += [hi for _, _, hi in self.fu_gates[i]]
+        if self.do_ss:
+            need.append(min(32, self.ss_len + 2))
+        C = _char_matrix(words, wl, min(max(need), int(wl.max())))
+        for i in range(self.m):
+            self._fill_token(i, c, words, wl, warr, ulens, C)
+        self._fill_fusion(c, words, wl, warr, ulens, C)
+
+    def _fill_token(self, i, c, words, wl, warr, ulens, C) -> None:
+        """Matcher tables of query token i: exact affix, doc-bigram
+        prescreen, fuzzy prefix and fuzzy tiers."""
+        q = self.q_texts[i]
+        ql = len(q)
+        n = len(c)
+        longer = wl > ql
+        sw = _bool(pc.starts_with(warr, pattern=q))
+        ew = _bool(pc.ends_with(warr, pattern=q))
+        # matchers._exact_affix_pair, branch by branch
+        pre = longer & sw
+        suf = longer & ~sw & ew
+        con = longer & ~sw & ~ew
+        con &= (
+            _bool(pc.match_substring(warr, pattern=q))
+            if ql >= 4
+            else np.zeros(n, dtype=bool)
+        )
+        q_ends = _isin(warr, _affixes(q, ulens, 0, ql - 1, suffix=True))
+        self.ex_m[i, c] = pre | suf | con | q_ends
+        self.ex_s[i, c] = np.select(
+            [pre, suf, con, q_ends],
+            [float(ql), float(max(1, ql // 2)), ql * 0.6, wl],
+            0.0,
+        )
+        self.ex_p[i, c] = pre
+        self.jp_m[i, c] = _isin(warr, _affixes(q, ulens, 1, ql - 1))
+        self.js_m[i, c] = _isin(warr, _affixes(q, ulens, 1, ql - 1, suffix=True))
+
+        fp = longer if self.fp_eligible[i] else np.zeros(n, dtype=bool)
+        first_ok = (
+            _bool(pc.starts_with(warr, pattern=q[0]))
+            if self.fu_special[i]
+            else np.ones(n, dtype=bool)
+        )
+        tiers = [
+            (tier, (wl >= lo) & (wl <= hi) & first_ok)
+            for tier, lo, hi in self.fu_gates[i]
+        ]
+        in_tier = np.zeros(n, dtype=bool)
+        for _, g in tiers:
+            in_tier |= g
+        rows = np.flatnonzero(fp | in_tier)
+        if not len(rows):
+            return
+        if ql > _MYERS_MAX:
+            # too long for one uint64 mask: the scalar pair functions,
+            # over the words the length gates admit
+            for x in np.flatnonzero(fp).tolist():
+                self.fp_m[i, c[x]], self.fp_s[i, c[x]] = _fuzzy_prefix_pair(q, words[x])
+            for tier, g in tiers:
+                for x in np.flatnonzero(g).tolist():
+                    self.fu_d[tier - 1][i, c[x]] = damerau_restricted(q, words[x], tier)
+            return
+        qa = np.frombuffer(q.encode("utf-32-le"), dtype=np.uint32)
+        # widest read: w[:ql+1] (fuzzy prefix), a whole word (tiers)
+        width = max(ql + 1 if fp.any() else 0, int(wl[in_tier].max(initial=0)))
+        S = _myers(qa, C[rows, :width])
+        at = np.zeros(n, dtype=np.int64)
+        at[rows] = np.arange(len(rows))
+
+        def dist(r, tl, K):
+            return _restricted(S[at[r], tl], tl, qa, q, C[r], K, words, r)
+
+        r = np.flatnonzero(fp)
+        if len(r):
+            # matchers._fuzzy_prefix_pair: w[:ql], then w[:ql+1], w[:ql-1]
+            tl = np.full(len(r), ql, dtype=np.int64)
+            d0 = dist(r, tl, 1)
+            d1 = dist(r, tl + 1, 1)
+            hit0 = d0 <= 1
+            hit1 = ~hit0 & (d1 <= 1)
+            score = np.where(hit0, np.maximum(ql - d0, 0.1), np.maximum(ql - d1, 0.1))
+            hit = hit0 | hit1
+            if ql > 1:
+                d2 = dist(r, tl - 1, 1)
+                hit2 = ~hit & (d2 <= 1)
+                score = np.where(hit2, np.maximum(ql - 1 - d2, 0.1), score)
+                hit |= hit2
+            self.fp_m[i, c[r]] = hit
+            self.fp_s[i, c[r]] = np.where(hit, score, 0.0)
+        for tier, g in tiers:
+            r = np.flatnonzero(g)
+            if len(r):
+                self.fu_d[tier - 1][i, c[r]] = dist(r, wl[r], tier)
+
+    def _fill_fusion(self, c, words, wl, warr, ulens, C) -> None:
+        """Fusion tables over the raw query tokens (fusion.py semantics)."""
+        n = len(c)
+        last = self.last_raw
+        qr_texts = self.qr_texts
+        if last:
+            sw_last = _bool(pc.starts_with(warr, pattern=last))
+            self.fstack[0, c] = sw_last
+            self.eq_last[c] = _bool(pc.equal(warr, last))
+        # perfect-doc: some raw q is a prefix of w, or w a prefix of q
+        pd = np.zeros(n, dtype=bool)
+        for q in qr_texts:
+            pd |= _bool(pc.starts_with(warr, pattern=q))
+            pd |= _isin(warr, _affixes(q, ulens, 0, len(q)))
+        self.fstack[1, c] = ~pd
+        if self.anchor_stem is not None:
+            self.fstack[2, c] = _bool(pc.starts_with(warr, pattern=self.anchor_stem))
+        s = len(self.stem_rows)
+        min_stem = self.min_stem
+        for k, i in enumerate(self.stem_rows):
+            q = qr_texts[i]
+            self.fstack[3 + k, c] = (wl > 0) & _bool(pc.starts_with(warr, pattern=q))
+            # fusion._stem_pair: with len(q) >= min_stem, "q starts with
+            # w" or "common prefix >= min_stem" is "w starts with
+            # q[:min_stem]" for any w of length >= min_stem
+            self.fstack[3 + s + k, c] = (wl >= min_stem) & _bool(
+                pc.starts_with(warr, pattern=q[:min_stem])
+            )
+        if self.sc_applicable:
+            for i, q in enumerate(qr_texts):
+                self.contains_q[i, c] = _bool(pc.match_substring(warr, pattern=q))
+        if self.do_trail:
+            self.trail[c] = sw_last | (
+                (wl > len(last)) & _bool(pc.match_substring(warr, pattern=last))
+            )
+        if self.do_ss:
+            self.ss_score[c] = self._sts_scores(words, wl, warr, ulens, C)
+        if self.seg is not None:
+            pf, sf = self.seg
+            long3 = wl >= 3
+            self.seg_p[c] = long3 & (
+                _bool(pc.starts_with(warr, pattern=pf))
+                | _isin(warr, _affixes(pf, ulens, 0, len(pf)))
+            )
+            self.seg_s[c] = long3 & (
+                _bool(pc.ends_with(warr, pattern=sf))
+                | _isin(warr, _affixes(sf, ulens, 0, len(sf), suffix=True))
+            )
+
+    def _sts_scores(self, words, wl, warr, ulens, C) -> np.ndarray:
+        """fusion._sts_token(ss_query, w, ss_len) per word (0 when len(w) < 2)."""
+        qs = self.ss_query
+        Q = self.ss_len
+        # query.find(w): first start of each of qs's substrings
+        first: dict[str, int] = {}
+        for k in ulens:
+            if 2 <= k <= Q:
+                for st in range(Q - k + 1):
+                    first.setdefault(qs[st : st + k], st)
+        ix = pc.index_in(warr, value_set=pa.array(list(first), pa.string()))
+        ix = ix.fill_null(-1).to_numpy().astype(np.int64)
+        found = ix >= 0
+        idx = np.array([*first.values(), 0], dtype=np.int64)[ix]  # -1 -> 0
+        # longest k >= 2 with qs's k-suffix == w's k-prefix
+        best = np.zeros(len(words), dtype=np.int64)
+        for k in range(min(Q, int(wl.max())), 1, -1):
+            hit = (best == 0) & (wl >= k)
+            if hit.any():
+                hit &= _bool(pc.starts_with(warr, pattern=qs[Q - k :]))
+                best[hit] = k
+        fuzzy = np.zeros(len(words), dtype=np.float64)
+        r = np.flatnonzero((wl >= 2) & (wl <= 32) & (np.abs(wl - Q) <= 2))
+        if len(r):
+            qa = np.frombuffer(qs.encode("utf-32-le"), dtype=np.uint32)
+            S = _myers(qa, C[r, : int(wl[r].max())])
+            d = _restricted(S[np.arange(len(r)), wl[r]], wl[r], qa, qs, C[r], 2, words, r)
+            fuzzy[r] = np.where(d <= 2, (Q - d) / Q, 0.0)
+        score = np.where(
+            found,
+            (wl / Q) * (1.0 - idx / Q),
+            np.maximum(best / Q, fuzzy),
+        )
+        return np.where(wl >= 2, score, 0.0)
 
 
 def _cascade(view: DocView, T: QueryTables, setup: CoverageConfig,
@@ -1420,8 +1691,6 @@ class BatchCoverage:
         if T is None or T.interner is not self.interner:
             T = QueryTables(ctx, self.setup, self.interner)
             ctx["btables"] = T
-        else:
-            T.ensure()
         djoin = ctx.setdefault("bdjoin", {})
         idfs = ctx["idfs"]
         word_level = ctx["word_level"]

@@ -4,7 +4,9 @@
   prefix + tolerance (capped by the shorter string).
 - levenshtein: plain edit distance with an early-exit budget (the
   reference's banded Calculate; words are <= 20 chars so an exact DP with
-  budget short-circuit is equivalent).
+  budget short-circuit is equivalent). This exact DP is also the oracle
+  for the vectorized Myers pass in batch.QueryTables, which tests compare
+  against it table by table.
 - damerau_restricted: Metrics/LevenshteinDistance.cs:281-341 — NOT full
   Damerau: Levenshtein with budget+1, and if exactly one over budget, try
   repairing the FIRST mismatch with a single adjacent swap plus the

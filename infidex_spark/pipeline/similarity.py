@@ -21,20 +21,26 @@ from pyspark.sql import functions as F
 
 
 def _cosine_expr(vec_col: str, q: list[float]):
+    """Cosine of vec_col with q. Both norms are clamped at 1e-12, as the
+    Arrow IVF path clamps them: a zero vector scores 0 instead of
+    dividing by zero (an error under ANSI SQL, Spark 4's default)."""
     qarr = F.array(*[F.lit(float(x)) for x in q])
     dot = F.aggregate(
         F.zip_with(F.col(vec_col), qarr, lambda a, b: a.cast("double") * b),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
-    norm_v = F.sqrt(
-        F.aggregate(
-            F.col(vec_col),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
+    norm_v = F.greatest(
+        F.sqrt(
+            F.aggregate(
+                F.col(vec_col),
+                F.lit(0.0),
+                lambda acc, x: acc + x.cast("double") * x.cast("double"),
+            )
+        ),
+        F.lit(1e-12),
     )
-    qn = float(np.sqrt(np.sum(np.asarray(q, dtype=np.float64) ** 2)))
+    qn = max(float(np.sqrt(np.sum(np.asarray(q, dtype=np.float64) ** 2))), 1e-12)
     return dot / (norm_v * F.lit(qn))
 
 

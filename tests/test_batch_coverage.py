@@ -118,29 +118,51 @@ def test_batch_equals_scalar_features(seed):
                     fusion_calculate(query, text, w, base, setup.min_word_size)
 
 
-def test_batch_incremental_interner_growth():
-    """Second batch with new words must extend the tables, not corrupt
-    results for previously seen words."""
+def _assert_batch_matches_scalar(got, eng, query, items):
+    ctx_s = eng.prepare_query(query)
+    for i, t in items:
+        w = eng.calculate_features(ctx_s, t, 0)
+        gd, gf = _features_tuple(got[i])
+        wd, wf = _features_tuple(w)
+        assert gd == wd and gf == wf, (query, t)
+
+
+def test_batch_incremental_interner_growth(monkeypatch):
+    """Tables are filled per batch for the batch's words only. Partial
+    fills must stay exact when batches of two queries interleave on one
+    BatchCoverage (query B meets ids query A's batch interned; A's
+    second batch mixes words it filled, words only B's batch brought in
+    and brand-new words), and after the interner-cap reset."""
+    from infidex_spark.kernel.coverage import batch as B
+
     setup = CoverageConfig()
     eng = CoverageEngine(setup=setup, sizes=(3,), term_df=lambda t: 5,
                          total_docs=100)
     beng = CoverageEngine(setup=setup, sizes=(3,), term_df=lambda t: 5,
                           total_docs=100)
     bc = BatchCoverage(setup)
-    q = "quick fox"
-    docs1 = ["quick brown fox", "lazy dog"]
-    docs2 = ["quicker foxes zebra", "quick fox", "zzz qqq"]
-    ctx_b = beng.prepare_query(q)
-    bc.compute(beng, ctx_b, [(i, t, 0) for i, t in enumerate(docs1)])
-    got = bc.compute(
-        beng, ctx_b, [(100 + i, t, 0) for i, t in enumerate(docs2)]
-    )
-    ctx_s = eng.prepare_query(q)
-    for i, t in enumerate(docs2):
-        w = eng.calculate_features(ctx_s, t, 0)
-        gd, gf = _features_tuple(got[100 + i])
-        wd, wf = _features_tuple(w)
-        assert gd == wd and gf == wf, t
+    qa, qb = "quick fox", "lazy dgo x"
+    ctx_a = beng.prepare_query(qa)
+    ctx_b = beng.prepare_query(qb)
+    docs1 = {0: "quick brown fox", 1: "lazy dog", 2: "dgos quik x"}
+    docs2 = {1: "lazy dog", 3: "dog lazy xylophone quicker", 4: "zzz qqq"}
+    docs3 = {3: "dog lazy xylophone quicker", 5: "quicker foxes zebra",
+             6: "quick fox", 0: "quick brown fox"}
+
+    def run(ctx, query, docs):
+        items = sorted(docs.items())
+        got = bc.compute(beng, ctx, [(i, t, 0) for i, t in items])
+        _assert_batch_matches_scalar(got, eng, query, items)
+
+    run(ctx_a, qa, docs1)
+    run(ctx_b, qb, docs2)  # ids 1/"lazy"/"dog" interned by A's batch
+    run(ctx_a, qa, docs3)  # old, B-only and new words
+    run(ctx_b, qb, {**docs1, **docs3})
+    assert not ctx_a["btables"].filled.all()  # only the batches' words
+    monkeypatch.setattr(B, "INTERNER_CAP", 5)
+    old = bc.interner
+    run(ctx_a, qa, {**docs2, 7: "fox quick"})
+    assert bc.interner is not old  # the reset ran and A refilled
 
 
 @pytest.mark.parametrize("seed", [11, 12])
@@ -284,3 +306,177 @@ def test_batch_feats_cache_wipe_mid_query(spark, tmp_path):
     # the wipe ran: dummies are gone, this query's candidates remain
     leftover = next(iter(ctxs.values()))["feats_by_id"]
     assert all(i >= 0 for i in leftover)
+
+
+_ALPHA = "abcdeáčěřž😀"
+
+
+def _vocab(rng: random.Random, tokens: list[str]) -> list[str]:
+    """Words that hit every table: random words of 1-63 chars (diacritics
+    and an astral char), a few of 64-200, repeated letters, and for each
+    query token its prefixes, suffixes and substrings, and (tokens of at
+    most 100 chars) adjacent swaps at the first/last/a random position,
+    1-3 random edits, and typo'd prefixes with a tail (fuzzy-prefix
+    material)."""
+    def rand_word(n):
+        return "".join(rng.choice(_ALPHA) for _ in range(n))
+
+    def edit(w):
+        k = rng.randrange(len(w) + 1)
+        op = rng.randrange(3)
+        c = rng.choice(_ALPHA)
+        if op == 0 or not w:
+            return w[:k] + c + w[k:]
+        k = min(k, len(w) - 1)
+        return w[:k] + (c if op == 1 else "") + w[k + 1 :]
+
+    def swap(w, k):
+        return w[:k] + w[k + 1] + w[k] + w[k + 2 :] if len(w) >= 2 else w
+
+    words = [rand_word(rng.randint(1, 63)) for _ in range(600)]
+    words += [rand_word(rng.randint(64, 200)) for _ in range(8)]
+    words += [c * k for c in "ab" for k in range(1, 71)]
+    for q in tokens:
+        n = len(q)
+        for k in range(1, n + 1):
+            words += [q[:k], q[n - k :]]
+        for _ in range(min(30, n)):
+            a = rng.randrange(n)
+            words.append(q[a : rng.randint(a + 1, n)])
+        if n > 100:
+            # the scalar reference is quadratic in the word length
+            continue
+        words += [swap(q, 0), swap(q, max(0, n - 2)), swap(q, rng.randrange(max(1, n - 1)))]
+        words += [q + q[-1], q[0] + q]
+        for _ in range(40):
+            w = q
+            for _ in range(rng.randint(1, 3)):
+                w = edit(w)
+            words.append(w)
+            j = rng.randint(max(1, n - 1), n + 1)
+            words.append(edit(q[:j]) + rand_word(rng.randint(1, 4)))
+    return [w for w in words if w]
+
+
+_TABLE_QUERIES = [
+    "ab",  # special first-char rule (len 2)
+    "abč",
+    "ačbdeáb",  # single raw token >= 6: seg fragments on
+    "abcde😀abř d",
+    "ab😀cd bčdaeab abc a",  # ends in a 1-char token
+    "a" * 500,
+]
+
+
+def _scalar_row(T, setup, w):
+    """The per-word reference: every table entry from the scalar pair
+    functions (the loop the bulk fill replaced)."""
+    from infidex_spark.kernel.coverage.fusion import _stem_pair, _sts_token
+    from infidex_spark.kernel.coverage.matchers import (
+        _exact_affix_pair,
+        _fuzzy_prefix_pair,
+        _token_max_edits,
+    )
+    from infidex_spark.kernel.coverage.metrics import damerau_restricted
+
+    wl = len(w)
+    row = {}
+    for i, q in enumerate(T.q_texts):
+        ql = len(q)
+        row["ex", i] = _exact_affix_pair(q, w)
+        fp = (False, 0.0)
+        if (ql >= 4 or (i == T.m - 1 and ql >= 2)) and ql < wl:
+            fp = _fuzzy_prefix_pair(q, w)
+        row["fp", i] = fp
+        row["jp", i] = 0 < wl < ql and q.startswith(w)
+        row["js", i] = 0 < wl < ql and q.endswith(w)
+        tm, special = _token_max_edits(ql, setup)
+        for tier in range(1, T.fu_global_max + 1):
+            d = 255
+            lo = max(setup.min_word_size, ql - tier)
+            hi = min(setup.levenshtein_max_word_size, ql + tier, 63)
+            if (
+                ql >= setup.min_word_size
+                and tier <= tm
+                and not (special and tier != 1)
+                and lo <= wl <= hi
+                and not (special and w[0] != q[0])
+            ):
+                d = damerau_restricted(q, w, tier)
+            row["fu", tier, i] = d
+    qr = T.qr_texts
+    last = qr[-1] if qr else ""
+    first = qr[0] if qr else ""
+    fs = [
+        bool(last) and w.startswith(last),
+        not any(w.startswith(q) or q.startswith(w) for q in qr),
+        len(first) >= 3 and w.startswith(first[:3]),
+    ]
+    rows = [q for q in qr if len(q) >= T.min_stem]
+    fs += [w == q or w.startswith(q) for q in rows]
+    fs += [_stem_pair(q, w, T.min_stem) for q in rows]
+    row["fstack"] = fs
+    row["eq_last"] = bool(last) and w == last
+    row["trail"] = T.do_trail and (
+        w.startswith(last) or (wl > len(last) and last in w)
+    )
+    row["contains"] = [T.sc_applicable and q in w for q in qr]
+    row["ss"] = _sts_token(first, w, len(first)) if T.do_ss and wl >= 2 else 0.0
+    seg = (False, False)
+    if T.seg is not None and wl >= 3:
+        pf, sf = T.seg
+        seg = (w.startswith(pf) or pf.startswith(w), w.endswith(sf) or sf.endswith(w))
+    row["seg"] = seg
+    return row
+
+
+def _table_row(T, c):
+    row = {}
+    for i in range(T.m):
+        row["ex", i] = (bool(T.ex_m[i, c]), float(T.ex_s[i, c]), bool(T.ex_p[i, c]))
+        row["fp", i] = (bool(T.fp_m[i, c]), float(T.fp_s[i, c]))
+        row["jp", i] = bool(T.jp_m[i, c])
+        row["js", i] = bool(T.js_m[i, c])
+        for tier in range(1, T.fu_global_max + 1):
+            row["fu", tier, i] = int(T.fu_d[tier - 1][i, c])
+    row["fstack"] = T.fstack[:, c].tolist()
+    row["eq_last"] = bool(T.eq_last[c])
+    row["trail"] = bool(T.trail[c])
+    row["contains"] = T.contains_q[:, c].tolist()
+    row["ss"] = float(T.ss_score[c])
+    row["seg"] = (bool(T.seg_p[c]), bool(T.seg_s[c]))
+    return row
+
+
+@pytest.mark.parametrize("seed", [5, 6])
+def test_query_tables_equal_scalar_pair_functions(seed):
+    """Every table entry the bulk fill writes (Arrow predicates, the
+    vectorized Myers pass, the >63-char scalar fallback) equals the
+    scalar pair functions, for every filled word id. The vocabulary is
+    filled in two partial batches so the grow/filled bookkeeping runs."""
+    import numpy as np
+
+    from infidex_spark.kernel.coverage import batch as B
+    from infidex_spark.kernel.coverage.state import _raw_tokens
+
+    rng = random.Random(seed)
+    setup = CoverageConfig()
+    eng = CoverageEngine(setup=setup, sizes=(3,), term_df=lambda t: 5,
+                         total_docs=100)
+    long_tok = [
+        "".join(rng.choice(_ALPHA) for _ in range(n)) for n in (63, 64, 70)
+    ]
+    queries = _TABLE_QUERIES + long_tok + [" ".join(long_tok[:2]) + " ab"]
+    for query in queries:
+        toks = [t.text for t in _raw_tokens(query, 0)]
+        vocab = list(dict.fromkeys(_vocab(rng, toks)))
+        interner = B.WordInterner()
+        ids = interner.intern_many(vocab)
+        T = B.QueryTables(eng.prepare_query(query), setup, interner)
+        half = len(ids) // 2
+        T.ensure(ids[:half])
+        more = interner.intern_many(["zz" + w for w in vocab[:50]])
+        T.ensure(np.concatenate([ids[half // 2 :], more]))
+        assert T.filled.sum() == len(ids) + len(more)
+        for c, w in enumerate(interner.words):
+            assert _table_row(T, c) == _scalar_row(T, setup, w), (query, w)

@@ -196,3 +196,23 @@ def test_ivf_arrow_assignment_matches_expr(emb_df):
     big = np.random.default_rng(0).normal(size=(300, 64))  # 19200 > cap
     plan_auto = ivf_assign(emb_df.limit(1), big, method="auto")._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in plan_auto or "Python" in plan_auto
+
+
+def test_zero_vectors_score_zero_on_both_ivf_paths(spark):
+    """A zero embedding and a zero centroid: the Catalyst-literal cosine
+    used to divide by a zero norm (DIVIDE_BY_ZERO under ANSI SQL). Both
+    norms are clamped as the Arrow path clamps them, so the expr and
+    arrow assignments agree cell for cell and brute-force top-k returns
+    every row, the zero vector scoring 0."""
+    from infidex_spark.pipeline.similarity import ivf_assign
+
+    rows = [(0, [0.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 2.0]), (3, [-1.0, -1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    cents = np.array([[0.0, 0.0], [1.0, 0.1], [0.0, 1.0]])
+    a = {r.vec_id: r.cell for r in ivf_assign(df, cents, method="expr").collect()}
+    b = {r.vec_id: r.cell for r in ivf_assign(df, cents, method="arrow").collect()}
+    assert a == b
+    assert a[0] == 0  # every cosine of the zero vector is 0: first cell wins
+    got = {r.vec_id: r.cosine for r in brute_force_topk(df, [1.0, 0.0], 10).collect()}
+    assert sorted(got) == [0, 1, 2, 3]
+    assert got[0] == 0.0 and got[1] == pytest.approx(1.0)

@@ -5,8 +5,9 @@ memory-phase swings inflate both halves of a pair together and cancel
 in the ratio (the round-6 paired-design methodology). Each build runs
 in a fresh subprocess/JVM with PYTHONPATH pointing at its tree.
 
-Usage: python tools/ab_build_r07.py <old_tree> <new_tree> [pairs] [docs]
-Writes _work/ab_build_r07.json.
+Usage: [SPARK_GRAFT_CPUS=N] python tools/ab_build_r07.py <old_tree> <new_tree> [pairs] [docs]
+Spark runs local[N] with the session default N (SPARK_GRAFT_CPUS, 32
+when unset). Writes _work/ab_build_r07.json.
 """
 
 from __future__ import annotations
@@ -32,7 +33,7 @@ def canary():
 from infidex_spark.build.indexer import build_index
 from infidex_spark.session import get_spark
 from infidex_spark.webtext import generate_webtext, with_doc_ids
-spark = get_spark(app_name="ab-build", cpus=32)
+spark = get_spark(app_name="ab-build")
 docs = (
     with_doc_ids(generate_webtext(spark, n_docs, seed=42))
     .selectExpr("doc_id", "doc_id as doc_key", "text").persist()
