@@ -2,16 +2,26 @@
 
 Dataflow:
 
-  docs(doc_id, text)
-    -[mapInPandas: fused tokenize + map-side partial encode]->
+  docs(doc_id, doc_key, text)
+    -[tokenize: ONE mapInArrow doc pass, each doc normalized and split
+      once]-> the tagged stream (FUSED_SCHEMA; persisted, or written to
+      parquet for resumable builds), rows of five kinds:
               partials(term, df, n_docs, payload, weights): one
-              compressed posting partial per (input partition, term),
-              + one per-partition doc-length sidecar row
+              compressed posting partial per (input partition, term)
+              doc sidecar(doc_ids, doc_keys, dls): one per partition
+              and, with aux, per input batch: (word, doc ids) partials of
+              the deduped (doc, word) pairs, (prefix, doc) positional
+              pairs, doc_meta rows (+ doc_key)
+    every other job filters the stream by kind; docs is scanned once
+    input_agg = doc count / id range / dl total from the sidecars, by
+                the query that materializes the stream (gates every job
+                that indexes arrays by doc id, and sizes the layout)
     term_df   = partials groupBy(term) sum(df)                 [shuffle 1]
     stop set  = df > stop_term_limit, written BY SPARK and anti-joined on
                 the cluster (AQE picks broadcast when small); the driver
                 collects only a bounded 100-term manifest sample
-    doc_stats = sidecar dl - stop partials' tf, groupBy(doc_id) [shuffle 2]
+    doc_stats = sidecar dl - stop partials' tf, groupBy(doc_id) [shuffle 2,
+                only with stop terms]
     postings  = live partials repartition(bucket, term-hash x4) [shuffle 3]
                 -> sortWithinPartitions(term-hash, term)       [spillable sort]
                 -> streaming Arrow merge: concat a term's partials,
@@ -23,17 +33,18 @@ Dataflow:
             -> postings groups -> pattern_scores -> sq_topk, plus
             doc_stats -> sq_sidecar) or 'build-aux' (side jobs whose
             stages fill scheduler gaps):
-            from the input: input_agg (doc-id checks, which gate every
-            job that indexes arrays by doc id), prefix_pairs ->
-            prefix_lists/champions, doc_meta -> doc_store/champions, and
-            the word family (ONE normalize+split pass -> persisted (doc,
-            word) pairs -> wm_words -> sq_words1 -> words/words_rev/
-            word_variants)
-            from the postings, overlapping the doc-derived jobs' tails:
-            variants (gram symmetric-delete), term_dict (sorted
-            dictionary for prefix-range scans), char_terms,
-            pattern_scores (short-query aggregates), per-group
-            checkpoint/metrics read-back
+            from the stream, once tokenize has materialized it:
+            prefix_lists and champions (prefix pairs; champions also
+            the doc_meta rows), doc_meta -> doc_store, and the word
+            family (word partials -> wm_words, sq_words1, words ->
+            words_rev/word_variants)
+            from the postings: variants (gram symmetric-delete),
+            term_dict (sorted dictionary for prefix-range scans),
+            char_terms, pattern_scores (short-query aggregates),
+            per-group checkpoint/metrics read-back
+    layout: wm_words, sq_words1 and pattern_scores have input-sized
+            bucket counts (layout_buckets: 32/4/16 from 20k docs up),
+            declared in the manifest's `layout` for the readers
     writes: postings/ (parquet, partitioned by term bucket), doc_stats/,
             stop_terms/, prefixes/, champions/, prefix_postings/,
             doc_meta/, wm_words/, words/, words_rev/, word_variants/,
@@ -62,6 +73,7 @@ completed buckets.
 
 from __future__ import annotations
 
+import functools
 import json
 import math
 import os
@@ -118,29 +130,223 @@ POSTINGS_SCHEMA = T.StructType(
 )
 
 
+def _read_postings(spark: SparkSession, postings_path: str) -> DataFrame:
+    """The postings table, read with its known schema: no Spark job to
+    infer it from the files (each inference is a job of its own)."""
+    return spark.read.schema(POSTINGS_SCHEMA).parquet(postings_path)
+
+
+def _read_words(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The written words table, read with its known schema."""
+    return spark.read.schema("word string, df long").parquet(os.path.join(out_dir, "words"))
+
+
 def _tf_cap(field_weight: float) -> int:
     """Byte saturation cap for a constant field weight (see
     kernel.bm25.tf_df_fast): floor(255 - w) + 1."""
     return int(math.floor(255.0 - field_weight)) + 1
 
 
-# fused tokenize->partial-encode output: term partials (kind 0: term,
-# partial df, n_docs, varint payload + tf weights) + one per-partition
-# doc-length sidecar row (kind 1, the
-# ALL-terms dl sum per doc — stop-term contributions are subtracted
-# later, once the stop set exists, by decoding just the stop partials)
+# the tagged stream of the one document pass (_fused_tokenize_partials).
+# Each row carries a kind and only that kind's columns (the rest NULL):
+KIND_PARTIAL = 0  # term, df, n_docs, payload, weights: one compressed
+#                   posting partial per (input partition, term)
+KIND_DOCS = 1  # doc_ids, doc_keys, dls: one per-partition doc sidecar
+#                row (the ALL-terms dl per doc; stop-term contributions
+#                are subtracted later, once the stop set exists)
+KIND_WORD = 2  # word, doc_ids: the deduped (doc, word) pairs as one
+#               (word, sorted doc ids) partial per word and input batch
+KIND_PREFIX = 3  # prefix, doc_id, first_pos, n_ws, n_exact, first_exact:
+#                  per (1..3-char prefix, doc) positional aggregates
+KIND_META = 4  # doc_id, doc_key, n_tokens, tiny_text, text, words_text,
+#                first3, first_word3: the doc_meta rows (+ doc_key)
 FUSED_SCHEMA = T.StructType(
-    [
-        T.StructField("kind", T.IntegerType(), False),
-        T.StructField("term", T.StringType(), True),
-        T.StructField("df", T.LongType(), True),
-        T.StructField("n_docs", T.LongType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("weights", T.BinaryType(), True),
-        T.StructField("doc_ids", T.ArrayType(T.LongType()), True),
-        T.StructField("dls", T.ArrayType(T.LongType()), True),
+    [T.StructField("kind", T.IntegerType(), False)]
+    + [
+        T.StructField(name, dtype, True)
+        for name, dtype in (
+            ("term", T.StringType()),
+            ("df", T.LongType()),
+            ("n_docs", T.LongType()),
+            ("payload", T.BinaryType()),
+            ("weights", T.BinaryType()),
+            ("doc_ids", T.ArrayType(T.LongType())),
+            ("doc_keys", T.ArrayType(T.LongType())),
+            ("dls", T.ArrayType(T.LongType())),
+            ("doc_id", T.LongType()),
+            ("word", T.StringType()),
+            ("prefix", T.StringType()),
+            ("first_pos", T.LongType()),
+            ("n_ws", T.LongType()),
+            ("n_exact", T.LongType()),
+            ("first_exact", T.BooleanType()),
+            ("doc_key", T.LongType()),
+            ("n_tokens", T.LongType()),
+            ("tiny_text", T.StringType()),
+            ("text", T.StringType()),
+            ("words_text", T.StringType()),
+            ("first3", T.StringType()),
+            ("first_word3", T.StringType()),
+        )
     ]
 )
+
+
+# the column order of the prefix pairs (prefix_postings' layout) and of
+# the doc_meta table
+PREFIX_PAIR_COLS = ("prefix", "doc_id", "first_pos", "n_ws", "n_exact", "first_exact")
+DOC_META_COLS = (
+    "doc_id", "n_tokens", "tiny_text", "text", "words_text", "first3", "first_word3",
+)
+
+# Bucket counts of the crc32-bucketed word and pattern tables at and above
+# LAYOUT_FULL_DOCS input docs; smaller inputs get proportionally fewer.
+LAYOUT_MAX_BUCKETS = {"wm_words": 32, "sq_words1": 4, "pattern_scores": 16}
+LAYOUT_FULL_DOCS = 20_000
+POSTINGS_SUBSPLIT = 4  # postings shuffle partitions per term bucket
+
+
+def _input_sized(full: int, n_docs: int) -> int:
+    """full from LAYOUT_FULL_DOCS docs up, scaled down in powers of two
+    below it, at least 1."""
+    want = max(1, math.ceil(full * n_docs / LAYOUT_FULL_DOCS))
+    return min(full, 1 << (want - 1).bit_length())
+
+
+def layout_buckets(n_docs: int) -> dict[str, int]:
+    """Input-sized bucket counts of wm_words, sq_words1 and pattern_scores
+    (_input_sized of LAYOUT_MAX_BUCKETS). A 1k-doc delta writes 2
+    wm_words buckets and 1 sq_words1 bucket, not 32 and 4. The manifest
+    declares them as its `layout`; readers bucket probes by it."""
+    return {t: _input_sized(full, n_docs) for t, full in LAYOUT_MAX_BUCKETS.items()}
+
+
+def _of_kind(tok: DataFrame, kind: int, *cols: str) -> DataFrame:
+    """The rows of one kind of the tagged stream, with its columns."""
+    return tok.filter(F.col("kind") == kind).select(*cols)
+
+
+@functools.cache
+def _fused_arrow_schema() -> pa.Schema:
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(FUSED_SCHEMA)
+
+
+def _tagged_batch(kind: int, n: int, cols: dict) -> pa.RecordBatch:
+    """One kind's rows as a FUSED_SCHEMA batch: its columns from cols,
+    every other column all-NULL."""
+    schema = _fused_arrow_schema()
+    arrays = [pa.array(np.full(n, kind, dtype=np.int32))]
+    for f in list(schema)[1:]:
+        v = cols.get(f.name)
+        if v is None:
+            arrays.append(pa.nulls(n, f.type))
+        elif isinstance(v, pa.Array):
+            arrays.append(v)
+        elif isinstance(v, pd.Categorical):
+            arrays.append(
+                pa.DictionaryArray.from_arrays(
+                    v.codes, pa.array(np.asarray(v.categories, dtype=object), f.type)
+                ).cast(f.type)
+            )
+        else:
+            arrays.append(pa.array(v, f.type, from_pandas=True))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _doc_rows(ids: np.ndarray, keys: np.ndarray, texts: pd.Series) -> Iterator[pa.RecordBatch]:
+    """The per-doc kinds of one input batch from its normalized texts:
+    (word, doc ids) partials, (prefix, doc) aggregates and doc_meta rows.
+
+    Words are maximal non-delimiter runs over the space-joined codepoint
+    array (space is a delimiter, so the join separator breaks runs at
+    doc boundaries): one utf-32 encode and one run detection serve both
+    the word partials (one packed-key unique of the (doc, word) pairs,
+    regrouped by word) and the prefix keys (packed straight from the
+    array, no word strings)."""
+    from infidex_spark.build.tokenizer import (
+        _DELIM_SPLIT, _key_to_str, _pack_keys, _strings_of_runs, _word_runs,
+    )
+
+    blob = " ".join(texts.tolist())
+    cps = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32)
+    starts = np.zeros(0, dtype=np.int64)
+    if cps.size:
+        starts, wlen = _word_runs(cps)
+    if starts.size:
+        doc_ends = np.cumsum(texts.str.len().to_numpy(np.int64) + 1)
+        didx = np.searchsorted(doc_ends, starts, side="right")
+        codes, uniq = factorize_strings(_strings_of_runs(cps, starts, wlen))
+        upacked = np.unique((didx.astype(np.int64) << 32) | codes)
+        pair_doc, pair_word = ids[upacked >> 32], upacked & 0xFFFFFFFF
+        order = np.lexsort((pair_doc, pair_word))
+        word_s, doc_s = pair_word[order], pair_doc[order]
+        wstart = np.flatnonzero(np.r_[True, word_s[1:] != word_s[:-1]])
+        yield _tagged_batch(KIND_WORD, wstart.size, {
+            "word": np.asarray(uniq, dtype=object)[word_s[wstart]],
+            "doc_ids": pa.ListArray.from_arrays(
+                np.append(wstart, doc_s.size).astype(np.int32), doc_s
+            ),
+        })
+        wdoc = ids[didx]
+        # token ordinal within each doc (runs arrive in text order)
+        n = didx.size
+        arange = np.arange(n)
+        doc_change = np.empty(n, dtype=bool)
+        doc_change[0] = True
+        doc_change[1:] = didx[1:] != didx[:-1]
+        wpos = arange - np.maximum.accumulate(np.where(doc_change, arange, 0))
+        for plen in (1, 2, 3):
+            sel = wlen >= plen
+            if not sel.any():
+                continue
+            pkeys = _pack_keys(cps, starts[sel], plen)
+            docs_sel = wdoc[sel]
+            pos_sel = wpos[sel]
+            exact_sel = (wlen[sel] == plen).astype(np.int64)
+            # aggregate per (key, doc) with one lexsort + reduceat
+            order = np.lexsort((pos_sel, pkeys, docs_sel))
+            pkeys, docs_sel = pkeys[order], docs_sel[order]
+            pos_sel, exact_sel = pos_sel[order], exact_sel[order]
+            grp = np.empty(pkeys.size, dtype=bool)
+            grp[0] = True
+            grp[1:] = (pkeys[1:] != pkeys[:-1]) | (docs_sel[1:] != docs_sel[:-1])
+            gstart = np.flatnonzero(grp)
+            ukeys, inv = np.unique(pkeys[gstart], return_inverse=True)
+            yield _tagged_batch(KIND_PREFIX, gstart.size, {
+                "prefix": pd.Categorical.from_codes(
+                    inv, categories=_key_to_str(ukeys, plen)
+                ),
+                "doc_id": docs_sel[gstart].astype(np.int64),
+                "first_pos": pos_sel[gstart].astype(np.int64),  # sorted by pos
+                "n_ws": np.diff(np.append(gstart, pkeys.size)).astype(np.int64),
+                "n_exact": np.add.reduceat(exact_sel, gstart).astype(np.int64),
+                "first_exact": np.add.reduceat(exact_sel * (pos_sel == 0), gstart) > 0,
+            })
+    # doc_meta (B8), all .str-vectorized
+    stripped = texts.str.strip()
+    # space-joined word stream with sentinel spaces: turns the
+    # short-query word-boundary checks into plain substring searches
+    # (' q ' in words_text == q in word_tokens(text)). Vectorized:
+    # collapse delimiter runs to single spaces, strip, re-wrap.
+    joined = texts.str.replace(_DELIM_SPLIT, " ", regex=True).str.strip()
+    words_text = (" " + joined + " ").where(joined != "", " ")
+    yield _tagged_batch(KIND_META, len(texts), {
+        "doc_id": ids,
+        "doc_key": keys,
+        "n_tokens": words_text.str.count(" ").to_numpy(np.int64) - 1,
+        "tiny_text": stripped.where(stripped.str.len() <= 3),
+        # prepped text retained for the coverage rerank (the reference
+        # likewise keeps IndexedText in memory)
+        "text": texts,
+        "words_text": words_text,
+        # short-query precedence columns (D10 fast path): raw prepped
+        # prefix + first word's 3-char prefix — equality against a
+        # <=2-char query reproduces startswith / first-word-exact exactly
+        "first3": texts.str[:3],
+        "first_word3": joined.str.extract(r"^([^ ]{0,3})", expand=False).fillna(""),
+    })
 
 
 def _fused_tokenize_partials(
@@ -149,22 +355,25 @@ def _fused_tokenize_partials(
     synonym_map,
     cap: int,
     fields: list[tuple[str, int]] | None = None,
+    aux: bool = True,
 ):
-    """ONE Arrow stage: tokenize + map-side partial posting encode.
+    """The one document pass (mapInArrow over doc_id, doc_key, text and
+    the fields columns): each doc is normalized and split once, and the
+    stage emits the tagged FUSED_SCHEMA stream every build job reads.
 
-    The round-6 pipeline materialized a per-(doc, term) token table
-    (35M rows at 200k docs) that crossed the JVM<->Python boundary twice
-    — out of the tokenizer, into the partial encoder — plus a cache
-    materialization in between; the boundary transfer, not the numpy
-    work (~0.2 s/partition), dominated both stages (~10 s wall each way
-    at sf1.0). Fusing them keeps the posting-granular data inside one
-    Python stage and emits only vocabulary-sized compressed partials
-    (~30x fewer rows, ~20x fewer bytes) plus one per-partition doc->
-    total-dl sidecar row, so doc_stats needs no token table either
-    (guide §4.1: control how many columns/rows cross; §2.3: shuffle
-    fewer bytes). After the merge, every postings row is byte-equal to
-    encoding the kernel's posting list for that term (asserted by the
-    build parity tests)."""
+    - KIND_PARTIAL, KIND_DOCS: tokenize + map-side partial posting
+      encode. Posting-granular data stays inside this Python stage; it
+      emits only vocabulary-sized compressed partials (~30x fewer rows,
+      ~20x fewer bytes than a per-(doc, term) token table) plus one
+      per-partition doc sidecar row, so doc_stats needs no token table
+      (guide §4.1: control how many columns/rows cross; §2.3: shuffle
+      fewer bytes). After the merge, every postings row is byte-equal to
+      encoding the kernel's posting list for that term (asserted by the
+      build parity tests).
+    - with aux, KIND_WORD, KIND_PREFIX and KIND_META per input batch
+      (_doc_rows), from the same normalized texts. With fields these
+      come from the '§'-joined text column, as the coverage rerank sees
+      it."""
     from infidex_spark.kernel.normalize import normalize_series
     from infidex_spark.build.tokenizer import (
         tokenize_batch_frames,
@@ -175,12 +384,13 @@ def _fused_tokenize_partials(
     fcols = [c for c, _ in fields] if fields is not None else None
     widxs = [int(w) for _, w in fields] if fields is not None else None
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         codes_l: list[np.ndarray] = []
         packed_l: list[np.ndarray] = []
         dfc_l: list[np.ndarray] = []
         cats_l: list[np.ndarray] = []  # per-frame term dictionaries
         dl_ids_l: list[np.ndarray] = []
+        dl_keys_l: list[np.ndarray] = []
         dl_l: list[np.ndarray] = []
         offset = 0
 
@@ -202,13 +412,16 @@ def _fused_tokenize_partials(
                 doc_idx, weights=tf.astype(np.float64), minlength=dl_acc.size
             ).astype(np.int64)
 
-        for pdf in batches:
+        for rb in batches:
+            pdf = rb.to_pandas()
             ids = pdf["doc_id"].to_numpy()
             dl_acc = np.zeros(len(pdf), dtype=np.int64)
-            if fields is None:
+            texts = None
+            if fields is None or aux:
                 texts = normalize_series(pdf["text"].fillna("")).str.lower()
                 if synonym_map is not None and synonym_map.has_mappings:
                     texts = synonym_map.canonicalize_series(texts)
+            if fields is None:
                 for frame in tokenize_batch_frames(
                     texts, sizes=sizes, start_pad=start_pad, prenormalized=True
                 ):
@@ -239,61 +452,42 @@ def _fused_tokenize_partials(
                         out["tf"].to_numpy(), out["dfc"].to_numpy(), dl_acc,
                     )
             dl_ids_l.append(ids)
+            dl_keys_l.append(pdf["doc_key"].to_numpy())
             dl_l.append(dl_acc)
+            if aux:
+                yield from _doc_rows(ids, dl_keys_l[-1], texts.reset_index(drop=True))
 
-        if not codes_l:
-            if dl_ids_l:
-                yield pd.DataFrame(
-                    {
-                        "kind": np.array([1], dtype=np.int32),
-                        "term": [None], "df": [None], "n_docs": [None],
-                        "payload": [None], "weights": [None],
-                        "doc_ids": [np.concatenate(dl_ids_l).tolist()],
-                        "dls": [np.concatenate(dl_l).tolist()],
-                    }
-                )
-            return
-        # unify the per-frame term dictionaries (vocab-sized, not
-        # posting-sized), then group exactly as the partial encoder did
-        all_cats = np.concatenate(cats_l)
-        ucodes, uterms = factorize_strings(all_cats)
-        codes = ucodes[np.concatenate(codes_l)]
-        packed = np.concatenate(packed_l)
-        dfc = np.concatenate(dfc_l)
-        order = np.lexsort((packed, codes))
-        codes_s, packed_s, dfc_s = codes[order], packed[order], dfc[order]
-        change = np.empty(codes_s.size, dtype=bool)
-        change[0] = True
-        change[1:] = codes_s[1:] != codes_s[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], codes_s.size)
-        packed_lists = [
-            packed_s[s:e] for s, e in zip(starts.tolist(), ends.tolist())
-        ]
-        enc = encode_postings_batch(packed_lists)
-        dfs = np.add.reduceat(dfc_s, starts)
-        n = starts.size
-        yield pd.DataFrame(
-            {
-                "kind": np.zeros(n, dtype=np.int32),
+        if codes_l:
+            # unify the per-frame term dictionaries (vocab-sized, not
+            # posting-sized), then group exactly as the partial encoder did
+            all_cats = np.concatenate(cats_l)
+            ucodes, uterms = factorize_strings(all_cats)
+            codes = ucodes[np.concatenate(codes_l)]
+            packed = np.concatenate(packed_l)
+            dfc = np.concatenate(dfc_l)
+            order = np.lexsort((packed, codes))
+            codes_s, packed_s, dfc_s = codes[order], packed[order], dfc[order]
+            change = np.empty(codes_s.size, dtype=bool)
+            change[0] = True
+            change[1:] = codes_s[1:] != codes_s[:-1]
+            starts = np.flatnonzero(change)
+            ends = np.append(starts[1:], codes_s.size)
+            enc = encode_postings_batch(
+                [packed_s[s:e] for s, e in zip(starts.tolist(), ends.tolist())]
+            )
+            yield _tagged_batch(KIND_PARTIAL, starts.size, {
                 "term": np.asarray(uterms, dtype=object)[codes_s[starts]],
-                "df": dfs.astype(np.int64),
+                "df": np.add.reduceat(dfc_s, starts).astype(np.int64),
                 "n_docs": np.asarray(enc["n_docs"], dtype=np.int64),
                 "payload": enc["payload"],
                 "weights": enc["weights"],
-                "doc_ids": [None] * n,
-                "dls": [None] * n,
-            }
-        )
-        yield pd.DataFrame(
-            {
-                "kind": np.array([1], dtype=np.int32),
-                "term": [None], "df": [None], "n_docs": [None],
-                "payload": [None], "weights": [None],
-                "doc_ids": [np.concatenate(dl_ids_l).tolist()],
-                "dls": [np.concatenate(dl_l).tolist()],
-            }
-        )
+            })
+        if dl_ids_l:
+            yield _tagged_batch(KIND_DOCS, 1, {
+                "doc_ids": [np.concatenate(dl_ids_l)],
+                "doc_keys": [np.concatenate(dl_keys_l)],
+                "dls": [np.concatenate(dl_l)],
+            })
 
     return run
 
@@ -529,24 +723,16 @@ def build_index(
     # failure too
     persisted: list[DataFrame] = []
     try:
-        # Every doc-derived Arrow pass (tokenize, prefixes, doc_meta, word
-        # family) inherits the input partitioning, and the map-side partial
-        # encoder accumulates one partition per task — an AQE-coalesced
-        # upstream join can hand us a few fat partitions that cap the whole
-        # build's parallelism far below the cluster and bloat per-task
-        # memory. Rebalance up front when the input arrives under-split; at
-        # real corpus sizes inputs carry plenty of partitions and this no-ops.
-        #
-        # The rebalanced result is PERSISTED: ~6 consumer jobs (tokenize,
-        # prefixes, word_family, doc_meta, doc_stats, sq sidecar) each scan
-        # docs, and without the cache every one re-pays the repartition's
-        # map side — a serial read of the caller's (often single-partition,
-        # AQE-coalesced) input per job. One materialization, many balanced
-        # readers. Only taken on the under-split path, so well-partitioned
-        # production inputs are unaffected.
+        # The one document pass inherits the input partitioning, and the
+        # map-side partial encoder accumulates one partition per task — an
+        # AQE-coalesced upstream join can hand us a few fat partitions that
+        # cap the whole build's parallelism far below the cluster and bloat
+        # per-task memory. Rebalance up front when the input arrives
+        # under-split; at real corpus sizes inputs carry plenty of
+        # partitions and this no-ops. docs is scanned once (by tokenize),
+        # so the rebalanced input is not cached.
         if docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-            docs = docs.repartition(spark.sparkContext.defaultParallelism).persist()
-            persisted.append(docs)
+            docs = docs.repartition(spark.sparkContext.defaultParallelism)
 
         if html_col is not None:
             # front of the pipeline: derive the text column from html:binary
@@ -574,15 +760,15 @@ def build_index(
         cap = _tf_cap(field_weight)
         tokens_on_disk = resume or bucket_groups > 1
         tokens_path = os.path.join(out_dir, "tokens")
-        # the FUSED tokenize->partial-encode stage: the materialized table is
-        # vocabulary-granular compressed partials (+ per-partition dl
-        # sidecars), not posting-granular token rows — ~30x fewer rows over
-        # the Python boundary and into the cache
-        sel_cols = ["doc_id"] + (
-            [c for c, _ in fields] if fields is not None else ["text"]
+        # the ONE document pass: the materialized table is the tagged
+        # stream — vocabulary-granular compressed partials (+ per-partition
+        # doc sidecars), not posting-granular token rows, plus (aux) the
+        # word partials, prefix pairs and doc_meta rows the aux jobs read
+        sel_cols = ["doc_id", "doc_key", "text"] + (
+            [c for c, _ in fields] if fields is not None else []
         )
-        tokens = docs.select(*sel_cols).mapInPandas(
-            _fused_tokenize_partials(sizes, start_pad, synonym_map, cap, fields),
+        tokens = docs.select(*sel_cols).mapInArrow(
+            _fused_tokenize_partials(sizes, start_pad, synonym_map, cap, fields, aux),
             schema=FUSED_SCHEMA,
         )
         if not tokens_on_disk:
@@ -591,19 +777,30 @@ def build_index(
             tokens = tokens.persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(tokens)
 
+        input_row = []  # the input stats, computed by tokenize
+
         def tokenize() -> DataFrame:
-            if not tokens_on_disk:
-                tokens.count()  # materialize once; read by df/stats/postings
-                return tokens
-            if not (resume and os.path.isdir(tokens_path)):
-                tokens.write.mode("overwrite").parquet(tokens_path)
-            return spark.read.parquet(tokens_path)
+            tok = tokens
+            if tokens_on_disk:
+                if not (resume and os.path.isdir(tokens_path)):
+                    tokens.write.mode("overwrite").parquet(tokens_path)
+                tok = spark.read.schema(FUSED_SCHEMA).parquet(tokens_path)
+            # the input stats query is also the one pass that
+            # materializes the persisted stream every job filters
+            input_row.append(_of_kind(tok, KIND_DOCS, "doc_ids", "dls").agg(
+                F.coalesce(F.sum(F.size("doc_ids")), F.lit(0)).alias("n"),
+                F.max(F.array_max("doc_ids")).alias("mx"),
+                F.min(F.array_min("doc_ids")).alias("mn"),
+                # the all-terms dl total (doc_stats subtracts stop terms)
+                F.coalesce(
+                    F.sum(F.aggregate("dls", F.lit(0).cast("long"), lambda a, x: a + x)),
+                    F.lit(0),
+                ).alias("dl"),
+            ).collect()[0])
+            return tok
 
         def input_agg():
-            row = docs.agg(
-                F.count("*").alias("n"), F.max("doc_id").alias("mx"),
-                F.min("doc_id").alias("mn"),
-            ).collect()[0]
+            row = input_row[0]
             # id-space contract (ADVICE r3 #4): internal doc ids must be
             # non-negative and near-dense — the champions and sq_topk
             # sidecars and the short-query aggregation allocate O(max_id)
@@ -640,8 +837,8 @@ def build_index(
         def term_df_stop(tok: DataFrame):
             # partials are vocabulary-granular: their per-partition dfs
             # sum to exactly the token-level df
-            partials_all = tok.filter(F.col("kind") == 0).select(
-                "term", "df", "n_docs", "payload", "weights"
+            partials_all = _of_kind(
+                tok, KIND_PARTIAL, "term", "df", "n_docs", "payload", "weights"
             )
             term_df = partials_all.groupBy("term").agg(F.sum("df").alias("df"))
             term_df.filter(F.col("df") > stop_term_limit).select("term").write.mode(
@@ -658,7 +855,7 @@ def build_index(
                 pq.ParquetFile(p).metadata.num_rows
                 for p in _glob.glob(os.path.join(stop_dir, "*.parquet"))
             )
-            return partials_all, spark.read.parquet(stop_dir), n_stop
+            return partials_all, spark.read.schema("term string").parquet(stop_dir), n_stop
 
         def stop_sample(stop) -> list[str]:
             # bounded manifest sample, off the chain
@@ -667,24 +864,27 @@ def build_index(
                 return []
             return [r.term for r in stop_tdf.orderBy("term").limit(100).collect()]
 
-        def doc_stats(tok: DataFrame, stop) -> float:
-            # ---- doc stats (shuffle 2): dl per doc = (all-terms dl
-            # sidecar) - (stop terms' tf, decoded from just the stop
-            # partials). Both legs are exact integer sums, identical to
-            # summing tf over live token rows.
+        def doc_stats(tok: DataFrame, stop, agg) -> float:
+            # ---- doc stats: dl per doc = (all-terms dl from the doc
+            # sidecar, one entry per doc) - (stop terms' tf, decoded from
+            # just the stop partials; shuffle 2). Both legs are exact
+            # integer sums, identical to summing tf over live token rows.
+            # Without stop terms the sidecar IS doc_stats: no shuffle, and
+            # sum_dl is input_agg's all-terms total.
             partials_all, stop_tdf, n_stop = stop
-            dl_all = (
-                tok.filter(F.col("kind") == 1)
-                .select(F.explode(F.arrays_zip("doc_ids", "dls")).alias("z"))
+            stats = (
+                _of_kind(tok, KIND_DOCS, "doc_ids", "doc_keys", "dls")
+                .select(F.explode(F.arrays_zip("doc_ids", "doc_keys", "dls")).alias("z"))
                 .select(
                     F.col("z.doc_ids").alias("doc_id"),
+                    F.col("z.doc_keys").alias("doc_key"),
                     F.col("z.dls").alias("dl"),
                 )
             )
             if n_stop:
                 from infidex_spark.build.codec import decode_postings
 
-                def decode_neg(
+                def decode_stop(
                     batches: Iterator[pd.DataFrame],
                 ) -> Iterator[pd.DataFrame]:
                     idl: list[np.ndarray] = []
@@ -702,24 +902,27 @@ def build_index(
                     ws = np.concatenate(wl).astype(np.float64)
                     u, inv = np.unique(ids, return_inverse=True)
                     sums = np.bincount(inv, weights=ws).astype(np.int64)
-                    yield pd.DataFrame({"doc_id": u, "dl": -sums})
+                    yield pd.DataFrame({"doc_id": u, "stop_dl": sums})
 
-                stop_parts = partials_all.join(
-                    stop_tdf, "term", "left_semi"
-                ).select("payload", "weights", "n_docs")
-                dl_all = dl_all.unionByName(
-                    stop_parts.mapInPandas(decode_neg, "doc_id long, dl long")
+                stop_dl = (
+                    partials_all.join(stop_tdf, "term", "left_semi")
+                    .select("payload", "weights", "n_docs")
+                    .mapInPandas(decode_stop, "doc_id long, stop_dl long")
+                    .groupBy("doc_id")
+                    .agg(F.sum("stop_dl").alias("stop_dl"))
                 )
-            dl_df = dl_all.groupBy("doc_id").agg(F.sum("dl").alias("dl"))
-            stats = (
-                docs.select("doc_id", "doc_key")
-                .join(dl_df, "doc_id", "left")
-                .fillna({"dl": 0})
-                .select("doc_id", "doc_key", F.col("dl").cast("double"))
-            )
-            stats.write.mode("overwrite").parquet(os.path.join(out_dir, "doc_stats"))
-            written = spark.read.parquet(os.path.join(out_dir, "doc_stats"))
-            return written.agg(F.sum("dl")).collect()[0][0] or 0.0
+                stats = stats.join(stop_dl, "doc_id", "left").select(
+                    "doc_id", "doc_key",
+                    (F.col("dl") - F.coalesce("stop_dl", F.lit(0))).alias("dl"),
+                )
+            path = os.path.join(out_dir, "doc_stats")
+            # fillna: dl keeps its non-null schema
+            stats.fillna({"dl": 0}).select(
+                "doc_id", "doc_key", F.col("dl").cast("double")
+            ).write.mode("overwrite").parquet(path)
+            if not n_stop:
+                return float(agg["dl"])
+            return spark.read.parquet(path).agg(F.sum("dl")).collect()[0][0] or 0.0
 
         # ---- postings: term-bucket shuffle of the live partials + merge
         # crc32 (not xxhash64): the query driver computes the same bucket in
@@ -731,7 +934,7 @@ def build_index(
         )
         postings_path = os.path.join(out_dir, "postings")
 
-        def postings(todo: list[int], stop) -> float:
+        def postings(todo: list[int], stop, agg) -> float:
             partials_all, stop_tdf, n_stop = stop
             live = (
                 partials_all.join(stop_tdf, "term", "left_anti")
@@ -739,6 +942,7 @@ def build_index(
                 else partials_all
             )
             g0 = time.monotonic()
+            sub = _input_sized(POSTINGS_SUBSPLIT, agg["n"])
             part_df = (
                 # the live partials are the map-side-encoded stream: the
                 # Exchange ships term-granular compressed partials (~2
@@ -752,12 +956,14 @@ def build_index(
                 # partition (same bucket, same term hash) while cutting
                 # partition-size variance 4x; the encoder derives the
                 # bucket column from the term itself, so file layout is
-                # unchanged.
+                # unchanged. Below LAYOUT_FULL_DOCS docs the sub-split
+                # shrinks with the input (a 1k-doc delta: one merge task
+                # per bucket, not four).
                 live.filter(bucket_expr.isin(todo))
                 .repartition(
-                    max(len(todo), 1) * 4,
+                    max(len(todo), 1) * sub,
                     bucket_expr,
-                    F.pmod(F.xxhash64("term"), F.lit(4)),
+                    F.pmod(F.xxhash64("term"), F.lit(sub)),
                 )
                 # partials of one term need only contiguity; their
                 # relative order is irrelevant (merge re-sorts by doc id)
@@ -783,7 +989,7 @@ def build_index(
             # lineage/metrics read-back off the critical path: it only
             # reads files this group already wrote
             stats = (
-                spark.read.parquet(postings_path)
+                _read_postings(spark, postings_path)
                 .filter(F.col("bucket").isin(todo))
                 .groupBy("bucket")
                 .agg(
@@ -804,10 +1010,10 @@ def build_index(
         # build's serial critical path; aux jobs ('build-aux') back-fill
         # idle slots instead of starving it.
         j_tok = graph.add("tokenize", tokenize, chain=True)
-        j_agg = graph.add("input_agg", input_agg)
+        j_agg = graph.add("input_agg", lambda _: input_agg(), (j_tok,))
         j_stop = graph.add("term_df_stop", term_df_stop, (j_tok,), chain=True)
         j_sample = graph.add("stop_sample", stop_sample, (j_stop,))
-        j_stats = graph.add("doc_stats", doc_stats, (j_tok, j_stop), chain=True)
+        j_stats = graph.add("doc_stats", doc_stats, (j_tok, j_stop, j_agg), chain=True)
 
         group_size = max(1, n_buckets // max(1, bucket_groups))
         groups = [
@@ -824,38 +1030,52 @@ def build_index(
             # ONE directory, also one after another: concurrent append jobs
             # share the committer's _temporary dir and a finishing job
             # deletes it under the other
-            j_post = graph.add("postings", lambda stop, *_, todo=todo: postings(todo, stop),
-                               (j_stop,) + ((j_post,) if j_post else ()), chain=True)
+            j_post = graph.add("postings", lambda stop, agg, *_, todo=todo: postings(todo, stop, agg),
+                               (j_stop, j_agg) + ((j_post,) if j_post else ()), chain=True)
             j_ck = graph.add("checkpoints", lambda elapsed, agg, *_, todo=todo: checkpoint(
                 todo, elapsed, agg), (j_post, j_agg) + ((j_ck,) if j_ck else ()))
             post_jobs.append((todo, j_post))
         j_postings = j_post or j_stop
 
         if aux:
-            # docs-derived jobs start with tokenize: they read only the
-            # (persisted) input
-            word_pairs = _word_pairs(docs, synonym_map)
-            prefix_pairs = _prefix_pairs(docs, synonym_map)
-            persisted += [word_pairs, prefix_pairs]
-            j_wm = graph.add("wm_words", lambda: _write_word_lists(
-                word_pairs.filter(F.length("word") >= 2), os.path.join(out_dir, "wm_words"), 32))
-            # after wm_words, which materializes the persisted pairs once
-            j_sq1 = graph.add("sq_words1", lambda _: _write_word_lists(
-                word_pairs.filter(F.length("word") == 1), os.path.join(out_dir, "sq_words1"), 4,
-            ), (j_wm,))
-            graph.add("word_tables", lambda *_: _build_word_tables(word_pairs, out_dir), (j_wm, j_sq1))
-            j_pp = graph.add("prefix_pairs", lambda: prefix_pairs.count())
-            j_meta = graph.add("doc_meta", lambda: _build_doc_meta(docs, out_dir, synonym_map))
-            graph.add("prefix_lists", lambda _: _build_prefix_lists(
-                prefix_pairs, out_dir, max_prefix_docs), (j_pp,))
+            # doc-derived jobs filter the materialized stream by kind
+            def words(tok: DataFrame) -> DataFrame:
+                return _of_kind(tok, KIND_WORD, "word", "doc_ids")
+
+            def prefix_pairs(tok: DataFrame) -> DataFrame:
+                # every column of a prefix row is set; the coalesce only
+                # gives prefix_postings its non-null schema
+                zero = {"prefix": "", "first_exact": False}
+                return _of_kind(tok, KIND_PREFIX, *(
+                    F.coalesce(c, F.lit(zero.get(c, 0))).alias(c) for c in PREFIX_PAIR_COLS))
+
+            def meta_rows(tok: DataFrame) -> DataFrame:
+                return _of_kind(tok, KIND_META, "doc_id", "doc_key", *DOC_META_COLS[1:])
+
+            def word_lists(table: str, len_filter):
+                return lambda tok, agg: _write_word_lists(
+                    words(tok).filter(len_filter), os.path.join(out_dir, table),
+                    layout_buckets(agg["n"])[table])
+
+            j_wm = graph.add("wm_words", word_lists("wm_words", F.length("word") >= 2), (j_tok, j_agg))
+            j_sq1 = graph.add("sq_words1", word_lists("sq_words1", F.length("word") == 1), (j_tok, j_agg))
+            # three jobs, one description: words, then words_rev and
+            # word_variants side by side from the written words table
+            j_words = graph.add("word_tables", lambda tok: _write_words(words(tok), out_dir), (j_tok,))
+            graph.add("word_tables", lambda _: _write_words_rev(spark, out_dir), (j_words,))
+            graph.add("word_tables", lambda _: _write_word_variants(spark, out_dir), (j_words,))
+            j_meta = graph.add("doc_meta", lambda tok: _write_doc_meta(meta_rows(tok), out_dir), (j_tok,))
+            for write in (_write_prefixes, _write_prefix_postings):
+                graph.add("prefix_lists", lambda tok, agg, write=write: write(
+                    prefix_pairs(tok), out_dir, max_prefix_docs, agg["n"]), (j_tok, j_agg))
             j_store = graph.add("doc_store", lambda _: _write_doc_store(out_dir), (j_meta,))
-            j_champ = graph.add("champions", lambda _, doc_meta, _agg: _build_champions(
-                prefix_pairs, doc_meta, docs, out_dir), (j_pp, j_meta, j_agg))
+            graph.add("champions", lambda tok, agg: _build_champions(
+                prefix_pairs(tok), meta_rows(tok), agg, out_dir), (j_tok, j_agg))
             # postings-derived jobs overlap the doc-derived jobs' tails
             graph.add("variants_dict", lambda _: _build_variants(
                 spark, postings_path, out_dir), (j_postings,))
             graph.add("term_dict", lambda _: (
-                spark.read.parquet(postings_path).select("term", "df").orderBy("term")
+                _read_postings(spark, postings_path).select("term", "df").orderBy("term")
                 .write.mode("overwrite").parquet(os.path.join(out_dir, "term_dict"))
             ), (j_postings,))
 
@@ -866,8 +1086,9 @@ def build_index(
 
             graph.add("char_terms", ps_only(lambda _: _build_char_terms(
                 spark, postings_path, out_dir)), (j_agg, j_postings))
-            j_ps = graph.add("pattern_scores", ps_only(lambda _: _build_pattern_scores(
-                spark, postings_path, out_dir)), (j_agg, j_postings), chain=True)
+            j_ps = graph.add("pattern_scores", lambda agg, _: _build_pattern_scores(
+                spark, postings_path, out_dir, layout_buckets(agg["n"])["pattern_scores"],
+            ) if want_ps(agg) else None, (j_agg, j_postings), chain=True)
             graph.add("pattern_store_write", ps_only(lambda _: _write_pattern_store(
                 out_dir)), (j_agg, j_ps), chain=True)
             # the sq_topk fold's per-doc sidecar reads doc_meta + doc_stats
@@ -882,7 +1103,7 @@ def build_index(
                 # drops doc_meta's text columns, so it follows every job
                 # that reads doc_meta
                 graph.add("slim_doc_meta", lambda *_: _slim_doc_meta(out_dir),
-                          (j_store, j_champ, j_side, j_sqt))
+                          (j_store, j_side, j_sqt))
         step_secs, step_starts = graph.join()
     finally:
         for df in persisted:
@@ -926,6 +1147,7 @@ def build_index(
             "index_sizes": list(sizes),
             "start_pad": start_pad,
             "n_buckets": n_buckets,
+            "layout": layout_buckets(n_docs_total),
             "max_prefix_docs": max_prefix_docs,
             "build_wall_sec": wall,
             "docs_per_sec": (n_docs_total / wall) if wall > 0 else 0.0,
@@ -962,50 +1184,27 @@ def build_index(
 _CHAMPION_LIST_SIZE = 64  # ShortQueryResolver.ChampionListSize
 
 
-def _word_list_partial(n_buckets: int | None, key: str = "word"):
-    """mapInPandas factory: per-partition (key -> sorted local doc ids)
-    partial rows. Doc ids of one key are disjoint across partitions
-    (each doc's pairs live in exactly one partition), so the reduce-side
-    merge is concat + sort with no dedup needed. With n_buckets a crc32
-    bucket column is added (the word tables' file layout); None omits
-    it (the prefixes table repartitions by the key itself)."""
-    import zlib
+def _word_list_partial(key: str):
+    """mapInPandas factory: per-Arrow-batch (key -> sorted doc ids)
+    partial rows over (key, doc_id) rows. Doc ids of one key are
+    disjoint across batches (each (key, doc) pair occurs once), so the
+    reduce-side merge is concat + sort with no dedup needed, whatever the
+    number of partials per key."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w_l: list[np.ndarray] = []
-        d_l: list[np.ndarray] = []
         for pdf in batches:
-            if len(pdf):
-                w_l.append(pdf[key].to_numpy())
-                d_l.append(pdf["doc_id"].to_numpy())
-        if not w_l:
-            return
-        words = np.concatenate(w_l)
-        docs = np.concatenate(d_l)
-        codes, uniq = factorize_strings(words)
-        order = np.lexsort((docs, codes))
-        codes_s, docs_s = codes[order], docs[order]
-        change = np.empty(codes_s.size, dtype=bool)
-        change[0] = True
-        change[1:] = codes_s[1:] != codes_s[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], codes_s.size)
-        out_words = np.asarray(uniq, dtype=object)[codes_s[starts]]
-        cols = {
-            key: out_words,
-            "doc_ids": [
-                docs_s[s:e] for s, e in zip(starts.tolist(), ends.tolist())
-            ],
-        }
-        if n_buckets is not None:
-            cols["bucket"] = np.asarray(
-                [
-                    zlib.crc32(w.encode("utf-8")) % n_buckets
-                    for w in out_words
-                ],
-                dtype=np.int32,
-            )
-        yield pd.DataFrame(cols)
+            if not len(pdf):
+                continue
+            docs = pdf["doc_id"].to_numpy()
+            codes, uniq = factorize_strings(pdf[key].to_numpy())
+            order = np.lexsort((docs, codes))
+            codes_s, docs_s = codes[order], docs[order]
+            starts = np.flatnonzero(np.r_[True, codes_s[1:] != codes_s[:-1]])
+            ends = np.append(starts[1:], codes_s.size)
+            yield pd.DataFrame({
+                key: np.asarray(uniq, dtype=object)[codes_s[starts]],
+                "doc_ids": [docs_s[s:e] for s, e in zip(starts.tolist(), ends.tolist())],
+            })
 
     return run
 
@@ -1100,102 +1299,36 @@ def _word_list_merge(
     return run
 
 
-def _word_pairs_extract(synonym_map=None):
-    """mapInPandas factory: deduped (doc_id, word) pairs per batch.
-
-    Words are maximal non-delimiter runs over the space-joined codepoint
-    array (space is a delimiter, so the join separator breaks runs at
-    doc boundaries) — replaces the per-row regex split + .str.len() +
-    frame drop_duplicates passes with numpy run detection + one
-    packed-key unique (same rows, any order)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from infidex_spark.kernel.normalize import normalize_series
-        from infidex_spark.build.tokenizer import _strings_of_runs, _word_runs
-
-        for pdf in batches:
-            texts = normalize_series(pdf["text"].fillna("")).str.lower()
-            if synonym_map is not None and synonym_map.has_mappings:
-                texts = synonym_map.canonicalize_series(texts)
-            blob = " ".join(texts.tolist())
-            cps = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32)
-            if cps.size == 0:
-                continue
-            doc_ends = np.cumsum(texts.str.len().to_numpy(np.int64) + 1)
-            w_starts, rlens = _word_runs(cps)
-            if not w_starts.size:
-                continue
-            docpos = np.searchsorted(doc_ends, w_starts, side="right")
-            codes, uniq = factorize_strings(_strings_of_runs(cps, w_starts, rlens))
-            packed = (docpos.astype(np.int64) << 32) | codes
-            upacked = np.unique(packed)
-            ids = pdf["doc_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids[(upacked >> 32)],
-                    "word": np.asarray(uniq, dtype=object)[
-                        upacked & 0xFFFFFFFF
-                    ],
-                }
-            )
-
-    return extract
-
-
-def _word_pairs(docs: DataFrame, synonym_map=None) -> DataFrame:
-    """The deduped (doc_id, word) pair stream every word-level table is
-    built from: wm_words and sq_words1 (_write_word_lists), words,
-    words_rev and word_variants (_build_word_tables). Lazy and
-    persisted; the caller unpersists it.
-
-    These previously ran as three separate Arrow passes, each
-    re-normalizing and re-splitting every text. The passes are
-    memory-bandwidth-bound (unicode fold + regex split over the whole
-    corpus), and memory bandwidth is shared across cores — it is the
-    component that does NOT scale from N to 4N on a node — so the
-    deduped (doc_id, word) pair stream is computed ONCE and persisted
-    (columnar-compressed, MEMORY_AND_DISK) for the three consumers. At
-    extreme corpus sizes the same stream would go to parquet instead,
-    as the fused partials table does for resumable builds."""
-    from pyspark import StorageLevel
-
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(_word_pairs_extract(synonym_map), "doc_id long, word string")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-
 def _write_word_lists(
     words: DataFrame, out_path: str, n_buckets: int, max_list: int = 1_250_000
 ) -> None:
-    """word -> sorted doc ids over (doc_id, word) pairs, written
-    word-sorted in n_buckets crc32 buckets for row-group min/max pruning:
+    """word -> sorted doc ids over the stream's (word, doc ids) partials,
+    written word-sorted in n_buckets crc32 buckets for row-group min/max
+    pruning:
 
-    - wm_words (B9, WordMatcher.cs Load), 32 buckets: words of len >= 2,
+    - wm_words (B9, WordMatcher.cs Load), up to 32 buckets (see
+      layout_buckets): words of len >= 2,
       independent of gram stop demotion — len-2 words and stop-demoted
       words keep their WM postings, exactly as the reference's separate
       exact/LD1/FST indexes do. Lists are capped at max_list ids (the
       reference's Term growth cap; n_docs keeps the TRUE count so
       n_docs > len(doc_ids) signals truncation).
-    - sq_words1, 4 buckets: len-1 words (short-query precedence fast
+    - sq_words1, up to 4 buckets: len-1 words (short-query precedence fast
       path; the reference WordMatcher never indexes these).
 
     The same map-side-partial shape as the postings build (guide §2.3
-    "aggregate before you shuffle"): each pairs partition emits ONE
-    (word, sorted local ids) row per word it holds, so the exchange
+    "aggregate before you shuffle"): the document pass emits ONE (word,
+    sorted local ids) row per word and input batch, so the exchange
     moves vocabulary-granular array rows instead of (doc, word) pairs —
-    a hot word ships as ~n_partitions rows, not df rows — and the reduce
+    a hot word ships as ~n_batches rows, not df rows — and the reduce
     is a k-way array merge, not a posting-granular Tungsten sort. The
     sort leads with bucket so the partitionBy writer inserts NO extra
     sort (an inserted bucket sort silently destroyed word order in
     hash-colliding partitions, which cost those files their point-read
     stats pruning)."""
+    bucket = F.pmod(F.crc32(F.encode("word", "utf-8")), F.lit(n_buckets)).cast("int")
     (
-        words.mapInPandas(
-            _word_list_partial(n_buckets),
-            "word string, doc_ids array<long>, bucket int",
-        )
+        words.withColumn("bucket", bucket)
         .repartition(n_buckets, "bucket")
         .sortWithinPartitions("bucket", "word")
         .mapInPandas(
@@ -1209,107 +1342,37 @@ def _write_word_lists(
     )
 
 
-def _build_word_tables(pairs: DataFrame, out_dir: str) -> None:
-    """words / words_rev (B4 + disk affix ranges) and word_variants
-    (symmetric-delete over 2-8 char words) for the rerank's word lookups
-    below and above the in-memory cap. Unpersists pairs, its last
-    reader."""
-    spark = pairs.sparkSession
-    # words df (distinct-doc counts: pairs are already deduped per doc)
-    word_df_tbl = pairs.groupBy("word").agg(F.count("*").alias("df"))
-    word_df_tbl.orderBy("word").write.mode("overwrite").options(**POINT_READ_WRITE_OPTS).parquet(os.path.join(out_dir, "words"))
-    pairs.unpersist()
-    # twin structures derive from the written table (one aggregation)
-    reread = spark.read.parquet(os.path.join(out_dir, "words"))
-    reread.select(F.reverse(F.col("word")).alias("rword"), "df").orderBy(
-        "rword"
-    ).write.mode("overwrite").options(**POINT_READ_WRITE_OPTS).parquet(os.path.join(out_dir, "words_rev"))
-    _symmetric_delete_table(
-        reread.filter(
-            (F.length("word") >= 2) & (F.length("word") <= 8)
-        ).select(F.col("word").alias("term")),
-        os.path.join(out_dir, "word_variants"),
+def _write_words(words: DataFrame, out_dir: str) -> None:
+    """words (B4 + disk affix ranges): word -> df, word-sorted, from the
+    (word, doc ids) partials, for the rerank's word lookups below and
+    above the in-memory cap."""
+    # distinct-doc counts: partials hold disjoint doc ids; coalesce keeps
+    # df non-null, as a count is
+    words.groupBy("word").agg(
+        F.coalesce(F.sum(F.size("doc_ids")), F.lit(0)).alias("df")
+    ).orderBy("word").write.mode("overwrite").options(**POINT_READ_WRITE_OPTS).parquet(
+        os.path.join(out_dir, "words")
     )
 
 
-def _prefix_pairs_extract(synonym_map=None):
-    """mapInPandas factory: per-(1..3-char prefix, doc) positional
-    aggregates for the short-query index (see _prefix_pairs)."""
+def _write_words_rev(spark: SparkSession, out_dir: str) -> None:
+    """words_rev: the written words table keyed by the reversed word."""
+    _read_words(spark, out_dir).select(
+        F.reverse(F.col("word")).alias("rword"), "df"
+    ).orderBy("rword").write.mode("overwrite").options(**POINT_READ_WRITE_OPTS).parquet(
+        os.path.join(out_dir, "words_rev")
+    )
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from infidex_spark.kernel.normalize import normalize_series
-        from infidex_spark.build.tokenizer import _key_to_str, _pack_keys, _word_runs
 
-        # words as maximal non-delimiter runs over the space-joined
-        # codepoint array (space is a delimiter, so the separator breaks
-        # runs at doc boundaries): keys pack straight from the original
-        # array — no regex split, no word-string materialization, no
-        # second blob encode (the former per-row passes dominated this
-        # stage's Python time)
-        for pdf in batches:
-            texts = normalize_series(pdf["text"].fillna("")).str.lower()
-            if synonym_map is not None and synonym_map.has_mappings:
-                texts = synonym_map.canonicalize_series(texts)
-            blob = " ".join(texts.tolist())
-            cps = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32)
-            if cps.size == 0:
-                continue
-            doc_ends = np.cumsum(texts.str.len().to_numpy(np.int64) + 1)
-            starts, wlen = _word_runs(cps)
-            if not starts.size:
-                continue
-            ids = pdf["doc_id"].to_numpy()
-            didx = np.searchsorted(doc_ends, starts, side="right")
-            wdoc = ids[didx]
-            # token ordinal within each doc (runs arrive in text order)
-            n = didx.size
-            arange = np.arange(n)
-            doc_change = np.empty(n, dtype=bool)
-            doc_change[0] = True
-            doc_change[1:] = didx[1:] != didx[:-1]
-            doc_start = np.maximum.accumulate(np.where(doc_change, arange, 0))
-            wpos = arange - doc_start
-            frames = []
-            for plen in (1, 2, 3):
-                sel = wlen >= plen
-                if not sel.any():
-                    continue
-                keys = _pack_keys(cps, starts[sel], plen)
-                docs_sel = wdoc[sel]
-                pos_sel = wpos[sel]
-                exact_sel = (wlen[sel] == plen).astype(np.int64)
-                # aggregate per (key, doc) with one lexsort + reduceat
-                order = np.lexsort((pos_sel, keys, docs_sel))
-                keys, docs_sel = keys[order], docs_sel[order]
-                pos_sel, exact_sel = pos_sel[order], exact_sel[order]
-                grp = np.empty(keys.size, dtype=bool)
-                grp[0] = True
-                grp[1:] = (keys[1:] != keys[:-1]) | (docs_sel[1:] != docs_sel[:-1])
-                gstart = np.flatnonzero(grp)
-                first_pos = pos_sel[gstart]  # sorted by pos within group
-                n_ws = np.diff(np.append(gstart, keys.size))
-                n_exact = np.add.reduceat(exact_sel, gstart)
-                first_exact = (
-                    np.add.reduceat(exact_sel * (pos_sel == 0), gstart) > 0
-                )
-                ukeys, inv = np.unique(keys[gstart], return_inverse=True)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "prefix": pd.Categorical.from_codes(
-                                inv, categories=_key_to_str(ukeys, plen)
-                            ),
-                            "doc_id": docs_sel[gstart].astype(np.int64),
-                            "first_pos": first_pos.astype(np.int64),
-                            "n_ws": n_ws.astype(np.int64),
-                            "n_exact": n_exact.astype(np.int64),
-                            "first_exact": first_exact,
-                        }
-                    )
-                )
-            yield from frames
-
-    return extract
+def _write_word_variants(spark: SparkSession, out_dir: str) -> None:
+    """word_variants: symmetric-delete over the 2-8 char words of the
+    written words table."""
+    _symmetric_delete_table(
+        _read_words(spark, out_dir)
+        .filter((F.length("word") >= 2) & (F.length("word") <= 8))
+        .select(F.col("word").alias("term")),
+        os.path.join(out_dir, "word_variants"),
+    )
 
 
 def _dense_strings(values: pa.Array, ids: np.ndarray, n: int) -> pa.Array:
@@ -1332,145 +1395,73 @@ def _str_eq(strings: pa.Array, idx: np.ndarray, other) -> np.ndarray:
     return eq.fill_null(False).to_numpy(zero_copy_only=False)
 
 
-def _champions_sidecar(spark, docs: DataFrame, meta_path: str):
+def _champions_sidecar(meta_rows: DataFrame, agg):
     """Per-doc arrays for the champions map-side top-k: doc_id-indexed
     n_tokens / tiny_text (Arrow, NULL where absent) / doc_key (~24
-    B/doc). Returns None when the corpus exceeds the broadcast cap or the
-    id space is grossly sparse — the caller then uses the fully
-    distributed join+window plan."""
-    import pyarrow.dataset as pads
-
-    try:
-        tb = pads.dataset(meta_path).to_table(
-            columns=["doc_id", "n_tokens", "tiny_text"]
-        )
-    except Exception:
-        return None
-    n_rows = len(tb)
+    B/doc), collected from the stream's doc_meta rows. Returns None when
+    the corpus exceeds the broadcast cap or the id space is grossly
+    sparse (both known from input_agg before anything is collected) —
+    the caller then uses the fully distributed join+window plan."""
+    n_rows = agg["n"]
     if n_rows == 0 or n_rows > SQ_TOPK_BROADCAST_DOCS:
         return None
-    ids = tb["doc_id"].to_numpy()
-    n = int(ids.max()) + 1
+    n = int(agg["mx"]) + 1
     if n > max(16 * n_rows, 1_000_000):
         return None
+    tb = meta_rows.select("doc_id", "n_tokens", "tiny_text", "doc_key").toArrow()
+    ids = tb["doc_id"].to_numpy()
     ntok = np.zeros(n, dtype=np.int64)
     ntok[ids] = tb["n_tokens"].to_numpy()
-    tiny = _dense_strings(tb["tiny_text"].combine_chunks(), ids, n)
-    keys = docs.select("doc_id", "doc_key").toPandas()
     key = np.zeros(n, dtype=np.int64)
-    key[keys["doc_id"].to_numpy()] = keys["doc_key"].to_numpy()
+    key[ids] = tb["doc_key"].to_numpy()
+    tiny = _dense_strings(tb["tiny_text"].combine_chunks(), ids, n)
     return {"ntok": ntok, "tiny": tiny, "key": key}
 
 
-_PREFIX_PAIRS_SCHEMA = T.StructType(
-    [
-        T.StructField("prefix", T.StringType(), False),
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("first_pos", T.LongType(), False),
-        T.StructField("n_ws", T.LongType(), False),
-        T.StructField("n_exact", T.LongType(), False),
-        T.StructField("first_exact", T.BooleanType(), False),
-    ]
-)
+def _write_doc_meta(meta_rows: DataFrame, out_dir: str) -> None:
+    """Doc metadata cache (B8): the stream's doc_meta rows, doc_id-sorted
+    within each partition."""
+    meta_rows.select(*DOC_META_COLS).sortWithinPartitions("doc_id").write.mode(
+        "overwrite"
+    ).options(**POINT_READ_WRITE_OPTS).parquet(os.path.join(out_dir, "doc_meta"))
 
 
-def _prefix_pairs(docs: DataFrame, synonym_map=None) -> DataFrame:
-    """Per (prefix of 1..3 chars, doc): first token position, word-start
-    count, exact-token counts — everything the short-query scorer (D10)
-    needs; the rows of the positional prefix index (B6) and the champion
-    lists (B7). Rows are globally unique per (prefix, doc): each doc's
-    words come from exactly one Arrow batch. Lazy and persisted, so the
-    extract runs once; the caller unpersists it."""
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(_prefix_pairs_extract(synonym_map), schema=_PREFIX_PAIRS_SCHEMA)
-        .persist()
-    )
+def _prefix_counts(pairs: DataFrame) -> DataFrame:
+    """(prefix, n_docs) over the prefix pairs: vocabulary-sized; the
+    count's shuffle is map-side-combined partials."""
+    return pairs.groupBy("prefix").agg(F.count("*").alias("n_docs"))
 
 
-def _build_doc_meta(docs: DataFrame, out_dir: str, synonym_map=None) -> DataFrame:
-    """Doc metadata cache (B8): n_tokens + tiny normalized text, all
-    .str-vectorized (no per-row lambdas). Returns the written table."""
-    spark = docs.sparkSession
-
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from infidex_spark.kernel.normalize import normalize_series
-        from infidex_spark.build.tokenizer import _DELIM_SPLIT
-
-        for pdf in batches:
-            texts = normalize_series(pdf["text"].fillna("")).str.lower()
-            if synonym_map is not None and synonym_map.has_mappings:
-                texts = synonym_map.canonicalize_series(texts)
-            stripped = texts.str.strip()
-            # space-joined word stream with sentinel spaces: turns the
-            # short-query word-boundary checks into plain substring
-            # searches (' q ' in words_text == q in word_tokens(text)).
-            # Vectorized: collapse delimiter runs to single spaces, strip,
-            # re-wrap with sentinels.
-            joined = texts.str.replace(_DELIM_SPLIT, " ", regex=True).str.strip()
-            words_text = (" " + joined + " ").where(joined != "", " ")
-            n_tokens = words_text.str.count(" ").astype("int64") - 1
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_tokens": n_tokens,
-                    "tiny_text": stripped.where(stripped.str.len() <= 3),
-                    # prepped text retained for the coverage rerank (the
-                    # reference likewise keeps IndexedText in memory)
-                    "text": texts,
-                    "words_text": words_text,
-                    # short-query precedence columns (D10 fast path):
-                    # raw prepped prefix + first word's 3-char prefix —
-                    # equality against a <=2-char query reproduces
-                    # startswith / first-word-exact exactly
-                    "first3": texts.str[:3],
-                    "first_word3": joined.str.extract(r"^([^ ]{0,3})", expand=False).fillna(""),
-                }
-            )
-
-    meta_schema = (
-        "doc_id long, n_tokens long, tiny_text string, text string, "
-        "words_text string, first3 string, first_word3 string"
-    )
-
-    docs.select("doc_id", "text").mapInPandas(meta, schema=meta_schema).sortWithinPartitions(
-        "doc_id"
-    ).write.mode("overwrite").options(**POINT_READ_WRITE_OPTS).parquet(os.path.join(out_dir, "doc_meta"))
-    return spark.read.parquet(os.path.join(out_dir, "doc_meta"))
-
-
-def _build_prefix_lists(pairs: DataFrame, out_dir: str, max_prefix_docs: int) -> None:
-    """Positional prefix index (B6): prefixes (prefix -> n_docs + sorted
-    doc ids) and prefix_postings (the positional rows). Hot prefixes
-    (pop > max_prefix_docs) keep only their count and champion list
+def _write_prefixes(
+    pairs: DataFrame, out_dir: str, max_prefix_docs: int, n_docs: int
+) -> None:
+    """Positional prefix index (B6), prefixes: prefix -> n_docs + sorted
+    doc ids. Hot prefixes (pop > max_prefix_docs, possible only above
+    max_prefix_docs input docs) keep only their count and champion list
     (top-64 by the short-query score); the query path never needs a hot
-    prefix's full posting rows."""
-    # ---- counts + capped positional rows: the count agg stays (its
-    # shuffle is map-side-combined partials, tiny, and it keeps hot
-    # prefixes OUT of the list shuffle — at corpus scale a hot 1-char
-    # prefix is a one-partition skew bomb), but the collect_list +
-    # sort_array ObjectHashAggregate is replaced by a repartition +
-    # local (prefix, doc_id) sort feeding a streaming group collector
-    # — the same rows with no per-group agg buffers and no second
-    # full-width pass (guide §2.3: aggregate before you shuffle;
-    # §2.5: hot keys handled explicitly).
-    # prefix-count table is vocabulary-sized (tiny); persist it — it
-    # feeds the small-set broadcast twice plus the hot rows union
-    counts = pairs.groupBy("prefix").agg(F.count("*").alias("n_docs")).persist()
-    try:
+    prefix's full posting list. The count agg keeps hot prefixes OUT of
+    the list shuffle — at corpus scale a hot 1-char prefix is a
+    one-partition skew bomb (guide §2.5: hot keys handled explicitly)."""
+    hot = counts = None
+    if n_docs > max_prefix_docs:
+        # feeds the small-set broadcast plus the hot rows
+        counts = _prefix_counts(pairs).persist()
         small = counts.filter(F.col("n_docs") <= max_prefix_docs).select("prefix")
-
-        # map-side partials (same shape as the wm_words legs): each
-        # pairs partition emits one (prefix, sorted local ids) row per
-        # prefix, so the exchange moves vocabulary-granular array rows
-        # instead of (prefix, doc) pairs and the reduce is a k-way
-        # array merge (one doc's pairs live in exactly one partition,
-        # so merged ids are unique by construction)
+        pairs = pairs.join(F.broadcast(small), "prefix", "left_semi")
+        hot = counts.filter(F.col("n_docs") > max_prefix_docs).select(
+            "prefix", "n_docs", F.lit(None).cast("array<long>").alias("doc_ids")
+        )
+    try:
+        # map-side partials (the same shape as the word lists): each
+        # Arrow batch of pairs emits one (prefix, sorted local ids) row
+        # per prefix, so the exchange moves vocabulary-granular array
+        # rows instead of (prefix, doc) pairs and the reduce is a k-way
+        # array merge (pairs are unique per (prefix, doc), so merged ids
+        # are unique by construction)
         collected = (
             pairs.select("prefix", "doc_id")
-            .join(F.broadcast(small), "prefix", "left_semi")
             .mapInPandas(
-                _word_list_partial(None, key="prefix"),
+                _word_list_partial("prefix"),
                 "prefix string, doc_ids array<long>",
             )
             .repartition("prefix")
@@ -1480,127 +1471,126 @@ def _build_prefix_lists(pairs: DataFrame, out_dir: str, max_prefix_docs: int) ->
                 "prefix string, n_docs long, doc_ids array<long>",
             )
         )
-        hot = counts.filter(F.col("n_docs") > max_prefix_docs).select(
-            "prefix", "n_docs", F.lit(None).cast("array<long>").alias("doc_ids")
-        )
-        collected.unionByName(hot).write.mode("overwrite").options(
-            **POINT_READ_WRITE_OPTS
-        ).parquet(os.path.join(out_dir, "prefixes"))
-        (
-            pairs.join(F.broadcast(small), "prefix", "left_semi")
-            .sortWithinPartitions("prefix")
-            .write.mode("overwrite")
-            .options(**POINT_READ_WRITE_OPTS)
-            .parquet(os.path.join(out_dir, "prefix_postings"))
+        if hot is not None:
+            collected = collected.unionByName(hot)
+        collected.write.mode("overwrite").options(**POINT_READ_WRITE_OPTS).parquet(
+            os.path.join(out_dir, "prefixes")
         )
     finally:
-        # released on failure too
-        counts.unpersist()
+        if counts is not None:  # released on failure too
+            counts.unpersist()
+
+
+def _write_prefix_postings(
+    pairs: DataFrame, out_dir: str, max_prefix_docs: int, n_docs: int
+) -> None:
+    """Positional prefix index (B6), prefix_postings: the positional rows
+    of every non-hot prefix (see _write_prefixes), prefix-sorted."""
+    if n_docs > max_prefix_docs:
+        small = _prefix_counts(pairs).filter(
+            F.col("n_docs") <= max_prefix_docs
+        ).select("prefix")
+        pairs = pairs.join(F.broadcast(small), "prefix", "left_semi")
+    pairs.sortWithinPartitions("prefix").write.mode("overwrite").options(
+        **POINT_READ_WRITE_OPTS
+    ).parquet(os.path.join(out_dir, "prefix_postings"))
 
 
 def _build_champions(
-    pairs: DataFrame, doc_meta: DataFrame, docs: DataFrame, out_dir: str
+    pairs: DataFrame, meta_rows: DataFrame, agg, out_dir: str
 ) -> None:
     """Champion lists (B7): top-64 docs per prefix by the short-query
     score (covers hot prefixes, whose full rows are not stored).
 
     Top-k is associative, so below the sidecar cap the heavy work runs
-    MAP-SIDE (guide §2.3 "aggregate before you shuffle"): each pairs
-    partition scores its rows against a broadcast per-doc sidecar
+    MAP-SIDE (guide §2.3 "aggregate before you shuffle"): each Arrow
+    batch of prefix pairs is scored against a broadcast per-doc sidecar
     (n_tokens / tiny text / doc_key — the same bounded ~24 B/doc shape
     as the sq_topk fold sidecar) and emits only its local per-prefix
     top-64 (+ boundary ties), so the window's shuffle+sort sees a small
     candidate superset instead of every (prefix, doc) pair joined
-    against doc_meta twice. The window then produces exactly the rows
+    against the doc_meta rows. The window then produces exactly the rows
     the single-stage plan would (same ordering keys; local winners are a
-    superset of the global top-64 because a row outside its partition's
+    superset of the global top-64 because a row outside its batch's
     top-64-with-ties is dominated by 64 rows that also reach the
     reduce). Above the cap (or for grossly sparse id spaces) the
     join+window plan runs. The sidecar indexes arrays by doc id, so
-    this runs only after the id-space check."""
+    this runs only after the id-space check (input_agg)."""
     from pyspark.sql.window import Window
 
     spark = pairs.sparkSession
 
     w = Window.partitionBy("prefix").orderBy(F.desc("sq_score"), F.asc("doc_key"))
-    side = _champions_sidecar(spark, docs, os.path.join(out_dir, "doc_meta"))
+    side = _champions_sidecar(meta_rows, agg)
     if side is not None:
         bc = spark.sparkContext.broadcast(side)
         k_champ = _CHAMPION_LIST_SIZE
 
         def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            cols: dict[str, list[np.ndarray]] = {
-                "prefix": [], "doc_id": [], "first_pos": [],
-                "n_ws": [], "n_exact": [], "first_exact": [],
-            }
+            b = bc.value
             for pdf in batches:
                 if not len(pdf):
                     continue
-                for c in cols:
-                    cols[c].append(pdf[c].to_numpy())
-            if not cols["prefix"]:
-                return
-            b = bc.value
-            prefix = np.concatenate(cols["prefix"])
-            doc_id = np.concatenate(cols["doc_id"])
-            first_pos = np.concatenate(cols["first_pos"])
-            n_ws = np.concatenate(cols["n_ws"])
-            n_exact = np.concatenate(cols["n_exact"])
-            first_exact = np.concatenate(cols["first_exact"])
-            ntok = b["ntok"][doc_id]
-            key = b["key"][doc_id]
-            prec = (
-                128
-                + 64 * (first_pos == 0)
-                + 32 * ((n_exact > 0) | (ntok <= 3))
-                + 16 * first_exact
-                + 8 * _str_eq(b["tiny"], doc_id, prefix)
-            ).astype(np.int64)
-            base = np.clip(
-                (255 - np.minimum(first_pos * 16, 240))
-                + np.minimum(n_ws * 8, 32),
-                0,
-                255,
-            )
-            score = ((prec << 8) + base).astype(np.int64)
-            codes, _ = factorize_strings(prefix)
-            order = np.lexsort((key, -score, codes))
-            codes_s = codes[order]
-            grp = np.empty(codes_s.size, dtype=bool)
-            grp[0] = True
-            grp[1:] = codes_s[1:] != codes_s[:-1]
-            gstart_idx = np.flatnonzero(grp)
-            gidx = np.cumsum(grp) - 1
-            rank = np.arange(codes_s.size) - gstart_idx[gidx]
-            keep = rank < k_champ
-            # boundary ties: a row equal to its group's k-th
-            # (score, key) tuple stays, so the reduce always sees
-            # every candidate any valid global top-k could contain
-            glen = np.diff(np.append(gstart_idx, codes_s.size))
-            big = glen[gidx] > k_champ
-            if big.any():
-                cut = np.minimum(
-                    gstart_idx[gidx] + k_champ - 1, codes_s.size - 1
+                prefix = pdf["prefix"].to_numpy()
+                doc_id = pdf["doc_id"].to_numpy()
+                first_pos = pdf["first_pos"].to_numpy()
+                n_ws = pdf["n_ws"].to_numpy()
+                n_exact = pdf["n_exact"].to_numpy()
+                first_exact = pdf["first_exact"].to_numpy()
+                ntok = b["ntok"][doc_id]
+                key = b["key"][doc_id]
+                prec = (
+                    128
+                    + 64 * (first_pos == 0)
+                    + 32 * ((n_exact > 0) | (ntok <= 3))
+                    + 16 * first_exact
+                    + 8 * _str_eq(b["tiny"], doc_id, prefix)
+                ).astype(np.int64)
+                base = np.clip(
+                    (255 - np.minimum(first_pos * 16, 240))
+                    + np.minimum(n_ws * 8, 32),
+                    0,
+                    255,
                 )
-                s_o, k_o = score[order], key[order]
-                keep |= big & (s_o == s_o[cut]) & (k_o == k_o[cut])
-            sel = order[keep]
-            yield pd.DataFrame(
-                {
-                    "prefix": prefix[sel],
-                    "doc_id": doc_id[sel],
-                    "doc_key": key[sel],
-                    "sq_score": score[sel],
-                }
-            )
+                score = ((prec << 8) + base).astype(np.int64)
+                codes, _ = factorize_strings(prefix)
+                order = np.lexsort((key, -score, codes))
+                codes_s = codes[order]
+                grp = np.empty(codes_s.size, dtype=bool)
+                grp[0] = True
+                grp[1:] = codes_s[1:] != codes_s[:-1]
+                gstart_idx = np.flatnonzero(grp)
+                gidx = np.cumsum(grp) - 1
+                rank = np.arange(codes_s.size) - gstart_idx[gidx]
+                keep = rank < k_champ
+                # boundary ties: a row equal to its group's k-th
+                # (score, key) tuple stays, so the reduce always sees
+                # every candidate any valid global top-k could contain
+                glen = np.diff(np.append(gstart_idx, codes_s.size))
+                big = glen[gidx] > k_champ
+                if big.any():
+                    cut = np.minimum(
+                        gstart_idx[gidx] + k_champ - 1, codes_s.size - 1
+                    )
+                    s_o, k_o = score[order], key[order]
+                    keep |= big & (s_o == s_o[cut]) & (k_o == k_o[cut])
+                sel = order[keep]
+                yield pd.DataFrame(
+                    {
+                        "prefix": prefix[sel],
+                        "doc_id": doc_id[sel],
+                        "doc_key": key[sel],
+                        "sq_score": score[sel],
+                    }
+                )
 
         scored = pairs.mapInPandas(
             local_topk,
             "prefix string, doc_id long, doc_key long, sq_score long",
         )
     else:
-        scored = pairs.join(doc_meta, "doc_id").join(
-            docs.select("doc_id", "doc_key"), "doc_id"
+        scored = pairs.join(
+            meta_rows.select("doc_id", "doc_key", "n_tokens", "tiny_text"), "doc_id"
         ).withColumn(
             "precedence",
             F.lit(128)
@@ -1765,6 +1755,7 @@ def _build_pattern_scores(
     spark: SparkSession,
     postings_path: str,
     out_dir: str,
+    n_buckets: int = LAYOUT_MAX_BUCKETS["pattern_scores"],
     cap_terms: int = 4096,
     cap_docs: int = 5_000_000,
 ) -> None:
@@ -1804,7 +1795,7 @@ def _build_pattern_scores(
     scaling efficiency."""
     from pyspark.sql.window import Window
 
-    posts = spark.read.parquet(postings_path)
+    posts = _read_postings(spark, postings_path)
     # The (term, pattern) rank filter is a pure function of the sorted
     # term dictionary. The vocabulary saturates around ~10^6 grams, so
     # below a generous cap the ranking runs DRIVER-SIDE over the term
@@ -1863,7 +1854,6 @@ def _build_pattern_scores(
         pats = F.broadcast(pats)
     joined = posts.select("term", "payload", "weights", "n_docs").join(pats, "term")
 
-    n_buckets = 16
     # shuffle partitions; a pattern's group lands whole. 128 (not 64):
     # groups are indivisible and Zipf-skewed ('￿th', ' th' carry 4096
     # hot terms each), so more, smaller partitions cut the straggler
@@ -2116,7 +2106,7 @@ def _sq_topk_fold(
             F.col("n_docs").alias("pn"), nil_s.alias("w"),
         )
     )
-    base_src = spark.read.parquet(postings_path)
+    base_src = _read_postings(spark, postings_path)
     if base_terms:
         # isin BEFORE the broadcast join: the predicate pushes into the
         # (bucket, term)-sorted parquet scan's row-group stats, so only
@@ -2482,7 +2472,7 @@ def _build_sq_topk(
         .select("q", F.col("z.doc_ids").alias("doc_id"), F.col("z.scores").cast("long").alias("w"))
     )
 
-    posts = spark.read.parquet(postings_path)
+    posts = _read_postings(spark, postings_path)
     base = posts.join(base_map, "term").join(bad_qs, "q", "left_anti").select(
         "q", "payload", "weights", "n_docs"
     )
@@ -2798,7 +2788,7 @@ def _build_char_terms(spark: SparkSession, postings_path: str, out_dir: str) -> 
     term list exceeds CHAR_TERMS_CAP store only the count (the reader
     then uses the legacy scan); grams are <= a few chars so total rows
     are ~3x vocabulary."""
-    posts = spark.read.parquet(postings_path).select("term")
+    posts = _read_postings(spark, postings_path).select("term")
     chars = posts.select(
         "term",
         F.explode(
@@ -2840,6 +2830,6 @@ def _build_char_terms(spark: SparkSession, postings_path: str, out_dir: str) -> 
 def _build_variants(spark: SparkSession, postings_path: str, out_dir: str) -> None:
     """Gram-term symmetric-delete dictionary (D3 fuzzy expansion)."""
     _symmetric_delete_table(
-        spark.read.parquet(postings_path).select("term"),
+        _read_postings(spark, postings_path).select("term"),
         os.path.join(out_dir, "variants"),
     )

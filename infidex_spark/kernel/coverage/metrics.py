@@ -2,9 +2,10 @@
 
 - lcs_tolerant: Metrics/StringMetrics.cs:12-36 — containment else common
   prefix + tolerance (capped by the shorter string).
-- levenshtein: plain edit distance with an early-exit budget (the
-  reference's banded Calculate; words are <= 20 chars so an exact DP with
-  budget short-circuit is equivalent). This exact DP is also the oracle
+- levenshtein: plain edit distance with an early-exit budget, banded
+  like the reference's Calculate (only cells within budget of the
+  diagonal are computed, so a 500-char token costs O(500 * budget)).
+  This exact-below-budget DP is also the oracle
   for the vectorized Myers pass in batch.QueryTables, which tests compare
   against it table by table.
 - damerau_restricted: Metrics/LevenshteinDistance.cs:281-341 — NOT full
@@ -35,7 +36,12 @@ def lcs_tolerant(q: str, r: str, error_tolerance: int) -> int:
 
 
 def levenshtein(a: str, b: str, budget: int) -> int:
-    """Exact Levenshtein if <= budget, else any value > budget."""
+    """Exact Levenshtein if <= budget, else any value > budget.
+
+    Banded DP: only the cells with |i - j| <= budget are computed (an
+    alignment of cost <= budget never leaves that band), and cells just
+    outside it read as budget + 1. Cost O(len * budget), not
+    O(len(a) * len(b)), so long near-identical strings stay cheap."""
     la, lb = len(a), len(b)
     if abs(la - lb) > budget:
         return budget + 1
@@ -43,20 +49,33 @@ def levenshtein(a: str, b: str, budget: int) -> int:
         return lb
     if lb == 0:
         return la
-    prev = list(range(lb + 1))
+    big = budget + 1
+    # row 0 over its band [0, budget]. A column right of a row's band has
+    # never been written (the band moves right one column per row), so
+    # it still reads big in both buffers.
+    prev = list(range(min(lb, budget) + 1)) + [big] * (lb - min(lb, budget))
+    cur = [big] * (lb + 1)
     for i in range(1, la + 1):
-        cur = [i] + [0] * lb
-        row_min = i
+        lo = max(1, i - budget)
+        hi = min(lb, i + budget)
+        cur[lo - 1] = i if lo == 1 else big
+        row_min = cur[lo - 1]
         ca = a[i - 1]
-        for j in range(1, lb + 1):
-            cost = 0 if ca == b[j - 1] else 1
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-            if cur[j] < row_min:
-                row_min = cur[j]
+        for j in range(lo, hi + 1):
+            v = prev[j - 1] + (ca != b[j - 1])
+            x = prev[j] + 1
+            if x < v:
+                v = x
+            x = cur[j - 1] + 1
+            if x < v:
+                v = x
+            cur[j] = v
+            if v < row_min:
+                row_min = v
         if row_min > budget:
-            return budget + 1
-        prev = cur
-    return prev[lb]
+            return big
+        prev, cur = cur, prev
+    return min(prev[lb], big)
 
 
 def damerau_restricted(source: str, target: str, max_distance: int) -> int:

@@ -289,12 +289,17 @@ def embedding_near_dups(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    norm = lambda side: F.sqrt(
-        F.aggregate(
-            F.col(f"{side}.{vec_col}"),
-            F.lit(0.0),
-            lambda acc, v: acc + v.cast("double") * v.cast("double"),
-        )
+    # clamped at 1e-12 as _cosine_expr clamps: a zero vector scores 0
+    # instead of dividing by zero (an error under ANSI SQL)
+    norm = lambda side: F.greatest(
+        F.sqrt(
+            F.aggregate(
+                F.col(f"{side}.{vec_col}"),
+                F.lit(0.0),
+                lambda acc, v: acc + v.cast("double") * v.cast("double"),
+            )
+        ),
+        F.lit(1e-12),
     )
     return (
         pairs.select(

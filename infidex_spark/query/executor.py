@@ -594,7 +594,9 @@ class IndexReader:
 
     Opening checks the manifest's format_version: any value other than
     FORMAT_VERSION raises ValueError (rebuild with build_index), so the
-    reader carries no branches for layouts older versions wrote."""
+    reader carries no branches for layouts older versions wrote. The
+    bucket counts of wm_words, sq_words1 and pattern_scores are the ones
+    the manifest's layout declares."""
 
     DOC_CACHE_LIMIT = 50_000_000  # cache dl/doc_key arrays below this size
 
@@ -615,6 +617,12 @@ class IndexReader:
         self.stop_term_limit = int(self.manifest["stop_term_limit"])
         self.sizes = tuple(self.manifest["index_sizes"])
         self.start_pad = int(self.manifest["start_pad"])
+        # the bucket counts the build sized from its input
+        # (indexer.layout_buckets)
+        layout = self.manifest["layout"]
+        self._wm_buckets = int(layout["wm_words"])
+        self._sq1_buckets = int(layout["sq_words1"])
+        self._ps_buckets = int(layout["pattern_scores"])
         from infidex_spark.kernel.synonyms import SynonymMap
 
         self.synonym_map = SynonymMap.from_json(self.manifest.get("synonyms"))
@@ -638,7 +646,6 @@ class IndexReader:
         self.has_short_query_tables = (
             self._term_dict is not None and self._doc_meta is not None
         )
-        self._wm_buckets = 32  # matches _build_word_family
         self._wm_words = (
             ds.dataset(wm, partitioning="hive") if os.path.isdir(wm) else None
         )
@@ -664,12 +671,10 @@ class IndexReader:
         self._term_dict_files_left = self.TERM_DICT_MAX_FILES
         self._read_pool = None  # ThreadPoolExecutor for multi-file reads
         ps = os.path.join(index_dir, "pattern_scores")
-        self._ps_buckets = 16  # matches _build_pattern_scores
         self._pattern_scores = (
             ds.dataset(ps, partitioning="hive") if os.path.isdir(ps) else None
         )
         sq1 = os.path.join(index_dir, "sq_words1")
-        self._sq1_buckets = 4  # matches _build_word_family (sq_words1 write)
         self._sq_words1 = (
             ds.dataset(sq1, partitioning="hive") if os.path.isdir(sq1) else None
         )

@@ -55,6 +55,11 @@ def get_spark(
         # independent jobs — FIFO back-fill is right only when the later
         # job is the less urgent one).
         .config("spark.scheduler.mode", "FAIR")
+        # the two pools, declared with Spark's defaults (fairscheduler.xml)
+        .config(
+            "spark.scheduler.allocation.file",
+            os.path.join(os.path.dirname(os.path.abspath(__file__)), "fairscheduler.xml"),
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch size bounds pandas-UDF memory per task; 10k rows of
         # web text ~ tens of MB per batch.

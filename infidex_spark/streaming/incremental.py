@@ -8,17 +8,21 @@ TombstoneTracker.cs:11-55) and segment merging
 - ingest: Structured Streaming ``foreachBatch`` — each micro-batch
   becomes an immutable *delta segment* in the exact main-index format
   (built by the same build_index), with doc_ids continuing the global
-  dense id space;
+  dense id space. Ids are assigned on the JVM (with_dense_ids: a range
+  partition on doc_key, per-partition counts, driver-side offsets), and
+  the build sizes its word-table layout from the batch, so a small
+  batch costs a small build;
 - query: SegmentedReader unions main + delta segments (global df = sum,
   global avgdl from summed doc lengths — the reference likewise scores
   all segments against global corpus stats);
 - deletes: tombstone doc_keys parquet; excluded from results at query
   time, statistics unchanged until compaction (matches the reference's
   soft-delete semantics, Document.Deleted + RemoveDeletedDocuments);
-- compaction: merge_segments() re-unions token-level data from all
-  segments, drops tombstoned docs, and rebuilds one segment (the
-  reference's k-way SegmentMerger collapsed to a deterministic rebuild —
-  on Spark the rebuild IS a k-way sort-merge).
+- compaction: merge_segments() takes the live doc_keys of all segments
+  minus tombstones, re-assigns dense ids with the same with_dense_ids,
+  and rebuilds one segment (the reference's k-way SegmentMerger
+  collapsed to a deterministic rebuild — on Spark the rebuild IS a k-way
+  sort-merge).
 """
 
 from __future__ import annotations
@@ -58,6 +62,34 @@ def next_doc_id(index_dir: str) -> int:
     return total
 
 
+def with_dense_ids(docs: DataFrame, base: int) -> tuple[DataFrame, DataFrame]:
+    """docs (doc_key, text) with doc_id = base + rank(doc_key): dense,
+    0-based ranks in ascending doc_key order, assigned on the JVM.
+
+    A range partition on doc_key (sorted within each partition) is
+    cached; one job counts its rows per partition, the driver turns the
+    counts into id offsets, and each row's id is its partition's offset
+    plus its ordinal within the partition (monotonically_increasing_id
+    minus the partition's id base). No Python RDD and no join; the
+    partition count is the default parallelism, so build_index takes the
+    frame as it is. Returns (frame with doc_id, doc_key, text; the cached
+    frame, for the caller to unpersist once the build is done)."""
+    n_parts = docs.sparkSession.sparkContext.defaultParallelism
+    ranged = (
+        docs.select("doc_key", "text")
+        .repartitionByRange(n_parts, "doc_key")
+        .sortWithinPartitions("doc_key")
+        .persist()
+    )
+    pid = F.spark_partition_id()
+    counts = dict(ranged.groupBy(pid.alias("p")).count().collect())
+    sizes = [counts.get(p, 0) for p in range(n_parts)]
+    offsets = base + np.cumsum([0] + sizes[:-1])
+    offset = F.element_at(F.array(*[F.lit(int(o)) for o in offsets]), pid + 1)
+    ordinal = F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)
+    return ranged.select((offset + ordinal).alias("doc_id"), "doc_key", "text"), ranged
+
+
 def append_delta(
     spark: SparkSession,
     docs: DataFrame,
@@ -70,21 +102,13 @@ def append_delta(
     docs: (doc_key LONG, text STRING) — doc_ids are assigned here,
     continuing the global id space.
     """
-    base = next_doc_id(index_dir)
-    ordered = docs.select("doc_key", "text").orderBy("doc_key")
-    ids = (
-        ordered.select("doc_key")
-        .rdd.map(lambda r: r[0])
-        .zipWithIndex()
-        .toDF(["doc_key", "off"])
-    )
-    with_ids = (
-        ordered.join(ids, "doc_key")
-        .select((F.col("off") + F.lit(base)).alias("doc_id"), "doc_key", "text")
-    )
+    with_ids, cached = with_dense_ids(docs, next_doc_id(index_dir))
     out = os.path.join(index_dir, "deltas", f"delta_{batch_id:06d}")
     build_kwargs.setdefault("aux", True)
-    return build_index(spark, with_ids, out, **build_kwargs)
+    try:
+        return build_index(spark, with_ids, out, **build_kwargs)
+    finally:
+        cached.unpersist()
 
 
 def stream_ingest(
@@ -169,12 +193,10 @@ def merge_segments(
     if tomb:
         tomb_df = spark.createDataFrame([(int(t),) for t in tomb], "doc_key long")
         live_keys = live_keys.join(F.broadcast(tomb_df), "doc_key", "left_anti")
-    docs = docs_source.join(live_keys, "doc_key", "left_semi").orderBy("doc_key")
-    ids = (
-        docs.select("doc_key")
-        .rdd.map(lambda r: r[0])
-        .zipWithIndex()
-        .toDF(["doc_key", "doc_id"])
+    docs, cached = with_dense_ids(
+        docs_source.join(live_keys, "doc_key", "left_semi"), 0
     )
-    docs = docs.join(ids, "doc_key").select("doc_id", "doc_key", "text")
-    return build_index(spark, docs, out_dir, **build_kwargs)
+    try:
+        return build_index(spark, docs, out_dir, **build_kwargs)
+    finally:
+        cached.unpersist()

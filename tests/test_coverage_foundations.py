@@ -46,6 +46,63 @@ def test_damerau_restricted():
     assert damerau_restricted("a", "abcde", 2) == 3  # length gap
 
 
+def _full_levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_banded_levenshtein_matches_full_dp():
+    """The banded levenshtein keeps its contract against a plain full DP:
+    exact when the distance is <= budget, else any value > budget. Random
+    pairs over small alphabets (so distances spread around the budget),
+    edited copies of long strings, and empty strings."""
+    import random
+
+    from infidex_spark.kernel.coverage.metrics import levenshtein
+
+    rng = random.Random(20261018)
+
+    def rand_str(n: int, alpha: str) -> str:
+        return "".join(rng.choice(alpha) for _ in range(n))
+
+    def edited(s: str, n_edits: int, alpha: str) -> str:
+        t = list(s)
+        for _ in range(n_edits):
+            op = rng.randrange(3)
+            pos = rng.randrange(len(t) + 1)
+            if op == 0:
+                t.insert(pos, rng.choice(alpha))
+            elif t and op == 1:
+                del t[min(pos, len(t) - 1)]
+            elif t:
+                t[min(pos, len(t) - 1)] = rng.choice(alpha)
+        return "".join(t)
+
+    cases = []
+    for _ in range(3000):
+        alpha = rng.choice(["ab", "abc", "abcdefgh", "aáčř"])
+        a = rand_str(rng.randrange(0, 14), alpha)
+        b = rand_str(rng.randrange(0, 14), alpha) if rng.random() < 0.5 else edited(a, rng.randrange(0, 5), alpha)
+        cases.append((a, b))
+    for _ in range(60):
+        a = rand_str(rng.randrange(60, 300), "abcd")
+        cases.append((a, edited(a, rng.randrange(0, 6), "abcd")))
+    cases += [("", ""), ("", "abc"), ("abc", ""), ("a" * 500, "a" * 501)]
+    for a, b in cases:
+        full = _full_levenshtein(a, b)
+        for budget in range(0, 7):
+            got = levenshtein(a, b, budget)
+            if full <= budget:
+                assert got == full, (a, b, budget, got, full)
+            else:
+                assert got > budget, (a, b, budget, got, full)
+
+
 def test_tokenizer_positions_and_dedupe():
     toks, raw = tokenize_coverage("the quick the fox", 2)
     assert [t.text for t in toks] == ["the", "quick", "fox"]

@@ -102,13 +102,14 @@ def test_old_format_version_is_refused(incremental_index, tmp_path, stale):
     path = os.path.join(seg, "MANIFEST.json")
     with open(path) as f:
         manifest = json.load(f)
-    manifest["format_version"] = 1
-    with open(path, "w") as f:
-        json.dump(manifest, f)
-    with pytest.raises(ValueError, match="rebuild"):
-        IndexReader(seg)
-    with pytest.raises(ValueError, match="rebuild"):
-        MultiReader(out)
+    for version in (1, 2):  # 2: before the manifest declared its layout
+        manifest["format_version"] = version
+        with open(path, "w") as f:
+            json.dump(manifest, f)
+        with pytest.raises(ValueError, match="rebuild"):
+            IndexReader(seg)
+        with pytest.raises(ValueError, match="rebuild"):
+            MultiReader(out)
 
 
 def test_multireader_merge_preserves_lazy_decode(incremental_index):
@@ -246,3 +247,94 @@ def test_rerank_over_multireader(spark, tmp_path):
     rr2 = RerankExecutor(MultiReader(out))
     keys = [k for k, _, _ in rr2.search("batman", 5)]
     assert 6 not in keys
+
+
+def _doc_ids_by_key(seg: str) -> dict[int, int]:
+    import pandas as pd
+
+    stats = pd.read_parquet(os.path.join(seg, "doc_stats"))
+    return dict(zip(stats["doc_key"].tolist(), stats["doc_id"].tolist()))
+
+
+def test_dense_ids_follow_doc_key_rank(spark, tmp_path):
+    """append_delta and merge_segments assign doc_id = base + rank(doc_key)
+    on an input of several partitions whose doc_keys arrive shuffled and
+    non-contiguous."""
+    import random
+
+    out = str(tmp_path / "idx")
+    df1 = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(BATCH1)],
+        "doc_id long, doc_key long, text string",
+    )
+    build_index(spark, df1, out, n_buckets=4)
+    keys = random.Random(5).sample(range(100, 100_000), 23)
+    texts = [f"doc {k} holds word{k % 7} and text" for k in keys]
+    delta = spark.createDataFrame(
+        list(zip(keys, texts)), "doc_key long, text string"
+    ).repartition(3)
+    assert delta.rdd.getNumPartitions() == 3
+    append_delta(spark, delta, out, batch_id=1, n_buckets=4)
+    got = _doc_ids_by_key(os.path.join(out, "deltas", "delta_000001"))
+    assert got == {k: 5 + r for r, k in enumerate(sorted(keys))}
+    merged = str(tmp_path / "merged")
+    source = spark.createDataFrame(
+        BATCH1 + list(zip(keys, texts)), "doc_key long, text string"
+    ).repartition(3)
+    merge_segments(spark, out, merged, docs_source=source, n_buckets=4)
+    all_keys = sorted([k for k, _ in BATCH1] + keys)
+    assert _doc_ids_by_key(merged) == {k: r for r, k in enumerate(all_keys)}
+
+
+def test_delta_layout_is_declared_and_read(spark, tmp_path, monkeypatch):
+    """A delta's manifest declares the bucket counts its input sized, the
+    files have exactly those buckets, and the reader buckets probes by
+    them: a word in every wm_words and sq_words1 bucket of the delta is
+    found through MultiReader (wm_words by its bucket-filtered scan)."""
+    import json
+    import zlib
+
+    from infidex_spark.build import indexer
+    from infidex_spark.query import executor
+
+    out = str(tmp_path / "idx")
+    df1 = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(BATCH1)],
+        "doc_id long, doc_key long, text string",
+    )
+    build_index(spark, df1, out, n_buckets=4)
+    # 6 docs count as a third of a full-size input: 32/4/16 -> 16/2/8
+    monkeypatch.setattr(indexer, "LAYOUT_FULL_DOCS", 18)
+    letters = "bcdefghjkmnpqrvwxz"
+    docs = [
+        (200 + i, " ".join(f"{c}{c}w{i}" for c in letters) + " " + " ".join(letters[i::6]))
+        for i in range(6)
+    ]
+    append_delta(
+        spark, spark.createDataFrame(docs, "doc_key long, text string"),
+        out, batch_id=3, n_buckets=4,
+    )
+    seg = os.path.join(out, "deltas", "delta_000003")
+    with open(os.path.join(seg, "MANIFEST.json")) as f:
+        layout = json.load(f)["layout"]
+    assert layout == {"wm_words": 16, "sq_words1": 2, "pattern_scores": 8}
+    for table in ("wm_words", "sq_words1"):
+        on_disk = {d for d in os.listdir(os.path.join(seg, table)) if d.startswith("bucket=")}
+        assert on_disk == {f"bucket={b}" for b in range(layout[table])}, table
+
+    def bucket(w, n):
+        return zlib.crc32(w.encode("utf-8")) % n
+
+    wm = sorted({w for _, t in docs for w in t.split() if len(w) >= 2})
+    one = sorted(set(letters))
+    assert {bucket(w, 16) for w in wm} == set(range(16))
+    assert {bucket(w, 2) for w in one} == {0, 1}
+    # ids: the main segment holds 0..4, the delta 5..10 in doc_key order
+    want_wm = {w: [5 + i for i, (_, t) in enumerate(docs) if w in t.split()] for w in wm}
+    want_one = {c: [5 + i for i, (_, t) in enumerate(docs) if c in t.split()] for c in one}
+    monkeypatch.setattr(executor._KeyedPointReader, "MAX_FILES", 0)
+    mr = MultiReader(out)
+    got_wm = mr.wm_word_docs(wm)
+    assert {w: got_wm[w].tolist() for w in wm} == want_wm
+    got_one = mr.sq1_word_docs(one)
+    assert {c: got_one[c].tolist() for c in one} == want_one

@@ -216,3 +216,21 @@ def test_zero_vectors_score_zero_on_both_ivf_paths(spark):
     got = {r.vec_id: r.cosine for r in brute_force_topk(df, [1.0, 0.0], 10).collect()}
     assert sorted(got) == [0, 1, 2, 3]
     assert got[0] == 0.0 and got[1] == pytest.approx(1.0)
+
+
+def test_near_dups_zero_vectors_score_zero(spark):
+    """Two zero embeddings share an LSH bucket. Their cosine used to
+    divide by a zero norm (DIVIDE_BY_ZERO under ANSI SQL); both norms
+    are now clamped as _cosine_expr clamps them, so the pair scores 0 and
+    is kept only by a threshold of 0."""
+    from infidex_spark.pipeline.similarity import embedding_near_dups
+
+    rows = [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = {
+        (r.id_a, r.id_b): r.cosine
+        for r in embedding_near_dups(df, threshold=0.0, bits=2).collect()
+    }
+    assert got[(0, 1)] == 0.0
+    assert all(c == 0.0 for c in got.values())
+    assert embedding_near_dups(df, threshold=0.95, bits=2).collect() == []

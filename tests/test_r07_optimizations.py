@@ -357,14 +357,16 @@ def test_run_word_extraction_keeps_literal_pad_chars():
 
 
 def test_extract_factories_match_legacy_split():
-    """_word_pairs_extract / _prefix_pairs_extract == the former
-    regex-split implementations on delimiter-heavy and pad-bearing
-    texts (rows compared as sets / sorted frames)."""
+    """The one document pass's (word, doc ids) partials and prefix pairs
+    == the former regex-split implementations on delimiter-heavy and
+    pad-bearing texts (rows compared as sets / sorted frames)."""
     import pandas as pd
+    import pyarrow as pa
 
     from infidex_spark.build.indexer import (
-        _prefix_pairs_extract,
-        _word_pairs_extract,
+        KIND_PREFIX,
+        KIND_WORD,
+        _fused_tokenize_partials,
     )
     from infidex_spark.build.tokenizer import _DELIM_SPLIT
     from infidex_spark.kernel.normalize import normalize_series
@@ -376,7 +378,11 @@ def test_extract_factories_match_legacy_split():
         "dup dup dup words words", "a-b.c:d", "singleword",
     ]
     pdf = pd.DataFrame(
-        {"doc_id": np.arange(len(texts), dtype=np.int64) + 50, "text": texts}
+        {
+            "doc_id": np.arange(len(texts), dtype=np.int64) + 50,
+            "doc_key": np.arange(len(texts), dtype=np.int64) + 900,
+            "text": texts,
+        }
     )
     norm = normalize_series(pdf["text"].fillna("")).str.lower()
     words = norm.str.split(_DELIM_SPLIT, regex=True).explode()
@@ -388,18 +394,16 @@ def test_extract_factories_match_legacy_split():
             words.tolist(),
         )
     )
-    got = pd.concat(
-        list(_word_pairs_extract(None)(iter([pdf]))), ignore_index=True
-    )
-    assert set(zip(got["doc_id"].tolist(), got["word"].tolist())) == legacy_pairs
+    run = _fused_tokenize_partials((3,), 2, None, 255)
+    out = pa.Table.from_batches(
+        list(run(iter([pa.RecordBatch.from_pandas(pdf, preserve_index=False)])))
+    ).to_pandas()
+    got = out[out["kind"] == KIND_WORD].explode("doc_ids")
+    assert set(zip(got["doc_ids"].tolist(), got["word"].tolist())) == legacy_pairs
     assert len(got) == len(legacy_pairs)  # deduped exactly once
-    # prefix frames: per-(prefix, doc) aggregates must be internally
+    # prefix rows: per-(prefix, doc) aggregates must be internally
     # consistent with the word stream (spot-check counts for 1-char)
-    frames = list(_prefix_pairs_extract(None)(iter([pdf])))
-    one = pd.concat(
-        [f.assign(prefix=f["prefix"].astype(str)) for f in frames],
-        ignore_index=True,
-    )
+    one = out[out["kind"] == KIND_PREFIX]
     p1 = one[one["prefix"].str.len() == 1]
     from collections import Counter
 

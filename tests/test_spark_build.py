@@ -419,3 +419,33 @@ def test_carried_tf_direct_score_equals_wand(spark, tmp_path):
     np.testing.assert_allclose(
         [s for _, s in wand], [s for _, s in full], rtol=1e-5
     )
+
+
+def test_hot_prefixes_keep_counts_only(spark, reference_docs, tmp_path):
+    """With max_prefix_docs below the doc count, prefixes over the cap
+    (hot) keep only their count: no doc list and no prefix_postings rows.
+    Every other prefix row, and every other positional row, equals the
+    build in which no prefix can be hot."""
+    import pandas as pd
+
+    docs = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(reference_docs)],
+        "doc_id long, doc_key long, text string",
+    )
+    out_all, out_cap = str(tmp_path / "all"), str(tmp_path / "cap")
+    build_index(spark, docs, out_all, n_buckets=4, short_precompute=False)
+    build_index(spark, docs, out_cap, n_buckets=4, short_precompute=False, max_prefix_docs=3)
+
+    def prefixes(out):
+        df = pd.read_parquet(os.path.join(out, "prefixes"))
+        return {r.prefix: (r.n_docs, None if r.doc_ids is None else list(r.doc_ids)) for r in df.itertuples()}
+
+    def postings(out):
+        df = pd.read_parquet(os.path.join(out, "prefix_postings"))
+        return sorted(map(tuple, df.to_numpy().tolist()))
+
+    full, capped = prefixes(out_all), prefixes(out_cap)
+    hot = {p for p, (n, _) in full.items() if n > 3}
+    assert hot and set(full) - hot
+    assert capped == {p: (n, None if p in hot else ids) for p, (n, ids) in full.items()}
+    assert postings(out_cap) == [r for r in postings(out_all) if r[0] not in hot]
