@@ -1657,7 +1657,9 @@ def _symmetric_delete_table(terms: DataFrame, out_path: str) -> None:
     """Symmetric-delete (SymSpell d=1) dictionary over a `term` column:
     variant -> [terms]. A lookup probes the query string and each of its
     1-deletions; union of hits == all entries within plain Levenshtein
-    distance 1 (verified against brute force in tests)."""
+    distance 1 (verified against brute force in tests). Each terms list
+    is sorted, so the rows depend only on the input terms, not on the
+    order shuffle blocks arrive in."""
 
     def variants(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1677,7 +1679,7 @@ def _symmetric_delete_table(terms: DataFrame, out_path: str) -> None:
         ]
     )
     vdf = terms.mapInPandas(variants, schema=schema).distinct()
-    out = vdf.groupBy("variant").agg(F.collect_list("term").alias("terms"))
+    out = vdf.groupBy("variant").agg(F.array_sort(F.collect_list("term")).alias("terms"))
     out.sortWithinPartitions("variant").write.mode("overwrite").options(**POINT_READ_WRITE_OPTS).parquet(out_path)
 
 

@@ -1,13 +1,14 @@
 """Driver-side BM25 top-k over the parquet index.
 
 The index is a set of parquet tables written by build_index; per query we
-fetch only the handful of term rows the query needs (pyarrow dataset scan
-with bucket partition pruning + term predicate -> row-group min/max
-skipping, the columnar analogue of the reference's mmap'd segment random
-access), decode postings with the numpy codec, and run the same candidate
-selection + exact float32 BM25+ scoring as the kernel oracle. WAND-style
-block skipping (block_max_w metadata) is applied on the disjunctive path;
-it is lossless, so results are rank-identical with or without it.
+fetch only the handful of term rows the query needs (one keyed point
+reader: bucket routing plus a sorted in-RAM term column pins each term's
+exact parquet row group, the columnar analogue of the reference's FST
+term dictionary over mmap'd segments), decode postings with the numpy
+codec, and run the same candidate selection + exact float32 BM25+
+scoring as the kernel oracle. WAND-style block skipping (block_max_w
+metadata) is applied on the disjunctive path; it is lossless, so results
+are rank-identical with or without it.
 
 Scale: nothing here depends on corpus size except doc-length lookups,
 which switch from a cached array to per-candidate predicate-pushdown
@@ -18,8 +19,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import zlib
 import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
@@ -103,104 +106,167 @@ def _short_query_precedence_wtext(titles, wtexts, q: str) -> np.ndarray:
 
 
 class _KeyedPointReader:
-    """Exact point reads over a parquet table whose files are each sorted
-    by a string key column (hive-partitioned or flat).
+    """Point reads over an index table whose files are each sorted by a
+    string key column: the postings term dictionary, wm_words and
+    prefixes all resolve a probe through this one structure.
 
-    Loads every file's key column + row-group offsets once — an in-RAM
-    sorted dictionary, the columnar analogue of the reference's FST term
-    dictionary (Indexing/Fst/* in the reference points terms at postings
-    offsets; here the sorted key column points probes at exact parquet
-    row groups). fetch() then reads ONLY the row groups that actually
-    contain probed keys, through cached file handles — no false-positive
-    file reads (footer [min,max] stats cannot tell which of several
-    interleaved sorted files owns a key) and no O(table) filter scans
-    (pyarrow <=16 does not prune row groups on isin filters).
+    A bucketed table's files group by their hive bucket=N directory and
+    a probe routes to term_bucket(key, n_buckets); a flat table is one
+    group. A group's sorted key columns load lazily (or all at once by
+    load()): an in-RAM sorted dictionary, the columnar analogue of the
+    reference's FST term dictionary (term -> postings offset; here
+    searchsorted over the key column pins a probe's exact parquet row
+    groups). fetch() reads only those row groups, through cached file
+    handles: footer [min,max] stats cannot tell which of several
+    interleaved sorted files owns a key, and pyarrow <=16 does not prune
+    row groups on isin filters.
 
-    Falls back (load() -> None) when the key count or file count exceeds
-    the budget, a file is not key-sorted, or metadata is unreadable —
-    callers keep their filtered-scan path for those layouts."""
+    MAX_ROWS/MAX_FILES bound the key columns one reader holds. A group
+    past the budget (a huge vocabulary, a reader over many segments)
+    keeps its row groups' footer [min,max] intervals instead, and a row
+    group without stats is always read; both modes return the same rows.
+
+    FORMAT_VERSION fixes the layout, so a file that cannot be read, is
+    not sorted by the key, or sits outside a bucket=N directory of a
+    bucketed table means a corrupt index: ValueError naming the table
+    and the file."""
 
     MAX_ROWS = 4_000_000
     MAX_FILES = 512
 
-    def __init__(self, dataset, key_col: str):
+    def __init__(self, table: str, dataset, key_col: str, n_buckets: int = 0, pool=None):
+        self.table = table
         self._dataset = dataset
         self._key = key_col
-        self._files: list | None | bool = False  # False = not loaded yet
-
-    def load(self):
-        if self._files is not False:
-            return self._files
-        files: list = []
-        rows = 0
-        try:
-            frs = list(self._dataset.get_fragments())
-            if len(frs) > self.MAX_FILES:
-                frs = None
-            if frs is not None:
-                for fr in frs:
-                    pf = pq.ParquetFile(fr.path)
-                    md = pf.metadata
-                    counts = [
-                        md.row_group(i).num_rows
-                        for i in range(md.num_row_groups)
-                    ]
-                    rows += int(sum(counts))
-                    if rows > self.MAX_ROWS:
-                        files = None
-                        break
-                    karr = pf.read(columns=[self._key])[
-                        self._key
-                    ].to_numpy(zero_copy_only=False)
-                    if karr.size > 1 and not bool(
-                        np.all(karr[:-1] <= karr[1:])
-                    ):
-                        files = None
-                        break
-                    files.append((pf, karr, np.cumsum([0] + counts)))
-            else:
-                files = None
-        except Exception:
-            # the docstring's contract is "metadata unreadable -> fall
-            # back to the filtered scan": pyarrow raises ArrowInvalid
-            # (NOT an OSError subclass) for corrupt/truncated footers,
-            # and non-file fragments have no .path — catching only
-            # OSError made a lazy query-time load fail the query instead
-            # of degrading (ADVICE r6)
-            files = None
-        self._files = files
-        return files
+        self._n_buckets = n_buckets  # 0 = one group
+        self._pool = pool  # () -> executor for reads over > 3 files
+        self.close()
 
     def close(self) -> None:
         """Drop cached ParquetFile handles and key columns (handles close
-        on GC); the reader reloads lazily if used again."""
-        self._files = False
+        on GC) and restore the budget; the reader reloads lazily if used
+        again."""
+        self._files: dict[int, list[str]] | None = None
+        # group -> [(path, ParquetFile, sorted keys, row-group start
+        # offsets) | (path, ParquetFile, None, (mins, maxs, no_stats))]
+        self._groups: dict[int, list[tuple]] = {}
+        self._rows_left = self.MAX_ROWS
+        self._files_left = self.MAX_FILES
 
-    def fetch(self, keys, cols: list[str]):
+    def _corrupt(self, path: str, why) -> ValueError:
+        return ValueError(f"index table {self.table!r} is corrupt: {path}: {why}")
+
+    def _group_files(self) -> dict[int, list[str]]:
+        if self._files is None:
+            files: dict[int, list[str]] = {}
+            for path in self._dataset.files:
+                g = 0
+                if self._n_buckets:
+                    m = re.fullmatch(r"bucket=(\d+)", os.path.basename(os.path.dirname(path)))
+                    if m is None:
+                        raise self._corrupt(path, "not in a bucket=N directory")
+                    g = int(m.group(1))
+                files.setdefault(g, []).append(path)
+            self._files = files
+        return self._files
+
+    def _group(self, g: int) -> list[tuple]:
+        got = self._groups.get(g)
+        if got is not None:
+            return got
+        paths = self._group_files().get(g, [])
+        pfs = []
+        for path in paths:
+            try:
+                pfs.append(pq.ParquetFile(path))
+            except (OSError, pa.ArrowException) as exc:
+                raise self._corrupt(path, exc) from exc
+        rows = sum(pf.metadata.num_rows for pf in pfs)
+        exact = rows <= self._rows_left and len(pfs) <= self._files_left
+        if exact:
+            self._rows_left -= rows
+            self._files_left -= len(pfs)
+        got = [self._entry(path, pf, exact) for path, pf in zip(paths, pfs)]
+        self._groups[g] = got
+        return got
+
+    def _entry(self, path: str, pf, exact: bool) -> tuple:
+        md = pf.metadata
+        if exact:
+            try:
+                keys = pf.read(columns=[self._key])[self._key]
+            except (OSError, pa.ArrowException, KeyError) as exc:
+                raise self._corrupt(path, exc) from exc
+            keys = keys.to_numpy(zero_copy_only=False)
+            if keys.size > 1 and not bool(np.all(keys[:-1] <= keys[1:])):
+                raise self._corrupt(path, f"not sorted by {self._key!r}")
+            goff = np.cumsum([0] + [md.row_group(i).num_rows for i in range(md.num_row_groups)])
+            return path, pf, keys, goff
+        col = [md.schema.column(i).path for i in range(md.num_columns)]
+        if self._key not in col:
+            raise self._corrupt(path, f"no {self._key!r} column")
+        j = col.index(self._key)
+        n = md.num_row_groups
+        mins = np.full(n, "", dtype=object)
+        maxs = np.full(n, "", dtype=object)
+        no_stats = np.zeros(n, dtype=bool)
+        for i in range(n):
+            st = md.row_group(i).column(j).statistics
+            if st is None or not st.has_min_max:
+                no_stats[i] = True
+            else:
+                mins[i], maxs[i] = st.min, st.max
+        return path, pf, None, (mins, maxs, no_stats)
+
+    def load(self) -> None:
+        """Load every group's dictionary now (store-open work)."""
+        for g in self._group_files():
+            self._group(g)
+
+    def _locate(self, keys) -> list[tuple]:
+        """(path, ParquetFile, [row group ids]) for every file holding a
+        probed key; same-row-group neighbours ride along."""
+        by_group: dict[int, list[str]] = {}
+        for k in set(keys):
+            g = term_bucket(k, self._n_buckets) if self._n_buckets else 0
+            by_group.setdefault(g, []).append(k)
+        reads = []
+        for g, ks in by_group.items():
+            probe = np.array(sorted(ks), dtype=object)
+            for path, pf, karr, bounds in self._group(g):
+                if karr is not None:
+                    lo = np.searchsorted(karr, probe, side="left")
+                    hi = np.searchsorted(karr, probe, side="right")
+                    hit = hi > lo  # key present; groups covering [lo, hi)
+                    g0 = np.searchsorted(bounds, lo[hit], side="right") - 1
+                    g1 = np.searchsorted(bounds, hi[hit] - 1, side="right") - 1
+                    gis = sorted({i for a, b in zip(g0.tolist(), g1.tolist()) for i in range(a, b + 1)})
+                else:
+                    mins, maxs, no_stats = bounds
+                    # a group holds a probe iff some probe is in [min, max]
+                    inside = np.searchsorted(probe, maxs, side="right") > np.searchsorted(probe, mins, side="left")
+                    gis = np.flatnonzero(inside | no_stats).tolist()
+                if gis:
+                    reads.append((path, pf, gis))
+        return reads
+
+    def fetch(self, keys, cols: list[str]) -> list:
         """Arrow tables that together hold every row whose key is probed
-        (same-row-group neighbours ride along — callers filter); None
-        when exact reads are unavailable for this layout."""
-        files = self.load()
-        if files is None:
-            return None
-        probe = np.array(sorted(set(keys)), dtype=object)
-        out = []
-        for pf, karr, goff in files:
-            if karr.size == 0:
-                continue
-            lo = np.searchsorted(karr, probe, side="left")
-            hi = np.searchsorted(karr, probe, side="right")
-            gis: set[int] = set()
-            for l_, h_ in zip(lo, hi):
-                if h_ > l_:  # key present; groups covering [l_, h_)
-                    g0 = int(np.searchsorted(goff, l_, side="right")) - 1
-                    g1 = int(np.searchsorted(goff, h_ - 1, side="right")) - 1
-                    gis.update(range(g0, g1 + 1))
-            if gis:
-                out.append(
-                    pf.read_row_groups(sorted(gis), columns=cols)
-                )
-        return out
+        (same-row-group neighbours ride along — callers filter)."""
+        def read(r):
+            path, pf, gis = r
+            try:
+                return pf.read_row_groups(gis, columns=cols)
+            except (OSError, pa.ArrowException) as exc:
+                raise self._corrupt(path, exc) from exc
+
+        reads = self._locate(keys)
+        if len(reads) > 3 and self._pool is not None:
+            # pyarrow releases the GIL per read: overlapping the per-file
+            # group reads hides the ~0.8 ms fixed cost per file (a cold
+            # multi-gram probe touches ~16 files)
+            return list(self._pool().map(read, reads))
+        return [read(r) for r in reads]
 
 
 # Dense scatter-add accumulator budget for short-query aggregation: the
@@ -591,6 +657,9 @@ class IndexReader:
       wm_word_docs, sq1_word_docs, sorted_terms, word_df_map,
       words_with_prefix, words_with_suffix and word_variant_words return
       None and the caller takes its fallback path.
+    - A present but unreadable table is a corrupt index, never a
+      fallback: the open, prewarm_postings_meta or the first lookup
+      that reads the table raises, naming the table (and its file).
 
     Opening checks the manifest's format_version: any value other than
     FORMAT_VERSION raises ValueError (rebuild with build_index), so the
@@ -626,8 +695,13 @@ class IndexReader:
         from infidex_spark.kernel.synonyms import SynonymMap
 
         self.synonym_map = SynonymMap.from_json(self.manifest.get("synonyms"))
-        self._postings = ds.dataset(
-            os.path.join(index_dir, "postings"), partitioning="hive"
+        self._read_pool = None  # ThreadPoolExecutor for multi-file reads
+        self._postings_point = _KeyedPointReader(
+            "postings",
+            ds.dataset(os.path.join(index_dir, "postings"), partitioning="hive"),
+            "term",
+            self.n_buckets,
+            self._pool,
         )
         # aux structures are optional (build_index(aux=False))
         pfx = os.path.join(index_dir, "prefixes")
@@ -646,30 +720,24 @@ class IndexReader:
         self.has_short_query_tables = (
             self._term_dict is not None and self._doc_meta is not None
         )
-        self._wm_words = (
-            ds.dataset(wm, partitioning="hive") if os.path.isdir(wm) else None
-        )
         self._wm_point = (
-            _KeyedPointReader(self._wm_words, "word")
-            if self._wm_words is not None
+            _KeyedPointReader(
+                "wm_words",
+                ds.dataset(wm, partitioning="hive"),
+                "word",
+                self._wm_buckets,
+                self._pool,
+            )
+            if os.path.isdir(wm)
             else None
         )
         self._prefix_point = (
-            _KeyedPointReader(self._prefixes, "prefix")
+            _KeyedPointReader("prefixes", self._prefixes, "prefix", pool=self._pool)
             if self._prefixes is not None
             else None
         )
         self._prefix_fetch_cache: dict[str, tuple] = {}
         self._variant_cache: dict[str, list[str]] = {}
-        # postings term dictionaries, filled lazily or by prewarm:
-        # bucket -> fragment list (False = not listed yet, None = not a
-        # bucket=N layout), per-bucket footer stats and exact term columns
-        self._pfrag_idx: dict | None | bool = False
-        self._pb_meta: dict[int, list | None] = {}
-        self._pb_terms: dict[int, list | None] = {}
-        self._term_dict_rows_left = self.TERM_DICT_MAX_ROWS
-        self._term_dict_files_left = self.TERM_DICT_MAX_FILES
-        self._read_pool = None  # ThreadPoolExecutor for multi-file reads
         ps = os.path.join(index_dir, "pattern_scores")
         self._pattern_scores = (
             ds.dataset(ps, partitioning="hive") if os.path.isdir(ps) else None
@@ -692,14 +760,11 @@ class IndexReader:
         # prefix whose doc list actually qualifies
         self._prefix_counts: dict[str, int] | None = None
         if self._prefixes is not None:
-            try:
-                tbl = self._prefixes.to_table(columns=["prefix", "n_docs"])
-                if tbl.num_rows <= 5_000_000:
-                    self._prefix_counts = dict(
-                        zip(tbl["prefix"].to_pylist(), tbl["n_docs"].to_pylist())
-                    )
-            except Exception:
-                self._prefix_counts = None
+            tbl = self._prefixes.to_table(columns=["prefix", "n_docs"])
+            if tbl.num_rows <= 5_000_000:
+                self._prefix_counts = dict(
+                    zip(tbl["prefix"].to_pylist(), tbl["n_docs"].to_pylist())
+                )
         self._doc_stats = ds.dataset(os.path.join(index_dir, "doc_stats"))
         # stop terms: df was driven past the limit; they must neither score
         # nor fuzzy-expand (reference keeps them as df=-1 tombstones)
@@ -755,7 +820,7 @@ class IndexReader:
         cols = ["term", "df", "n_docs", "payload", "weights",
                 "block_last_doc", "block_max_w", "block_offsets"]
         miss_set = set(missing)
-        for tbl in self._read_term_rows(missing, cols):
+        for tbl in self._postings_point.fetch(missing, cols):
             if tbl.num_rows == 0:
                 continue
             tcol = tbl["term"].to_pylist()
@@ -800,31 +865,28 @@ class IndexReader:
         return out
 
     def prewarm_postings_meta(self) -> None:
-        """Load the postings term dictionary for every bucket up front:
-        the exact per-file term column where the budget allows (plus the
-        parquet footer stats as fallback metadata). This is store-open
-        work — the reference likewise loads its FST term dictionary at
-        index open, not on the first query — and it moves the one-time
-        footer/dictionary reads off the first search's critical path."""
-        try:
-            for b in range(self.n_buckets):
-                if self._postings_bucket_terms(b) is None:
-                    self._postings_bucket_meta(b)
-            for pr in (self._wm_point, self._prefix_point):
-                if pr is not None:
-                    pr.load()
-            # pre-spawn the read pool's threads: lazy creation would land
-            # ~10 ms of thread.start() on the first cold query
-            list(self._pool().map(int, range(16)))
-            # open the remaining lazy one-time stores here too — mmap'd
-            # doc/pattern stores and the short-query meta columns are
-            # store-open costs (the reference mmaps its segments at index
-            # open), not part of any query's latency
-            self._open_doc_store()
-            self._open_ps_store()
-            self.sq_meta()
-        except Exception:
-            pass  # point reads fall back to filtered dataset scans
+        """Load the term dictionaries of postings, wm_words and prefixes
+        for every bucket up front (sorted key columns within the point
+        readers' budget, footer intervals past it), spawn the read pool
+        and open the mmap'd stores and short-query meta. This is
+        store-open work — the reference likewise loads its FST term
+        dictionary at index open, not on the first query — and it moves
+        the one-time footer/dictionary reads off the first search's
+        critical path. A present but unreadable table raises here,
+        naming the table."""
+        for pr in (self._postings_point, self._wm_point, self._prefix_point):
+            if pr is not None:
+                pr.load()
+        # pre-spawn the read pool's threads: lazy creation would land
+        # ~10 ms of thread.start() on the first cold query
+        list(self._pool().map(int, range(16)))
+        # open the remaining lazy one-time stores here too — mmap'd
+        # doc/pattern stores and the short-query meta columns are
+        # store-open costs (the reference mmaps its segments at index
+        # open), not part of any query's latency
+        self._open_doc_store()
+        self._open_ps_store()
+        self.sq_meta()
 
     def close(self) -> None:
         """Release prewarm resources: the read pool's threads and every
@@ -835,11 +897,7 @@ class IndexReader:
         if self._read_pool is not None:
             self._read_pool.shutdown(wait=False)
             self._read_pool = None
-        self._pb_terms.clear()
-        self._pb_meta.clear()
-        self._term_dict_rows_left = self.TERM_DICT_MAX_ROWS
-        self._term_dict_files_left = self.TERM_DICT_MAX_FILES
-        for pr in (self._wm_point, self._prefix_point):
+        for pr in (self._postings_point, self._wm_point, self._prefix_point):
             if pr is not None:
                 pr.close()
 
@@ -851,220 +909,6 @@ class IndexReader:
 
             self._read_pool = ThreadPoolExecutor(max_workers=8)
         return self._read_pool
-
-    def _postings_frag_index(self):
-        """bucket id -> [parquet fragment, ...] for the postings dataset,
-        listed once per reader; None when the layout is not the expected
-        hive bucket=N partitioning (callers fall back to a dataset scan)."""
-        idx = self._pfrag_idx
-        if idx is not False:
-            return idx
-        import re as _re
-
-        idx = {}
-        try:
-            for fr in self._postings.get_fragments():
-                m = _re.search(r"bucket=(\d+)", fr.path)
-                if m is None:
-                    idx = None
-                    break
-                idx.setdefault(int(m.group(1)), []).append(fr)
-        except Exception:
-            # fallback contract: unreadable metadata degrades to the
-            # filtered-scan path (pyarrow raises ArrowInvalid, not
-            # OSError, for corrupt footers; ADVICE r6)
-            idx = None
-        self._pfrag_idx = idx
-        return idx
-
-    def _postings_bucket_meta(self, b: int):
-        """Parquet-stats term dictionary for one postings bucket: a list
-        of (fragment, group term mins, group term maxs) built once per
-        reader. The build writes each bucket's rows term-sorted in small
-        row groups, so the per-group [min, max] intervals are narrow and
-        a point probe touches one or two groups — the columnar analogue
-        of the reference's FST term dictionary (term -> posting offsets);
-        here the parquet footer stats ARE the dictionary. Parquet
-        min/max truncation only ever widens the interval. Returns None
-        when stats are unavailable — callers fall back to a filtered
-        dataset scan."""
-        cache = self._pb_meta
-        entry = cache.get(b, False)
-        if entry is not False:
-            return entry
-        fridx = self._postings_frag_index()
-        entry = [] if fridx is not None else None
-        if fridx is not None:
-            for fr in fridx.get(b, []):
-                try:
-                    fr.ensure_complete_metadata()
-                except Exception:
-                    # ArrowInvalid etc. degrade to scan (ADVICE r6)
-                    entry = None
-                    break
-                mins: list[str] = []
-                maxs: list[str] = []
-                for rg in fr.row_groups:
-                    st = (rg.statistics or {}).get("term")
-                    if (
-                        not st
-                        or st.get("min") is None
-                        or st.get("max") is None
-                    ):
-                        entry = None
-                        break
-                    mins.append(st["min"])
-                    maxs.append(st["max"])
-                if entry is None:
-                    break
-                entry.append((fr, mins, maxs))
-        cache[b] = entry
-        return entry
-
-    # exact-term-dictionary budgets: the shingle vocabulary is bounded in
-    # practice (sizes=[3] saturates at ~10^6 grams regardless of corpus
-    # size), so the full term column fits comfortably in driver RAM; the
-    # caps below are a backstop for pathological vocabularies / readers
-    # over hundreds of segments (they fall back to footer-stats pruning)
-    TERM_DICT_MAX_ROWS = 4_000_000
-    TERM_DICT_MAX_FILES = 512
-
-    def _postings_bucket_terms(self, b: int):
-        """EXACT in-RAM term dictionary for one postings bucket: per
-        file, (open ParquetFile, sorted term column, row-group start
-        offsets). The build's postings Exchange sub-splits each bucket by
-        xxhash64(term)%4, so a bucket dir holds ~4 term-sorted files with
-        interleaved term ranges: footer [min,max] stats alone cannot tell
-        which file owns a probed term and 3/4 of stats-selected reads are
-        false positives. The term column pins the exact (file, row group)
-        per term — this is the reference's FST term dictionary (term ->
-        postings offset), realised as a sorted column + searchsorted.
-        Returns None (stats/scan fallback) when the vocabulary or file
-        count exceeds the budget, a file's rows are not term-sorted, or
-        metadata is unreadable."""
-        cache = self._pb_terms
-        entry = cache.get(b, False)
-        if entry is not False:
-            return entry
-        fridx = self._postings_frag_index()
-        entry = [] if fridx is not None else None
-        if fridx is not None:
-            for fr in fridx.get(b, []):
-                try:
-                    pf = pq.ParquetFile(fr.path)
-                    md = pf.metadata
-                    counts = [
-                        md.row_group(i).num_rows
-                        for i in range(md.num_row_groups)
-                    ]
-                    total = int(sum(counts))
-                    if (
-                        total > self._term_dict_rows_left
-                        or self._term_dict_files_left <= 0
-                    ):
-                        entry = None
-                        break
-                    tarr = pf.read(columns=["term"])["term"].to_numpy(
-                        zero_copy_only=False
-                    )
-                    if tarr.size > 1 and not bool(
-                        np.all(tarr[:-1] <= tarr[1:])
-                    ):
-                        entry = None
-                        break
-                    self._term_dict_rows_left -= total
-                    self._term_dict_files_left -= 1
-                    goff = np.cumsum([0] + counts)
-                    entry.append((pf, tarr, goff))
-                except Exception:
-                    # ArrowInvalid etc. degrade to stats/scan (ADVICE r6)
-                    entry = None
-                    break
-        cache[b] = entry
-        return entry
-
-    def _read_term_rows(self, missing: list[str], cols: list[str]):
-        """Arrow tables that together contain every postings row for
-        `missing` (plus same-row-group neighbours): group the probes by
-        bucket, pin each term's exact (file, row group) via the in-RAM
-        term dictionary, and read those groups through the cached file
-        handles. Buckets without a term dictionary use footer-stats
-        interval pruning in one FileSystemDataset scan; buckets without
-        usable stats fall back to one filtered dataset scan."""
-        by_bucket: dict[int, list[str]] = {}
-        for t in missing:
-            by_bucket.setdefault(term_bucket(t, self.n_buckets), []).append(t)
-        direct: list[tuple] = []  # (ParquetFile, [row group ids])
-        to_scan = []
-        fallback: list[str] = []
-        for b, tms in by_bucket.items():
-            tinfo = self._postings_bucket_terms(b)
-            if tinfo is not None:
-                probe = np.array(sorted(tms), dtype=object)
-                for pf, tarr, goff in tinfo:
-                    if tarr.size == 0:
-                        continue
-                    pos = np.searchsorted(tarr, probe)
-                    ok = pos < tarr.size
-                    if not ok.any():
-                        continue
-                    hit = np.zeros(probe.size, dtype=bool)
-                    hit[ok] = tarr[pos[ok]] == probe[ok]
-                    rows = pos[hit]
-                    if rows.size == 0:
-                        continue
-                    gis = np.unique(
-                        np.searchsorted(goff, rows, side="right") - 1
-                    )
-                    direct.append((pf, [int(g) for g in gis]))
-                continue
-            meta = self._postings_bucket_meta(b)
-            if meta is None:
-                fallback.extend(tms)
-                continue
-            for fr, mins, maxs in meta:
-                gis = sorted(
-                    {
-                        gi
-                        for t in tms
-                        for gi in range(len(mins))
-                        if mins[gi] <= t <= maxs[gi]
-                    }
-                )
-                if gis:
-                    to_scan.append(fr.subset(row_group_ids=gis))
-        tbls = []
-        file_cols = [c for c in cols if c != "bucket"]
-        if len(direct) > 3:
-            # pyarrow releases the GIL per read: overlapping the per-file
-            # group reads hides the ~0.8 ms fixed cost per file (a cold
-            # multi-gram probe touches ~16 files)
-            tbls.extend(
-                self._pool().map(
-                    lambda d: d[0].read_row_groups(d[1], columns=file_cols),
-                    direct,
-                )
-            )
-        else:
-            for pf, gis in direct:
-                tbls.append(pf.read_row_groups(gis, columns=file_cols))
-        if to_scan:
-            fsd = ds.FileSystemDataset(
-                to_scan,
-                schema=self._postings.schema,
-                format=self._postings.format,
-                filesystem=self._postings.filesystem,
-            )
-            tbls.append(fsd.to_table(columns=cols))
-        if fallback:
-            buckets = sorted(
-                {term_bucket(t, self.n_buckets) for t in fallback}
-            )
-            flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(
-                fallback
-            )
-            tbls.append(self._postings.to_table(columns=cols, filter=flt))
-        return tbls
 
     def prefix_count(self, prefix: str) -> int:
         if self._prefix_counts is not None:
@@ -1081,20 +925,16 @@ class IndexReader:
         got = cache.get(prefix)
         if got is not None:
             return got
-        tbls = self._prefix_point.fetch([prefix], ["prefix", "n_docs", "doc_ids"])
-        if tbls is None:
-            tbl = self._prefixes.to_table(
-                filter=ds.field("prefix") == prefix
-            )
-        else:
-            import pyarrow as pa
-
-            tbls = [t for t in tbls if t.num_rows]
-            tbl = (
-                pa.concat_tables(tbls).filter(pc.field("prefix") == prefix)
-                if tbls
-                else None
-            )
+        tbls = [
+            t
+            for t in self._prefix_point.fetch([prefix], ["prefix", "n_docs", "doc_ids"])
+            if t.num_rows
+        ]
+        tbl = (
+            pa.concat_tables(tbls).filter(pc.field("prefix") == prefix)
+            if tbls
+            else None
+        )
         if tbl is None or tbl.num_rows == 0:
             out = (0, None)
         else:
@@ -1334,27 +1174,15 @@ class IndexReader:
     def wm_word_docs(self, words: list[str]) -> dict[str, np.ndarray] | None:
         """WordMatcher word-level postings (B9): word -> sorted internal
         doc ids, independent of gram stop demotion; None when the
-        wm_words table is absent. Exact point fetch on the word-sorted
-        table via the in-RAM key dictionary, with a filtered dataset
-        scan as the layout fallback."""
-        if self._wm_words is None:
+        wm_words table is absent. Point fetch on the word-sorted table
+        through its keyed point reader."""
+        if self._wm_point is None:
             return None
         if not words:
             return {}
-        tbls = self._wm_point.fetch(words, ["word", "doc_ids"])
-        if tbls is None:
-            buckets = sorted(
-                {term_bucket(w, self._wm_buckets) for w in words}
-            )
-            tbl = self._wm_words.to_table(
-                columns=["word", "doc_ids"],
-                filter=ds.field("bucket").isin(buckets)
-                & ds.field("word").isin(words),
-            )
-            return _list_rows_to_numpy(tbl, "word", "doc_ids")
         wset = set(words)
         out: dict[str, np.ndarray] = {}
-        for tbl in tbls:
+        for tbl in self._wm_point.fetch(words, ["word", "doc_ids"]):
             for k, v in _list_rows_to_numpy(tbl, "word", "doc_ids").items():
                 if k in wset:
                     out[k] = v
@@ -1438,35 +1266,30 @@ class IndexReader:
         if self._sq_topk_map is None:
             m: dict[str, list] = {}
             comp: set[str] = set()
-            import pyarrow.parquet as pq
-
             for sub, has_complete in (("sq_topk", False), ("sq_fuzzy", True)):
                 path = os.path.join(self.index_dir, sub)
                 if not os.path.isdir(path):
                     continue
-                try:
-                    cols = ["q", "doc_keys", "finals"]
-                    if has_complete:
-                        cols.append("complete")
-                    tbl = pq.read_table(path, columns=cols)
-                    keys_np = _list_rows_to_numpy(tbl, "q", "doc_keys")
-                    fin_np = _list_rows_to_numpy(tbl, "q", "finals")
-                    comp_map = (
-                        dict(zip(tbl["q"].to_pylist(), tbl["complete"].to_pylist()))
-                        if has_complete
-                        else {}
-                    )
-                    for qq, k in keys_np.items():
-                        if qq in m:  # exact champions win on overlap
-                            continue
-                        # store the numpy pair; materialize the python
-                        # list lazily on first hit (eager zip over every
-                        # row cost ~60 ms per fresh reader at 20k docs)
-                        m[qq] = (k, fin_np[qq])
-                        if comp_map.get(qq):
-                            comp.add(qq)
-                except Exception:
-                    pass
+                cols = ["q", "doc_keys", "finals"]
+                if has_complete:
+                    cols.append("complete")
+                tbl = pq.read_table(path, columns=cols)
+                keys_np = _list_rows_to_numpy(tbl, "q", "doc_keys")
+                fin_np = _list_rows_to_numpy(tbl, "q", "finals")
+                comp_map = (
+                    dict(zip(tbl["q"].to_pylist(), tbl["complete"].to_pylist()))
+                    if has_complete
+                    else {}
+                )
+                for qq, k in keys_np.items():
+                    if qq in m:  # exact champions win on overlap
+                        continue
+                    # store the numpy pair; materialize the python list
+                    # lazily on first hit (eager zip over every row cost
+                    # ~60 ms per fresh reader at 20k docs)
+                    m[qq] = (k, fin_np[qq])
+                    if comp_map.get(qq):
+                        comp.add(qq)
             self._sq_topk_map = m
             self._sq_complete = comp
         hit = self._sq_topk_map.get(q)

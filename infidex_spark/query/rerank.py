@@ -110,8 +110,8 @@ class RerankExecutor:
         # unique word
         self.batch = BatchCoverage(self.setup)
         self.stage1 = QueryExecutor(reader)
-        # store-open prewarm: postings footer metadata (the parquet-stats
-        # term dictionary) loads here, not on the first query
+        # store-open prewarm: the point readers' term dictionaries load
+        # here, not on the first query
         reader.prewarm_postings_meta()
         self.word_vocab_degraded = False
         self._words = reader.word_df_map(word_vocab_cap)

@@ -1,15 +1,18 @@
-"""Postings point-read path: the parquet-stats term dictionary.
+"""Postings point-read path: the keyed point reader's term dictionary.
 
-fetch_terms selects row groups by their term min/max footer stats (the
-columnar analogue of the reference's FST term dictionary pointing into
-the postings region) and reads them in one FileSystemDataset scan. These
-tests pin its contract: parity with a plain filtered dataset scan,
-negative caching, the no-stats fallback, and that freshly built bucket
-files really are term-sorted (partitionBy would silently destroy the
-sort if the sort keys did not lead with the partition column — see
-build/indexer.py)."""
+fetch_terms routes each term to its bucket and pins its exact (file, row
+group) with the bucket's sorted in-RAM term column (the columnar
+analogue of the reference's FST term dictionary pointing into the
+postings region); past the reader's budget a bucket keeps its row
+groups' footer [min, max] intervals instead. These tests pin its
+contract: parity with a plain filtered dataset scan, negative caching,
+the same answers from wm_word_docs/fetch_prefix/fetch_terms in both
+modes, and that freshly built bucket files really are term-sorted
+(partitionBy would silently destroy the sort if the sort keys did not
+lead with the partition column — see build/indexer.py)."""
 
 import glob
+import os
 
 import numpy as np
 import pyarrow.dataset as ds
@@ -31,14 +34,15 @@ def built(spark, tmp_path_factory):
 
 
 def _scan_reference(r, terms):
-    """The pre-stats-dictionary read: one filtered dataset scan."""
+    """The same rows from one filtered dataset scan."""
     from infidex_spark.query.executor import term_bucket
 
     buckets = sorted({term_bucket(t, r.n_buckets) for t in terms})
     cols = ["term", "df", "n_docs", "payload", "weights",
             "block_last_doc", "block_max_w", "block_offsets"]
     flt = ds.field("bucket").isin(buckets) & ds.field("term").isin(terms)
-    tbl = r._postings.to_table(columns=cols, filter=flt)
+    postings = ds.dataset(os.path.join(r.index_dir, "postings"), partitioning="hive")
+    tbl = postings.to_table(columns=cols, filter=flt)
     out = {}
     for i in range(tbl.num_rows):
         out[tbl["term"][i].as_py()] = (
@@ -106,15 +110,36 @@ def test_fetch_negative_cache_and_partial_hits(built):
     assert set(r.fetch_terms(["zzz", "fox"])) == {"fox"}
 
 
-def test_fetch_fallback_when_stats_unavailable(built):
-    from infidex_spark.query.executor import IndexReader
+def test_stats_mode_parity(built, monkeypatch):
+    """A zero budget keeps footer [min, max] intervals for every bucket
+    (the huge-vocabulary mode): fetch_terms, wm_word_docs and
+    fetch_prefix answer exactly as with the sorted term columns."""
+    from infidex_spark.query.executor import IndexReader, _KeyedPointReader
 
-    r = IndexReader(built)
-    terms = ["qui", "fox", "bat", "zzz"]
-    want = _materialize(
-        {t: tp for t, tp in IndexReader(built).fetch_terms(terms).items()}
-    )
-    r._pfrag_idx = None  # simulate an unrecognized layout: no stats dict
-    got = _materialize(r.fetch_terms(terms))
-    assert got == want
-    assert "zzz" not in got
+    terms = ["qui", "fox", "bat", "the", "gol", "zzz"]
+    words = ["quick", "fox", "batman", "the", "city", "zzzz"]
+    prefixes = ["q", "qu", "fo", "bat", "zz"]
+
+    def answers():
+        r = IndexReader(built)
+        r.prewarm_postings_meta()
+        wm = r.wm_word_docs(words)
+        pfx = {p: r.fetch_prefix(p) for p in prefixes}
+        return (
+            r,
+            _materialize(r.fetch_terms(terms)),
+            {w: ids.tolist() for w, ids in wm.items()},
+            {p: (n, None if ids is None else ids.tolist()) for p, (n, ids) in pfx.items()},
+        )
+
+    exact_r, *exact = answers()
+    assert exact_r._postings_point._rows_left < _KeyedPointReader.MAX_ROWS
+    monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 0)
+    stats_r, *stats = answers()
+    assert stats_r._postings_point._rows_left == 0  # no key column loaded
+    assert stats == exact
+    got_terms, got_wm, got_pfx = stats
+    assert set(got_terms) == set(terms) - {"zzz"}
+    assert set(got_wm) == set(words) - {"zzzz"}
+    assert got_pfx["zz"] == (0, None)
+    assert all(got_pfx[p][0] > 0 for p in ("q", "qu", "fo", "bat"))

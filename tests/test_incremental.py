@@ -290,7 +290,9 @@ def test_delta_layout_is_declared_and_read(spark, tmp_path, monkeypatch):
     """A delta's manifest declares the bucket counts its input sized, the
     files have exactly those buckets, and the reader buckets probes by
     them: a word in every wm_words and sq_words1 bucket of the delta is
-    found through MultiReader (wm_words by its bucket-filtered scan)."""
+    found through MultiReader (wm_words through its point reader's
+    bucket routing, with a zero file budget so every bucket keeps
+    footer intervals)."""
     import json
     import zlib
 

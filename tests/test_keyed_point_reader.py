@@ -1,35 +1,55 @@
-"""_KeyedPointReader: exact point reads over key-sorted parquet files.
+"""_KeyedPointReader: point reads over key-sorted parquet files.
 
-Pure pyarrow tests (no Spark): correctness vs a full scan, multi-file /
-multi-row-group selection, duplicate keys spanning a row-group boundary,
-and the unsorted-file fallback (load() -> None).
+Pure pyarrow tests (no Spark): correctness vs a full scan in both modes
+(sorted key columns within the budget, footer [min,max] intervals past
+it), multi-file / multi-row-group selection, duplicate keys spanning a
+row-group boundary, row groups without stats, bucket routing, and that
+an unsorted or unreadable file raises naming the table.
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
 
-from infidex_spark.query.executor import _KeyedPointReader
+from infidex_spark.query.executor import _KeyedPointReader, term_bucket
 
 
-def _write(dirpath: str, name: str, keys: list[str], row_group_size: int):
+def _write(dirpath: str, name: str, keys: list[str], row_group_size: int, **kw):
+    os.makedirs(dirpath, exist_ok=True)
     vals = list(range(len(keys)))
     tbl = pa.table({"k": keys, "v": vals})
     pq.write_table(
-        tbl, os.path.join(dirpath, name), row_group_size=row_group_size
+        tbl, os.path.join(dirpath, name), row_group_size=row_group_size, **kw
     )
+
+
+def _rows(tbls, keys) -> list[tuple[str, int]]:
+    want = set(keys)
+    return sorted(
+        (k, v)
+        for t in tbls
+        for k, v in zip(t["k"].to_pylist(), t["v"].to_pylist())
+        if k in want
+    )
+
+
+def _both_modes(monkeypatch):
+    """Loop body runs with the key columns loaded, then with a zero row
+    budget (every group keeps footer intervals instead); build the
+    reader inside the loop."""
+    yield "exact"
+    monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 0)
+    yield "stats"
 
 
 @pytest.fixture()
 def kp_dir(tmp_path):
     d = str(tmp_path / "tbl")
-    os.makedirs(d)
     # two sorted files with interleaved key ranges (the xxhash-sub-split
     # shape): stats intervals overlap, only exact lookup can tell the
     # owner apart
@@ -38,60 +58,123 @@ def kp_dir(tmp_path):
     return d
 
 
-def test_fetch_equals_full_scan(kp_dir):
+def test_fetch_equals_full_scan(kp_dir, monkeypatch):
     dataset = ds.dataset(kp_dir)
-    pr = _KeyedPointReader(dataset, "k")
     probes = ["k000", "k001", "k051", "k098", "k099", "kzzz", "a"]
-    tbls = pr.fetch(probes, ["k", "v"])
-    assert tbls is not None
-    got = {}
-    for t in tbls:
-        for k, v in zip(t["k"].to_pylist(), t["v"].to_pylist()):
-            got[k] = v
     want_tbl = dataset.to_table(columns=["k", "v"])
     want = dict(zip(want_tbl["k"].to_pylist(), want_tbl["v"].to_pylist()))
-    for p in probes:
-        if p in want:
-            assert got.get(p) == want[p], p
-    # missing keys are simply absent (caller negative-caches)
-    assert "kzzz" not in got and "a" not in got
+    for mode in _both_modes(monkeypatch):
+        pr = _KeyedPointReader("tbl", dataset, "k")
+        got = dict(_rows(pr.fetch(probes, ["k", "v"]), probes))
+        assert got == {p: want[p] for p in probes if p in want}, mode
+        # missing keys are simply absent (caller negative-caches)
+        assert "kzzz" not in got and "a" not in got
 
 
-def test_duplicate_keys_across_group_boundary(tmp_path):
+def test_budget_fallback(kp_dir, monkeypatch):
+    """Past the file budget a group keeps footer intervals: the same
+    rows, read from every row group whose [min, max] covers a probe."""
+    probes = ["k000", "k051", "k099", "k100"]
+    want = _rows(_KeyedPointReader("tbl", ds.dataset(kp_dir), "k").fetch(probes, ["k", "v"]), probes)
+    monkeypatch.setattr(_KeyedPointReader, "MAX_FILES", 1)
+    pr = _KeyedPointReader("tbl", ds.dataset(kp_dir), "k")
+    assert _rows(pr.fetch(probes, ["k", "v"]), probes) == want
+    assert pr._rows_left == _KeyedPointReader.MAX_ROWS  # no key column held
+    tbls = pr.fetch(["k051"], ["k", "v"])
+    # one 7-row group per file covers k051 (the files interleave)
+    assert [t.num_rows for t in tbls] == [7, 7]
+
+
+def test_duplicate_keys_across_group_boundary(tmp_path, monkeypatch):
     d = str(tmp_path / "dup")
-    os.makedirs(d)
     # key 'dup' spans two row groups (group size 3, 5 copies from row 2)
     keys = ["a", "b"] + ["dup"] * 5 + ["z"]
     _write(d, "f.parquet", keys, 3)
-    pr = _KeyedPointReader(ds.dataset(d), "k")
-    tbls = pr.fetch(["dup"], ["k", "v"])
-    rows = [
-        (k, v)
-        for t in tbls
-        for k, v in zip(t["k"].to_pylist(), t["v"].to_pylist())
-        if k == "dup"
-    ]
-    assert len(rows) == 5, rows  # every copy found, none dropped
+    for mode in _both_modes(monkeypatch):
+        pr = _KeyedPointReader("dup", ds.dataset(d), "k")
+        rows = _rows(pr.fetch(["dup"], ["k", "v"]), ["dup"])
+        # every copy found, none dropped
+        assert rows == [("dup", v) for v in range(2, 7)], mode
 
 
-def test_unsorted_file_falls_back(tmp_path):
+def test_row_group_without_stats_is_read(tmp_path, monkeypatch):
+    d = str(tmp_path / "nostats")
+    _write(d, "a.parquet", ["a", "b", "c", "d"], 2)
+    _write(d, "b.parquet", ["m", "n", "o", "p"], 2, write_statistics=False)
+    assert pq.ParquetFile(os.path.join(d, "b.parquet")).metadata.row_group(
+        0
+    ).column(0).statistics is None
+    probes = ["b", "n", "p", "x"]
+    for mode in _both_modes(monkeypatch):
+        pr = _KeyedPointReader("nostats", ds.dataset(d), "k")
+        assert _rows(pr.fetch(probes, ["k", "v"]), probes) == [
+            ("b", 1), ("n", 1), ("p", 3),
+        ], mode
+
+
+def test_bucket_routing(tmp_path, monkeypatch):
+    d = str(tmp_path / "hive")
+    words = [f"w{i:02d}" for i in range(40)]
+    n = 4
+    for b in range(n):
+        own = sorted(w for w in words if term_bucket(w, n) == b)
+        _write(os.path.join(d, f"bucket={b}"), "part.parquet", own, 3)
+    same_bucket = {w for w in words if term_bucket(w, n) == term_bucket("w07", n)}
+    for mode in _both_modes(monkeypatch):
+        pr = _KeyedPointReader("hive", ds.dataset(d, partitioning="hive"), "k", n)
+        got = _rows(pr.fetch(words, ["k", "v"]), words)
+        assert [k for k, _ in got] == words, mode
+        # a probe reads only its own bucket's file
+        (one,) = pr.fetch(["w07"], ["k", "v"])
+        assert set(one["k"].to_pylist()) <= same_bucket, mode
+
+
+def test_file_outside_bucket_dir_raises(tmp_path):
+    d = str(tmp_path / "flat")
+    _write(d, "part.parquet", ["a", "b"], 2)
+    pr = _KeyedPointReader("postings", ds.dataset(d), "k", 4)
+    with pytest.raises(ValueError, match="'postings'.*bucket=N"):
+        pr.fetch(["a"], ["k", "v"])
+
+
+def test_unsorted_file_raises(tmp_path):
     d = str(tmp_path / "unsorted")
-    os.makedirs(d)
     _write(d, "f.parquet", ["c", "a", "b"], 2)  # NOT sorted
-    pr = _KeyedPointReader(ds.dataset(d), "k")
-    assert pr.load() is None
-    assert pr.fetch(["a"], ["k", "v"]) is None  # caller uses scan path
+    pr = _KeyedPointReader("wm_words", ds.dataset(d), "k")
+    with pytest.raises(ValueError, match=r"'wm_words'.*f\.parquet.*not sorted"):
+        pr.load()
+    with pytest.raises(ValueError, match="'wm_words'"):
+        pr.fetch(["a"], ["k", "v"])
 
 
-def test_budget_fallback(tmp_path):
-    d = str(tmp_path / "big")
-    os.makedirs(d)
-    _write(d, "f.parquet", [f"k{i:05d}" for i in range(100)], 10)
-    pr = _KeyedPointReader(ds.dataset(d), "k")
-    pr.MAX_ROWS = 10  # force over-budget
-    assert pr.load() is None
+def test_truncated_file_raises(tmp_path, monkeypatch):
+    d = str(tmp_path / "cut")
+    _write(d, "a.parquet", ["a", "b"], 2)
+    _write(d, "b.parquet", ["c", "d"], 2)
+    dataset = ds.dataset(d)  # schema comes from the first file
+    path = os.path.join(d, "b.parquet")
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+    for _ in _both_modes(monkeypatch):
+        pr = _KeyedPointReader("prefixes", dataset, "k")
+        with pytest.raises(ValueError, match=r"'prefixes'.*b\.parquet"):
+            pr.fetch(["a"], ["k", "v"])
 
 
-def test_empty_probe_and_no_hits(kp_dir):
-    pr = _KeyedPointReader(ds.dataset(kp_dir), "k")
-    assert pr.fetch(["nope"], ["k", "v"]) == []
+def test_close_restores_budget(kp_dir, monkeypatch):
+    monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 60)
+    pr = _KeyedPointReader("tbl", ds.dataset(kp_dir), "k")
+    pr.load()  # 100 rows in one group: over budget, intervals kept
+    assert pr._rows_left == 60
+    monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 100)
+    pr.close()
+    pr.load()
+    assert pr._rows_left == 0
+    assert _rows(pr.fetch(["k042"], ["k", "v"]), ["k042"]) == [("k042", 21)]
+
+
+def test_empty_probe_and_no_hits(kp_dir, monkeypatch):
+    for mode in _both_modes(monkeypatch):
+        pr = _KeyedPointReader("tbl", ds.dataset(kp_dir), "k")
+        assert pr.fetch(["nope"], ["k", "v"]) == [], mode
+        assert pr.fetch([], ["k", "v"]) == [], mode

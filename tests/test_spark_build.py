@@ -449,3 +449,37 @@ def test_hot_prefixes_keep_counts_only(spark, reference_docs, tmp_path):
     assert hot and set(full) - hot
     assert capped == {p: (n, None if p in hot else ids) for p, (n, ids) in full.items()}
     assert postings(out_cap) == [r for r in postings(out_all) if r[0] not in hot]
+
+
+def test_symmetric_delete_lists_do_not_depend_on_input_layout(spark, tmp_path):
+    """variants and word_variants hold the same rows whether the same
+    docs arrive in 1 or in 8 shuffled partitions, and every terms list
+    is sorted (collect_list alone keeps shuffle arrival order)."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    from infidex_spark.webtext import generate_webtext, with_doc_ids
+
+    rows = (
+        with_doc_ids(generate_webtext(spark, 400, seed=5))
+        .selectExpr("doc_id", "doc_id as doc_key", "text")
+        .collect()
+    )
+    schema = "doc_id long, doc_key long, text string"
+    random.Random(3).shuffle(rows)
+    tables = {}
+    for parts in (1, 8):
+        out = str(tmp_path / f"p{parts}")
+        build_index(spark, spark.createDataFrame(rows, schema).repartition(parts), out, n_buckets=4)
+        tables[parts] = {
+            t: sorted(
+                zip(*(pq.read_table(os.path.join(out, t)).column(c).to_pylist() for c in ("variant", "terms")))
+            )
+            for t in ("variants", "word_variants")
+        }
+    for t in ("variants", "word_variants"):
+        lists = [terms for _, terms in tables[1][t]]
+        assert sum(len(x) > 1 for x in lists) > 20, t  # lists with an order to get wrong
+        assert all(x == sorted(x) for x in lists), t
+        assert tables[1][t] == tables[8][t], t
