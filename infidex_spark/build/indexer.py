@@ -1448,8 +1448,13 @@ def _write_prefixes(
         counts = _prefix_counts(pairs).persist()
         small = counts.filter(F.col("n_docs") <= max_prefix_docs).select("prefix")
         pairs = pairs.join(F.broadcast(small), "prefix", "left_semi")
-        hot = counts.filter(F.col("n_docs") > max_prefix_docs).select(
-            "prefix", "n_docs", F.lit(None).cast("array<long>").alias("doc_ids")
+        # the union below keeps each side's partitions as files, so the
+        # hot rows (hash-aggregate order) are key-sorted here: every
+        # prefixes file is a sorted point-read dictionary
+        hot = (
+            counts.filter(F.col("n_docs") > max_prefix_docs)
+            .select("prefix", "n_docs", F.lit(None).cast("array<long>").alias("doc_ids"))
+            .sortWithinPartitions("prefix")
         )
     try:
         # map-side partials (the same shape as the word lists): each

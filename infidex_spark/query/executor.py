@@ -134,12 +134,12 @@ class _KeyedPointReader:
     MAX_ROWS = 4_000_000
     MAX_FILES = 512
 
-    def __init__(self, table: str, dataset, key_col: str, n_buckets: int = 0, pool=None):
+    def __init__(self, table: str, dataset, key_col: str, pool, n_buckets: int = 0):
         self.table = table
         self._dataset = dataset
         self._key = key_col
-        self._n_buckets = n_buckets  # 0 = one group
         self._pool = pool  # () -> executor for reads over > 3 files
+        self._n_buckets = n_buckets  # 0 = one group
         self.close()
 
     def close(self) -> None:
@@ -261,7 +261,7 @@ class _KeyedPointReader:
                 raise self._corrupt(path, exc) from exc
 
         reads = self._locate(keys)
-        if len(reads) > 3 and self._pool is not None:
+        if len(reads) > 3:
             # pyarrow releases the GIL per read: overlapping the per-file
             # group reads hides the ~0.8 ms fixed cost per file (a cold
             # multi-gram probe touches ~16 files)
@@ -700,8 +700,8 @@ class IndexReader:
             "postings",
             ds.dataset(os.path.join(index_dir, "postings"), partitioning="hive"),
             "term",
-            self.n_buckets,
             self._pool,
+            self.n_buckets,
         )
         # aux structures are optional (build_index(aux=False))
         pfx = os.path.join(index_dir, "prefixes")
@@ -725,14 +725,14 @@ class IndexReader:
                 "wm_words",
                 ds.dataset(wm, partitioning="hive"),
                 "word",
-                self._wm_buckets,
                 self._pool,
+                self._wm_buckets,
             )
             if os.path.isdir(wm)
             else None
         )
         self._prefix_point = (
-            _KeyedPointReader("prefixes", self._prefixes, "prefix", pool=self._pool)
+            _KeyedPointReader("prefixes", self._prefixes, "prefix", self._pool)
             if self._prefixes is not None
             else None
         )

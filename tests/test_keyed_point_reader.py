@@ -10,6 +10,7 @@ an unsorted or unreadable file raises naming the table.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -26,6 +27,13 @@ def _write(dirpath: str, name: str, keys: list[str], row_group_size: int, **kw):
     pq.write_table(
         tbl, os.path.join(dirpath, name), row_group_size=row_group_size, **kw
     )
+
+
+_READ_POOL = ThreadPoolExecutor(max_workers=2)
+
+
+def _reader(table: str, dataset, n_buckets: int = 0) -> _KeyedPointReader:
+    return _KeyedPointReader(table, dataset, "k", lambda: _READ_POOL, n_buckets)
 
 
 def _rows(tbls, keys) -> list[tuple[str, int]]:
@@ -64,7 +72,7 @@ def test_fetch_equals_full_scan(kp_dir, monkeypatch):
     want_tbl = dataset.to_table(columns=["k", "v"])
     want = dict(zip(want_tbl["k"].to_pylist(), want_tbl["v"].to_pylist()))
     for mode in _both_modes(monkeypatch):
-        pr = _KeyedPointReader("tbl", dataset, "k")
+        pr = _reader("tbl", dataset)
         got = dict(_rows(pr.fetch(probes, ["k", "v"]), probes))
         assert got == {p: want[p] for p in probes if p in want}, mode
         # missing keys are simply absent (caller negative-caches)
@@ -75,9 +83,9 @@ def test_budget_fallback(kp_dir, monkeypatch):
     """Past the file budget a group keeps footer intervals: the same
     rows, read from every row group whose [min, max] covers a probe."""
     probes = ["k000", "k051", "k099", "k100"]
-    want = _rows(_KeyedPointReader("tbl", ds.dataset(kp_dir), "k").fetch(probes, ["k", "v"]), probes)
+    want = _rows(_reader("tbl", ds.dataset(kp_dir)).fetch(probes, ["k", "v"]), probes)
     monkeypatch.setattr(_KeyedPointReader, "MAX_FILES", 1)
-    pr = _KeyedPointReader("tbl", ds.dataset(kp_dir), "k")
+    pr = _reader("tbl", ds.dataset(kp_dir))
     assert _rows(pr.fetch(probes, ["k", "v"]), probes) == want
     assert pr._rows_left == _KeyedPointReader.MAX_ROWS  # no key column held
     tbls = pr.fetch(["k051"], ["k", "v"])
@@ -91,7 +99,7 @@ def test_duplicate_keys_across_group_boundary(tmp_path, monkeypatch):
     keys = ["a", "b"] + ["dup"] * 5 + ["z"]
     _write(d, "f.parquet", keys, 3)
     for mode in _both_modes(monkeypatch):
-        pr = _KeyedPointReader("dup", ds.dataset(d), "k")
+        pr = _reader("dup", ds.dataset(d))
         rows = _rows(pr.fetch(["dup"], ["k", "v"]), ["dup"])
         # every copy found, none dropped
         assert rows == [("dup", v) for v in range(2, 7)], mode
@@ -106,7 +114,7 @@ def test_row_group_without_stats_is_read(tmp_path, monkeypatch):
     ).column(0).statistics is None
     probes = ["b", "n", "p", "x"]
     for mode in _both_modes(monkeypatch):
-        pr = _KeyedPointReader("nostats", ds.dataset(d), "k")
+        pr = _reader("nostats", ds.dataset(d))
         assert _rows(pr.fetch(probes, ["k", "v"]), probes) == [
             ("b", 1), ("n", 1), ("p", 3),
         ], mode
@@ -121,7 +129,7 @@ def test_bucket_routing(tmp_path, monkeypatch):
         _write(os.path.join(d, f"bucket={b}"), "part.parquet", own, 3)
     same_bucket = {w for w in words if term_bucket(w, n) == term_bucket("w07", n)}
     for mode in _both_modes(monkeypatch):
-        pr = _KeyedPointReader("hive", ds.dataset(d, partitioning="hive"), "k", n)
+        pr = _reader("hive", ds.dataset(d, partitioning="hive"), n)
         got = _rows(pr.fetch(words, ["k", "v"]), words)
         assert [k for k, _ in got] == words, mode
         # a probe reads only its own bucket's file
@@ -132,7 +140,7 @@ def test_bucket_routing(tmp_path, monkeypatch):
 def test_file_outside_bucket_dir_raises(tmp_path):
     d = str(tmp_path / "flat")
     _write(d, "part.parquet", ["a", "b"], 2)
-    pr = _KeyedPointReader("postings", ds.dataset(d), "k", 4)
+    pr = _reader("postings", ds.dataset(d), 4)
     with pytest.raises(ValueError, match="'postings'.*bucket=N"):
         pr.fetch(["a"], ["k", "v"])
 
@@ -140,7 +148,7 @@ def test_file_outside_bucket_dir_raises(tmp_path):
 def test_unsorted_file_raises(tmp_path):
     d = str(tmp_path / "unsorted")
     _write(d, "f.parquet", ["c", "a", "b"], 2)  # NOT sorted
-    pr = _KeyedPointReader("wm_words", ds.dataset(d), "k")
+    pr = _reader("wm_words", ds.dataset(d))
     with pytest.raises(ValueError, match=r"'wm_words'.*f\.parquet.*not sorted"):
         pr.load()
     with pytest.raises(ValueError, match="'wm_words'"):
@@ -156,14 +164,14 @@ def test_truncated_file_raises(tmp_path, monkeypatch):
     with open(path, "r+b") as f:
         f.truncate(os.path.getsize(path) // 2)
     for _ in _both_modes(monkeypatch):
-        pr = _KeyedPointReader("prefixes", dataset, "k")
+        pr = _reader("prefixes", dataset)
         with pytest.raises(ValueError, match=r"'prefixes'.*b\.parquet"):
             pr.fetch(["a"], ["k", "v"])
 
 
 def test_close_restores_budget(kp_dir, monkeypatch):
     monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 60)
-    pr = _KeyedPointReader("tbl", ds.dataset(kp_dir), "k")
+    pr = _reader("tbl", ds.dataset(kp_dir))
     pr.load()  # 100 rows in one group: over budget, intervals kept
     assert pr._rows_left == 60
     monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 100)
@@ -175,6 +183,6 @@ def test_close_restores_budget(kp_dir, monkeypatch):
 
 def test_empty_probe_and_no_hits(kp_dir, monkeypatch):
     for mode in _both_modes(monkeypatch):
-        pr = _KeyedPointReader("tbl", ds.dataset(kp_dir), "k")
+        pr = _reader("tbl", ds.dataset(kp_dir))
         assert pr.fetch(["nope"], ["k", "v"]) == [], mode
         assert pr.fetch([], ["k", "v"]) == [], mode

@@ -450,6 +450,18 @@ def test_hot_prefixes_keep_counts_only(spark, reference_docs, tmp_path):
     assert capped == {p: (n, None if p in hot else ids) for p, (n, ids) in full.items()}
     assert postings(out_cap) == [r for r in postings(out_all) if r[0] not in hot]
 
+    # the hot rows are key-sorted too, so the reader loads the capped
+    # table's dictionary and serves both kinds of row
+    reader = IndexReader(out_cap)
+    try:
+        reader.prewarm_postings_meta()
+        for p, (n, ids) in full.items():
+            got_n, got_ids = reader.fetch_prefix(p)
+            assert got_n == n, p
+            assert (got_ids is None) if p in hot else (got_ids.tolist() == ids), p
+    finally:
+        reader.close()
+
 
 def test_symmetric_delete_lists_do_not_depend_on_input_layout(spark, tmp_path):
     """variants and word_variants hold the same rows whether the same
