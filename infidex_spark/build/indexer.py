@@ -30,9 +30,8 @@ Dataflow:
     the build is a declared job graph (build/jobs.py JobGraph): each
             job starts once its dependencies finish, in the FAIR pool
             'build-chain' (the critical chain: tokenize -> term_df_stop
-            -> postings groups -> pattern_scores -> sq_topk, plus
-            doc_stats -> sq_sidecar) or 'build-aux' (side jobs whose
-            stages fill scheduler gaps):
+            -> postings groups -> pattern_scores -> pattern_store_write)
+            or 'build-aux' (side jobs whose stages fill scheduler gaps):
             from the stream, once tokenize has materialized it:
             prefix_lists and champions (prefix pairs; champions also
             the doc_meta rows), doc_meta -> doc_store, and the word
@@ -42,14 +41,20 @@ Dataflow:
             term_dict (sorted dictionary for prefix-range scans),
             char_terms, pattern_scores (short-query aggregates),
             per-group checkpoint/metrics read-back
+            after the manifest lands (short_precompute): sq_topk, the
+            stored short-query answers, written by running the query
+            path's own _search_short_query over the finished index
     layout: wm_words, sq_words1 and pattern_scores have input-sized
             bucket counts (layout_buckets: 32/4/16 from 20k docs up),
             declared in the manifest's `layout` for the readers
-    writes: postings/ (parquet, partitioned by term bucket), doc_stats/,
-            stop_terms/, prefixes/, champions/, prefix_postings/,
-            doc_meta/, wm_words/, words/, words_rev/, word_variants/,
-            variants/, term_dict/, MANIFEST.json, checkpoints/ (per-bucket
-            lineage + metrics rows)
+    writes: the INDEX_TABLES under out_dir — postings/ (parquet,
+            partitioned by term bucket), doc_stats/, stop_terms/,
+            prefixes/, champions/, prefix_postings/, doc_meta/ (+
+            doc_store.arrow), wm_words/, sq_words1/, words/, words_rev/,
+            word_variants/, variants/, term_dict/, with short_precompute
+            char_terms/, pattern_scores/ (+ .arrow) and sq_topk/ — plus
+            MANIFEST.json and checkpoints/ (per-bucket lineage + metrics
+            rows)
 
 Skew (Zipfian 3-grams at 10^12 docs) is handled by one path:
 - per-doc pre-aggregation: tokens are counted per doc inside the Arrow
@@ -127,6 +132,19 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("block_offsets", T.ArrayType(T.LongType()), False),
         T.StructField("bucket", T.IntegerType(), False),
     ]
+)
+
+
+# every table (directory or sidecar file) build_index writes under its
+# out_dir, and sq_fuzzy, which format-3 builds wrote; a non-resume build
+# removes them all first. deltas/ and tombstones belong to the streaming
+# layer and are never removed.
+INDEX_TABLES = (
+    "postings", "doc_stats", "stop_terms", "checkpoints", "tokens",
+    "prefixes", "prefix_postings", "champions", "doc_meta", "doc_store.arrow",
+    "wm_words", "sq_words1", "words", "words_rev", "word_variants",
+    "variants", "term_dict", "char_terms", "pattern_scores",
+    "pattern_scores.arrow", "sq_topk", "sq_fuzzy",
 )
 
 
@@ -670,11 +688,15 @@ def build_index(
 
     salts is accepted for older callers and ignored.
 
-    short_precompute: build the pattern_scores short-query aggregates
-    (one extra postings-sized pass). None (default) enables it only at
-    >= 100k docs — below that the live short-query path is already
-    sub-100ms and the extra build pass isn't worth its wall-clock; the
-    query path degrades gracefully either way.
+    short_precompute: build the short-query tables — char_terms, the
+    pattern_scores aggregates (one extra postings-sized pass) and the
+    sq_topk stored answers. None (default) enables it only at >= 100k
+    docs — below that the live short-query path is already sub-100ms
+    and the extra build pass isn't worth its wall-clock; the query path
+    degrades gracefully either way.
+
+    A non-resume build first removes every INDEX_TABLES entry an
+    earlier build left in out_dir.
 
     Every Spark job runs inside one declared job of a JobGraph (see
     build/jobs.py); the manifest's step_secs/step_starts hold each job's
@@ -712,9 +734,14 @@ def build_index(
                     shutil.rmtree(
                         os.path.join(postings_dir, entry), ignore_errors=True
                     )
-    elif os.path.isdir(out_dir):
-        for sub in ("postings", "doc_stats", "prefixes", "variants", "checkpoints", "tokens", "doc_keys"):
-            shutil.rmtree(os.path.join(out_dir, sub), ignore_errors=True)
+    else:
+        # a table an earlier build left here would be read as this one's
+        for name in INDEX_TABLES:
+            path = os.path.join(out_dir, name)
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            elif os.path.exists(path):
+                os.remove(path)
 
     if "doc_key" not in docs.columns:
         docs = docs.withColumn("doc_key", F.col("doc_id"))
@@ -802,12 +829,12 @@ def build_index(
         def input_agg():
             row = input_row[0]
             # id-space contract (ADVICE r3 #4): internal doc ids must be
-            # non-negative and near-dense — the champions and sq_topk
-            # sidecars and the short-query aggregation allocate O(max_id)
-            # arrays, so the jobs that index arrays by doc id depend on
-            # this check. Delta segments legitimately carry a global base
-            # offset (min > 0), so density is advisory: negative ids are
-            # an error, a grossly sparse space (max >> count, e.g.
+            # non-negative and near-dense — the champions sidecar and the
+            # short-query aggregation allocate O(max_id) arrays, so the
+            # jobs that index arrays by doc id depend on this check.
+            # Delta segments legitimately carry a global base offset
+            # (min > 0), so density is advisory: negative ids are an
+            # error, a grossly sparse space (max >> count, e.g.
             # hash-valued ids) gets a loud warning (the query side
             # additionally falls back to sort-based aggregation for such
             # ids rather than allocating O(max_id)).
@@ -1057,8 +1084,8 @@ def build_index(
                     words(tok).filter(len_filter), os.path.join(out_dir, table),
                     layout_buckets(agg["n"])[table])
 
-            j_wm = graph.add("wm_words", word_lists("wm_words", F.length("word") >= 2), (j_tok, j_agg))
-            j_sq1 = graph.add("sq_words1", word_lists("sq_words1", F.length("word") == 1), (j_tok, j_agg))
+            graph.add("wm_words", word_lists("wm_words", F.length("word") >= 2), (j_tok, j_agg))
+            graph.add("sq_words1", word_lists("sq_words1", F.length("word") == 1), (j_tok, j_agg))
             # three jobs, one description: words, then words_rev and
             # word_variants side by side from the written words table
             j_words = graph.add("word_tables", lambda tok: _write_words(words(tok), out_dir), (j_tok,))
@@ -1079,31 +1106,19 @@ def build_index(
                 .write.mode("overwrite").parquet(os.path.join(out_dir, "term_dict"))
             ), (j_postings,))
 
-            def ps_only(fn):
-                # short-query precompute jobs: their first dep is
-                # input_agg, and they do nothing unless want_ps
-                return lambda agg, *deps: fn(*deps) if want_ps(agg) else None
-
-            graph.add("char_terms", ps_only(lambda _: _build_char_terms(
-                spark, postings_path, out_dir)), (j_agg, j_postings))
+            # short-query precompute jobs: they do nothing unless want_ps
+            graph.add("char_terms", lambda agg, _: _build_char_terms(
+                spark, postings_path, out_dir) if want_ps(agg) else None, (j_agg, j_postings))
             j_ps = graph.add("pattern_scores", lambda agg, _: _build_pattern_scores(
                 spark, postings_path, out_dir, layout_buckets(agg["n"])["pattern_scores"],
             ) if want_ps(agg) else None, (j_agg, j_postings), chain=True)
-            graph.add("pattern_store_write", ps_only(lambda _: _write_pattern_store(
-                out_dir)), (j_agg, j_ps), chain=True)
-            # the sq_topk fold's per-doc sidecar reads doc_meta + doc_stats
-            j_side = graph.add("sq_sidecar", ps_only(lambda *_: _sq_topk_sidecar(
-                spark, out_dir)), (j_agg, j_meta, j_stats), chain=True)
-            # complete wm_words + sq_words1 unlock the fold's exact
-            # word-table member path
-            j_sqt = graph.add("sq_topk", ps_only(lambda _, side, *__: _build_sq_topk(
-                spark, out_dir, postings_path, sizes, start_pad, side=side,
-            )), (j_agg, j_ps, j_side, j_wm, j_sq1), chain=True)
+            graph.add("pattern_store_write", lambda agg, _: _write_pattern_store(
+                out_dir, max_doc_id=agg["mx"]) if want_ps(agg) else None,
+                (j_agg, j_ps), chain=True)
             if slim_doc_meta:
-                # drops doc_meta's text columns, so it follows every job
-                # that reads doc_meta
-                graph.add("slim_doc_meta", lambda *_: _slim_doc_meta(out_dir),
-                          (j_store, j_side, j_sqt))
+                # drops doc_meta's text columns once the doc_store holds
+                # the texts
+                graph.add("slim_doc_meta", lambda _: _slim_doc_meta(out_dir), (j_store,))
         step_secs, step_starts = graph.join()
     finally:
         for df in persisted:
@@ -1171,17 +1186,18 @@ def build_index(
 
     manifest = write_manifest(step_secs, step_starts)
     if aux and want_ps(agg):
-        # fuzzy-class champions: distributed evaluation of the engine's
-        # own live short-query path over the COMPLETE index — its
-        # workers open IndexReader(out_dir), so it must run after the
-        # manifest lands (and after the doc_meta slim rewrite, whose
+        # stored short-query answers: distributed evaluation of the
+        # engine's own live short-query path over the COMPLETE index —
+        # its workers open IndexReader(out_dir), so it must run after
+        # the manifest lands (and after the doc_meta slim rewrite, whose
         # in-place file replacement would race the workers' reads)
-        graph.add("sq_fuzzy", lambda: _build_sq_fuzzy(spark, out_dir), chain=True)
+        graph.add("sq_topk", lambda: _build_sq_answers(spark, out_dir, sizes), chain=True)
         manifest = write_manifest(*graph.join())
     return manifest
 
 
 _CHAMPION_LIST_SIZE = 64  # ShortQueryResolver.ChampionListSize
+CHAMPIONS_BROADCAST_DOCS = 8_000_000  # champions sidecar cap (~24 B/doc)
 
 
 def _word_list_partial(key: str):
@@ -1403,7 +1419,7 @@ def _champions_sidecar(meta_rows: DataFrame, agg):
     sparse (both known from input_agg before anything is collected) —
     the caller then uses the fully distributed join+window plan."""
     n_rows = agg["n"]
-    if n_rows == 0 or n_rows > SQ_TOPK_BROADCAST_DOCS:
+    if n_rows == 0 or n_rows > CHAMPIONS_BROADCAST_DOCS:
         return None
     n = int(agg["mx"]) + 1
     if n > max(16 * n_rows, 1_000_000):
@@ -1510,9 +1526,9 @@ def _build_champions(
     Top-k is associative, so below the sidecar cap the heavy work runs
     MAP-SIDE (guide §2.3 "aggregate before you shuffle"): each Arrow
     batch of prefix pairs is scored against a broadcast per-doc sidecar
-    (n_tokens / tiny text / doc_key — the same bounded ~24 B/doc shape
-    as the sq_topk fold sidecar) and emits only its local per-prefix
-    top-64 (+ boundary ties), so the window's shuffle+sort sees a small
+    (n_tokens / tiny text / doc_key, a bounded ~24 B/doc) and emits only
+    its local per-prefix top-64 (+ boundary ties), so the window's
+    shuffle+sort sees a small
     candidate superset instead of every (prefix, doc) pair joined
     against the doc_meta rows. The window then produces exactly the rows
     the single-stage plan would (same ordering keys; local winners are a
@@ -1941,20 +1957,23 @@ def _build_pattern_scores(
 PATTERN_STORE_CAP = 600_000_000  # total (pattern, doc) pairs
 
 
-def _write_pattern_store(out_dir: str, cap_docs: int = 5_000_000) -> None:
+def _write_pattern_store(
+    out_dir: str, max_doc_id: int | None, cap_docs: int = 5_000_000
+) -> None:
     """Pattern-sorted Arrow IPC sidecar for pattern_scores: the query
     node memory-maps it and answers a pattern probe with one
     searchsorted + a zero-copy slice of the flattened list children —
     parquet point reads must decode whole row-group column chunks of
     fat array rows (~0.5 s per probe at 1M docs). doc ids are cast to
-    uint32 (valid below 4B docs per segment); scores are already int32 —
-    8 bytes/pair. Rows are written in arrival order: the reader argsorts
-    the (tiny) pattern column once at open, so the build pays no global
-    sort/take."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    uint32, so no sidecar is written when max_doc_id does not fit (a
+    sparse id space); scores are already int32 — 8 bytes/pair. Rows are
+    written in arrival order: the reader argsorts the (tiny) pattern
+    column once at open, so the build pays no global sort/take. Without
+    the sidecar the reader point-reads the parquet table."""
     import pyarrow.parquet as pq
 
+    if max_doc_id is not None and max_doc_id >= 2**32:
+        return
     # cap check BEFORE reading the fat array columns: total stored pairs
     # = sum of n_docs over non-withheld rows (arrays are withheld exactly
     # when n_docs > cap_docs), and n_docs alone is a tiny column
@@ -2000,603 +2019,12 @@ def _write_pattern_store(out_dir: str, cap_docs: int = 5_000_000) -> None:
             writer.write_table(tbl)
 
 
-SQ_TOPK_K = 100  # stored champions per short query
-SQ_TOPK_MIN_MATCHED = 100  # below this the live path adds fuzzy fallback
-SQ_TOPK_BROADCAST_DOCS = 8_000_000  # fold-path sidecar cap (~40 B/doc)
+SQ_TOPK_K = 100  # stored answer depth per short query
+SQ_ANSWER_MAX_ALPHABET = 64  # beyond this the 2-char space is too big
+SQ_ANSWER_MAX_HOT = 100_000  # 2-char pattern queries; above, none stored
+SQ_ANSWER_MAX_PAIR_CHARS = 200  # 'X Y' pairs from at most this many chars
 
-
-def _sq_topk_sidecar(spark: SparkSession, out_dir: str) -> dict:
-    """Per-doc precedence sidecar for the fold path: doc-id-indexed
-    arrays (numpy doc_key and n_tokens; Arrow strings, NULL where absent,
-    for the first-2 chars, first word <=3 chars and whitespace-trimmed
-    tiny text <=3 chars). The text-column
-    scanning (substring/strip/first-word) runs as a SPARK projection —
-    parallel, so it scales with the cluster instead of serializing on
-    the driver (the round-3-style driver pandas pass cost ~10 s of
-    SERIAL wall at 400k docs, a direct N->4N efficiency tax); the
-    driver only collects the resulting small (<=20 B/doc) columns."""
-
-    @F.pandas_udf("string")
-    def py_strip3(s: pd.Series) -> pd.Series:
-        # Python str.strip() whitespace semantics (the live path's
-        # titles.str.strip()); only values short enough to ever equal a
-        # <=3-char query survive
-        t = s.fillna("").str.strip()
-        return t.where(t.str.len() <= 3, None)
-
-    meta = spark.read.parquet(os.path.join(out_dir, "doc_meta"))
-    fw = F.element_at(F.split(F.col("words_text"), " "), 2)
-    side = (
-        meta.select(
-            "doc_id",
-            F.substring("text", 1, 2).alias("first2"),
-            F.when(F.length(fw) <= 3, fw).alias("fw3"),
-            py_strip3(F.col("text")).alias("tiny"),
-            F.col("n_tokens").cast("int").alias("ntok"),
-        )
-        .join(
-            spark.read.parquet(os.path.join(out_dir, "doc_stats")).select(
-                "doc_id", "doc_key"
-            ),
-            "doc_id",
-        )
-        .toPandas()
-    )
-    if len(side) == 0:
-        return {"n": 0}
-    ids = side["doc_id"].to_numpy()
-    n = int(ids.max()) + 1
-    key_arr = np.zeros(n, dtype=np.int64)
-    key_arr[ids] = side["doc_key"].to_numpy()
-    first2, fw3, tiny = (
-        _dense_strings(pa.array(side[c], pa.string()), ids, n)
-        for c in ("first2", "fw3", "tiny")
-    )
-    ntok = np.zeros(n, dtype=np.int32)
-    ntok[ids] = side["ntok"].to_numpy().astype(np.int32)
-    return {
-        "n": n, "key": key_arr, "first2": first2, "fw3": fw3, "tiny": tiny,
-        "ntok": ntok,
-    }
-
-
-def _sq_topk_fold(
-    spark: SparkSession,
-    out_dir: str,
-    postings_path: str,
-    ps,
-    pat_map,
-    base_map,
-    tok_map,
-    k: int,
-    empty_schema: str,
-    side: dict | None = None,
-    words_needed: list[str] | None = None,
-    base_terms: list[str] | None = None,
-) -> None:
-    """Fold dataflow for _build_sq_topk: one packed repartition by q;
-    per-q aggregation + precedence + top-k inside mapInPandas against
-    the broadcast per-doc sidecar (_sq_topk_sidecar; computed here when
-    the caller passes none). Emits only top-k rows."""
-    if side is None:
-        side = _sq_topk_sidecar(spark, out_dir)
-    if side["n"] == 0:
-        spark.createDataFrame([], empty_schema).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "sq_topk")
-        )
-        return
-    bc = spark.sparkContext.broadcast(side)
-    min_matched = SQ_TOPK_MIN_MATCHED
-
-    # shuffle-width control (guide §2.3 — narrower types through the
-    # exchange): internal doc ids are dense [0, n), so below 2^31 the
-    # fat doc-id arrays ride the one fold shuffle as int32 (half the
-    # bytes); the fold re-widens to int64 on arrival, so every computed
-    # value is unchanged. Ids >= 2^31 (never at per-segment scale) keep
-    # the long arrays.
-    ids32 = side["n"] <= 2**31 - 1
-    id_arr_t = "array<int>" if ids32 else "array<long>"
-
-    def _ids(col: str):
-        c = F.col(col)
-        return (c.cast(id_arr_t) if ids32 else c).alias("doc_ids")
-
-    nil_b = F.lit(None).cast("binary")
-    nil_al = F.lit(None).cast(id_arr_t)
-    nil_ai = F.lit(None).cast("array<int>")
-    nil_s = F.lit(None).cast("string")
-    ps_in = (
-        ps.join(pat_map, "pattern")
-        .select(
-            "q", F.lit(0).alias("kind"), _ids("doc_ids"), "scores",
-            nil_b.alias("payload"), nil_b.alias("weights"),
-            F.col("n_docs").alias("pn"), nil_s.alias("w"),
-        )
-    )
-    base_src = _read_postings(spark, postings_path)
-    if base_terms:
-        # isin BEFORE the broadcast join: the predicate pushes into the
-        # (bucket, term)-sorted parquet scan's row-group stats, so only
-        # groups holding wanted base terms are decoded (guide §6 — make
-        # pushdown reach the scan); the join then attaches q
-        base_src = base_src.filter(F.col("term").isin(base_terms))
-    base_in = (
-        base_src
-        .join(base_map, "term")
-        .select(
-            "q", F.lit(1).alias("kind"), nil_al.alias("doc_ids"),
-            nil_ai.alias("scores"), "payload", "weights",
-            F.col("n_docs").alias("pn"), nil_s.alias("w"),
-        )
-    )
-    # per-(query, token word) exact membership lists (1- and 2-char
-    # words; routed to every query that contains the word). These lists
-    # already exist on disk: the word-pairs jobs build sq_words1 (1-char) and
-    # wm_words (2+-char) as per-word sorted distinct doc-id lists from
-    # the SAME normalize+split stream doc_meta.words_text comes from —
-    # so instead of re-exploding every document's word stream (a full
-    # doc_meta scan + distinct + collect_list shuffle), point-read the
-    # few hundred needed words from those tables (guide §2.4: remove
-    # shuffles outright; the isin filter reaches the word-sorted
-    # parquet's row-group stats). wm_words rows capped at max_list keep
-    # the TRUE n_docs, so truncated rows are detected exactly and only
-    # those words (none below ~1.25M matching docs) fall back to the
-    # explode plan.
-    # both tables are complete here: sq_topk runs after the wm_words
-    # and sq_words1 jobs. A table written from zero rows has no part
-    # files and no inferable schema, and holds nothing.
-    word_paths = [os.path.join(out_dir, t) for t in ("sq_words1", "wm_words")]
-    tables_ready = all(os.path.isdir(p) for p in word_paths)
-    word_tables = [
-        spark.read.parquet(p).select("word", "doc_ids", "n_docs")
-        for p in word_paths
-        if any(f.endswith(".parquet") for _, _, fs in os.walk(p) for f in fs)
-    ]
-    member_legacy_words: list[str] = []
-    if tables_ready and word_tables and words_needed is not None:
-        msrc = word_tables[0]
-        for t in word_tables[1:]:
-            msrc = msrc.unionByName(t)
-        mneed = msrc.filter(F.col("word").isin(words_needed))
-        member_legacy_words = [
-            r.word
-            for r in mneed.filter(F.size("doc_ids") != F.col("n_docs"))
-            .select("word")
-            .distinct()
-            .collect()
-        ]
-        member_in = (
-            mneed.filter(F.size("doc_ids") == F.col("n_docs"))
-            .withColumnRenamed("word", "w")
-            .join(tok_map, "w")
-            .select(
-                "q", F.lit(2).alias("kind"), _ids("doc_ids"),
-                nil_ai.alias("scores"),
-                nil_b.alias("payload"), nil_b.alias("weights"),
-                F.lit(0).cast("long").alias("pn"), "w",
-            )
-        )
-    else:
-        member_in = None
-    if member_in is None or member_legacy_words:
-        legacy = (
-            spark.read.parquet(os.path.join(out_dir, "doc_meta"))
-            .select(
-                "doc_id",
-                F.explode(F.split(F.col("words_text"), " ")).alias("w"),
-            )
-            .filter(F.length("w").isin(1, 2))
-        )
-        if member_in is not None:
-            legacy = legacy.filter(F.col("w").isin(member_legacy_words))
-        legacy = (
-            legacy.join(tok_map, "w")
-            .distinct()
-            .groupBy("q", "w")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-            .select(
-                "q", F.lit(2).alias("kind"), _ids("doc_ids"),
-                nil_ai.alias("scores"),
-                nil_b.alias("payload"), nil_b.alias("weights"),
-                F.lit(0).cast("long").alias("pn"), "w",
-            )
-        )
-        member_in = legacy if member_in is None else member_in.unionByName(legacy)
-
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from infidex_spark.build.codec import decode_postings
-        from infidex_spark.kernel.tokenize import word_tokens
-
-        b = bc.value
-        n_total = b["n"]
-        key_arr = b["key"]
-        first2 = b["first2"]
-        fw3 = b["fw3"]
-        tiny = b["tiny"]
-        ntok = b["ntok"]
-        empty_i64 = np.zeros(0, dtype=np.int64)
-        out: list[tuple] = []
-        state = {"q": None, "ids": [], "w": [], "member": {}, "bad": False}
-
-        def _mem(arr: np.ndarray, probe: np.ndarray) -> np.ndarray:
-            if arr.size == 0:
-                return np.zeros(probe.size, dtype=bool)
-            pos = np.searchsorted(arr, probe)
-            np.clip(pos, 0, arr.size - 1, out=pos)
-            return arr[pos] == probe
-
-        def close() -> None:
-            q = state["q"]
-            if q is None or state["bad"] or not state["ids"]:
-                return
-            ids_cat = np.concatenate(state["ids"])
-            w_cat = np.concatenate(state["w"]).astype(np.float64)
-            # identical float64 sums to the live path's bincount (all
-            # addends are exact integers)
-            dense = np.bincount(ids_cat, weights=w_cat, minlength=n_total)
-            uids = np.flatnonzero(dense)
-            iscores = dense[uids]
-            keys = key_arr[uids]
-            if keys.size == 0:
-                return
-            if np.all(keys[1:] > keys[:-1]):
-                uk, scores, rep = keys, iscores, uids
-            else:
-                uk, kinv = np.unique(keys, return_inverse=True)
-                scores = np.bincount(kinv, weights=iscores, minlength=uk.size)
-                rep = np.full(uk.size, np.iinfo(np.int64).max, dtype=np.int64)
-                np.minimum.at(rep, kinv, uids)
-            if uk.size < min_matched:
-                return
-            member = state["member"]
-            toks = word_tokens(q, min_size=1)
-            if len(toks) >= 2:
-                # ComputePrecedence multi-token branch
-                n_match = np.zeros(rep.size, dtype=np.int64)
-                for t in toks:
-                    n_match += _mem(member.get(t, empty_i64), rep)
-                all_present = n_match == len(toks)
-                n_words = ntok[rep]
-                prec = np.where(
-                    all_present,
-                    8 | np.where(n_words <= len(toks) + 1, 2, 0),
-                    np.where(n_match > 0, 4, 0),
-                ).astype(np.int64)
-            else:
-                any_w = _mem(member.get(q, empty_i64), rep)
-                prec = (
-                    any_w * 1
-                    + _str_eq(fw3, rep, q) * 4
-                    + _str_eq(first2, rep, q) * 2
-                    + _str_eq(tiny, rep, q) * 8
-                ).astype(np.int64)
-            max_score = float(scores.max())
-            norm = scores / max_score if max_score > 0 else scores / 255.0
-            finals = (prec + norm).astype(np.float32)
-            order = np.lexsort((uk, -finals))[:k]
-            out.append(
-                (
-                    q,
-                    uk[order].tolist(),
-                    finals[order].tolist(),
-                    int(uk.size),
-                )
-            )
-
-        for pdf in batches:
-            for q, kind, doc_ids, scores, payload, weights, pn, w in zip(
-                pdf["q"], pdf["kind"], pdf["doc_ids"], pdf["scores"],
-                pdf["payload"], pdf["weights"], pdf["pn"], pdf["w"],
-            ):
-                if q != state["q"]:
-                    close()
-                    state.update(q=q, ids=[], w=[], member={}, bad=False)
-                if state["bad"]:
-                    continue
-                if kind == 0:
-                    ids = np.asarray(doc_ids, dtype=np.int64)
-                    if ids.size == 0 and pn > 0:
-                        state["bad"] = True  # cap-withheld row: live only
-                        continue
-                    state["ids"].append(ids)
-                    state["w"].append(np.asarray(scores, dtype=np.int64))
-                elif kind == 1:
-                    ids, tfs = decode_postings(payload, weights, int(pn))
-                    state["ids"].append(ids.astype(np.int64))
-                    state["w"].append(tfs.astype(np.int64))
-                else:
-                    state["member"][w] = np.asarray(doc_ids, dtype=np.int64)
-        close()
-        if out:
-            yield pd.DataFrame(
-                {
-                    "q": [r[0] for r in out],
-                    "doc_keys": [r[1] for r in out],
-                    "finals": [r[2] for r in out],
-                    "n_matched": np.asarray([r[3] for r in out], dtype=np.int64),
-                }
-            )
-
-    (
-        ps_in.unionByName(base_in)
-        .unionByName(member_in)
-        # 128 partitions: per-q groups are indivisible and hot-prefix
-        # skewed; smaller partitions smooth the stragglers the 4N-core
-        # level cannot pack around
-        .repartition(128, "q")
-        .sortWithinPartitions("q")
-        .mapInPandas(fold, empty_schema)
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "sq_topk"))
-    )
-
-
-def _build_sq_topk(
-    spark: SparkSession,
-    out_dir: str,
-    postings_path: str,
-    sizes: tuple[int, ...],
-    start_pad: int,
-    k: int = SQ_TOPK_K,
-    force_path: str | None = None,
-    side: dict | None = None,
-) -> None:
-    """Champion lists for hot short queries (reference analogue:
-    ShortQueryResolver's precomputed per-prefix champion lists,
-    src/Infidex/Indexing/ShortQuery/ShortQueryResolver.cs:18-31): the
-    FULL top-k answer of _search_short_query, precomputed for every
-    2-char single-token query observed as a term prefix. At query time a
-    hot short query ('th', 'fo') becomes one dict lookup instead of a
-    postings decode + per-doc aggregation linear in matched docs.
-
-    Built entirely as a Spark dataflow over already-written tables:
-    pattern_scores rows for the query's 4 prefix patterns (plus the
-    ' '+q base gram postings that complete fmt-2 delta rows) aggregate
-    per (q, doc) -> (q, key); precedence bits come from small derived
-    doc_meta columns (first-2 chars, short first word, whitespace-
-    trimmed tiny text, 2-char word membership) joined on the per-key
-    representative doc — full texts never shuffle. Queries whose
-    pre-fuzzy match count is below SQ_TOPK_MIN_MATCHED are omitted (the
-    live path would add fuzzy-fallback terms; it stays authoritative),
-    as are queries touching a cap-withheld pattern_scores row.
-
-    Parity: scores here are int sums where the live path uses the same
-    ints x10.0 — norm = s/s_max is the identical float64 either way
-    (both quotients are the same rational; sums are exact integers in
-    float64). finals = float32(prec + norm) and ordering
-    (-finals, key) match np.lexsort bit for bit; verified end to end by
-    tests/test_sq_topk.py (table path == live path).
-
-    Two dataflows, same output (both parity-tested):
-    - fold path (corpus <= SQ_TOPK_BROADCAST_DOCS): ONE packed shuffle —
-      pattern_scores rows, base postings rows and 2-char word-membership
-      lists repartition by q and a mapInPandas fold aggregates, scores
-      precedence via a broadcast per-doc sidecar (key/first2/first-word/
-      tiny arrays, ~40 B/doc) and emits only the top-k rows. This is
-      ~5x faster than the join plan and is what per-segment builds use
-      (segments stay in the tens of millions of docs even at 10^12
-      total).
-    - join path (above the cap): the fully distributed explode ->
-      groupBy -> join doc_stats -> join derived-meta -> window plan with
-      no driver-side or broadcast state, linear-scalable to any corpus.
-    """
-    from infidex_spark.kernel.engine import build_prefix_patterns
-    from infidex_spark.kernel.tokenize import DELIMITERS, START_PAD
-
-    empty_schema = "q string, doc_keys array<long>, finals array<float>, n_matched long"
-    ps_dir = os.path.join(out_dir, "pattern_scores")
-    ps = spark.read.parquet(ps_dir)
-    bad_chars = set(DELIMITERS) | {START_PAD}
-    # the pattern column is tiny (<= ~alphabet^2 + alphabet^3 rows, one
-    # per stored prefix pattern): read it driver-side with pyarrow
-    # instead of a Spark distinct().collect() — one less fixed-overhead
-    # job submission in the build tail (VERDICT r4: short jobs whose
-    # scheduling cost does not shrink with cores tax N->4N efficiency)
-    import pyarrow.dataset as _pads
-
-    pat_col = (
-        _pads.dataset(ps_dir, partitioning="hive")
-        .to_table(columns=["pattern"])["pattern"]
-        .to_pylist()
-    )
-    qs_raw = sorted({p for p in pat_col if len(p) == 2})
-    qs = [q for q in qs_raw if not any(c in bad_chars for c in q)]
-    meta_path = os.path.join(out_dir, "doc_meta")
-    have_words = os.path.isdir(meta_path) and "words_text" in (
-        spark.read.parquet(meta_path).columns
-    )
-    if not qs or len(qs) > 100_000 or not have_words:
-        spark.createDataFrame([], empty_schema).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "sq_topk")
-        )
-        return
-    # two-token 'X Y' queries (1-char + 1-char words): their 4 patterns
-    # are the same stored rows; the trailing ' X Y' pattern is 4 chars
-    # and can only match terms longer than 3 — so this is exact only for
-    # pure-3-gram indexes (multi-size indexes serve these live)
-    qs2: list[str] = []
-    if max(sizes) == 3:
-        chars = sorted({c for p in qs_raw for c in p if c not in bad_chars})
-        if len(chars) <= 200:
-            qs2 = [f"{x} {y}" for x in chars for y in chars]
-
-    from infidex_spark.kernel.tokenize import word_tokens
-
-    pat_rows = []
-    base_rows = []
-    tok_rows = []
-    for q in qs + qs2:
-        for pat in build_prefix_patterns(q, sizes[0], start_pad):
-            if len(pat) in (2, 3):
-                pat_rows.append((pat, q))
-            # fmt-2 delta completion: non-pad 3-char patterns add the
-            # base gram's own postings (query/executor.py base_pats)
-            if len(pat) == 3 and not pat.startswith(START_PAD):
-                base_rows.append((pat, q))
-        for w in dict.fromkeys(word_tokens(q, min_size=1)):
-            tok_rows.append((w, q))
-    pat_map = F.broadcast(spark.createDataFrame(pat_rows, "pattern string, q string"))
-    base_map = F.broadcast(spark.createDataFrame(base_rows, "term string, q string"))
-    tok_map = F.broadcast(spark.createDataFrame(tok_rows, "w string, q string"))
-
-    import pyarrow.parquet as _pq
-
-    # row count from parquet footers only (no data read)
-    n_docs_meta = sum(
-        _pq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
-        for dp, _, fs in os.walk(os.path.join(out_dir, "doc_stats"))
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    use_fold = force_path != "join" and (
-        force_path == "fold" or n_docs_meta <= SQ_TOPK_BROADCAST_DOCS
-    )
-    if use_fold:
-        _sq_topk_fold(
-            spark, out_dir, postings_path, ps, pat_map, base_map, tok_map,
-            k, empty_schema, side=side,
-            words_needed=sorted({w for w, _ in tok_rows}),
-            base_terms=sorted({t for t, _ in base_rows}),
-        )
-        return
-
-    from pyspark.sql.window import Window
-
-    # the join path implements single-token precedence only: two-token
-    # 'X Y' champions are a fold-path extra (live path serves them at
-    # scale)
-    joined = ps.join(pat_map, "pattern").filter(~F.col("q").contains(" "))
-    base_map = base_map.filter(~F.col("q").contains(" "))
-    # queries touching a cap-withheld row (arrays dropped, count kept)
-    # cannot be precomputed faithfully — exclude them
-    bad_qs = F.broadcast(
-        joined.filter((F.size("doc_ids") == 0) & (F.col("n_docs") > 0))
-        .select("q").distinct().withColumn("bad", F.lit(True))
-    )
-    psx = (
-        joined.join(bad_qs, "q", "left_anti")
-        .select("q", F.explode(F.arrays_zip("doc_ids", "scores")).alias("z"))
-        .select("q", F.col("z.doc_ids").alias("doc_id"), F.col("z.scores").cast("long").alias("w"))
-    )
-
-    posts = _read_postings(spark, postings_path)
-    base = posts.join(base_map, "term").join(bad_qs, "q", "left_anti").select(
-        "q", "payload", "weights", "n_docs"
-    )
-
-    def explode_base(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from infidex_spark.build.codec import decode_postings
-
-        for pdf in batches:
-            for q, payload, weights, n in zip(
-                pdf["q"], pdf["payload"], pdf["weights"], pdf["n_docs"]
-            ):
-                ids, wts = decode_postings(payload, weights, int(n))
-                yield pd.DataFrame(
-                    {"q": q, "doc_id": ids, "w": wts.astype(np.int64)}
-                )
-
-    basex = base.mapInPandas(explode_base, "q string, doc_id long, w long")
-
-    stats = spark.read.parquet(os.path.join(out_dir, "doc_stats")).select(
-        "doc_id", "doc_key"
-    )
-    per_key = (
-        psx.unionByName(basex)
-        .groupBy("q", "doc_id")
-        .agg(F.sum("w").alias("w"))
-        .join(stats, "doc_id")
-        .groupBy("q", "doc_key")
-        .agg(F.sum("w").alias("score"), F.min("doc_id").alias("rep"))
-    )
-    wq = Window.partitionBy("q")
-    per_key = (
-        per_key.withColumn("n_matched", F.count("*").over(wq))
-        .withColumn("smax", F.max("score").over(wq))
-        .filter(F.col("n_matched") >= SQ_TOPK_MIN_MATCHED)
-    )
-
-    # small derived precedence columns (exact ComputePrecedence inputs;
-    # full texts stay where they are)
-    meta = spark.read.parquet(os.path.join(out_dir, "doc_meta"))
-    if "words_text" not in meta.columns:
-        spark.createDataFrame(
-            [], "q string, doc_keys array<long>, finals array<float>, n_matched long"
-        ).write.mode("overwrite").parquet(os.path.join(out_dir, "sq_topk"))
-        return
-
-    @F.pandas_udf("string")
-    def py_strip(s: pd.Series) -> pd.Series:
-        # Python str.strip() whitespace semantics (the live path's
-        # titles.str.strip()); kept only when short enough to ever
-        # equal a <=3-char query
-        t = s.fillna("").str.strip()
-        return t.where(t.str.len() <= 3, None)
-
-    fw = F.element_at(F.split(F.col("words_text"), " "), 2)
-    dmeta = meta.select(
-        F.col("doc_id").alias("rep"),
-        F.substring("text", 1, 2).alias("first2"),
-        F.when(F.length(fw) <= 3, fw).alias("fw3"),
-        py_strip(F.col("text")).alias("tiny_ws"),
-    )
-    # 2-char word membership: (word, doc) pairs from words_text
-    wpairs = (
-        meta.select(
-            F.col("doc_id").alias("rep"),
-            F.explode(F.split(F.col("words_text"), " ")).alias("word"),
-        )
-        .filter(F.length("word") == 2)
-        .distinct()
-        .withColumn("any_w", F.lit(True))
-    )
-
-    scored = (
-        per_key.join(dmeta, "rep")
-        .join(
-            wpairs.withColumnRenamed("word", "q"),
-            ["q", "rep"],
-            "left",
-        )
-        .withColumn(
-            "prec",
-            F.coalesce(F.col("any_w").cast("int"), F.lit(0))
-            + F.when(F.col("fw3") == F.col("q"), 4).otherwise(0)
-            + F.when(F.col("first2") == F.col("q"), 2).otherwise(0)
-            + F.when(F.col("tiny_ws") == F.col("q"), 8).otherwise(0),
-        )
-        .withColumn(
-            "final",
-            (
-                F.col("prec")
-                + F.col("score").cast("double") / F.col("smax").cast("double")
-            ).cast("float"),
-        )
-    )
-    wtop = Window.partitionBy("q").orderBy(F.desc("final"), F.asc("doc_key"))
-    top = (
-        scored.withColumn("rn", F.row_number().over(wtop))
-        .filter(F.col("rn") <= k)
-        .groupBy("q")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("rn", "doc_key", "final"))
-            ).alias("rows"),
-            F.first("n_matched").alias("n_matched"),
-        )
-        .select(
-            "q",
-            F.expr("transform(rows, x -> x.doc_key)").alias("doc_keys"),
-            F.expr("transform(rows, x -> x.final)").alias("finals"),
-            "n_matched",
-        )
-    )
-    top.write.mode("overwrite").parquet(os.path.join(out_dir, "sq_topk"))
-
-
-SQ_FUZZY_MAX_ALPHABET = 64  # beyond this the 2-char space is too big
-
-# per-WORKER-PROCESS executor cache for _build_sq_fuzzy's evaluation
+# per-WORKER-PROCESS executor cache for _build_sq_answers' evaluation
 # tasks: Spark reuses python workers across tasks, and reader open +
 # sq_meta column load (~1-2 s at 1M docs) would otherwise repeat per
 # task — a fixed cost the 4N-core level pays in more copies
@@ -2617,63 +2045,78 @@ def _sq_eval_executor(idx_dir: str, mkey: float):
     return got
 
 
-def _build_sq_fuzzy(spark: SparkSession, out_dir: str, k: int = SQ_TOPK_K) -> None:
-    """Champion lists for the fuzzy/sparse short-query class — every
-    2-char single-token query over the observed alphabet that sq_topk
-    did NOT precompute (match count below SQ_TOPK_MIN_MATCHED, so the
-    live path adds ProcessFuzzyFallback terms, or a cap-withheld
-    pattern row). These were the worst short queries left after round
-    4: 'xq' paid a live fetch linear in matched postings (0.41 s at 1M
-    docs, 0.72 s at 2M) on every first evaluation. The query space is
-    <= alphabet^2 (reference: ShortQueryResolver answers the whole
-    short-query space from precomputed in-RAM structures,
-    src/Infidex/Indexing/ShortQuery/ShortQueryResolver.cs:118-219), so
-    the full answers are precomputable at build time.
-
-    Built by DISTRIBUTED EVALUATION of the engine's own live path: the
-    candidate queries round-robin across the cluster and each task
-    opens the just-written index read-only (IndexReader is pure
-    pyarrow/numpy — no Spark in the workers) and runs the real
-    _search_short_query. Parity with the live path is therefore
-    structural — same code, same caches — rather than re-proved for a
-    second dataflow; tests/test_sq_topk.py still asserts stored ==
-    live end to end. The per-query work is linear in matched postings
-    and fully parallel, so the job scales with cores/executors (it is
-    not a fixed-overhead tail). Rows where the full result has fewer
-    than k hits are flagged complete=true: the stored list is the
-    entire answer and serves ANY k (top-k order is a total order, so
-    every prefix of the stored list equals the live answer at that k).
-    """
+def _sq_answer_candidates(
+    out_dir: str, sizes: tuple[int, ...]
+) -> tuple[list[str], list[str], dict[str, int]]:
+    """The short queries whose answers the build stores, as (always,
+    hot, terms per char): always stored are the 2-char queries over the
+    observed alphabet (the char_terms chars) when it has at most
+    SQ_ANSWER_MAX_ALPHABET chars; stored only when hot are the 2-char
+    queries observed as a term prefix (pattern_scores' 2-char patterns)
+    and, on a pure 3-gram index, the 'X Y' pairs of their chars. A
+    two-token query's trailing ' X Y' pattern is 4 chars and matches
+    only terms longer than 3, so other index sizes serve pairs live."""
     import pyarrow.dataset as _pads
 
     from infidex_spark.kernel.tokenize import DELIMITERS, START_PAD
 
-    empty_schema = "q string, doc_keys array<long>, finals array<float>, complete boolean"
-    out_path = os.path.join(out_dir, "sq_fuzzy")
-    ct_dir = os.path.join(out_dir, "char_terms")
-    sq_dir = os.path.join(out_dir, "sq_topk")
     bad = set(DELIMITERS) | {START_PAD}
-    chars: list[str] = []
+    always: list[str] = []
     n_terms_by_char: dict[str, int] = {}
+    ct_dir = os.path.join(out_dir, "char_terms")
     if os.path.isdir(ct_dir):
         ct = _pads.dataset(ct_dir).to_table(columns=["ch", "n_terms"])
         n_terms_by_char = dict(zip(ct["ch"].to_pylist(), ct["n_terms"].to_pylist()))
-        chars = sorted(c for c in n_terms_by_char if c not in bad)
-    covered: set[str] = set()
-    if os.path.isdir(sq_dir):
-        try:
-            covered = set(
-                _pads.dataset(sq_dir).to_table(columns=["q"])["q"].to_pylist()
-            )
-        except Exception:
-            covered = set()
-    cands: list[str] = []
-    if chars and len(chars) <= SQ_FUZZY_MAX_ALPHABET:
-        cands = [x + y for x in chars for y in chars if x + y not in covered]
-    if not cands:
-        spark.createDataFrame([], empty_schema).write.mode("overwrite").parquet(
-            out_path
-        )
+    chars = sorted(c for c in n_terms_by_char if c not in bad)
+    if len(chars) <= SQ_ANSWER_MAX_ALPHABET:
+        always = [x + y for x in chars for y in chars]
+    # the pattern column is tiny (one row per stored prefix pattern)
+    ps = _pads.dataset(os.path.join(out_dir, "pattern_scores"), partitioning="hive")
+    pats = []
+    if "pattern" in ps.schema.names:  # an empty write has no files
+        pats = ps.to_table(columns=["pattern"])["pattern"].to_pylist()
+    qs_raw = sorted({p for p in pats if len(p) == 2})
+    hot = [q for q in qs_raw if not bad.intersection(q)]
+    if len(hot) > SQ_ANSWER_MAX_HOT:
+        hot = []
+    if hot and max(sizes) == 3:
+        pair_chars = sorted({c for p in qs_raw for c in p if c not in bad})
+        if len(pair_chars) <= SQ_ANSWER_MAX_PAIR_CHARS:
+            hot += [f"{x} {y}" for x in pair_chars for y in pair_chars]
+    stored = set(always)
+    return always, [q for q in hot if q not in stored], n_terms_by_char
+
+
+def _build_sq_answers(
+    spark: SparkSession, out_dir: str, sizes: tuple[int, ...], k: int = SQ_TOPK_K
+) -> None:
+    """The sq_topk table: stored full short-query answers (reference:
+    ShortQueryResolver answers the short-query space from precomputed
+    champion lists, src/Infidex/Indexing/ShortQuery/ShortQueryResolver.cs
+    :18-31,118-219), so a stored query is one dict lookup at query time
+    instead of a fetch linear in its matched postings.
+
+    Built by DISTRIBUTED EVALUATION of the engine's own live path over
+    the finished index: the candidates (_sq_answer_candidates) round-robin
+    across the cluster, and each task opens the index read-only
+    (IndexReader is pure pyarrow/numpy — no Spark in the workers) and
+    runs the real _search_short_query. Stored answers therefore equal
+    the live ones by construction; tests/test_sq_topk.py checks it end
+    to end. A hot candidate is evaluated with min_matched =
+    SHORT_FUZZY_MIN_MATCHED: below that pre-fuzzy match count the live
+    path returns None and no row is stored (the query stays live).
+    Rows where the full result has fewer than k hits are flagged
+    complete=true: the stored list is the entire answer and serves ANY k
+    (top-k order is a total order, so every prefix of the stored list
+    equals the live answer at that k)."""
+    from infidex_spark.query.executor import SHORT_FUZZY_MIN_MATCHED
+
+    schema = "q string, doc_keys array<long>, finals array<float>, complete boolean"
+    out_path = os.path.join(out_dir, "sq_topk")
+    always, hot, n_terms_by_char = _sq_answer_candidates(out_dir, sizes)
+    mins = {q: 0 for q in always} | {q: SHORT_FUZZY_MIN_MATCHED for q in hot}
+    if not mins:
+        spark.createDataFrame([], schema).write.mode("overwrite").parquet(out_path)
         return
 
     kk = k
@@ -2684,52 +2127,45 @@ def _build_sq_fuzzy(spark: SparkSession, out_dir: str, k: int = SQ_TOPK_K) -> No
 
     def eval_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ex = _sq_eval_executor(idx_dir, mkey)
-        out_q: list[str] = []
-        out_k: list[list[int]] = []
-        out_f: list[list[float]] = []
-        out_c: list[bool] = []
+        rows = []
         for pdf in batches:
-            for qs_list in pdf["qs"]:
-                for q in qs_list:
-                    res = ex._search_short_query(q, kk)
-                    out_q.append(q)
-                    out_k.append([int(d) for d, _ in res])
-                    out_f.append([float(s) for _, s in res])
-                    out_c.append(len(res) < kk)
-        if out_q:
-            yield pd.DataFrame(
-                {"q": out_q, "doc_keys": out_k, "finals": out_f, "complete": out_c}
-            )
+            for qs, ms in zip(pdf["qs"], pdf["mins"]):
+                for q, m in zip(qs, ms):
+                    res = ex._search_short_query(q, kk, min_matched=int(m))
+                    if res is not None:
+                        rows.append((q, [d for d, _ in res], [s for _, s in res], len(res) < kk))
+        if rows:
+            yield pd.DataFrame(rows, columns=["q", "doc_keys", "finals", "complete"])
 
     # The per-query cost distribution is extremely skewed: a
     # rare-first-char query ('xa' at 1M docs: ~9 s) triggers the broad
-    # fuzzy fallback while the p90 is ~0.15 s. The round-6 shape (ONE
-    # query per partition, LPT order) handled the skew but paid one
-    # mapInPandas task setup per query — at alphabet^2 queries the task
-    # overhead, not the evaluation, dominated the job (~8.6 s wall for
-    # ~3 s of query compute at 200k docs). Pack the queries into
-    # ~2x-cores bins by greedy LPT instead (cost model: expensive when
-    # the first char's term count is small — fewer exact matches forces
-    # the fuzzy expansion): the monster queries still land alone at the
-    # front while the cheap tail shares task overhead. Per-worker
-    # reader-open cost stays one per python worker via _SQ_EVAL_CACHE.
-    cands.sort(key=lambda q: (n_terms_by_char.get(q[0], 0), -n_terms_by_char.get(q[1], 0)))
+    # fuzzy fallback while the p90 is ~0.15 s. One query per partition
+    # handles the skew but pays one mapInPandas task setup per query —
+    # at alphabet^2 queries the task overhead, not the evaluation,
+    # dominated the job (~8.6 s wall for ~3 s of query compute at 200k
+    # docs). Pack the queries into ~2x-cores bins by greedy LPT instead
+    # (cost model: expensive when the first char's term count is small —
+    # fewer exact matches forces the fuzzy expansion): the monster
+    # queries still land alone at the front while the cheap tail shares
+    # task overhead. Per-worker reader-open cost stays one per python
+    # worker via _SQ_EVAL_CACHE.
+    nt = n_terms_by_char
+    cands = sorted(mins, key=lambda q: (nt.get(q[0], 0), -nt.get(q[1], 0), q))
     nbins = max(1, min(len(cands), 2 * spark.sparkContext.defaultParallelism))
     bins: list[list[str]] = [[] for _ in range(nbins)]
     loads = [0.0] * nbins
     for q in cands:  # already most-expensive-first
-        cost = 1.0 / (1.0 + n_terms_by_char.get(q[0], 0))
         i = loads.index(min(loads))
         bins[i].append(q)
-        loads[i] += cost
+        loads[i] += 1.0 / (1.0 + nt.get(q[0], 0))
     order = sorted(range(nbins), key=lambda i: -loads[i])
-    rows = [(bins[i],) for i in order if bins[i]]
+    rows = [(bins[i], [mins[q] for q in bins[i]]) for i in order if bins[i]]
     (
         spark.createDataFrame(
             spark.sparkContext.parallelize(rows, numSlices=len(rows)),
-            "qs array<string>",
+            "qs array<string>, mins array<int>",
         )
-        .mapInPandas(eval_part, empty_schema)
+        .mapInPandas(eval_part, schema)
         .write.mode("overwrite")
         .parquet(out_path)
     )

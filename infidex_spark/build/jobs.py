@@ -10,6 +10,11 @@ group. These thread-local properties are restored when the job ends.
 The first failure cancels the group's running and future Spark jobs,
 and no job starts after it; ``join()`` raises it once every started job
 has ended.
+
+A graph can be joined more than once. build_index joins every job that
+writes a table, writes the manifest, then declares and joins the one
+job that reads the finished index (sq_topk, the stored short-query
+answers); the step times of both joins land in the manifest.
 """
 
 from __future__ import annotations

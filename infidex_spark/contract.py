@@ -49,8 +49,8 @@ def _words(docs: DataFrame):
 
 def _contract_index(spark, sf_dir: str) -> str:
     """Build (or reuse) the per-sf_dir contract index. Rebuilds when the
-    cached dir predates the current on-disk feature set (sq_fuzzy is
-    the newest table gated by short_precompute) or was written in
+    cached dir predates the current on-disk feature set (sq_topk is
+    the last table a short_precompute build writes) or was written in
     another index format_version."""
     from infidex_spark.build.codec import FORMAT_VERSION
     from infidex_spark.build.indexer import build_index
@@ -59,7 +59,7 @@ def _contract_index(spark, sf_dir: str) -> str:
     idx_dir = os.path.join(WORK_DIR, f"index_{tag}")
     manifest = os.path.join(idx_dir, "MANIFEST.json")
     fresh = os.path.exists(manifest) and os.path.isdir(
-        os.path.join(idx_dir, "sq_fuzzy")
+        os.path.join(idx_dir, "sq_topk")
     )
     if fresh:
         with open(manifest) as f:

@@ -54,6 +54,11 @@ def term_bucket(term: str, n_buckets: int) -> int:
 
 _TERM_MISS = object()  # negative-cache marker in IndexReader._term_cache
 
+# a short query whose patterns match fewer doc keys than this also scores
+# the fuzzy-fallback terms (ShortQueryProcessor's ProcessFuzzyFallback);
+# the build stores a hot query's answer only from this count up
+SHORT_FUZZY_MIN_MATCHED = 100
+
 
 def _list_rows_to_numpy(tbl, key_col: str, val_col: str) -> dict:
     """{key: int64 ndarray} from a (string, list<int64>) Arrow table —
@@ -1254,42 +1259,33 @@ class IndexReader:
     SQ_META_CACHE_LIMIT = 20_000_000
 
     def sq_topk(self, q: str) -> list[tuple[int, float]] | None:
-        """Precomputed full short-query answer (build-time champion
-        lists, _build_sq_topk for hot queries + _build_sq_fuzzy for the
-        fuzzy/sparse class) — the reference's ShortQueryResolver
+        """Precomputed full short-query answer from the build's sq_topk
+        table (indexer._build_sq_answers: the live _search_short_query
+        run over the finished index) — the reference's ShortQueryResolver
         champion-list analogue (ShortQueryResolver.cs:18-31,118-219).
-        None when the tables are absent or the query was not
-        precomputed. Queries whose stored row is the COMPLETE result
-        set (fewer total matches than the stored depth) are recorded in
-        _sq_complete — sq_topk_complete() lets callers serve them at
-        any k."""
+        None when the table is absent or the query was not precomputed.
+        Queries whose stored row is the COMPLETE result set (fewer total
+        matches than the stored depth) are recorded in _sq_complete —
+        sq_topk_complete() lets callers serve them at any k."""
         if self._sq_topk_map is None:
-            m: dict[str, list] = {}
+            m: dict = {}
             comp: set[str] = set()
-            for sub, has_complete in (("sq_topk", False), ("sq_fuzzy", True)):
-                path = os.path.join(self.index_dir, sub)
-                if not os.path.isdir(path):
-                    continue
-                cols = ["q", "doc_keys", "finals"]
-                if has_complete:
-                    cols.append("complete")
-                tbl = pq.read_table(path, columns=cols)
-                keys_np = _list_rows_to_numpy(tbl, "q", "doc_keys")
+            path = os.path.join(self.index_dir, "sq_topk")
+            if os.path.isdir(path):
+                tbl = pq.read_table(path, columns=["q", "doc_keys", "finals", "complete"])
                 fin_np = _list_rows_to_numpy(tbl, "q", "finals")
-                comp_map = (
-                    dict(zip(tbl["q"].to_pylist(), tbl["complete"].to_pylist()))
-                    if has_complete
-                    else {}
-                )
-                for qq, k in keys_np.items():
-                    if qq in m:  # exact champions win on overlap
-                        continue
-                    # store the numpy pair; materialize the python list
-                    # lazily on first hit (eager zip over every row cost
-                    # ~60 ms per fresh reader at 20k docs)
-                    m[qq] = (k, fin_np[qq])
-                    if comp_map.get(qq):
-                        comp.add(qq)
+                # store the numpy pair; materialize the python list
+                # lazily on first hit (eager zip over every row cost
+                # ~60 ms per fresh reader at 20k docs)
+                m = {
+                    qq: (k, fin_np[qq])
+                    for qq, k in _list_rows_to_numpy(tbl, "q", "doc_keys").items()
+                }
+                comp = {
+                    qq
+                    for qq, c in zip(tbl["q"].to_pylist(), tbl["complete"].to_pylist())
+                    if c
+                }
             self._sq_topk_map = m
             self._sq_complete = comp
         hit = self._sq_topk_map.get(q)
@@ -1954,14 +1950,20 @@ class QueryExecutor:
 
     # --------------------------------------------------------------- parts
 
-    def _search_short_query(self, q: str, k: int) -> list[tuple[int, float]]:
+    def _search_short_query(
+        self, q: str, k: int, min_matched: int = 0
+    ) -> list[tuple[int, float]] | None:
         """D10 multi-char non-ngram queries — executor port of
         ShortQueryProcessor.SearchShortQuery, bit-identical to the
         kernel's _search_short_query (same pattern expansion under the
         4096-per-pattern cap, same fuzzy fallback and precedence
         scoring; title checks use the key's representative lowest-id
-        document). Two interchangeable data paths per stage, both
-        parity-tested equal:
+        document). This one function also writes the stored answers
+        IndexReader.sq_topk serves: the build runs it over the finished
+        index (indexer._build_sq_answers) and passes min_matched, so a
+        query whose patterns match fewer keys than that, before the
+        fuzzy fallback, returns None instead of an answer. Two
+        interchangeable data paths per stage, both parity-tested equal:
 
         - pattern contributions come from the precomputed pattern_scores
           aggregates (a point fetch per pattern) when the table exists,
@@ -2037,7 +2039,9 @@ class QueryExecutor:
         n_matched = (
             ukeys.size if keys_sorted else (np.unique(ukeys).size if ukeys.size else 0)
         )
-        if n_matched < 100:
+        if n_matched < min_matched:
+            return None
+        if n_matched < SHORT_FUZZY_MIN_MATCHED:
             fuzzy = self._short_fuzzy_terms(q, patterns)
             if fuzzy:
                 f_fetched = r.fetch_terms([t for t, _ in fuzzy])

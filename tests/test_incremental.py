@@ -102,7 +102,9 @@ def test_old_format_version_is_refused(incremental_index, tmp_path, stale):
     path = os.path.join(seg, "MANIFEST.json")
     with open(path) as f:
         manifest = json.load(f)
-    for version in (1, 2):  # 2: before the manifest declared its layout
+    # 2: before the manifest declared its layout; 3: before one sq_topk
+    # table held every stored short-query answer
+    for version in (1, 2, 3):
         manifest["format_version"] = version
         with open(path, "w") as f:
             json.dump(manifest, f)

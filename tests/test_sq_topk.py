@@ -1,8 +1,10 @@
-"""sq_topk champion lists == live _search_short_query, bit for bit.
+"""sq_topk stored answers == live _search_short_query, bit for bit.
 
-The build-time table stores the FULL top-K short-query answers for hot
-2-char single-token queries; the live path stays authoritative for
-sparse/fuzzy queries, k beyond the stored depth, and under tombstones.
+The build-time table stores the FULL top-K short-query answers of the
+2-char queries over the alphabet and of hot 2-char and 'X Y' queries,
+written by running the live path over the finished index; the live path
+serves every other short query, k beyond a row's stored depth and rows
+exhausted by tombstones.
 """
 
 from __future__ import annotations
@@ -41,8 +43,7 @@ def test_table_exists_and_serves(sq_index):
     for q in served:
         row = r.sq_topk(q)
         assert len(row) >= 10
-    # two-token champions (fold-path extra) should exist for common
-    # first letters
+    # hot two-token 'X Y' rows should exist for common letters
     assert any(
         r.sq_topk(q) is not None for q in QUERIES if " " in q
     ), "no two-token champion rows"
@@ -71,42 +72,80 @@ def test_k_beyond_stored_depth_falls_back(sq_index):
     assert ex.search(q, k) == ex_live.search(q, k)
 
 
-def test_fold_and_join_paths_agree(spark, tmp_path_factory):
-    """The broadcast-fold dataflow and the pure-join dataflow must emit
-    identical tables (the join path is the >8M-doc scale fallback).
-    Built with slim_doc_meta=False: both dataflows read the full
-    doc_meta columns (production runs them before the slimming step)."""
-    import pyarrow.parquet as pq
+def _live_executor(index_dir: str) -> QueryExecutor:
+    live_reader = IndexReader(index_dir)
+    live_reader._sq_topk_map = {}  # champion-miss -> live path
+    return QueryExecutor(live_reader)
 
-    from infidex_spark.build.indexer import _build_sq_topk
+
+def _assert_stored_rows_equal_live(
+    index_dir: str, ks: tuple[int, ...] = (1, 10, 100), step: int = 1
+) -> tuple[int, int]:
+    """Every step-th stored row and every complete row equals the live
+    answer at each k of ks, and a complete row also at k = 137 (beyond
+    the stored depth). Returns the numbers of stored and of complete
+    rows."""
+    r = IndexReader(index_dir)
+    r.sq_topk("")  # trigger the lazy load
+    ex, ex_live = QueryExecutor(r), _live_executor(index_dir)
+    for i, q in enumerate(sorted(r._sq_topk_map)):
+        complete = r.sq_topk_complete(q)
+        if i % step and not complete:
+            continue
+        row = [(int(d), float(s)) for d, s in r.sq_topk(q)]
+        for k in ks + ((137,) if complete else ()):
+            want = ex_live.search(q, k)
+            assert ex.search(q, k) == want, (q, k)
+            assert row[:k] == want, (q, k)
+    return len(r._sq_topk_map), len(r._sq_complete)
+
+
+def test_stored_rows_equal_live_path(sq_index):
+    n_rows, _ = _assert_stored_rows_equal_live(sq_index)
+    assert n_rows > 0
+
+
+def test_rebuild_removes_every_earlier_table(spark, sq_index, tmp_path):
+    """A non-resume build into a directory that holds an earlier index
+    removes every table that build wrote: a default (no short-query
+    precompute) rebuild over a short_precompute index must not serve
+    the old corpus' stored answers or read its pattern tables."""
+    import shutil
+
     from infidex_spark.webtext import generate_webtext, with_doc_ids
 
-    out = str(tmp_path_factory.mktemp("sqfj") / "idx")
-    wt = generate_webtext(spark, 1200, seed=11)
-    docs = with_doc_ids(wt).selectExpr("doc_id", "doc_id as doc_key", "text")
-    build_index(
-        spark, docs, out, n_buckets=8, short_precompute=True,
-        slim_doc_meta=False,
+    out = str(tmp_path / "idx")
+    shutil.copytree(sq_index, out)
+    docs = with_doc_ids(generate_webtext(spark, 300, seed=5)).selectExpr(
+        "doc_id", "doc_id + 1000000 as doc_key", "text"
     )
-    sq_index = out
-    fold_tbl = pq.read_table(os.path.join(sq_index, "sq_topk")).sort_by("q")
-    _build_sq_topk(
-        spark, sq_index, os.path.join(sq_index, "postings"), (3,), 2,
-        force_path="join",
-    )
-    join_tbl = pq.read_table(os.path.join(sq_index, "sq_topk")).sort_by("q")
-    # the join path emits single-token champions only; compare on that
-    # common subset
-    import pyarrow.compute as pc
+    build_index(spark, docs, out, n_buckets=8)
+    for table in ("sq_topk", "char_terms", "pattern_scores", "pattern_scores.arrow"):
+        assert not os.path.exists(os.path.join(out, table)), table
+    r = IndexReader(out)
+    assert r.sq_topk("th") is None
+    got = QueryExecutor(r).search("th", 10)
+    assert got and all(d >= 1_000_000 for d, _ in got)
 
-    fsub = fold_tbl.filter(
-        pc.equal(pc.count_substring(fold_tbl["q"], " "), 0)
+
+def test_sparse_doc_ids(spark, tmp_path):
+    """doc ids far beyond the doc count (i * 10^10, past uint32) still
+    build with short_precompute: the uint32 pattern store is skipped,
+    the reader point-reads pattern_scores, and the stored answers equal
+    the live path (checked on every 16th row and every complete row at
+    the stored depth: a live answer costs ~0.1 s without the store)."""
+    from infidex_spark.webtext import generate_webtext, with_doc_ids
+
+    out = str(tmp_path / "idx")
+    docs = with_doc_ids(generate_webtext(spark, 300, seed=13)).selectExpr(
+        "doc_id * 10000000000 as doc_id", "doc_id as doc_key", "text"
     )
-    assert len(fsub) > 0
-    assert fsub.column("q").to_pylist() == join_tbl.column("q").to_pylist()
-    assert fsub.column("doc_keys").to_pylist() == join_tbl.column("doc_keys").to_pylist()
-    assert fsub.column("finals").to_pylist() == join_tbl.column("finals").to_pylist()
-    assert fsub.column("n_matched").to_pylist() == join_tbl.column("n_matched").to_pylist()
+    with pytest.warns(RuntimeWarning, match="sparse"):
+        build_index(spark, docs, out, n_buckets=4, short_precompute=True)
+    assert os.path.isdir(os.path.join(out, "pattern_scores"))
+    assert not os.path.exists(os.path.join(out, "pattern_scores.arrow"))
+    n_rows, n_complete = _assert_stored_rows_equal_live(out, ks=(100,), step=16)
+    assert 0 < n_complete < n_rows
 
 
 def test_char_terms_equals_scan(sq_index):
@@ -128,12 +167,11 @@ def test_char_terms_equals_scan(sq_index):
 
 
 def test_fuzzy_class_precomputed(sq_index):
-    """Round 5: 2-char queries in the fuzzy/sparse class (below the
-    sq_topk match threshold — 'xq', 'qz', 'zz' on webtext) are served
-    from the sq_fuzzy table (built by distributed evaluation of the
-    live path), bit-identical to the live answer at every k."""
+    """2-char queries in the fuzzy/sparse class (below the fuzzy
+    fallback's match threshold — 'xq', 'qz', 'zz' on webtext) are
+    served from the sq_topk table, bit-identical to the live answer at
+    every k."""
     r = IndexReader(sq_index)
-    assert os.path.isdir(os.path.join(sq_index, "sq_fuzzy"))
     fuzzy_served = [
         q for q in ("xq", "qz", "zz", "zq") if r.sq_topk(q) is not None
     ]
@@ -148,7 +186,7 @@ def test_fuzzy_class_precomputed(sq_index):
 
 
 def test_complete_rows_serve_any_k(spark, tmp_path_factory):
-    """A sq_fuzzy row flagged complete (full result set smaller than
+    """A sq_topk row flagged complete (full result set smaller than
     the stored depth) answers k beyond its stored length — and still
     equals the live path there. An 80-doc corpus guarantees every
     fuzzy answer has < 100 hits, so every stored row is complete."""

@@ -27,7 +27,6 @@ RAISES_BY = {
     "wm_words": "prewarm",
     "term_dict": "lookup",
     "sq_topk": "lookup",
-    "sq_fuzzy": "lookup",
     "doc_stats": "open",
 }
 LOOKUPS = {
@@ -36,7 +35,6 @@ LOOKUPS = {
     "wm_words": lambda r: r.wm_word_docs(["the", "and"]),
     "term_dict": lambda r: r.sorted_terms(),
     "sq_topk": lambda r: r.sq_topk("th"),
-    "sq_fuzzy": lambda r: r.sq_topk("th"),
     "doc_stats": lambda r: r.doc_lengths(np.arange(3)),
 }
 
