@@ -21,6 +21,7 @@ import json
 import os
 import re
 import zlib
+from functools import cached_property
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -112,24 +113,34 @@ def _short_query_precedence_wtext(titles, wtexts, q: str) -> np.ndarray:
 
 class _KeyedPointReader:
     """Point reads over an index table whose files are each sorted by a
-    string key column: the postings term dictionary, wm_words and
-    prefixes all resolve a probe through this one structure.
+    string key column: the postings term dictionary, wm_words, prefixes,
+    variants, prefix_postings and champions all resolve a probe through
+    this one structure.
 
     A bucketed table's files group by their hive bucket=N directory and
     a probe routes to term_bucket(key, n_buckets); a flat table is one
-    group. A group's sorted key columns load lazily (or all at once by
-    load()): an in-RAM sorted dictionary, the columnar analogue of the
-    reference's FST term dictionary (term -> postings offset; here
-    searchsorted over the key column pins a probe's exact parquet row
-    groups). fetch() reads only those row groups, through cached file
-    handles: footer [min,max] stats cannot tell which of several
-    interleaved sorted files owns a key, and pyarrow <=16 does not prune
-    row groups on isin filters.
+    group. Nothing is read at construction: the table's files are
+    listed on first use, and a group's sorted key columns load lazily
+    (or all at once by load()). Each file keeps its distinct sorted keys
+    and the row where each key's run starts: an in-RAM sorted
+    dictionary, the columnar analogue of the reference's FST term
+    dictionary (term -> postings offset; here searchsorted pins a
+    probe's exact rows [lo, hi), duplicates included). fetch() reads
+    only the row groups holding those rows, through cached file handles,
+    and takes exactly those rows out of them by offset: footer [min,max]
+    stats cannot tell which of several interleaved sorted files owns a
+    key, and pyarrow <=16 does not prune row groups on isin filters.
 
     MAX_ROWS/MAX_FILES bound the key columns one reader holds. A group
-    past the budget (a huge vocabulary, a reader over many segments)
-    keeps its row groups' footer [min,max] intervals instead, and a row
-    group without stats is always read; both modes return the same rows.
+    past the budget (a huge vocabulary, a reader over many segments),
+    or any group of a reader built with exact=False, keeps its row
+    groups' footer [min,max] intervals instead, reads every row group
+    whose interval covers a probe (and every row group without stats)
+    and filters the rows with is_in. Both modes return exactly the
+    probed rows, in file and row order. exact=False suits a table whose
+    keys run over whole row groups (prefix_postings: one row per
+    (prefix, doc)), where the intervals already pin a probe's rows and
+    the key column is costly to load for what it adds.
 
     FORMAT_VERSION fixes the layout, so a file that cannot be read, is
     not sorted by the key, or sits outside a bucket=N directory of a
@@ -139,12 +150,15 @@ class _KeyedPointReader:
     MAX_ROWS = 4_000_000
     MAX_FILES = 512
 
-    def __init__(self, table: str, dataset, key_col: str, pool, n_buckets: int = 0):
+    def __init__(
+        self, table: str, path: str, key_col: str, pool, n_buckets: int = 0, exact: bool = True
+    ):
         self.table = table
-        self._dataset = dataset
+        self._path = path  # the table's directory
         self._key = key_col
         self._pool = pool  # () -> executor for reads over > 3 files
         self._n_buckets = n_buckets  # 0 = one group
+        self._exact = exact
         self.close()
 
     def close(self) -> None:
@@ -152,10 +166,11 @@ class _KeyedPointReader:
         on GC) and restore the budget; the reader reloads lazily if used
         again."""
         self._files: dict[int, list[str]] | None = None
-        # group -> [(path, ParquetFile, sorted keys, row-group start
-        # offsets) | (path, ParquetFile, None, (mins, maxs, no_stats))]
+        # group -> [(path, ParquetFile, distinct sorted keys, (run starts,
+        # row-group start offsets)) | (path, ParquetFile, None, (mins,
+        # maxs, no_stats))]
         self._groups: dict[int, list[tuple]] = {}
-        self._rows_left = self.MAX_ROWS
+        self._rows_left = self.MAX_ROWS if self._exact else 0
         self._files_left = self.MAX_FILES
 
     def _corrupt(self, path: str, why) -> ValueError:
@@ -163,8 +178,12 @@ class _KeyedPointReader:
 
     def _group_files(self) -> dict[int, list[str]]:
         if self._files is None:
+            try:
+                paths = ds.dataset(self._path).files
+            except (OSError, pa.ArrowException) as exc:
+                raise self._corrupt(self._path, exc) from exc
             files: dict[int, list[str]] = {}
-            for path in self._dataset.files:
+            for path in paths:
                 g = 0
                 if self._n_buckets:
                     m = re.fullmatch(r"bucket=(\d+)", os.path.basename(os.path.dirname(path)))
@@ -203,10 +222,21 @@ class _KeyedPointReader:
             except (OSError, pa.ArrowException, KeyError) as exc:
                 raise self._corrupt(path, exc) from exc
             keys = keys.to_numpy(zero_copy_only=False)
-            if keys.size > 1 and not bool(np.all(keys[:-1] <= keys[1:])):
-                raise self._corrupt(path, f"not sorted by {self._key!r}")
+            n = keys.size
+            # row where each distinct key's run starts, then n (one row
+            # per key: starts is arange(n + 1))
+            starts = np.arange(n + 1)
+            if n > 1:
+                new = keys[:-1] < keys[1:]
+                if not new.all():
+                    dup = np.flatnonzero(~new)
+                    if not bool(np.all(keys[dup] == keys[dup + 1])):
+                        raise self._corrupt(path, f"not sorted by {self._key!r}")
+                    first = np.concatenate(([True], new))
+                    starts = np.append(np.flatnonzero(first), n)
+                    keys = keys[first]
             goff = np.cumsum([0] + [md.row_group(i).num_rows for i in range(md.num_row_groups)])
-            return path, pf, keys, goff
+            return path, pf, keys, (starts, goff)
         col = [md.schema.column(i).path for i in range(md.num_columns)]
         if self._key not in col:
             raise self._corrupt(path, f"no {self._key!r} column")
@@ -229,8 +259,10 @@ class _KeyedPointReader:
             self._group(g)
 
     def _locate(self, keys) -> list[tuple]:
-        """(path, ParquetFile, [row group ids]) for every file holding a
-        probed key; same-row-group neighbours ride along."""
+        """(path, ParquetFile, [row group ids], take) for every file
+        holding a probed key: take is the probed rows' positions within
+        the row groups read (None: all of them), or, for a file kept as
+        footer intervals, the probes as an Arrow array to filter by."""
         by_group: dict[int, list[str]] = {}
         for k in set(keys):
             g = term_bucket(k, self._n_buckets) if self._n_buckets else 0
@@ -238,40 +270,65 @@ class _KeyedPointReader:
         reads = []
         for g, ks in by_group.items():
             probe = np.array(sorted(ks), dtype=object)
-            for path, pf, karr, bounds in self._group(g):
-                if karr is not None:
-                    lo = np.searchsorted(karr, probe, side="left")
-                    hi = np.searchsorted(karr, probe, side="right")
-                    hit = hi > lo  # key present; groups covering [lo, hi)
-                    g0 = np.searchsorted(bounds, lo[hit], side="right") - 1
-                    g1 = np.searchsorted(bounds, hi[hit] - 1, side="right") - 1
-                    gis = sorted({i for a, b in zip(g0.tolist(), g1.tolist()) for i in range(a, b + 1)})
-                else:
+            value_set = None
+            for path, pf, ukeys, bounds in self._group(g):
+                if ukeys is None:
                     mins, maxs, no_stats = bounds
                     # a group holds a probe iff some probe is in [min, max]
                     inside = np.searchsorted(probe, maxs, side="right") > np.searchsorted(probe, mins, side="left")
-                    gis = np.flatnonzero(inside | no_stats).tolist()
-                if gis:
-                    reads.append((path, pf, gis))
+                    gis = np.flatnonzero(inside | no_stats)
+                    if gis.size:
+                        if value_set is None:
+                            value_set = pa.array(probe.tolist(), pa.string())
+                        reads.append((path, pf, gis.tolist(), value_set))
+                    continue
+                if ukeys.size == 0:
+                    continue
+                starts, goff = bounds
+                i = np.searchsorted(ukeys, probe)
+                hit = i < ukeys.size
+                hit[hit] = ukeys[i[hit]] == probe[hit]
+                i = i[hit]
+                if i.size == 0:
+                    continue
+                # the probed rows: [starts[i], starts[i + 1]) per hit key,
+                # ascending (probes are sorted)
+                lo, n = starts[i], starts[i + 1] - starts[i]
+                rows = np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
+                rg = np.searchsorted(goff, rows, side="right") - 1
+                gis = np.unique(rg)
+                size = goff[gis + 1] - goff[gis]
+                # a row's position in the read = its offset in its row
+                # group + the rows of the groups read before it
+                take = rows - goff[rg] + (np.cumsum(size) - size)[np.searchsorted(gis, rg)]
+                reads.append((path, pf, gis.tolist(), None if take.size == size.sum() else take))
         return reads
 
     def fetch(self, keys, cols: list[str]) -> list:
-        """Arrow tables that together hold every row whose key is probed
-        (same-row-group neighbours ride along — callers filter)."""
+        """Non-empty Arrow tables, one per file read, that together hold
+        exactly the rows whose key is probed (a key absent from the
+        table has no row)."""
         def read(r):
-            path, pf, gis = r
+            path, pf, gis, take = r
+            footer = isinstance(take, pa.Array)
+            want = [*cols, self._key] if footer and self._key not in cols else cols
             try:
-                return pf.read_row_groups(gis, columns=cols)
+                tbl = pf.read_row_groups(gis, columns=want)
             except (OSError, pa.ArrowException) as exc:
                 raise self._corrupt(path, exc) from exc
+            if footer:
+                return tbl.filter(pc.is_in(tbl[self._key], value_set=take)).select(cols)
+            return tbl if take is None else tbl.take(take)
 
         reads = self._locate(keys)
         if len(reads) > 3:
             # pyarrow releases the GIL per read: overlapping the per-file
             # group reads hides the ~0.8 ms fixed cost per file (a cold
             # multi-gram probe touches ~16 files)
-            return list(self._pool().map(read, reads))
-        return [read(r) for r in reads]
+            tbls = list(self._pool().map(read, reads))
+        else:
+            tbls = [read(r) for r in reads]
+        return [t for t in tbls if t.num_rows]
 
 
 # Dense scatter-add accumulator budget for short-query aggregation: the
@@ -701,75 +758,35 @@ class IndexReader:
 
         self.synonym_map = SynonymMap.from_json(self.manifest.get("synonyms"))
         self._read_pool = None  # ThreadPoolExecutor for multi-file reads
+
+        def point(table: str, key: str, n_buckets: int = 0, exact: bool = True):
+            # aux tables are optional (build_index(aux=False), delta
+            # segments); the reader lists a table's files on first use
+            path = os.path.join(index_dir, table)
+            if not os.path.isdir(path):
+                return None
+            return _KeyedPointReader(table, path, key, self._pool, n_buckets, exact)
+
         self._postings_point = _KeyedPointReader(
-            "postings",
-            ds.dataset(os.path.join(index_dir, "postings"), partitioning="hive"),
-            "term",
-            self._pool,
-            self.n_buckets,
+            "postings", os.path.join(index_dir, "postings"), "term", self._pool, self.n_buckets
         )
-        # aux structures are optional (build_index(aux=False))
-        pfx = os.path.join(index_dir, "prefixes")
-        var = os.path.join(index_dir, "variants")
-        self._prefixes = ds.dataset(pfx) if os.path.isdir(pfx) else None
-        self._variants = ds.dataset(var) if os.path.isdir(var) else None
-        pp = os.path.join(index_dir, "prefix_postings")
-        ch = os.path.join(index_dir, "champions")
-        dm = os.path.join(index_dir, "doc_meta")
-        td = os.path.join(index_dir, "term_dict")
-        wm = os.path.join(index_dir, "wm_words")
-        self._prefix_postings = ds.dataset(pp) if os.path.isdir(pp) else None
-        self._champions = ds.dataset(ch) if os.path.isdir(ch) else None
-        self._doc_meta = ds.dataset(dm) if os.path.isdir(dm) else None
-        self._term_dict = ds.dataset(td) if os.path.isdir(td) else None
-        self.has_short_query_tables = (
-            self._term_dict is not None and self._doc_meta is not None
-        )
-        self._wm_point = (
-            _KeyedPointReader(
-                "wm_words",
-                ds.dataset(wm, partitioning="hive"),
-                "word",
-                self._pool,
-                self._wm_buckets,
-            )
-            if os.path.isdir(wm)
-            else None
-        )
-        self._prefix_point = (
-            _KeyedPointReader("prefixes", self._prefixes, "prefix", self._pool)
-            if self._prefixes is not None
-            else None
+        self._wm_point = point("wm_words", "word", self._wm_buckets)
+        self._prefix_point = point("prefixes", "prefix")
+        self._variant_point = point("variants", "variant")
+        self._pp_point = point("prefix_postings", "prefix", exact=False)
+        self._champion_point = point("champions", "prefix")
+        self.has_short_query_tables = all(
+            os.path.isdir(os.path.join(index_dir, t)) for t in ("term_dict", "doc_meta")
         )
         self._prefix_fetch_cache: dict[str, tuple] = {}
         self._variant_cache: dict[str, list[str]] = {}
-        ps = os.path.join(index_dir, "pattern_scores")
-        self._pattern_scores = (
-            ds.dataset(ps, partitioning="hive") if os.path.isdir(ps) else None
-        )
-        sq1 = os.path.join(index_dir, "sq_words1")
-        self._sq_words1 = (
-            ds.dataset(sq1, partitioning="hive") if os.path.isdir(sq1) else None
-        )
         self._sq_meta: dict | None = None  # lazy short-query meta cache
         self._doc_store: tuple | None = None  # lazy mmap'd text store
         self._ps_store: tuple | None = None  # lazy mmap'd pattern store
         self._sq_topk_map: dict | None = None  # lazy champion lists
         self._sq_complete: set[str] = set()  # champion rows = full answer
-        ct = os.path.join(index_dir, "char_terms")
-        self._char_terms_ds = ds.dataset(ct) if os.path.isdir(ct) else None
         self._char_terms_cache: dict[str, tuple | None] = {}
         self._all_terms: list[str] | None = None  # lazy fallback dictionary
-        # prefix POP counts are tiny (<= ~alphabet^3 keys): keep them in
-        # memory so the candidate selector only touches disk for the rare
-        # prefix whose doc list actually qualifies
-        self._prefix_counts: dict[str, int] | None = None
-        if self._prefixes is not None:
-            tbl = self._prefixes.to_table(columns=["prefix", "n_docs"])
-            if tbl.num_rows <= 5_000_000:
-                self._prefix_counts = dict(
-                    zip(tbl["prefix"].to_pylist(), tbl["n_docs"].to_pylist())
-                )
         self._doc_stats = ds.dataset(os.path.join(index_dir, "doc_stats"))
         # stop terms: df was driven past the limit; they must neither score
         # nor fuzzy-expand (reference keeps them as df=-1 tombstones)
@@ -801,6 +818,62 @@ class IndexReader:
             and int(ids0[-1]) - int(ids0[0]) + 1 == ids0.size
         )
 
+    # optional scanned tables, discovered on first use: a dataset
+    # discovery reads a footer, and most queries touch none of them.
+    # None when the build did not write the table.
+
+    def _dataset(self, table: str, hive: bool = False):
+        path = os.path.join(self.index_dir, table)
+        if not os.path.isdir(path):
+            return None
+        return ds.dataset(path, partitioning="hive" if hive else None)
+
+    @cached_property
+    def _doc_meta(self):
+        return self._dataset("doc_meta")
+
+    @cached_property
+    def _term_dict(self):
+        return self._dataset("term_dict")
+
+    @cached_property
+    def _pattern_scores(self):
+        return self._dataset("pattern_scores", hive=True)
+
+    @cached_property
+    def _sq_words1(self):
+        return self._dataset("sq_words1", hive=True)
+
+    @cached_property
+    def _char_terms_ds(self):
+        return self._dataset("char_terms")
+
+    @cached_property
+    def _words(self):
+        return self._dataset("words")
+
+    @cached_property
+    def _words_rev(self):
+        return self._dataset("words_rev")
+
+    @cached_property
+    def _word_variants(self):
+        return self._dataset("word_variants")
+
+    @cached_property
+    def _prefix_counts(self) -> dict[str, int] | None:
+        """Prefix POP counts, tiny (<= ~alphabet^3 keys): held in memory
+        so the candidate selector only touches disk for the rare prefix
+        whose doc list actually qualifies. None when the prefixes table
+        is absent or too large to hold."""
+        tbl = self._dataset("prefixes")
+        if tbl is None:
+            return None
+        tbl = tbl.to_table(columns=["prefix", "n_docs"])
+        if tbl.num_rows > 5_000_000:
+            return None
+        return dict(zip(tbl["prefix"].to_pylist(), tbl["n_docs"].to_pylist()))
+
     # ------------------------------------------------------------- fetch
 
     TERM_CACHE_MAX_POSTINGS = 20_000_000  # ~total cached doc-id count
@@ -824,19 +897,7 @@ class IndexReader:
             return out
         cols = ["term", "df", "n_docs", "payload", "weights",
                 "block_last_doc", "block_max_w", "block_offsets"]
-        miss_set = set(missing)
         for tbl in self._postings_point.fetch(missing, cols):
-            if tbl.num_rows == 0:
-                continue
-            tcol = tbl["term"].to_pylist()
-            # a stats-targeted row group holds a couple of rows: probe
-            # neighbours ride along in the read but are not materialized
-            sel = [
-                i for i, tm in enumerate(tcol)
-                if tm in miss_set and tm not in out
-            ]
-            if not sel:
-                continue
             dfs = tbl["df"].to_numpy()
             nds = tbl["n_docs"].to_numpy()
             pay = tbl["payload"]
@@ -844,8 +905,7 @@ class IndexReader:
             bl_f, bl_o = _list_views(tbl["block_last_doc"])
             bm_f, bm_o = _list_views(tbl["block_max_w"])
             bo_f, bo_o = _list_views(tbl["block_offsets"])
-            for i in sel:
-                term = tcol[i]
+            for i, term in enumerate(tbl["term"].to_pylist()):
                 n = int(nds[i])
                 # defer decode: WAND/lookup touch only needed blocks
                 tp = TermPostings(
@@ -870,18 +930,21 @@ class IndexReader:
         return out
 
     def prewarm_postings_meta(self) -> None:
-        """Load the term dictionaries of postings, wm_words and prefixes
-        for every bucket up front (sorted key columns within the point
-        readers' budget, footer intervals past it), spawn the read pool
-        and open the mmap'd stores and short-query meta. This is
-        store-open work — the reference likewise loads its FST term
-        dictionary at index open, not on the first query — and it moves
-        the one-time footer/dictionary reads off the first search's
-        critical path. A present but unreadable table raises here,
-        naming the table."""
-        for pr in (self._postings_point, self._wm_point, self._prefix_point):
+        """Load the key dictionaries of the BM25 path's point-read tables
+        (postings, wm_words, prefixes, variants) up front (sorted key
+        columns within the point readers' budget, footer intervals past
+        it) and the prefix counts, spawn the read pool and open the
+        mmap'd stores and short-query meta. This is store-open work —
+        the reference likewise loads its FST term dictionary at index
+        open, not on the first query — and it moves the one-time
+        footer/dictionary reads off the first search's critical path.
+        prefix_postings and champions, read by 1-char queries only, load
+        on their first lookup. A present but unreadable table raises
+        here or at that lookup, naming the table."""
+        for pr in (self._postings_point, self._wm_point, self._prefix_point, self._variant_point):
             if pr is not None:
                 pr.load()
+        self._prefix_counts  # a cached property: reading it loads the counts
         # pre-spawn the read pool's threads: lazy creation would land
         # ~10 ms of thread.start() on the first cold query
         list(self._pool().map(int, range(16)))
@@ -902,7 +965,10 @@ class IndexReader:
         if self._read_pool is not None:
             self._read_pool.shutdown(wait=False)
             self._read_pool = None
-        for pr in (self._postings_point, self._wm_point, self._prefix_point):
+        for pr in (
+            self._postings_point, self._wm_point, self._prefix_point,
+            self._variant_point, self._pp_point, self._champion_point,
+        ):
             if pr is not None:
                 pr.close()
 
@@ -922,7 +988,7 @@ class IndexReader:
         return n
 
     def fetch_prefix(self, prefix: str) -> tuple[int, np.ndarray | None]:
-        if self._prefixes is None:
+        if self._prefix_point is None:
             return 0, None
         if self._prefix_counts is not None and prefix not in self._prefix_counts:
             return 0, None
@@ -930,19 +996,11 @@ class IndexReader:
         got = cache.get(prefix)
         if got is not None:
             return got
-        tbls = [
-            t
-            for t in self._prefix_point.fetch([prefix], ["prefix", "n_docs", "doc_ids"])
-            if t.num_rows
-        ]
-        tbl = (
-            pa.concat_tables(tbls).filter(pc.field("prefix") == prefix)
-            if tbls
-            else None
-        )
-        if tbl is None or tbl.num_rows == 0:
+        tbls = self._prefix_point.fetch([prefix], ["n_docs", "doc_ids"])
+        if not tbls:
             out = (0, None)
         else:
+            tbl = tbls[0]
             n = tbl["n_docs"][0].as_py()
             ids = tbl["doc_ids"][0].as_py()
             out = (n, np.asarray(ids, dtype=np.int64) if ids is not None else None)
@@ -957,17 +1015,17 @@ class IndexReader:
         variants table is immutable for the reader's lifetime and the
         parquet point read costs ~ms — the dominant warm cost of every
         fuzzy-expanded query (same rationale as _term_cache)."""
-        if self._variants is None:
+        if self._variant_point is None:
             return []
         cache = self._variant_cache
         got = cache.get(token)
         if got is not None:
             return list(got)
         probes = [token] + [token[:i] + token[i + 1 :] for i in range(len(token))]
-        tbl = self._variants.to_table(filter=ds.field("variant").isin(probes))
         cands: set[str] = set()
-        for chunk in tbl["terms"].to_pylist():
-            cands.update(chunk)
+        for tbl in self._variant_point.fetch(probes, ["terms"]):
+            for chunk in tbl["terms"].to_pylist():
+                cands.update(chunk)
         # symmetric-delete overgenerates (e.g. same-length double
         # substitution); confirm with the exact metric
         from infidex_spark.kernel.engine import levenshtein_le1
@@ -982,13 +1040,15 @@ class IndexReader:
         """(doc_id, first_pos, n_ws, n_exact, first_exact, n_tokens,
         tiny_text, doc_key) rows for short-query resolution, or None when
         only the champion list is stored (hot prefix)."""
-        if self._prefix_postings is None:
+        if self._pp_point is None:
             return None
-        tbl = self._prefix_postings.to_table(filter=ds.field("prefix") == prefix)
-        if tbl.num_rows == 0:
+        cols = ["doc_id", "first_pos", "n_ws", "n_exact", "first_exact"]
+        tbls = self._pp_point.fetch([prefix], cols)
+        if not tbls:
             # distinguish "prefix unknown" (empty result) from "hot prefix,
             # rows withheld at build" (champion-list fallback)
             return {} if self.prefix_count(prefix) == 0 else None
+        tbl = pa.concat_tables(tbls)
         doc_ids = tbl["doc_id"].to_numpy()
         meta = self._doc_meta.to_table(
             filter=ds.field("doc_id").isin(doc_ids.tolist())
@@ -1010,11 +1070,14 @@ class IndexReader:
         }
 
     def champion_list(self, prefix: str) -> list[tuple[int, float]]:
-        if self._champions is None:
+        if self._champion_point is None:
             return []
-        tbl = self._champions.to_table(filter=ds.field("prefix") == prefix)
         rows = sorted(
-            zip(tbl["rn"].to_pylist(), tbl["doc_key"].to_pylist(), tbl["sq_score"].to_pylist())
+            (rn, key, score)
+            for tbl in self._champion_point.fetch([prefix], ["rn", "doc_key", "sq_score"])
+            for rn, key, score in zip(
+                tbl["rn"].to_pylist(), tbl["doc_key"].to_pylist(), tbl["sq_score"].to_pylist()
+            )
         )
         return [(int(k), float(s)) for _, k, s in rows]
 
@@ -1082,26 +1145,11 @@ class IndexReader:
     def word_df_map(self, cap: int) -> dict[str, int] | None:
         """Word-level document frequencies (B4) as a dict, or None when
         the words table is absent or exceeds cap rows."""
-        path = os.path.join(self.index_dir, "words")
-        if not os.path.isdir(path):
-            return None
-        d = ds.dataset(path)
-        if d.count_rows() > cap:
+        d = self._words
+        if d is None or d.count_rows() > cap:
             return None
         tbl = d.to_table()
         return dict(zip(tbl["word"].to_pylist(), tbl["df"].to_pylist()))
-
-    def _words_dataset(self):
-        path = os.path.join(self.index_dir, "words")
-        return ds.dataset(path) if os.path.isdir(path) else None
-
-    def _words_rev_dataset(self):
-        path = os.path.join(self.index_dir, "words_rev")
-        return ds.dataset(path) if os.path.isdir(path) else None
-
-    def _word_variants_dataset(self):
-        path = os.path.join(self.index_dir, "word_variants")
-        return ds.dataset(path) if os.path.isdir(path) else None
 
     @staticmethod
     def _scan_range_limited(
@@ -1137,7 +1185,7 @@ class IndexReader:
     ) -> list[str] | None:
         """Vocabulary words with the given prefix, lex order, capped.
         None when the words table is absent."""
-        d = self._words_dataset()
+        d = self._words
         if d is None:
             return None
         return self._scan_range_limited(d, "word", prefix, limit, min_len)
@@ -1147,7 +1195,7 @@ class IndexReader:
     ) -> list[str] | None:
         """Vocabulary words with the given suffix via the reversed-word
         table (reversed-lex order, matching the FST suffix walk)."""
-        d = self._words_rev_dataset()
+        d = self._words_rev
         if d is None:
             return None
         got = self._scan_range_limited(d, "rword", suffix[::-1], limit, min_len)
@@ -1156,7 +1204,7 @@ class IndexReader:
     def word_variant_words(self, w: str) -> list[str] | None:
         """Vocabulary words within Levenshtein distance 1 of w via the
         word-level symmetric-delete table; None when absent."""
-        d = self._word_variants_dataset()
+        d = self._word_variants
         if d is None:
             return None
         probes = [w] + [w[:i] + w[i + 1 :] for i in range(len(w))]
@@ -1170,7 +1218,7 @@ class IndexReader:
 
     def word_dfs(self, words: list[str]) -> dict[str, int]:
         """Point df fetch on the words table."""
-        d = self._words_dataset()
+        d = self._words
         if d is None or not words:
             return {}
         tbl = d.to_table(filter=ds.field("word").isin(words))
@@ -1185,12 +1233,9 @@ class IndexReader:
             return None
         if not words:
             return {}
-        wset = set(words)
         out: dict[str, np.ndarray] = {}
         for tbl in self._wm_point.fetch(words, ["word", "doc_ids"]):
-            for k, v in _list_rows_to_numpy(tbl, "word", "doc_ids").items():
-                if k in wset:
-                    out[k] = v
+            out.update(_list_rows_to_numpy(tbl, "word", "doc_ids"))
         return out
 
     def pattern_scores(self, pattern: str) -> tuple[np.ndarray, np.ndarray] | None:
@@ -1521,11 +1566,16 @@ class MultiReader:
     """Reader over a main segment plus delta segments (streaming ingest)
     with tombstone deletes. Same reader contract as IndexReader (see its
     docstring); an optional table counts as present only when every
-    segment has it. Per-term data merges across segments (global df =
-    sum; doc-id spaces are disjoint and ordered, so concatenated
-    postings stay sorted). Terms stopped in ANY segment are treated as
-    stopped globally (their true df is unrecoverable there —
-    conservative, matches the reference's permanent stop tombstones)."""
+    segment has it. Segment doc-id spaces are disjoint and ascending in
+    segment order, so per-doc data concatenates: postings (global df =
+    sum) and pattern aggregates stay sorted, and the short-query
+    precedence columns (sq_meta) stitch into one doc-id-sorted set, so
+    live short queries take the same numpy precedence path as one
+    segment. Terms stopped in ANY segment are treated as stopped
+    globally (their true df is unrecoverable there — conservative,
+    matches the reference's permanent stop tombstones). Stored
+    short-query answers are not merged (sq_topk is None): a stored row's
+    scores anchor to its own segment's max."""
 
     def __init__(self, index_dir: str):
         from infidex_spark.streaming.incremental import (
@@ -1553,10 +1603,12 @@ class MultiReader:
         self.has_short_query_tables = all(
             r.has_short_query_tables for r in self.readers
         )
+        self._sq_meta: dict | None = None  # lazy stitched meta cache
 
     def prewarm_postings_meta(self) -> None:
         for r in self.readers:
             r.prewarm_postings_meta()
+        self.sq_meta()
 
     def fetch_terms(self, terms: list[str]):
         """Per-term merge across segments via CompositeTermPostings —
@@ -1688,9 +1740,25 @@ class MultiReader:
         return np.concatenate(ids_l), np.concatenate(sc_l)
 
     def sq_meta(self) -> dict | None:
-        # per-candidate doc_meta point fetches remain the multi-segment
-        # precedence path (segment caches would need id-space stitching)
-        return None
+        """The segments' sq_meta columns concatenated in segment order,
+        built once. None when any segment has none (the caller then
+        takes the doc_title_rows path); ValueError when the stitched ids
+        are not strictly increasing, i.e. the segments' doc-id spaces
+        overlap or are out of order."""
+        if self._sq_meta is None:
+            parts = [r.sq_meta() for r in self.readers]
+            if any(p is None for p in parts):
+                self._sq_meta = {}
+            else:
+                meta = {c: np.concatenate([p[c] for p in parts]) for c in parts[0]}
+                ids = meta["ids"]
+                if not bool(np.all(ids[1:] > ids[:-1])):
+                    raise ValueError(
+                        "segment doc ids are not disjoint and ascending: "
+                        f"{[r.index_dir for r in self.readers]}"
+                    )
+                self._sq_meta = meta
+        return self._sq_meta or None
 
     # stored champion rows are per segment (their scores anchor to one
     # segment's max), so a multi-segment index answers short queries live

@@ -31,6 +31,15 @@ BATCH2 = [
     (10, "The Flash runs at incredible speeds"),
 ]
 
+BATCH3 = [
+    (11, "Foxes hunt at the theatre in the city"),
+    (12, "Baking bread on a sunny Thursday"),
+    (13, "The spa in Spain stays open till two"),
+    (14, "A big bad wolf and a fox"),
+]
+# tombstoned in the two-delta index: one key per segment
+TWO_DELTA_DELETED = (2, 6, 12)
+
 QUERIES = ["batman", "quick fox", "qick fux", "city", "the"]
 
 
@@ -49,9 +58,25 @@ def incremental_index(spark, tmp_path_factory):
     return out
 
 
-def _kernel_all():
+@pytest.fixture(scope="module")
+def two_delta_index(spark, tmp_path_factory):
+    """Main + two deltas, one tombstoned key in each segment."""
+    out = str(tmp_path_factory.mktemp("inc2") / "idx")
+    df1 = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(BATCH1)],
+        "doc_id long, doc_key long, text string",
+    )
+    build_index(spark, df1, out, n_buckets=4)
+    for batch_id, batch in ((1, BATCH2), (2, BATCH3)):
+        df = spark.createDataFrame(batch, "doc_key long, text string")
+        append_delta(spark, df, out, batch_id=batch_id, n_buckets=4)
+    delete_docs(out, list(TWO_DELTA_DELETED))
+    return out
+
+
+def _kernel_all(docs=BATCH1 + BATCH2):
     idx = KernelIndex()
-    idx.index_documents(BATCH1 + BATCH2)
+    idx.index_documents(docs)
     return idx
 
 
@@ -69,14 +94,55 @@ SHORT_QUERIES = ["fo", "ba", "th", "a b", "qz", "t o", "sp", "xq", "f", "a"]
 
 
 @pytest.mark.parametrize("query", SHORT_QUERIES)
-def test_multi_segment_short_query_matches_kernel(incremental_index, query):
-    """1-3 char queries over main+delta rank and score like one kernel
-    index over all docs (runs before the tombstone test below)."""
-    got = QueryExecutor(MultiReader(incremental_index)).search(query, 10)
-    want = _kernel_all().search(query, 10)
-    assert [d for d, _ in got] == [d for d, _ in want], (query, got, want)
-    for (_, gs), (_, ws) in zip(got, want):
-        assert gs == pytest.approx(ws, rel=1e-6), (query, got, want)
+def test_multi_segment_short_query_matches_kernel(
+    incremental_index, two_delta_index, query
+):
+    """1-3 char queries over main+delta, and over main+two deltas with a
+    tombstone in each segment, rank and score like one kernel index
+    over all docs with the deleted keys dropped from its answer (short
+    scores anchor to the full corpus, so survivors keep theirs; runs
+    before the tombstone test below). The stitched sq_meta precedence
+    path gives the same answer as the doc_title_rows path."""
+    cases = (
+        (incremental_index, BATCH1 + BATCH2, ()),
+        (two_delta_index, BATCH1 + BATCH2 + BATCH3, TWO_DELTA_DELETED),
+    )
+    for index, docs, deleted in cases:
+        reader = MultiReader(index)
+        assert reader.sq_meta() is not None
+        got = QueryExecutor(reader).search(query, 10)
+        deep = _kernel_all(docs).search(query, 10 + len(deleted))
+        want = [(d, s) for d, s in deep if d not in deleted][:10]
+        assert [d for d, _ in got] == [d for d, _ in want], (index, query, got, want)
+        for (_, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, rel=1e-6), (index, query, got, want)
+        slow = MultiReader(index)
+        slow._sq_meta = {}  # sq_meta() -> None: the doc_title_rows path
+        assert slow.sq_meta() is None
+        assert QueryExecutor(slow).search(query, 10) == got, (index, query)
+
+
+def test_multireader_sq_meta_is_stitched(two_delta_index):
+    """MultiReader.sq_meta() is the segments' columns in segment order:
+    ids strictly increasing over every doc of the three segments; a
+    reader whose segments' id spaces are out of order refuses to
+    stitch."""
+    import numpy as np
+
+    mr = MultiReader(two_delta_index)
+    meta = mr.sq_meta()
+    assert meta is not None and mr.sq_meta() is meta  # cached
+    ids = meta["ids"]
+    assert ids.tolist() == list(range(len(BATCH1 + BATCH2 + BATCH3)))
+    assert bool(np.all(ids[1:] > ids[:-1]))
+    parts = [r.sq_meta() for r in mr.readers]
+    assert len(parts) == 3
+    for col in meta:
+        assert meta[col].tolist() == np.concatenate([p[col] for p in parts]).tolist(), col
+    mr = MultiReader(two_delta_index)
+    mr.readers = mr.readers[::-1]
+    with pytest.raises(ValueError, match="disjoint and ascending"):
+        mr.sq_meta()
 
 
 def test_multireader_title_rows_keep_words_text(incremental_index):

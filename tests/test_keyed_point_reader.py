@@ -2,9 +2,11 @@
 
 Pure pyarrow tests (no Spark): correctness vs a full scan in both modes
 (sorted key columns within the budget, footer [min,max] intervals past
-it), multi-file / multi-row-group selection, duplicate keys spanning a
-row-group boundary, row groups without stats, bucket routing, and that
-an unsorted or unreadable file raises naming the table.
+it), that every fetch holds exactly the probed rows (no row-group
+neighbours), multi-file / multi-row-group selection, duplicate keys
+spanning a row-group boundary, row groups without stats, bucket
+routing, and that an unsorted or unreadable file raises naming the
+table.
 """
 
 from __future__ import annotations
@@ -32,18 +34,21 @@ def _write(dirpath: str, name: str, keys: list[str], row_group_size: int, **kw):
 _READ_POOL = ThreadPoolExecutor(max_workers=2)
 
 
-def _reader(table: str, dataset, n_buckets: int = 0) -> _KeyedPointReader:
-    return _KeyedPointReader(table, dataset, "k", lambda: _READ_POOL, n_buckets)
+def _reader(table: str, path: str, n_buckets: int = 0) -> _KeyedPointReader:
+    return _KeyedPointReader(table, path, "k", lambda: _READ_POOL, n_buckets)
 
 
 def _rows(tbls, keys) -> list[tuple[str, int]]:
-    want = set(keys)
-    return sorted(
+    """The fetched (key, value) rows, sorted; every row must be probed
+    and no table empty."""
+    got = [
         (k, v)
         for t in tbls
         for k, v in zip(t["k"].to_pylist(), t["v"].to_pylist())
-        if k in want
-    )
+    ]
+    assert all(t.num_rows for t in tbls)
+    assert {k for k, _ in got} <= set(keys), got
+    return sorted(got)
 
 
 def _both_modes(monkeypatch):
@@ -72,7 +77,7 @@ def test_fetch_equals_full_scan(kp_dir, monkeypatch):
     want_tbl = dataset.to_table(columns=["k", "v"])
     want = dict(zip(want_tbl["k"].to_pylist(), want_tbl["v"].to_pylist()))
     for mode in _both_modes(monkeypatch):
-        pr = _reader("tbl", dataset)
+        pr = _reader("tbl", kp_dir)
         got = dict(_rows(pr.fetch(probes, ["k", "v"]), probes))
         assert got == {p: want[p] for p in probes if p in want}, mode
         # missing keys are simply absent (caller negative-caches)
@@ -81,16 +86,38 @@ def test_fetch_equals_full_scan(kp_dir, monkeypatch):
 
 def test_budget_fallback(kp_dir, monkeypatch):
     """Past the file budget a group keeps footer intervals: the same
-    rows, read from every row group whose [min, max] covers a probe."""
+    rows, read from every row group whose [min, max] covers a probe and
+    filtered down to the probed keys."""
     probes = ["k000", "k051", "k099", "k100"]
-    want = _rows(_reader("tbl", ds.dataset(kp_dir)).fetch(probes, ["k", "v"]), probes)
+    want = _rows(_reader("tbl", kp_dir).fetch(probes, ["k", "v"]), probes)
     monkeypatch.setattr(_KeyedPointReader, "MAX_FILES", 1)
-    pr = _reader("tbl", ds.dataset(kp_dir))
+    pr = _reader("tbl", kp_dir)
     assert _rows(pr.fetch(probes, ["k", "v"]), probes) == want
     assert pr._rows_left == _KeyedPointReader.MAX_ROWS  # no key column held
-    tbls = pr.fetch(["k051"], ["k", "v"])
-    # one 7-row group per file covers k051 (the files interleave)
-    assert [t.num_rows for t in tbls] == [7, 7]
+    # one 7-row group per file covers k051 (the files interleave); only
+    # the owner's row comes back
+    (tbl,) = pr.fetch(["k051"], ["k", "v"])
+    assert tbl.to_pylist() == [{"k": "k051", "v": 25}]
+    # the key column is read for the filter even when not asked for
+    (tbl,) = pr.fetch(["k051"], ["v"])
+    assert tbl.column_names == ["v"] and tbl["v"].to_pylist() == [25]
+
+
+def test_fetch_holds_only_probed_rows(tmp_path, monkeypatch):
+    """Row groups of many rows: a probe's neighbours in its row group
+    never come back, in either mode, whichever columns are read."""
+    d = str(tmp_path / "fat")
+    keys = [f"w{i:04d}" for i in range(0, 2000, 3)]
+    _write(d, "f.parquet", keys, 100)
+    probes = ["w0000", "w0699", "w0702", "w1998", "w0001", "zzz"]
+    for mode in _both_modes(monkeypatch):
+        pr = _reader("fat", d)
+        tbls = pr.fetch(probes, ["k", "v"])
+        assert _rows(tbls, probes) == [
+            ("w0000", 0), ("w0699", 233), ("w0702", 234), ("w1998", 666),
+        ], mode
+        (only_v,) = pr.fetch(["w0702"], ["v"])
+        assert only_v.column_names == ["v"] and only_v["v"].to_pylist() == [234], mode
 
 
 def test_duplicate_keys_across_group_boundary(tmp_path, monkeypatch):
@@ -99,10 +126,31 @@ def test_duplicate_keys_across_group_boundary(tmp_path, monkeypatch):
     keys = ["a", "b"] + ["dup"] * 5 + ["z"]
     _write(d, "f.parquet", keys, 3)
     for mode in _both_modes(monkeypatch):
-        pr = _reader("dup", ds.dataset(d))
+        pr = _reader("dup", d)
         rows = _rows(pr.fetch(["dup"], ["k", "v"]), ["dup"])
-        # every copy found, none dropped
+        # every copy found, none dropped, no neighbour ('b', 'z') kept
         assert rows == [("dup", v) for v in range(2, 7)], mode
+        assert _rows(pr.fetch(["b", "z"], ["k", "v"]), ["b", "z"]) == [
+            ("b", 1), ("z", 7),
+        ], mode
+
+
+def test_duplicate_runs_in_interleaved_files(tmp_path, monkeypatch):
+    """Keys repeated within and across files (the prefix_postings and
+    champions shape: one row per (prefix, doc), a prefix's rows spread
+    over several files) come back complete and in file order."""
+    d = str(tmp_path / "runs")
+    _write(d, "a.parquet", ["a"] * 3 + ["b"] * 4 + ["c"] * 2, 2)
+    _write(d, "b.parquet", ["a"] * 2 + ["c"] * 5, 3)
+    for mode in _both_modes(monkeypatch):
+        pr = _reader("runs", d)
+        tbls = pr.fetch(["c", "a"], ["k", "v"])
+        got = [(k, v) for t in tbls for k, v in zip(t["k"].to_pylist(), t["v"].to_pylist())]
+        assert got == [
+            ("a", 0), ("a", 1), ("a", 2), ("c", 7), ("c", 8),
+            ("a", 0), ("a", 1), ("c", 2), ("c", 3), ("c", 4), ("c", 5), ("c", 6),
+        ], mode
+        assert _rows(pr.fetch(["b"], ["k", "v"]), ["b"]) == [("b", v) for v in range(3, 7)], mode
 
 
 def test_row_group_without_stats_is_read(tmp_path, monkeypatch):
@@ -114,7 +162,7 @@ def test_row_group_without_stats_is_read(tmp_path, monkeypatch):
     ).column(0).statistics is None
     probes = ["b", "n", "p", "x"]
     for mode in _both_modes(monkeypatch):
-        pr = _reader("nostats", ds.dataset(d))
+        pr = _reader("nostats", d)
         assert _rows(pr.fetch(probes, ["k", "v"]), probes) == [
             ("b", 1), ("n", 1), ("p", 3),
         ], mode
@@ -129,7 +177,7 @@ def test_bucket_routing(tmp_path, monkeypatch):
         _write(os.path.join(d, f"bucket={b}"), "part.parquet", own, 3)
     same_bucket = {w for w in words if term_bucket(w, n) == term_bucket("w07", n)}
     for mode in _both_modes(monkeypatch):
-        pr = _reader("hive", ds.dataset(d, partitioning="hive"), n)
+        pr = _reader("hive", d, n)
         got = _rows(pr.fetch(words, ["k", "v"]), words)
         assert [k for k, _ in got] == words, mode
         # a probe reads only its own bucket's file
@@ -140,7 +188,7 @@ def test_bucket_routing(tmp_path, monkeypatch):
 def test_file_outside_bucket_dir_raises(tmp_path):
     d = str(tmp_path / "flat")
     _write(d, "part.parquet", ["a", "b"], 2)
-    pr = _reader("postings", ds.dataset(d), 4)
+    pr = _reader("postings", d, 4)
     with pytest.raises(ValueError, match="'postings'.*bucket=N"):
         pr.fetch(["a"], ["k", "v"])
 
@@ -148,7 +196,7 @@ def test_file_outside_bucket_dir_raises(tmp_path):
 def test_unsorted_file_raises(tmp_path):
     d = str(tmp_path / "unsorted")
     _write(d, "f.parquet", ["c", "a", "b"], 2)  # NOT sorted
-    pr = _reader("wm_words", ds.dataset(d))
+    pr = _reader("wm_words", d)
     with pytest.raises(ValueError, match=r"'wm_words'.*f\.parquet.*not sorted"):
         pr.load()
     with pytest.raises(ValueError, match="'wm_words'"):
@@ -159,19 +207,20 @@ def test_truncated_file_raises(tmp_path, monkeypatch):
     d = str(tmp_path / "cut")
     _write(d, "a.parquet", ["a", "b"], 2)
     _write(d, "b.parquet", ["c", "d"], 2)
-    dataset = ds.dataset(d)  # schema comes from the first file
     path = os.path.join(d, "b.parquet")
     with open(path, "r+b") as f:
         f.truncate(os.path.getsize(path) // 2)
     for _ in _both_modes(monkeypatch):
-        pr = _reader("prefixes", dataset)
+        # files are listed on first use; discovery reads only the first
+        # file, so the cut is met by the reader's own open
+        pr = _reader("prefixes", d)
         with pytest.raises(ValueError, match=r"'prefixes'.*b\.parquet"):
             pr.fetch(["a"], ["k", "v"])
 
 
 def test_close_restores_budget(kp_dir, monkeypatch):
     monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 60)
-    pr = _reader("tbl", ds.dataset(kp_dir))
+    pr = _reader("tbl", kp_dir)
     pr.load()  # 100 rows in one group: over budget, intervals kept
     assert pr._rows_left == 60
     monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 100)
@@ -183,6 +232,17 @@ def test_close_restores_budget(kp_dir, monkeypatch):
 
 def test_empty_probe_and_no_hits(kp_dir, monkeypatch):
     for mode in _both_modes(monkeypatch):
-        pr = _reader("tbl", ds.dataset(kp_dir))
+        pr = _reader("tbl", kp_dir)
         assert pr.fetch(["nope"], ["k", "v"]) == [], mode
         assert pr.fetch([], ["k", "v"]) == [], mode
+
+
+def test_inexact_reader_keeps_footer_intervals(kp_dir):
+    """exact=False: no key column is held, and the rows are the exact
+    reader's."""
+    probes = ["k000", "k051", "k099", "kzzz"]
+    want = _rows(_reader("tbl", kp_dir).fetch(probes, ["k", "v"]), probes)
+    pr = _KeyedPointReader("tbl", kp_dir, "k", lambda: _READ_POOL, exact=False)
+    pr.load()
+    assert all(e[2] is None for e in pr._groups[0])
+    assert _rows(pr.fetch(probes, ["k", "v"]), probes) == want

@@ -23,8 +23,11 @@ from infidex_spark.query.executor import IndexReader
 STAGES = ("open", "prewarm", "lookup")
 RAISES_BY = {
     "postings": "prewarm",
-    "prefixes": "open",
+    "prefixes": "prewarm",
     "wm_words": "prewarm",
+    "variants": "prewarm",
+    "prefix_postings": "lookup",
+    "champions": "lookup",
     "term_dict": "lookup",
     "sq_topk": "lookup",
     "doc_stats": "open",
@@ -33,6 +36,9 @@ LOOKUPS = {
     "postings": lambda r: r.fetch_terms(["the", "and", "fox"]),
     "prefixes": lambda r: [r.fetch_prefix(p) for p in ("t", "th", "a")],
     "wm_words": lambda r: r.wm_word_docs(["the", "and"]),
+    "variants": lambda r: r.fetch_variant_terms("teh"),
+    "prefix_postings": lambda r: [r.short_query_rows(p) for p in ("t", "q", "z")],
+    "champions": lambda r: [r.champion_list(p) for p in ("t", "a")],
     "term_dict": lambda r: r.sorted_terms(),
     "sq_topk": lambda r: r.sq_topk("th"),
     "doc_stats": lambda r: r.doc_lengths(np.arange(3)),
@@ -84,6 +90,26 @@ def test_truncated_file_raises_naming_its_table(precompute_index, tmp_path, tabl
         LOOKUPS[table](r)
         reached.append("lookup")
     assert len(reached) <= STAGES.index(RAISES_BY[table]), (reached, err.value)
+
+
+def test_open_discovers_only_required_tables(precompute_index, monkeypatch):
+    """Opening a reader discovers doc_stats and stop_terms only: the
+    point-read tables list their files on prewarm or first lookup, and
+    the scanned optional tables on first use."""
+    import pyarrow.dataset as ds
+
+    seen: list[str] = []
+    real = ds.dataset
+
+    def spy(source, *args, **kwargs):
+        seen.append(os.path.basename(str(source)))
+        return real(source, *args, **kwargs)
+
+    monkeypatch.setattr(ds, "dataset", spy)
+    r = IndexReader(precompute_index)
+    assert set(seen) <= {"doc_stats", "stop_terms"}, seen
+    r.prewarm_postings_meta()
+    assert {"postings", "prefixes", "variants"} <= set(seen), seen
 
 
 def test_query_package_has_no_catch_all_handler():
