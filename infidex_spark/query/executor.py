@@ -21,6 +21,7 @@ import json
 import os
 import re
 import zlib
+from collections import OrderedDict
 from functools import cached_property
 import numpy as np
 import pyarrow as pa
@@ -111,6 +112,44 @@ def _short_query_precedence_wtext(titles, wtexts, q: str) -> np.ndarray:
     return prec
 
 
+class _RowGroupCache:
+    """Decoded parquet row groups, (table dir, file, row group, columns)
+    -> Arrow table, under one byte budget, evicted LRU by row group. A
+    table is counted by the buffers it retains: each entry was read from
+    its own row group, so it shares no buffer with another entry and
+    evicting it frees what it counted. A table over the whole budget is
+    not kept. Not thread-safe: callers mutate it on their own thread."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.nbytes = 0
+        self._tbls: OrderedDict = OrderedDict()  # key -> (table, bytes)
+
+    def __len__(self) -> int:
+        return len(self._tbls)
+
+    def get(self, key):
+        got = self._tbls.get(key)
+        if got is None:
+            return None
+        self._tbls.move_to_end(key)
+        return got[0]
+
+    def put(self, key, tbl) -> None:
+        size = tbl.get_total_buffer_size()
+        if size > self.budget or key in self._tbls:
+            return
+        while self.nbytes + size > self.budget:
+            self.nbytes -= self._tbls.popitem(last=False)[1][1]
+        self._tbls[key] = (tbl, size)
+        self.nbytes += size
+
+    def drop(self, table_dir: str) -> None:
+        """Forget every row group of one table."""
+        for key in [k for k in self._tbls if k[0] == table_dir]:
+            self.nbytes -= self._tbls.pop(key)[1]
+
+
 class _KeyedPointReader:
     """Point reads over an index table whose files are each sorted by a
     string key column: the postings term dictionary, wm_words, prefixes,
@@ -127,9 +166,20 @@ class _KeyedPointReader:
     dictionary (term -> postings offset; here searchsorted pins a
     probe's exact rows [lo, hi), duplicates included). fetch() reads
     only the row groups holding those rows, through cached file handles,
-    and takes exactly those rows out of them by offset: footer [min,max]
-    stats cannot tell which of several interleaved sorted files owns a
-    key, and pyarrow <=16 does not prune row groups on isin filters.
+    one row group at a time, and takes exactly those rows out of them by
+    offset: footer [min,max] stats cannot tell which of several
+    interleaved sorted files owns a key, and pyarrow <=16 does not prune
+    row groups on isin filters.
+
+    A reader given a _RowGroupCache (IndexReader hands one to its
+    postings and variants readers, with a byte budget of
+    ROW_GROUP_CACHE_BYTES) keeps each row group it decodes in exact
+    mode, keyed by (file, row group, columns): a later probe into that
+    row group takes its rows from memory, so a row group of ~60-700 rows
+    is decoded once per reader, not once per probe (the reference's
+    mmap'd segments stay resident the same way). Reads still run on the
+    read pool; the cache changes only on the calling thread, after they
+    return.
 
     MAX_ROWS/MAX_FILES bound the key columns one reader holds. A group
     past the budget (a huge vocabulary, a reader over many segments),
@@ -140,7 +190,8 @@ class _KeyedPointReader:
     probed rows, in file and row order. exact=False suits a table whose
     keys run over whole row groups (prefix_postings: one row per
     (prefix, doc)), where the intervals already pin a probe's rows and
-    the key column is costly to load for what it adds.
+    the key column is costly to load for what it adds. Footer-mode reads
+    are never cached.
 
     FORMAT_VERSION fixes the layout, so a file that cannot be read, is
     not sorted by the key, or sits outside a bucket=N directory of a
@@ -151,7 +202,14 @@ class _KeyedPointReader:
     MAX_FILES = 512
 
     def __init__(
-        self, table: str, path: str, key_col: str, pool, n_buckets: int = 0, exact: bool = True
+        self,
+        table: str,
+        path: str,
+        key_col: str,
+        pool,
+        n_buckets: int = 0,
+        exact: bool = True,
+        cache: _RowGroupCache | None = None,
     ):
         self.table = table
         self._path = path  # the table's directory
@@ -159,12 +217,15 @@ class _KeyedPointReader:
         self._pool = pool  # () -> executor for reads over > 3 files
         self._n_buckets = n_buckets  # 0 = one group
         self._exact = exact
+        self._cache = cache  # decoded row groups of exact-mode reads
         self.close()
 
     def close(self) -> None:
-        """Drop cached ParquetFile handles and key columns (handles close
-        on GC) and restore the budget; the reader reloads lazily if used
-        again."""
+        """Drop cached ParquetFile handles, key columns and this table's
+        cached row groups (handles close on GC) and restore the budget;
+        the reader reloads lazily if used again."""
+        if self._cache is not None:
+            self._cache.drop(self._path)
         self._files: dict[int, list[str]] | None = None
         # group -> [(path, ParquetFile, distinct sorted keys, (run starts,
         # row-group start offsets)) | (path, ParquetFile, None, (mins,
@@ -260,9 +321,9 @@ class _KeyedPointReader:
 
     def _locate(self, keys) -> list[tuple]:
         """(path, ParquetFile, [row group ids], take) for every file
-        holding a probed key: take is the probed rows' positions within
-        the row groups read (None: all of them), or, for a file kept as
-        footer intervals, the probes as an Arrow array to filter by."""
+        holding a probed key. take is, per row group, the probed rows'
+        offsets within it (None: all of its rows), or, for a file kept
+        as footer intervals, the probes as an Arrow array to filter by."""
         by_group: dict[int, list[str]] = {}
         for k in set(keys):
             g = term_bucket(k, self._n_buckets) if self._n_buckets else 0
@@ -296,39 +357,70 @@ class _KeyedPointReader:
                 lo, n = starts[i], starts[i + 1] - starts[i]
                 rows = np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
                 rg = np.searchsorted(goff, rows, side="right") - 1
-                gis = np.unique(rg)
-                size = goff[gis + 1] - goff[gis]
-                # a row's position in the read = its offset in its row
-                # group + the rows of the groups read before it
-                take = rows - goff[rg] + (np.cumsum(size) - size)[np.searchsorted(gis, rg)]
-                reads.append((path, pf, gis.tolist(), None if take.size == size.sum() else take))
+                gis, first = np.unique(rg, return_index=True)
+                cut = np.append(first, rows.size)
+                local = rows - goff[rg]
+                take = [
+                    None if b - a == goff[gi + 1] - goff[gi] else local[a:b]
+                    for gi, a, b in zip(gis.tolist(), cut[:-1].tolist(), cut[1:].tolist())
+                ]
+                reads.append((path, pf, gis.tolist(), take))
         return reads
 
     def fetch(self, keys, cols: list[str]) -> list:
-        """Non-empty Arrow tables, one per file read, that together hold
-        exactly the rows whose key is probed (a key absent from the
-        table has no row)."""
+        """Non-empty Arrow tables that together hold exactly the rows
+        whose key is probed (a key absent from the table has no row), in
+        file and row order: one per row group in exact mode, one per
+        file in footer mode."""
         def read(r):
-            path, pf, gis, take = r
-            footer = isinstance(take, pa.Array)
-            want = [*cols, self._key] if footer and self._key not in cols else cols
+            path, pf, gis, value_set, _ = r
             try:
+                if value_set is None:
+                    # one table per row group: a cached group holds only
+                    # its own buffers (a slice of a multi-group read would
+                    # pin the whole read)
+                    return [pf.read_row_group(gi, columns=cols) for gi in gis]
+                want = cols if self._key in cols else [*cols, self._key]
                 tbl = pf.read_row_groups(gis, columns=want)
             except (OSError, pa.ArrowException) as exc:
                 raise self._corrupt(path, exc) from exc
-            if footer:
-                return tbl.filter(pc.is_in(tbl[self._key], value_set=take)).select(cols)
-            return tbl if take is None else tbl.take(take)
+            return [tbl.filter(pc.is_in(tbl[self._key], value_set=value_set)).select(cols)]
 
-        reads = self._locate(keys)
+        cache, ckey = self._cache, tuple(cols)
+        # per output table, in file and row order: [table | None, rows to
+        # take | None, cache key | None]
+        slots: list[list] = []
+        # (path, ParquetFile, row groups, footer probes | None, slot ids)
+        reads: list[tuple] = []
+        for path, pf, gis, take in self._locate(keys):
+            if isinstance(take, pa.Array):
+                reads.append((path, pf, gis, take, [len(slots)]))
+                slots.append([None, None, None])
+                continue
+            miss, ids = [], []
+            for gi, t in zip(gis, take):
+                key = None if cache is None else (self._path, path, gi, ckey)
+                tbl = None if key is None else cache.get(key)
+                if tbl is None:
+                    miss.append(gi)
+                    ids.append(len(slots))
+                slots.append([tbl, t, key])
+            if miss:
+                reads.append((path, pf, miss, None, ids))
         if len(reads) > 3:
             # pyarrow releases the GIL per read: overlapping the per-file
             # group reads hides the ~0.8 ms fixed cost per file (a cold
             # multi-gram probe touches ~16 files)
-            tbls = list(self._pool().map(read, reads))
+            done = list(self._pool().map(read, reads))
         else:
-            tbls = [read(r) for r in reads]
-        return [t for t in tbls if t.num_rows]
+            done = [read(r) for r in reads]
+        for r, tbls in zip(reads, done):
+            for i, tbl in zip(r[4], tbls):
+                slots[i][0] = tbl
+                if slots[i][2] is not None:
+                    cache.put(slots[i][2], tbl)
+        out = [tbl if t is None else tbl.take(t) for tbl, t, _ in slots]
+        return [t for t in out if t.num_rows]
 
 
 # Dense scatter-add accumulator budget for short-query aggregation: the
@@ -723,6 +815,13 @@ class IndexReader:
       fallback: the open, prewarm_postings_meta or the first lookup
       that reads the table raises, naming the table (and its file).
 
+    Caches, all per reader and bounded: term rows
+    (TERM_CACHE_MAX_POSTINGS), prefix and variant lookups, and one
+    decoded row-group cache shared by the postings and variants point
+    readers under ROW_GROUP_CACHE_BYTES, evicted LRU by row group, so a
+    term-cache miss into a row group an earlier probe decoded reads
+    nothing. close() drops the row-group cache with the file handles.
+
     Opening checks the manifest's format_version: any value other than
     FORMAT_VERSION raises ValueError (rebuild with build_index), so the
     reader carries no branches for layouts older versions wrote. The
@@ -758,21 +857,30 @@ class IndexReader:
 
         self.synonym_map = SynonymMap.from_json(self.manifest.get("synonyms"))
         self._read_pool = None  # ThreadPoolExecutor for multi-file reads
+        # decoded row groups of the tables a query probes with many keys
+        # at once: every gram of a query (postings) and every delete-1
+        # variant of a typo token (variants). prefixes, wm_words and
+        # champions take one key or word per probe, hold large row
+        # groups and sit behind result caches; caching their row groups
+        # too cost ~15 MB (4-5%) more driver RSS on perfbench search for
+        # no latency gain
+        self._rg_cache = _RowGroupCache(self.ROW_GROUP_CACHE_BYTES)
 
-        def point(table: str, key: str, n_buckets: int = 0, exact: bool = True):
+        def point(table: str, key: str, n_buckets: int = 0, exact: bool = True, cache=None):
             # aux tables are optional (build_index(aux=False), delta
             # segments); the reader lists a table's files on first use
             path = os.path.join(index_dir, table)
             if not os.path.isdir(path):
                 return None
-            return _KeyedPointReader(table, path, key, self._pool, n_buckets, exact)
+            return _KeyedPointReader(table, path, key, self._pool, n_buckets, exact, cache)
 
         self._postings_point = _KeyedPointReader(
-            "postings", os.path.join(index_dir, "postings"), "term", self._pool, self.n_buckets
+            "postings", os.path.join(index_dir, "postings"), "term", self._pool,
+            self.n_buckets, cache=self._rg_cache,
         )
         self._wm_point = point("wm_words", "word", self._wm_buckets)
         self._prefix_point = point("prefixes", "prefix")
-        self._variant_point = point("variants", "variant")
+        self._variant_point = point("variants", "variant", cache=self._rg_cache)
         self._pp_point = point("prefix_postings", "prefix", exact=False)
         self._champion_point = point("champions", "prefix")
         self.has_short_query_tables = all(
@@ -877,11 +985,16 @@ class IndexReader:
     # ------------------------------------------------------------- fetch
 
     TERM_CACHE_MAX_POSTINGS = 20_000_000  # ~total cached doc-id count
+    # decoded point-read row groups kept per reader (the perfbench 20k
+    # base's whole postings table is 14 MB as Arrow)
+    ROW_GROUP_CACHE_BYTES = 32 << 20
 
     def fetch_terms(self, terms: list[str]) -> dict[str, TermPostings]:
         """Term rows with a bounded postings cache in front of the parquet
         point reads (the columnar analogue of the reference's mmap'd
-        segments staying in the OS page cache). Misses are cached too."""
+        segments staying in the OS page cache). Misses are cached too. A
+        term-cache miss whose row group an earlier probe decoded takes
+        its row from the reader's row-group cache."""
         if not terms:
             return {}
         cache = self._term_cache
@@ -957,11 +1070,12 @@ class IndexReader:
         self.sq_meta()
 
     def close(self) -> None:
-        """Release prewarm resources: the read pool's threads and every
+        """Release prewarm resources: the read pool's threads, every
         cached ParquetFile handle / in-RAM key column (ADVICE r6: one fd
         per cached postings/wm/prefix file, so many prewarmed segment
-        readers could approach the default fd ulimit). The reader stays
-        usable — point structures reload lazily on the next query."""
+        readers could approach the default fd ulimit) and the decoded
+        row-group cache. The reader stays usable — point structures
+        reload lazily on the next query."""
         if self._read_pool is not None:
             self._read_pool.shutdown(wait=False)
             self._read_pool = None
@@ -1038,8 +1152,11 @@ class IndexReader:
 
     def short_query_rows(self, prefix: str):
         """(doc_id, first_pos, n_ws, n_exact, first_exact, n_tokens,
-        tiny_text, doc_key) rows for short-query resolution, or None when
-        only the champion list is stored (hot prefix)."""
+        tiny_text, doc_key) arrays for short-query resolution, or None
+        when only the champion list is stored (hot prefix). n_tokens and
+        tiny_text come from the in-memory sq_meta columns (tiny_text
+        '<U3', NUL where null), else from a doc_meta read (object, None
+        where null)."""
         if self._pp_point is None:
             return None
         cols = ["doc_id", "first_pos", "n_ws", "n_exact", "first_exact"]
@@ -1050,23 +1167,30 @@ class IndexReader:
             return {} if self.prefix_count(prefix) == 0 else None
         tbl = pa.concat_tables(tbls)
         doc_ids = tbl["doc_id"].to_numpy()
-        meta = self._doc_meta.to_table(
-            filter=ds.field("doc_id").isin(doc_ids.tolist())
-        )
-        m_ids = meta["doc_id"].to_numpy()
-        order = np.argsort(m_ids)
-        pos = np.searchsorted(m_ids[order], doc_ids)
-        _, keys = self.doc_lengths(np.sort(doc_ids))
-        key_of = dict(zip(np.sort(doc_ids).tolist(), keys.tolist()))
+        meta = self.sq_meta()
+        if meta is not None:
+            pos = np.searchsorted(meta["ids"], doc_ids)
+            n_tokens, tiny = meta["n_tokens"][pos], meta["tiny"][pos]
+        else:
+            got = self._doc_meta.to_table(
+                columns=["doc_id", "n_tokens", "tiny_text"],
+                filter=ds.field("doc_id").isin(doc_ids.tolist()),
+            )
+            m_ids = got["doc_id"].to_numpy()
+            order = np.argsort(m_ids)
+            pos = order[np.searchsorted(m_ids[order], doc_ids)]
+            n_tokens = got["n_tokens"].to_numpy()[pos]
+            tiny = np.array(got["tiny_text"].to_pylist(), dtype=object)[pos]
+        _, keys = self.doc_lengths(doc_ids)
         return {
             "doc_id": doc_ids,
             "first_pos": tbl["first_pos"].to_numpy(),
             "n_ws": tbl["n_ws"].to_numpy(),
             "n_exact": tbl["n_exact"].to_numpy(),
             "first_exact": tbl["first_exact"].to_numpy(zero_copy_only=False),
-            "n_tokens": meta["n_tokens"].to_numpy()[order][pos],
-            "tiny_text": np.array(meta["tiny_text"].to_pylist(), dtype=object)[order][pos],
-            "doc_key": np.array([key_of[int(d)] for d in doc_ids], dtype=np.int64),
+            "n_tokens": n_tokens,
+            "tiny_text": tiny,
+            "doc_key": keys,
         }
 
     def champion_list(self, prefix: str) -> list[tuple[int, float]]:
@@ -2324,9 +2448,10 @@ class QueryExecutor:
     def _short_query(self, q: str, k: int) -> list[tuple[int, float]]:
         """1-3 char queries: positional-prefix resolution (D10) with the
         reference's precedence/base scoring; champion list fallback for
-        hot prefixes whose full rows are not stored."""
-        from infidex_spark.kernel.engine import short_query_score
-
+        hot prefixes whose full rows are not stored. The rows score and
+        consolidate as arrays: kernel.engine.short_query_score per row
+        and segmenter.consolidate over the hits, bit for bit (both stay
+        the oracle, parity-tested)."""
         tomb = self.r.tombstones
         rows = self.r.short_query_rows(q)
         if rows is None:
@@ -2334,24 +2459,34 @@ class QueryExecutor:
             return [(d, s) for d, s in champs if d not in tomb][:k]
         if not rows or rows["doc_id"].size == 0:
             return []
-        out = []
-        for i in range(rows["doc_id"].size):
-            key = int(rows["doc_key"][i])
-            if key in tomb:
-                continue
-            score = short_query_score(
-                q,
-                int(rows["first_pos"][i]),
-                int(rows["n_ws"][i]),
-                int(rows["n_exact"][i]),
-                bool(rows["first_exact"][i]),
-                int(rows["n_tokens"][i]),
-                rows["tiny_text"][i],
-            )
-            out.append((key, float(score)))
-        from infidex_spark.build.segmenter import consolidate
-
-        return consolidate(out, k)
+        keys = rows["doc_key"]
+        live = slice(None)
+        if tomb:
+            live = ~np.isin(keys, np.fromiter(tomb, dtype=np.int64, count=len(tomb)))
+            keys = keys[live]
+            if keys.size == 0:
+                return []
+        first_pos = rows["first_pos"][live].astype(np.int64)
+        # null first_exact counts as False, as bool(None) does
+        first_exact = np.asarray(rows["first_exact"][live], dtype=bool)
+        prec = (
+            128
+            | np.where(first_pos == 0, 64, 0)
+            | np.where((rows["n_exact"][live] > 0) | (rows["n_tokens"][live] <= 3), 32, 0)
+            | np.where(first_exact, 16, 0)
+            | np.where(rows["tiny_text"][live] == q, 8, 0)
+        )
+        pos_component = 255 - np.minimum(first_pos * 16, 240)
+        density = np.minimum(rows["n_ws"][live].astype(np.int64) * 8, 32)
+        scores = (prec << 8) | np.clip(pos_component + density, 0, 255)
+        # consolidate: best score per key, then (score desc, key asc)
+        order = np.lexsort((-scores, keys))
+        keys, scores = keys[order], scores[order]
+        first = np.ones(keys.size, dtype=bool)
+        first[1:] = keys[1:] != keys[:-1]
+        keys, scores = keys[first], scores[first]
+        top = np.lexsort((keys, -scores))[:k]
+        return [(int(keys[i]), float(scores[i])) for i in top]
 
     def _fuzzy_union(self, token: str) -> TermPostings | None:
         """LD1 virtual term: union of matching terms' doc lists, tf=1

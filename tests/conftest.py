@@ -22,6 +22,18 @@ REFERENCE_DOCS: list[tuple[int, str]] = [
     (10, "The Flash runs at incredible speeds"),
 ]
 
+# the two-delta index: BATCH1 built as main, BATCH2 and BATCH3 appended
+# as deltas, then one key tombstoned in each segment
+BATCH1 = REFERENCE_DOCS[:5]
+BATCH2 = REFERENCE_DOCS[5:]
+BATCH3 = [
+    (11, "Foxes hunt at the theatre in the city"),
+    (12, "Baking bread on a sunny Thursday"),
+    (13, "The spa in Spain stays open till two"),
+    (14, "A big bad wolf and a fox"),
+]
+TWO_DELTA_DELETED = (2, 6, 12)
+
 
 @pytest.fixture(scope="session")
 def reference_docs():
@@ -45,3 +57,34 @@ def spark():
     s = get_spark(app_name="infidex-tests", cpus=4, shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def built(spark, tmp_path_factory):
+    """One segment over REFERENCE_DOCS (doc ids 0-9), 4 buckets."""
+    from infidex_spark.build.indexer import build_index
+
+    d = str(tmp_path_factory.mktemp("fetch") / "idx")
+    docs = [(i, key, text) for i, (key, text) in enumerate(REFERENCE_DOCS)]
+    df = spark.createDataFrame(docs, "doc_id long, doc_key long, text string")
+    build_index(spark, df, d, n_buckets=4)
+    return d
+
+
+@pytest.fixture(scope="session")
+def two_delta_index(spark, tmp_path_factory):
+    """Main + two deltas, one tombstoned key in each segment."""
+    from infidex_spark.build.indexer import build_index
+    from infidex_spark.streaming.incremental import append_delta, delete_docs
+
+    out = str(tmp_path_factory.mktemp("inc2") / "idx")
+    df1 = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(BATCH1)],
+        "doc_id long, doc_key long, text string",
+    )
+    build_index(spark, df1, out, n_buckets=4)
+    for batch_id, batch in ((1, BATCH2), (2, BATCH3)):
+        df = spark.createDataFrame(batch, "doc_key long, text string")
+        append_delta(spark, df, out, batch_id=batch_id, n_buckets=4)
+    delete_docs(out, list(TWO_DELTA_DELETED))
+    return out

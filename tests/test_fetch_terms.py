@@ -17,20 +17,6 @@ import os
 import numpy as np
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-import pytest
-
-from tests.conftest import REFERENCE_DOCS
-
-
-@pytest.fixture(scope="module")
-def built(spark, tmp_path_factory):
-    from infidex_spark.build.indexer import build_index
-
-    d = str(tmp_path_factory.mktemp("fetch") / "idx")
-    docs = [(i, key, text) for i, (key, text) in enumerate(REFERENCE_DOCS)]
-    df = spark.createDataFrame(docs, "doc_id long, doc_key long, text string")
-    build_index(spark, df, d, n_buckets=4)
-    return d
 
 
 def _scan_reference(r, terms):
@@ -143,3 +129,32 @@ def test_stats_mode_parity(built, monkeypatch):
     assert set(got_wm) == set(words) - {"zzzz"}
     assert got_pfx["zz"] == (0, None)
     assert all(got_pfx[p][0] > 0 for p in ("q", "qu", "fo", "bat"))
+
+
+def test_row_group_cache_serves_term_cache_misses(built, monkeypatch):
+    """The reader's row-group cache: a term-cache miss into a row group
+    an earlier probe decoded reads no parquet; the rows equal a fresh
+    reader's; close() empties the cache."""
+    from infidex_spark.query.executor import IndexReader
+
+    terms = ["qui", "uic", "ick", "fox", "bat", "the", "gol", "ld "]
+    want = _materialize(IndexReader(built).fetch_terms(terms))
+    r = IndexReader(built)
+    assert _materialize(r.fetch_terms(terms)) == want
+    cache = r._rg_cache
+    assert len(cache) and 0 < cache.nbytes <= r.ROW_GROUP_CACHE_BYTES
+    r._term_cache.clear()
+    calls = []
+    for name in ("read_row_group", "read_row_groups"):
+        orig = getattr(pq.ParquetFile, name)
+        monkeypatch.setattr(
+            pq.ParquetFile, name,
+            lambda self, *a, _o=orig, _n=name, **kw: calls.append(_n) or _o(self, *a, **kw),
+        )
+    assert _materialize(r.fetch_terms(terms)) == want
+    assert calls == []
+    r.close()
+    assert len(cache) == 0 and cache.nbytes == 0
+    r._term_cache.clear()
+    assert _materialize(r.fetch_terms(terms)) == want  # reloads lazily
+    assert calls

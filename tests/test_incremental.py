@@ -15,30 +15,7 @@ from infidex_spark.streaming.incremental import (
     next_doc_id,
     stream_ingest,
 )
-
-BATCH1 = [
-    (1, "The quick brown fox jumps over the lazy dog"),
-    (2, "A journey of a thousand miles begins with a single step"),
-    (3, "To be or not to be, that is the question"),
-    (4, "All that glitters is not gold"),
-    (5, "The fox was quick and clever in the forest"),
-]
-BATCH2 = [
-    (6, "Batman and Robin fight crime in Gotham City"),
-    (7, "Superman flies faster than a speeding bullet"),
-    (8, "Spider-Man swings through New York City"),
-    (9, "Wonder Woman protects the innocent"),
-    (10, "The Flash runs at incredible speeds"),
-]
-
-BATCH3 = [
-    (11, "Foxes hunt at the theatre in the city"),
-    (12, "Baking bread on a sunny Thursday"),
-    (13, "The spa in Spain stays open till two"),
-    (14, "A big bad wolf and a fox"),
-]
-# tombstoned in the two-delta index: one key per segment
-TWO_DELTA_DELETED = (2, 6, 12)
+from tests.conftest import BATCH1, BATCH2, BATCH3, TWO_DELTA_DELETED
 
 QUERIES = ["batman", "quick fox", "qick fux", "city", "the"]
 
@@ -55,22 +32,6 @@ def incremental_index(spark, tmp_path_factory):
     df2 = spark.createDataFrame(BATCH2, "doc_key long, text string")
     append_delta(spark, df2, out, batch_id=1, n_buckets=4)
     assert next_doc_id(out) == 10
-    return out
-
-
-@pytest.fixture(scope="module")
-def two_delta_index(spark, tmp_path_factory):
-    """Main + two deltas, one tombstoned key in each segment."""
-    out = str(tmp_path_factory.mktemp("inc2") / "idx")
-    df1 = spark.createDataFrame(
-        [(i, k, t) for i, (k, t) in enumerate(BATCH1)],
-        "doc_id long, doc_key long, text string",
-    )
-    build_index(spark, df1, out, n_buckets=4)
-    for batch_id, batch in ((1, BATCH2), (2, BATCH3)):
-        df = spark.createDataFrame(batch, "doc_key long, text string")
-        append_delta(spark, df, out, batch_id=batch_id, n_buckets=4)
-    delete_docs(out, list(TWO_DELTA_DELETED))
     return out
 
 
@@ -120,6 +81,78 @@ def test_multi_segment_short_query_matches_kernel(
         slow._sq_meta = {}  # sq_meta() -> None: the doc_title_rows path
         assert slow.sq_meta() is None
         assert QueryExecutor(slow).search(query, 10) == got, (index, query)
+
+
+def _one_char_oracle(reader, q: str, k: int) -> list[tuple[int, float]]:
+    """The scalar 1-char path: kernel short_query_score per
+    prefix_postings row, then segmenter.consolidate, over rows whose
+    n_tokens/tiny_text come from doc_meta reads (no sq_meta)."""
+    from infidex_spark.build.segmenter import consolidate
+    from infidex_spark.kernel.engine import short_query_score
+
+    for r in getattr(reader, "readers", [reader]):
+        r._sq_meta = {}  # sq_meta() -> None: the doc_meta read
+    rows = reader.short_query_rows(q)
+    if not rows:
+        return []
+    hits = []
+    for i in range(rows["doc_id"].size):
+        key = int(rows["doc_key"][i])
+        if key in reader.tombstones:
+            continue
+        score = short_query_score(
+            q,
+            int(rows["first_pos"][i]),
+            int(rows["n_ws"][i]),
+            int(rows["n_exact"][i]),
+            bool(rows["first_exact"][i]),
+            int(rows["n_tokens"][i]),
+            rows["tiny_text"][i],
+        )
+        hits.append((key, float(score)))
+    return consolidate(hits, k)
+
+
+# 1-3 char titles set the title == query bit (tiny_text); one is
+# tombstoned below
+TINY_DOCS = [(1, "a"), (2, "a b"), (3, "ab"), (4, "b"), (5, "abc d"), (6, "A"), (7, "x"), (8, "b a")]
+
+
+def test_one_char_scoring_matches_scalar_oracle(spark, tmp_path, built, two_delta_index):
+    """1-char queries score their prefix_postings rows as arrays: every
+    1-char prefix of the corpus (and a few absent chars), at k = 1, 10
+    and 100, on one segment, on main + two deltas with a tombstone in
+    each, and on one segment of 1-3 char titles with a tombstone,
+    equals the scalar oracle, on both the sq_meta and the doc_meta
+    data path."""
+    from tests.conftest import REFERENCE_DOCS
+
+    tiny = str(tmp_path / "tiny")
+    df = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(TINY_DOCS)],
+        "doc_id long, doc_key long, text string",
+    )
+    build_index(spark, df, tiny, n_buckets=2)
+    chars = sorted({c for _, t in REFERENCE_DOCS + BATCH3 for c in t.lower() if c.isalnum()})
+    assert len(chars) > 20
+    cases = ((built, IndexReader, ()), (two_delta_index, MultiReader, ()), (tiny, IndexReader, (8,)))
+    for index, reader_cls, tomb in cases:
+        fast = reader_cls(index)
+        assert fast.sq_meta() is not None
+        slow = reader_cls(index)
+        if tomb:
+            fast.tombstones = slow.tombstones = frozenset(tomb)
+        for q in chars + ["0", "q", "x", "é"]:
+            for k in (1, 10, 100):
+                want = _one_char_oracle(slow, q, k)
+                got = QueryExecutor(fast)._short_query(q, k)
+                assert got == want, (index, q, k)
+                assert QueryExecutor(slow)._short_query(q, k) == want, (index, q, k)
+                assert QueryExecutor(fast).search(q, k) == want, (index, q, k)
+    # the title == query bit (8 << 8) fired, and the tombstoned key is gone
+    top = QueryExecutor(IndexReader(tiny))._short_query("b", 10)
+    assert any(int(s) & (8 << 8) for _, s in top) and 8 in {d for d, _ in top}
+    assert 8 not in {d for d, _ in QueryExecutor(fast)._short_query("b", 10)}
 
 
 def test_multireader_sq_meta_is_stitched(two_delta_index):

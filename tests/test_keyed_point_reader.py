@@ -5,8 +5,10 @@ Pure pyarrow tests (no Spark): correctness vs a full scan in both modes
 it), that every fetch holds exactly the probed rows (no row-group
 neighbours), multi-file / multi-row-group selection, duplicate keys
 spanning a row-group boundary, row groups without stats, bucket
-routing, and that an unsorted or unreadable file raises naming the
-table.
+routing, that an unsorted or unreadable file raises naming the table,
+and the decoded row-group cache: cached reads equal uncached ones, a
+repeated fetch reads no parquet, the byte budget holds, close() empties
+it and footer-mode reads never enter it.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
 
-from infidex_spark.query.executor import _KeyedPointReader, term_bucket
+from infidex_spark.query.executor import _KeyedPointReader, _RowGroupCache, term_bucket
 
 
 def _write(dirpath: str, name: str, keys: list[str], row_group_size: int, **kw):
@@ -34,8 +36,10 @@ def _write(dirpath: str, name: str, keys: list[str], row_group_size: int, **kw):
 _READ_POOL = ThreadPoolExecutor(max_workers=2)
 
 
-def _reader(table: str, path: str, n_buckets: int = 0) -> _KeyedPointReader:
-    return _KeyedPointReader(table, path, "k", lambda: _READ_POOL, n_buckets)
+def _reader(
+    table: str, path: str, n_buckets: int = 0, cache=None, exact: bool = True
+) -> _KeyedPointReader:
+    return _KeyedPointReader(table, path, "k", lambda: _READ_POOL, n_buckets, exact, cache)
 
 
 def _rows(tbls, keys) -> list[tuple[str, int]]:
@@ -246,3 +250,130 @@ def test_inexact_reader_keeps_footer_intervals(kp_dir):
     pr.load()
     assert all(e[2] is None for e in pr._groups[0])
     assert _rows(pr.fetch(probes, ["k", "v"]), probes) == want
+
+
+def _ordered(tbls) -> list[tuple[str, int]]:
+    """The fetched (key, value) rows in the order fetch returned them."""
+    return [(k, v) for t in tbls for k, v in zip(t["k"].to_pylist(), t["v"].to_pylist())]
+
+
+@pytest.fixture()
+def runs_dir(tmp_path):
+    """Duplicate key runs across row groups and across files."""
+    d = str(tmp_path / "runs")
+    _write(d, "a.parquet", ["a"] * 3 + ["b"] * 4 + ["c"] * 2 + ["d"], 2)
+    _write(d, "b.parquet", ["a"] * 2 + ["c"] * 5 + ["e"] * 3, 3)
+    return d
+
+
+def _count_reads(monkeypatch) -> list[str]:
+    calls: list[str] = []
+    for name in ("read_row_group", "read_row_groups"):
+        orig = getattr(pq.ParquetFile, name)
+
+        def counted(self, *a, _orig=orig, _name=name, **kw):
+            calls.append(_name)
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(pq.ParquetFile, name, counted)
+    return calls
+
+
+def test_cached_fetches_equal_uncached(kp_dir, runs_dir):
+    """Repeated and overlapping fetches through a cache return the rows
+    an uncached reader returns, in the same order, including duplicate
+    key runs that cross row groups and files."""
+    stream = [
+        (kp_dir, ["k000", "k051", "k099"]),
+        (kp_dir, ["k051", "k052", "k053", "kzzz"]),
+        (kp_dir, ["k000", "k051", "k099"]),
+        (kp_dir, [f"k{i:03d}" for i in range(0, 100, 5)]),
+        (runs_dir, ["c", "a"]),
+        (runs_dir, ["a"]),
+        (runs_dir, ["b", "c", "e"]),
+        (runs_dir, ["c", "a"]),
+        (runs_dir, ["d", "e", "zz"]),
+    ]
+    cache = _RowGroupCache(1 << 20)
+    cached = {d: _reader("t", d, cache=cache) for d in (kp_dir, runs_dir)}
+    for d, probes in stream:
+        want = _ordered(_reader("t", d).fetch(probes, ["k", "v"]))
+        got = cached[d].fetch(probes, ["k", "v"])
+        assert all(t.num_rows for t in got)
+        assert _ordered(got) == want, probes
+        # another column set is its own cache entry
+        only_v = cached[d].fetch(probes, ["v"])
+        assert all(t.column_names == ["v"] for t in only_v)
+        assert [v for t in only_v for v in t["v"].to_pylist()] == [v for _, v in want]
+    assert len(cache) and cache.nbytes <= cache.budget
+
+
+def test_repeated_fetch_reads_nothing(runs_dir, monkeypatch):
+    calls = _count_reads(monkeypatch)
+    cache = _RowGroupCache(1 << 20)
+    pr = _reader("t", runs_dir, cache=cache)
+    first = _ordered(pr.fetch(["a", "c"], ["k", "v"]))
+    assert calls  # the cold fetch reads
+    n = len(cache)
+    calls.clear()
+    assert _ordered(pr.fetch(["a", "c"], ["k", "v"])) == first
+    # a probe into a row group already decoded (d shares c's last one)
+    assert _ordered(pr.fetch(["d"], ["k", "v"])) == [("d", 9)]
+    assert calls == [] and len(cache) == n
+
+
+def test_budget_below_one_row_group(runs_dir, kp_dir, monkeypatch):
+    """A budget no row group fits in keeps nothing and changes no row;
+    a budget of about two row groups evicts the least recently used."""
+    probes = ["a", "b", "c", "e"]
+    want = _ordered(_reader("t", runs_dir).fetch(probes, ["k", "v"]))
+    tiny = _RowGroupCache(1)
+    pr = _reader("t", runs_dir, cache=tiny)
+    for _ in range(2):
+        assert _ordered(pr.fetch(probes, ["k", "v"])) == want
+    assert len(tiny) == 0 and tiny.nbytes == 0
+
+    size = pq.ParquetFile(os.path.join(kp_dir, "a.parquet")).read_row_group(
+        0, columns=["k", "v"]
+    ).get_total_buffer_size()
+    small = _RowGroupCache(2 * size + size // 2)
+    pr = _reader("t", kp_dir, cache=small)
+    for key in ["k000", "k020", "k040"]:  # three row groups of a.parquet
+        pr.fetch([key], ["k", "v"])
+        assert small.nbytes <= small.budget
+    assert len(small) == 2
+    calls = _count_reads(monkeypatch)
+    assert _ordered(pr.fetch(["k040"], ["k", "v"])) == [("k040", 20)]
+    assert calls == []  # the newest group stayed
+    assert _ordered(pr.fetch(["k000"], ["k", "v"])) == [("k000", 0)]
+    assert calls  # the oldest was evicted
+
+
+def test_close_empties_cache(kp_dir, runs_dir):
+    """A reader's close() drops its own row groups from a shared cache."""
+    cache = _RowGroupCache(1 << 20)
+    a = _reader("a", kp_dir, cache=cache)
+    b = _reader("b", runs_dir, cache=cache)
+    a.fetch(["k000", "k051"], ["k", "v"])
+    b.fetch(["c"], ["k", "v"])
+    a.fetch(["k099"], ["k", "v"])
+    b_bytes = sum(size for key, (_, size) in cache._tbls.items() if key[0] == runs_dir)
+    assert 0 < b_bytes < cache.nbytes
+    a.close()
+    assert cache.nbytes == b_bytes and all(k[0] == runs_dir for k in cache._tbls)
+    b.close()
+    assert len(cache) == 0 and cache.nbytes == 0
+    assert _rows(a.fetch(["k051"], ["k", "v"]), ["k051"]) == [("k051", 25)]
+
+
+def test_footer_mode_never_caches(kp_dir, monkeypatch):
+    probes = ["k000", "k051", "k099"]
+    want = _rows(_reader("t", kp_dir).fetch(probes, ["k", "v"]), probes)
+    cache = _RowGroupCache(1 << 20)
+    inexact = _reader("t", kp_dir, cache=cache, exact=False)
+    assert _rows(inexact.fetch(probes, ["k", "v"]), probes) == want
+    # an exact reader whose groups are past the key-column budget
+    monkeypatch.setattr(_KeyedPointReader, "MAX_ROWS", 0)
+    over = _reader("t", kp_dir, cache=cache)
+    assert _rows(over.fetch(probes, ["k", "v"]), probes) == want
+    assert len(cache) == 0
