@@ -53,6 +53,10 @@ Dataflow:
             doc_store.arrow), wm_words/, sq_words1/, words/, words_rev/,
             word_variants/, variants/, term_dict/, with short_precompute
             char_terms/, pattern_scores/ (+ .arrow) and sq_topk/ — plus
+            the key dictionaries <table>.keys.arrow of postings,
+            wm_words, prefixes, variants and champions (build/keydict.py,
+            written by build_index's own process after each table's
+            Spark write),
             MANIFEST.json and checkpoints/ (per-bucket lineage + metrics
             rows)
 
@@ -97,6 +101,7 @@ from pyspark.sql import types as T
 
 from infidex_spark.build.codec import FORMAT_VERSION, encode_postings_batch
 from infidex_spark.build.jobs import JobGraph
+from infidex_spark.build.keydict import KEY_DICT_SUFFIX, write_key_dict
 from infidex_spark.kernel.engine import DEFAULT_FIELD_WEIGHT, DEFAULT_STOP_TERM_LIMIT
 from infidex_spark.kernel.strings import factorize_strings
 from infidex_spark.kernel.tokenize import DEFAULT_INDEX_SIZES, DEFAULT_START_PAD
@@ -144,6 +149,7 @@ INDEX_TABLES = (
     "prefixes", "prefix_postings", "champions", "doc_meta", "doc_store.arrow",
     "wm_words", "sq_words1", "words", "words_rev", "word_variants",
     "variants", "term_dict", "char_terms", "pattern_scores",
+    *(t + KEY_DICT_SUFFIX for t in ("postings", "wm_words", "prefixes", "variants", "champions")),
     "pattern_scores.arrow", "sq_topk", "sq_fuzzy",
 )
 
@@ -1064,6 +1070,15 @@ def build_index(
             post_jobs.append((todo, j_post))
         j_postings = j_post or j_stop
 
+        # each exact-mode point-read table's key dictionary
+        # (build/keydict.py), written by this process with pyarrow once
+        # the table's Spark write is done: no Spark job
+        def key_dict(table: str, key: str, buckets=lambda agg: 0, extra=()):
+            return lambda _, agg: write_key_dict(
+                os.path.join(out_dir, table), key, buckets(agg), extra)
+
+        graph.add("key_dicts", key_dict("postings", "term", lambda _: n_buckets), (j_postings, j_agg))
+
         if aux:
             # doc-derived jobs filter the materialized stream by kind
             def words(tok: DataFrame) -> DataFrame:
@@ -1084,7 +1099,9 @@ def build_index(
                     words(tok).filter(len_filter), os.path.join(out_dir, table),
                     layout_buckets(agg["n"])[table])
 
-            graph.add("wm_words", word_lists("wm_words", F.length("word") >= 2), (j_tok, j_agg))
+            j_wm = graph.add("wm_words", word_lists("wm_words", F.length("word") >= 2), (j_tok, j_agg))
+            graph.add("key_dicts", key_dict(
+                "wm_words", "word", lambda agg: layout_buckets(agg["n"])["wm_words"]), (j_wm, j_agg))
             graph.add("sq_words1", word_lists("sq_words1", F.length("word") == 1), (j_tok, j_agg))
             # three jobs, one description: words, then words_rev and
             # word_variants side by side from the written words table
@@ -1093,14 +1110,18 @@ def build_index(
             graph.add("word_tables", lambda _: _write_word_variants(spark, out_dir), (j_words,))
             j_meta = graph.add("doc_meta", lambda tok: _write_doc_meta(meta_rows(tok), out_dir), (j_tok,))
             for write in (_write_prefixes, _write_prefix_postings):
-                graph.add("prefix_lists", lambda tok, agg, write=write: write(
+                j_pre = graph.add("prefix_lists", lambda tok, agg, write=write: write(
                     prefix_pairs(tok), out_dir, max_prefix_docs, agg["n"]), (j_tok, j_agg))
+                if write is _write_prefixes:
+                    graph.add("key_dicts", key_dict("prefixes", "prefix", extra=("n_docs",)), (j_pre, j_agg))
             j_store = graph.add("doc_store", lambda _: _write_doc_store(out_dir), (j_meta,))
-            graph.add("champions", lambda tok, agg: _build_champions(
+            j_champ = graph.add("champions", lambda tok, agg: _build_champions(
                 prefix_pairs(tok), meta_rows(tok), agg, out_dir), (j_tok, j_agg))
+            graph.add("key_dicts", key_dict("champions", "prefix"), (j_champ, j_agg))
             # postings-derived jobs overlap the doc-derived jobs' tails
-            graph.add("variants_dict", lambda _: _build_variants(
+            j_var = graph.add("variants_dict", lambda _: _build_variants(
                 spark, postings_path, out_dir), (j_postings,))
+            graph.add("key_dicts", key_dict("variants", "variant"), (j_var, j_agg))
             graph.add("term_dict", lambda _: (
                 _read_postings(spark, postings_path).select("term", "df").orderBy("term")
                 .write.mode("overwrite").parquet(os.path.join(out_dir, "term_dict"))
@@ -1643,13 +1664,31 @@ DOC_STORE_CAP = 20_000_000  # rows; above this, query nodes use the
 # text from a distributed store, not a single mmap file)
 
 
+def _fixed_u3(col: pa.ChunkedArray) -> pa.Array:
+    """A string column of <= 3-char values as numpy '<U3' bytes (UTF-32,
+    12 bytes a value) in a fixed_size_binary(12) column, which a reader
+    views without a copy; a null stays null (validity bitmap, zeroed
+    bytes)."""
+    col = col.combine_chunks()
+    u3 = col.fill_null("").to_numpy(zero_copy_only=False).astype("<U3")
+    valid = None
+    if col.null_count:
+        valid = pa.py_buffer(np.packbits(col.is_valid().to_numpy(zero_copy_only=False), bitorder="little"))
+    return pa.FixedSizeBinaryArray.from_buffers(
+        pa.binary(12), len(u3), [valid, pa.py_buffer(u3.tobytes())], col.null_count
+    )
+
+
 def _write_doc_store(out_dir: str) -> None:
-    """Uncompressed Arrow IPC file (doc_id-sorted) next to doc_meta: the
-    query node memory-maps it and random-accesses candidate texts with
-    .take() — the columnar analogue of the reference's mmap'd
-    IndexedText segments (point parquet fetches re-scan row groups; the
-    rerank's ~500-candidate text fetch was its largest cold cost)."""
-    import pyarrow as pa
+    """Uncompressed Arrow IPC file (doc_id-sorted, one record batch) next
+    to doc_meta: the query node memory-maps it and random-accesses
+    candidate texts with .take() — the columnar analogue of the
+    reference's mmap'd IndexedText segments (point parquet fetches
+    re-scan row groups; the rerank's ~500-candidate text fetch was its
+    largest cold cost). It also holds the short-query precedence
+    columns as fixed-width values (n_tokens int64; tiny, first3 and
+    first_word3 as '<U3' bytes, tiny null where tiny_text is), so a
+    reader's sq_meta() is views over the map, not a doc_meta read."""
     import pyarrow.parquet as pq
 
     meta_path = os.path.join(out_dir, "doc_meta")
@@ -1664,11 +1703,21 @@ def _write_doc_store(out_dir: str) -> None:
     )
     if n_rows > DOC_STORE_CAP:
         return
-    tbl = pq.read_table(meta_path, columns=["doc_id", "text"])
+    tbl = pq.read_table(
+        meta_path, columns=["doc_id", "text", "n_tokens", "tiny_text", "first3", "first_word3"]
+    )
     # sorted by doc_id so the reader's open is a plain mmap (it would
     # otherwise pay an O(n log n) argsort per fresh executor — ~100 ms
     # at 1M docs on the rerank cold path)
-    tbl = tbl.sort_by("doc_id").combine_chunks()
+    tbl = tbl.sort_by("doc_id")
+    tbl = pa.table({
+        "doc_id": tbl["doc_id"],
+        "text": tbl["text"],
+        "n_tokens": tbl["n_tokens"],
+        "tiny": _fixed_u3(tbl["tiny_text"]),
+        "first3": _fixed_u3(tbl["first3"]),
+        "first_word3": _fixed_u3(tbl["first_word3"]),
+    }).combine_chunks()
     with pa.OSFile(os.path.join(out_dir, "doc_store.arrow"), "wb") as sink:
         with pa.ipc.new_file(sink, tbl.schema) as writer:
             writer.write_table(tbl)

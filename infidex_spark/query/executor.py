@@ -2,9 +2,10 @@
 
 The index is a set of parquet tables written by build_index; per query we
 fetch only the handful of term rows the query needs (one keyed point
-reader: bucket routing plus a sorted in-RAM term column pins each term's
-exact parquet row group, the columnar analogue of the reference's FST
-term dictionary over mmap'd segments), decode postings with the numpy
+reader: bucket routing plus the sorted key dictionary the build wrote,
+memory-mapped at open, pins each term's exact parquet row group, the
+columnar analogue of the reference's FST term dictionary over mmap'd
+segments), decode postings with the numpy
 codec, and run the same candidate selection + exact float32 BM25+
 scoring as the kernel oracle. WAND-style block skipping (block_max_w
 metadata) is applied on the disjunctive path; it is lossless, so results
@@ -19,9 +20,8 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import zlib
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from functools import cached_property
 import numpy as np
 import pyarrow as pa
@@ -30,6 +30,7 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
 from infidex_spark.build.codec import BLOCK_SIZE, FORMAT_VERSION, decode_postings
+from infidex_spark.build.keydict import KEY_DICT_MAX_ROWS, corrupt, key_dict_path, table_files
 from infidex_spark.kernel.bm25 import compute_idf, term_max_score, term_score
 from infidex_spark.kernel.normalize import normalize
 from infidex_spark.kernel.tokenize import search_tokens, word_tokens
@@ -47,6 +48,11 @@ def _list_views(col):
     )
     offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
     return flat, offs
+
+
+def _one_chunk(col: pa.ChunkedArray) -> pa.Array:
+    """The column as one array: its only chunk, zero-copy."""
+    return col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
 
 
 def term_bucket(term: str, n_buckets: int) -> int:
@@ -158,18 +164,22 @@ class _KeyedPointReader:
 
     A bucketed table's files group by their hive bucket=N directory and
     a probe routes to term_bucket(key, n_buckets); a flat table is one
-    group. Nothing is read at construction: the table's files are
-    listed on first use, and a group's sorted key columns load lazily
-    (or all at once by load()). Each file keeps its distinct sorted keys
-    and the row where each key's run starts: an in-RAM sorted
-    dictionary, the columnar analogue of the reference's FST term
-    dictionary (term -> postings offset; here searchsorted pins a
-    probe's exact rows [lo, hi), duplicates included). fetch() reads
-    only the row groups holding those rows, through cached file handles,
-    one row group at a time, and takes exactly those rows out of them by
-    offset: footer [min,max] stats cannot tell which of several
-    interleaved sorted files owns a key, and pyarrow <=16 does not prune
-    row groups on isin filters.
+    group. Nothing is read at construction. On first use (or load()) an
+    exact-mode reader lists the table's files and memory-maps the key
+    dictionary the build wrote next to the table (build/keydict.py:
+    every file's keys in row order and its row groups' row counts), as
+    the reference maps the FST term dictionary its segment writer laid
+    out at flush. A group's keys become numpy arrays when it is first
+    probed, or all at once by load(); no parquet file is opened for
+    that. Each file keeps its distinct sorted keys and the row where
+    each key's run starts: searchsorted pins a probe's exact rows
+    [lo, hi), duplicates included. A file's ParquetFile opens on the
+    first fetch that reads it, on the calling thread, and fetch() reads
+    only the row groups holding the probed rows, one row group at a
+    time, and takes exactly those rows out of them by offset: footer
+    [min,max] stats cannot tell which of several interleaved sorted
+    files owns a key, and pyarrow <=16 does not prune row groups on
+    isin filters.
 
     A reader given a _RowGroupCache (IndexReader hands one to its
     postings and variants readers, with a byte budget of
@@ -181,24 +191,27 @@ class _KeyedPointReader:
     read pool; the cache changes only on the calling thread, after they
     return.
 
-    MAX_ROWS/MAX_FILES bound the key columns one reader holds. A group
+    MAX_ROWS/MAX_FILES bound the key arrays one reader holds. A group
     past the budget (a huge vocabulary, a reader over many segments),
-    or any group of a reader built with exact=False, keeps its row
+    a group of a table whose dictionary holds no keys (over
+    keydict.KEY_DICT_MAX_ROWS rows), or any group of a reader built with
+    exact=False, opens its files when first probed, keeps their row
     groups' footer [min,max] intervals instead, reads every row group
     whose interval covers a probe (and every row group without stats)
     and filters the rows with is_in. Both modes return exactly the
     probed rows, in file and row order. exact=False suits a table whose
     keys run over whole row groups (prefix_postings: one row per
     (prefix, doc)), where the intervals already pin a probe's rows and
-    the key column is costly to load for what it adds. Footer-mode reads
-    are never cached.
+    the build writes no dictionary. Footer-mode reads are never cached.
 
-    FORMAT_VERSION fixes the layout, so a file that cannot be read, is
-    not sorted by the key, or sits outside a bucket=N directory of a
-    bucketed table means a corrupt index: ValueError naming the table
-    and the file."""
+    FORMAT_VERSION fixes the layout, so a corrupt index raises
+    ValueError naming the table: a file that cannot be read, is not
+    sorted by the key, or sits outside a bucket=N directory of a
+    bucketed table; a key dictionary that is missing or cut, lists
+    other files than the table holds, or whose row-group counts differ
+    from a file's footer (checked when that file opens)."""
 
-    MAX_ROWS = 4_000_000
+    MAX_ROWS = KEY_DICT_MAX_ROWS
     MAX_FILES = 512
 
     def __init__(
@@ -221,83 +234,138 @@ class _KeyedPointReader:
         self.close()
 
     def close(self) -> None:
-        """Drop cached ParquetFile handles, key columns and this table's
-        cached row groups (handles close on GC) and restore the budget;
-        the reader reloads lazily if used again."""
+        """Drop the mapped key dictionary, key arrays, ParquetFile
+        handles (they close on GC) and this table's cached row groups,
+        and restore the budget; the reader reloads lazily if used
+        again."""
         if self._cache is not None:
             self._cache.drop(self._path)
-        self._files: dict[int, list[str]] | None = None
-        # group -> [(path, ParquetFile, distinct sorted keys, (run starts,
-        # row-group start offsets)) | (path, ParquetFile, None, (mins,
-        # maxs, no_stats))]
+        # group -> [(path, the file's row in the key dictionary)]
+        self._files: dict[int, list[tuple[str, int]]] | None = None
+        self._dict: dict | None = None  # the mapped key dictionary
+        self._pfs: dict[str, pq.ParquetFile] = {}  # opened on first read
+        # group -> [(path, dictionary row, distinct sorted keys, (run
+        # starts, row-group start offsets)) | (path, dictionary row,
+        # None, (mins, maxs, no_stats))]
         self._groups: dict[int, list[tuple]] = {}
         self._rows_left = self.MAX_ROWS if self._exact else 0
         self._files_left = self.MAX_FILES
 
     def _corrupt(self, path: str, why) -> ValueError:
-        return ValueError(f"index table {self.table!r} is corrupt: {path}: {why}")
+        return corrupt(self.table, path, why)
 
-    def _group_files(self) -> dict[int, list[str]]:
+    def _group_files(self) -> dict[int, list[tuple[str, int]]]:
         if self._files is None:
-            try:
-                paths = ds.dataset(self._path).files
-            except (OSError, pa.ArrowException) as exc:
-                raise self._corrupt(self._path, exc) from exc
-            files: dict[int, list[str]] = {}
-            for path in paths:
-                g = 0
-                if self._n_buckets:
-                    m = re.fullmatch(r"bucket=(\d+)", os.path.basename(os.path.dirname(path)))
-                    if m is None:
-                        raise self._corrupt(path, "not in a bucket=N directory")
-                    g = int(m.group(1))
-                files.setdefault(g, []).append(path)
+            groups = table_files(self.table, self._path, self._n_buckets)
+            if self._exact:
+                self._map_dict([g for g, paths in groups.items() for _ in paths])
+            files, i = {}, 0
+            for g, paths in groups.items():
+                files[g] = [(p, i + j) for j, p in enumerate(paths)]
+                i += len(paths)
             self._files = files
         return self._files
+
+    def _map_dict(self, listed: list[int]) -> None:
+        """Map the key dictionary; listed is the table's files' groups
+        in table_files order, which the dictionary's rows must match."""
+        path = key_dict_path(self._path)
+        try:
+            tbl = pa.ipc.open_file(pa.memory_map(path)).read_all()
+            cols = {c: tbl[c].combine_chunks() for c in tbl.column_names}
+            keys, rgs = cols.pop("keys"), cols.pop("row_groups")
+            buckets = cols.pop("bucket").to_numpy(zero_copy_only=False)
+        except (OSError, pa.ArrowException, KeyError) as exc:
+            raise self._corrupt(path, exc) from exc
+        if buckets.tolist() != listed:
+            raise self._corrupt(
+                path,
+                f"files per group {dict(Counter(buckets.tolist()))} are not "
+                f"the table's {dict(Counter(listed))}",
+            )
+        self._dict = {
+            "keys": keys.values,  # every file's keys, flat
+            "has_keys": keys.null_count == 0,
+            "key_offs": keys.offsets.to_numpy().astype(np.int64),
+            "rg": rgs.values.to_numpy(),
+            "rg_offs": rgs.offsets.to_numpy().astype(np.int64),
+            # extra row-aligned columns (prefixes: n_docs), flat
+            "extra": {c: col.values.to_numpy() for c, col in cols.items()},
+        }
+
+    def _rg_rows(self, i: int) -> np.ndarray | None:
+        """The dictionary's row-group row counts of file i; None
+        without a dictionary."""
+        d = self._dict
+        return None if d is None else d["rg"][d["rg_offs"][i] : d["rg_offs"][i + 1]]
+
+    def _open(self, path: str, i: int):
+        """The file's ParquetFile, opened once, on the calling thread;
+        its row groups must be the ones the key dictionary records."""
+        pf = self._pfs.get(path)
+        if pf is None:
+            try:
+                pf = pq.ParquetFile(path)
+            except (OSError, pa.ArrowException) as exc:
+                raise self._corrupt(path, exc) from exc
+            want = self._rg_rows(i)
+            md = pf.metadata
+            got = [md.row_group(j).num_rows for j in range(md.num_row_groups)]
+            if want is not None and got != want.tolist():
+                raise self._corrupt(
+                    path,
+                    f"{len(got)} row groups of {sum(got)} rows; the key dictionary "
+                    f"records {want.size} of {int(want.sum())}",
+                )
+            self._pfs[path] = pf
+        return pf
 
     def _group(self, g: int) -> list[tuple]:
         got = self._groups.get(g)
         if got is not None:
             return got
-        paths = self._group_files().get(g, [])
-        pfs = []
-        for path in paths:
-            try:
-                pfs.append(pq.ParquetFile(path))
-            except (OSError, pa.ArrowException) as exc:
-                raise self._corrupt(path, exc) from exc
-        rows = sum(pf.metadata.num_rows for pf in pfs)
-        exact = rows <= self._rows_left and len(pfs) <= self._files_left
-        if exact:
-            self._rows_left -= rows
-            self._files_left -= len(pfs)
-        got = [self._entry(path, pf, exact) for path, pf in zip(paths, pfs)]
+        files = self._group_files().get(g, [])
+        d = self._dict
+        got = None
+        if d is not None and d["has_keys"] and files:
+            offs = d["key_offs"]
+            a, b = int(offs[files[0][1]]), int(offs[files[-1][1] + 1])
+            if b - a <= self._rows_left and len(files) <= self._files_left:
+                self._rows_left -= b - a
+                self._files_left -= len(files)
+                keys = d["keys"].slice(a, b - a).to_numpy(zero_copy_only=False)
+                got = [
+                    self._entry(path, i, keys[offs[i] - a : offs[i + 1] - a])
+                    for path, i in files
+                ]
+        if got is None:
+            got = [self._footer_entry(path, i) for path, i in files]
         self._groups[g] = got
         return got
 
-    def _entry(self, path: str, pf, exact: bool) -> tuple:
-        md = pf.metadata
-        if exact:
-            try:
-                keys = pf.read(columns=[self._key])[self._key]
-            except (OSError, pa.ArrowException, KeyError) as exc:
-                raise self._corrupt(path, exc) from exc
-            keys = keys.to_numpy(zero_copy_only=False)
-            n = keys.size
-            # row where each distinct key's run starts, then n (one row
-            # per key: starts is arange(n + 1))
-            starts = np.arange(n + 1)
-            if n > 1:
-                new = keys[:-1] < keys[1:]
-                if not new.all():
-                    dup = np.flatnonzero(~new)
-                    if not bool(np.all(keys[dup] == keys[dup + 1])):
-                        raise self._corrupt(path, f"not sorted by {self._key!r}")
-                    first = np.concatenate(([True], new))
-                    starts = np.append(np.flatnonzero(first), n)
-                    keys = keys[first]
-            goff = np.cumsum([0] + [md.row_group(i).num_rows for i in range(md.num_row_groups)])
-            return path, pf, keys, (starts, goff)
+    def _entry(self, path: str, fi: int, keys: np.ndarray) -> tuple:
+        goff = np.concatenate(([0], np.cumsum(self._rg_rows(fi))))
+        n = keys.size
+        if goff[-1] != n:
+            raise self._corrupt(
+                key_dict_path(self._path), f"{path}: {n} keys in {goff[-1]} rows"
+            )
+        # row where each distinct key's run starts, then n (one row per
+        # key: starts is arange(n + 1))
+        starts = np.arange(n + 1)
+        if n > 1:
+            new = keys[:-1] < keys[1:]
+            if not new.all():
+                dup = np.flatnonzero(~new)
+                if not bool(np.all(keys[dup] == keys[dup + 1])):
+                    raise self._corrupt(path, f"not sorted by {self._key!r}")
+                first = np.concatenate(([True], new))
+                starts = np.append(np.flatnonzero(first), n)
+                keys = keys[first]
+        return path, fi, keys, (starts, goff)
+
+    def _footer_entry(self, path: str, fi: int) -> tuple:
+        md = self._open(path, fi).metadata
         col = [md.schema.column(i).path for i in range(md.num_columns)]
         if self._key not in col:
             raise self._corrupt(path, f"no {self._key!r} column")
@@ -312,15 +380,28 @@ class _KeyedPointReader:
                 no_stats[i] = True
             else:
                 mins[i], maxs[i] = st.min, st.max
-        return path, pf, None, (mins, maxs, no_stats)
+        return path, fi, None, (mins, maxs, no_stats)
 
     def load(self) -> None:
         """Load every group's dictionary now (store-open work)."""
         for g in self._group_files():
             self._group(g)
 
+    def dict_value(self, key: str, col: str) -> int | None:
+        """The key dictionary's extra column col at key's first row; 0
+        for a key the table does not hold; None when key's group keeps
+        footer intervals (its keys are not in memory)."""
+        g = term_bucket(key, self._n_buckets) if self._n_buckets else 0
+        for _, i, ukeys, (starts, _) in self._group(g):
+            if ukeys is None:
+                return None
+            j = int(np.searchsorted(ukeys, key))
+            if j < ukeys.size and ukeys[j] == key:
+                return int(self._dict["extra"][col][self._dict["key_offs"][i] + starts[j]])
+        return 0
+
     def _locate(self, keys) -> list[tuple]:
-        """(path, ParquetFile, [row group ids], take) for every file
+        """(path, dictionary row, [row group ids], take) for every file
         holding a probed key. take is, per row group, the probed rows'
         offsets within it (None: all of its rows), or, for a file kept
         as footer intervals, the probes as an Arrow array to filter by."""
@@ -332,7 +413,7 @@ class _KeyedPointReader:
         for g, ks in by_group.items():
             probe = np.array(sorted(ks), dtype=object)
             value_set = None
-            for path, pf, ukeys, bounds in self._group(g):
+            for path, fi, ukeys, bounds in self._group(g):
                 if ukeys is None:
                     mins, maxs, no_stats = bounds
                     # a group holds a probe iff some probe is in [min, max]
@@ -341,7 +422,7 @@ class _KeyedPointReader:
                     if gis.size:
                         if value_set is None:
                             value_set = pa.array(probe.tolist(), pa.string())
-                        reads.append((path, pf, gis.tolist(), value_set))
+                        reads.append((path, fi, gis.tolist(), value_set))
                     continue
                 if ukeys.size == 0:
                     continue
@@ -364,7 +445,7 @@ class _KeyedPointReader:
                     None if b - a == goff[gi + 1] - goff[gi] else local[a:b]
                     for gi, a, b in zip(gis.tolist(), cut[:-1].tolist(), cut[1:].tolist())
                 ]
-                reads.append((path, pf, gis.tolist(), take))
+                reads.append((path, fi, gis.tolist(), take))
         return reads
 
     def fetch(self, keys, cols: list[str]) -> list:
@@ -392,9 +473,9 @@ class _KeyedPointReader:
         slots: list[list] = []
         # (path, ParquetFile, row groups, footer probes | None, slot ids)
         reads: list[tuple] = []
-        for path, pf, gis, take in self._locate(keys):
+        for path, fi, gis, take in self._locate(keys):
             if isinstance(take, pa.Array):
-                reads.append((path, pf, gis, take, [len(slots)]))
+                reads.append((path, self._open(path, fi), gis, take, [len(slots)]))
                 slots.append([None, None, None])
                 continue
             miss, ids = [], []
@@ -406,7 +487,7 @@ class _KeyedPointReader:
                     ids.append(len(slots))
                 slots.append([tbl, t, key])
             if miss:
-                reads.append((path, pf, miss, None, ids))
+                reads.append((path, self._open(path, fi), miss, None, ids))
         if len(reads) > 3:
             # pyarrow releases the GIL per read: overlapping the per-file
             # group reads hides the ~0.8 ms fixed cost per file (a cold
@@ -794,6 +875,29 @@ class CompositeTermPostings:
         return hit, tfv[hit]
 
 
+class _ReadPool:
+    """The thread pool for multi-file row-group reads, created on first
+    use. An IndexReader's point readers hold this object's get method,
+    not the reader's, so a reader dropped without close() is freed by
+    reference counting, with its handles, key arrays and cached row
+    groups, instead of waiting for a cyclic GC pass."""
+
+    def __init__(self):
+        self._pool = None
+
+    def get(self):
+        if self._pool is None:
+            from concurrent.futures import ThreadPoolExecutor
+
+            self._pool = ThreadPoolExecutor(max_workers=8)
+        return self._pool
+
+    def shutdown(self) -> None:
+        if self._pool is not None:
+            self._pool.shutdown(wait=False)
+            self._pool = None
+
+
 class IndexReader:
     """Random access into one on-disk index segment.
 
@@ -856,7 +960,7 @@ class IndexReader:
         from infidex_spark.kernel.synonyms import SynonymMap
 
         self.synonym_map = SynonymMap.from_json(self.manifest.get("synonyms"))
-        self._read_pool = None  # ThreadPoolExecutor for multi-file reads
+        self._read_pool = _ReadPool()
         # decoded row groups of the tables a query probes with many keys
         # at once: every gram of a query (postings) and every delete-1
         # variant of a typo token (variants). prefixes, wm_words and
@@ -872,10 +976,10 @@ class IndexReader:
             path = os.path.join(index_dir, table)
             if not os.path.isdir(path):
                 return None
-            return _KeyedPointReader(table, path, key, self._pool, n_buckets, exact, cache)
+            return _KeyedPointReader(table, path, key, self._read_pool.get, n_buckets, exact, cache)
 
         self._postings_point = _KeyedPointReader(
-            "postings", os.path.join(index_dir, "postings"), "term", self._pool,
+            "postings", os.path.join(index_dir, "postings"), "term", self._read_pool.get,
             self.n_buckets, cache=self._rg_cache,
         )
         self._wm_point = point("wm_words", "word", self._wm_buckets)
@@ -968,20 +1072,6 @@ class IndexReader:
     def _word_variants(self):
         return self._dataset("word_variants")
 
-    @cached_property
-    def _prefix_counts(self) -> dict[str, int] | None:
-        """Prefix POP counts, tiny (<= ~alphabet^3 keys): held in memory
-        so the candidate selector only touches disk for the rare prefix
-        whose doc list actually qualifies. None when the prefixes table
-        is absent or too large to hold."""
-        tbl = self._dataset("prefixes")
-        if tbl is None:
-            return None
-        tbl = tbl.to_table(columns=["prefix", "n_docs"])
-        if tbl.num_rows > 5_000_000:
-            return None
-        return dict(zip(tbl["prefix"].to_pylist(), tbl["n_docs"].to_pylist()))
-
     # ------------------------------------------------------------- fetch
 
     TERM_CACHE_MAX_POSTINGS = 20_000_000  # ~total cached doc-id count
@@ -1043,24 +1133,25 @@ class IndexReader:
         return out
 
     def prewarm_postings_meta(self) -> None:
-        """Load the key dictionaries of the BM25 path's point-read tables
-        (postings, wm_words, prefixes, variants) up front (sorted key
-        columns within the point readers' budget, footer intervals past
-        it) and the prefix counts, spawn the read pool and open the
-        mmap'd stores and short-query meta. This is store-open work —
-        the reference likewise loads its FST term dictionary at index
-        open, not on the first query — and it moves the one-time
-        footer/dictionary reads off the first search's critical path.
-        prefix_postings and champions, read by 1-char queries only, load
-        on their first lookup. A present but unreadable table raises
-        here or at that lookup, naming the table."""
+        """Map the key dictionaries the build wrote for the BM25 path's
+        point-read tables (postings, wm_words, prefixes, variants) and
+        turn their keys into sorted arrays (within the point readers'
+        budget; a group past it opens its files for footer intervals),
+        spawn the read pool and map the doc and pattern stores, whose
+        columns are also the short-query meta. This is store-open work,
+        as the reference maps its FST term dictionary at segment open;
+        it opens no parquet file of those tables: a data file opens on
+        the first lookup that reads it. prefix_postings and champions,
+        read by 1-char queries only, load on their first lookup. A
+        missing, cut or disagreeing key dictionary raises here, and an
+        unreadable data file at the first lookup that reads it, naming
+        the table."""
         for pr in (self._postings_point, self._wm_point, self._prefix_point, self._variant_point):
             if pr is not None:
                 pr.load()
-        self._prefix_counts  # a cached property: reading it loads the counts
         # pre-spawn the read pool's threads: lazy creation would land
         # ~10 ms of thread.start() on the first cold query
-        list(self._pool().map(int, range(16)))
+        list(self._read_pool.get().map(int, range(16)))
         # open the remaining lazy one-time stores here too — mmap'd
         # doc/pattern stores and the short-query meta columns are
         # store-open costs (the reference mmaps its segments at index
@@ -1076,9 +1167,7 @@ class IndexReader:
         readers could approach the default fd ulimit) and the decoded
         row-group cache. The reader stays usable — point structures
         reload lazily on the next query."""
-        if self._read_pool is not None:
-            self._read_pool.shutdown(wait=False)
-            self._read_pool = None
+        self._read_pool.shutdown()
         for pr in (
             self._postings_point, self._wm_point, self._prefix_point,
             self._variant_point, self._pp_point, self._champion_point,
@@ -1086,25 +1175,19 @@ class IndexReader:
             if pr is not None:
                 pr.close()
 
-    def _pool(self):
-        """The thread pool for multi-file row-group reads, created on
-        first use (or by prewarm_postings_meta)."""
-        if self._read_pool is None:
-            from concurrent.futures import ThreadPoolExecutor
-
-            self._read_pool = ThreadPoolExecutor(max_workers=8)
-        return self._read_pool
-
     def prefix_count(self, prefix: str) -> int:
-        if self._prefix_counts is not None:
-            return self._prefix_counts.get(prefix, 0)
-        n, _ = self.fetch_prefix(prefix)
+        """The prefix's doc count: a searchsorted in the prefixes key
+        dictionary's n_docs, or a row read when the dictionary's keys
+        are not in memory."""
+        if self._prefix_point is None:
+            return 0
+        n = self._prefix_point.dict_value(prefix, "n_docs")
+        if n is None:
+            n, _ = self.fetch_prefix(prefix)
         return n
 
     def fetch_prefix(self, prefix: str) -> tuple[int, np.ndarray | None]:
         if self._prefix_point is None:
-            return 0, None
-        if self._prefix_counts is not None and prefix not in self._prefix_counts:
             return 0, None
         cache = self._prefix_fetch_cache
         got = cache.get(prefix)
@@ -1152,11 +1235,12 @@ class IndexReader:
 
     def short_query_rows(self, prefix: str):
         """(doc_id, first_pos, n_ws, n_exact, first_exact, n_tokens,
-        tiny_text, doc_key) arrays for short-query resolution, or None
-        when only the champion list is stored (hot prefix). n_tokens and
-        tiny_text come from the in-memory sq_meta columns (tiny_text
-        '<U3', NUL where null), else from a doc_meta read (object, None
-        where null)."""
+        tiny_text, tiny_valid, doc_key) arrays for short-query
+        resolution, or None when only the champion list is stored (hot
+        prefix). n_tokens and tiny_text come from the mapped sq_meta
+        columns (tiny_text '<U3'), else from a doc_meta read (object,
+        None where null); tiny_valid is False where tiny_text is
+        null."""
         if self._pp_point is None:
             return None
         cols = ["doc_id", "first_pos", "n_ws", "n_exact", "first_exact"]
@@ -1171,6 +1255,7 @@ class IndexReader:
         if meta is not None:
             pos = np.searchsorted(meta["ids"], doc_ids)
             n_tokens, tiny = meta["n_tokens"][pos], meta["tiny"][pos]
+            tiny_valid = meta["tiny_valid"][pos]
         else:
             got = self._doc_meta.to_table(
                 columns=["doc_id", "n_tokens", "tiny_text"],
@@ -1181,6 +1266,7 @@ class IndexReader:
             pos = order[np.searchsorted(m_ids[order], doc_ids)]
             n_tokens = got["n_tokens"].to_numpy()[pos]
             tiny = np.array(got["tiny_text"].to_pylist(), dtype=object)[pos]
+            tiny_valid = np.array([t is not None for t in tiny], dtype=bool)
         _, keys = self.doc_lengths(doc_ids)
         return {
             "doc_id": doc_ids,
@@ -1190,6 +1276,7 @@ class IndexReader:
             "first_exact": tbl["first_exact"].to_numpy(zero_copy_only=False),
             "n_tokens": n_tokens,
             "tiny_text": tiny,
+            "tiny_valid": tiny_valid,
             "doc_key": keys,
         }
 
@@ -1425,8 +1512,6 @@ class IndexReader:
         )
         return _list_rows_to_numpy(tbl, "word", "doc_ids")
 
-    SQ_META_CACHE_LIMIT = 20_000_000
-
     def sq_topk(self, q: str) -> list[tuple[int, float]] | None:
         """Precomputed full short-query answer from the build's sq_topk
         table (indexer._build_sq_answers: the live _search_short_query
@@ -1499,34 +1584,38 @@ class IndexReader:
         return out
 
     def sq_meta(self) -> dict | None:
-        """In-memory short-query precedence columns (doc-id-sorted numpy
-        arrays: n_tokens int64, tiny/first3/first_word3 '<U3') — loaded
-        once from doc_meta. None when doc_meta is absent or the corpus
-        exceeds the cache cap; callers then use the per-candidate
-        doc_meta point-fetch path."""
-        if self._sq_meta is not None:
-            return self._sq_meta or None
-        if self._doc_meta is None or self.total_docs > self.SQ_META_CACHE_LIMIT:
+        """Short-query precedence columns, doc-id sorted: zero-copy numpy
+        views of the mapped doc store (ids, n_tokens int64,
+        tiny/first3/first_word3 '<U3', first2 '<U2' over first3's bytes)
+        plus tiny_valid, the tiny column's validity mask (a null
+        tiny_text is no in-band value: it matches no query). None when
+        the build wrote no doc store (no doc_meta, or over
+        DOC_STORE_CAP docs); callers then use the per-candidate doc_meta
+        point-fetch path."""
+        if self._sq_meta is None:
+            store = self._open_doc_store()
             self._sq_meta = {}
-            return None
-        tbl = self._doc_meta.to_table(
-            columns=["doc_id", "n_tokens", "tiny_text", "first3", "first_word3"]
-        )
-        ids = tbl["doc_id"].to_numpy()
-        order = np.argsort(ids)
-        tiny = tbl["tiny_text"].to_pandas().fillna("\x00").to_numpy(dtype="<U3")
-        first3 = tbl["first3"].to_pandas().fillna("").to_numpy(dtype="<U3")[order]
-        self._sq_meta = {
-            "ids": ids[order],
-            "n_tokens": tbl["n_tokens"].to_numpy()[order],
-            # NUL sentinel for null tiny_text: never equals a real query
-            "tiny": tiny[order],
-            "first3": first3,
-            # truncated copy: startswith(q) for len-2 q is equality on it
-            "first2": first3.astype("<U2"),
-            "first_word3": tbl["first_word3"].to_pandas().fillna("").to_numpy(dtype="<U3")[order],
-        }
-        return self._sq_meta
+            if store is not None:
+                tbl = store[2]
+
+                def u3(name: str, dtype: str = "<U3") -> np.ndarray:
+                    col = _one_chunk(tbl[name])
+                    return np.ndarray(
+                        len(col), dtype, col.buffers()[1], col.offset * 12, (12,)
+                    )
+
+                tiny = _one_chunk(tbl["tiny"])
+                self._sq_meta = {
+                    "ids": store[0],
+                    "n_tokens": tbl["n_tokens"].to_numpy(),
+                    "tiny": u3("tiny"),
+                    "tiny_valid": tiny.is_valid().to_numpy(zero_copy_only=False),
+                    "first3": u3("first3"),
+                    # startswith(q) for len-2 q is equality on it
+                    "first2": u3("first3", "<U2"),
+                    "first_word3": u3("first_word3"),
+                }
+        return self._sq_meta or None
 
     def _open_ps_store(self):
         """Memory-map pattern_scores.arrow once: (sorted pattern '<U4'
@@ -1573,18 +1662,17 @@ class IndexReader:
         return self._ps_store or None
 
     def _open_doc_store(self):
-        """Memory-map doc_store.arrow once (written doc_id-sorted).
-        Returns (doc_id ndarray, text column) or None when absent."""
+        """Memory-map doc_store.arrow once (written doc_id-sorted in one
+        record batch). Returns (doc_id ndarray, text column, the whole
+        mapped table) or None when absent."""
         if self._doc_store is None:
             path = os.path.join(self.index_dir, "doc_store.arrow")
             if not os.path.isfile(path):
                 self._doc_store = ()
             else:
-                import pyarrow as pa
-
                 reader = pa.ipc.open_file(pa.memory_map(path))
                 tbl = reader.read_all()  # zero-copy views over the mmap
-                self._doc_store = (tbl["doc_id"].to_numpy(), tbl["text"])
+                self._doc_store = (tbl["doc_id"].to_numpy(), tbl["text"], tbl)
         return self._doc_store or None
 
     def doc_texts(self, doc_ids: list[int]) -> dict[int, str]:
@@ -1596,7 +1684,7 @@ class IndexReader:
             return {}
         store = self._open_doc_store()
         if store is not None:
-            ids_sorted, texts = store
+            ids_sorted, texts, _ = store
             want = np.asarray(doc_ids, dtype=np.int64)
             pos = np.searchsorted(ids_sorted, want)
             pos_c = np.clip(pos, 0, max(ids_sorted.size - 1, 0))
@@ -2437,7 +2525,7 @@ class QueryExecutor:
             else:
                 starts = np.char.startswith(meta["first3"][pos], q)
             prec += starts * 2
-            prec += (meta["tiny"][pos] == q) * 8
+            prec += ((meta["tiny"][pos] == q) & meta["tiny_valid"][pos]) * 8
             return prec
         texts_map, wtexts_map = r.doc_title_rows(sorted(set(rep.tolist())))
         rep_list = rep.tolist()
@@ -2474,7 +2562,7 @@ class QueryExecutor:
             | np.where(first_pos == 0, 64, 0)
             | np.where((rows["n_exact"][live] > 0) | (rows["n_tokens"][live] <= 3), 32, 0)
             | np.where(first_exact, 16, 0)
-            | np.where(rows["tiny_text"][live] == q, 8, 0)
+            | np.where(rows["tiny_valid"][live] & (rows["tiny_text"][live] == q), 8, 0)
         )
         pos_component = 255 - np.minimum(first_pos * 16, 240)
         density = np.minimum(rows["n_ws"][live].astype(np.int64) * 8, 32)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from infidex_spark.kernel.bm25 import compute_idf
+from infidex_spark.kernel.bm25 import compute_idf, compute_idf_array
 from infidex_spark.kernel.coverage.batch import BatchCoverage
 from infidex_spark.kernel.coverage.config import CoverageConfig
 from infidex_spark.kernel.coverage.engine import CoverageEngine
@@ -118,11 +118,12 @@ class RerankExecutor:
         n = reader.total_docs
         word_idf = None
         if self._words is not None:
-            word_idf = {
-                w: float(compute_idf(n, df))
-                for w, df in self._words.items()
-                if 0 < df <= n
-            }
+            # one array expression: a compute_idf call per word cost
+            # ~24 ms per open at 6k words
+            words = np.array(list(self._words), dtype=object)
+            dfs = np.fromiter(self._words.values(), dtype=np.int64, count=words.size)
+            keep = (dfs > 0) & (dfs <= n)
+            word_idf = dict(zip(words[keep].tolist(), compute_idf_array(n, dfs[keep]).tolist()))
             from infidex_spark.kernel.coverage.vocab import AffixVocab
 
             self._affix_vocab = AffixVocab(self._words)

@@ -202,8 +202,9 @@ def test_old_format_version_is_refused(incremental_index, tmp_path, stale):
     with open(path) as f:
         manifest = json.load(f)
     # 2: before the manifest declared its layout; 3: before one sq_topk
-    # table held every stored short-query answer
-    for version in (1, 2, 3):
+    # table held every stored short-query answer; 4: before the key
+    # dictionaries and the doc store's short-query columns
+    for version in (1, 2, 3, 4):
         manifest["format_version"] = version
         with open(path, "w") as f:
             json.dump(manifest, f)

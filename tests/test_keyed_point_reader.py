@@ -1,14 +1,15 @@
 """_KeyedPointReader: point reads over key-sorted parquet files.
 
 Pure pyarrow tests (no Spark): correctness vs a full scan in both modes
-(sorted key columns within the budget, footer [min,max] intervals past
-it), that every fetch holds exactly the probed rows (no row-group
-neighbours), multi-file / multi-row-group selection, duplicate keys
-spanning a row-group boundary, row groups without stats, bucket
+(keys from the mapped key dictionary within the budget, footer [min,max]
+intervals past it), that every fetch holds exactly the probed rows (no
+row-group neighbours), multi-file / multi-row-group selection, duplicate
+keys spanning a row-group boundary, row groups without stats, bucket
 routing, that an unsorted or unreadable file raises naming the table,
 and the decoded row-group cache: cached reads equal uncached ones, a
 repeated fetch reads no parquet, the byte budget holds, close() empties
-it and footer-mode reads never enter it.
+it and footer-mode reads never enter it. Each ad-hoc table gets its key
+dictionary from the build's own writer (build/keydict.py).
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
 
+from infidex_spark.build.keydict import key_dict_path, write_key_dict
 from infidex_spark.query.executor import _KeyedPointReader, _RowGroupCache, term_bucket
 
 
@@ -39,6 +41,10 @@ _READ_POOL = ThreadPoolExecutor(max_workers=2)
 def _reader(
     table: str, path: str, n_buckets: int = 0, cache=None, exact: bool = True
 ) -> _KeyedPointReader:
+    """A reader over the table at path; an exact-mode reader's key
+    dictionary is written first unless the test wrote it already."""
+    if exact and not os.path.exists(key_dict_path(path)):
+        write_key_dict(path, "k", n_buckets)
     return _KeyedPointReader(table, path, "k", lambda: _READ_POOL, n_buckets, exact, cache)
 
 
@@ -192,9 +198,13 @@ def test_bucket_routing(tmp_path, monkeypatch):
 def test_file_outside_bucket_dir_raises(tmp_path):
     d = str(tmp_path / "flat")
     _write(d, "part.parquet", ["a", "b"], 2)
-    pr = _reader("postings", d, 4)
+    # the listing raises before the (absent) key dictionary is read, in
+    # the reader and in the build's writer
+    pr = _KeyedPointReader("postings", d, "k", lambda: _READ_POOL, 4)
     with pytest.raises(ValueError, match="'postings'.*bucket=N"):
         pr.fetch(["a"], ["k", "v"])
+    with pytest.raises(ValueError, match="'flat'.*bucket=N"):
+        write_key_dict(d, "k", 4)
 
 
 def test_unsorted_file_raises(tmp_path):
@@ -211,15 +221,17 @@ def test_truncated_file_raises(tmp_path, monkeypatch):
     d = str(tmp_path / "cut")
     _write(d, "a.parquet", ["a", "b"], 2)
     _write(d, "b.parquet", ["c", "d"], 2)
+    write_key_dict(d, "k")  # before the cut, as the build wrote it
     path = os.path.join(d, "b.parquet")
     with open(path, "r+b") as f:
         f.truncate(os.path.getsize(path) // 2)
-    for _ in _both_modes(monkeypatch):
-        # files are listed on first use; discovery reads only the first
-        # file, so the cut is met by the reader's own open
+    for mode in _both_modes(monkeypatch):
         pr = _reader("prefixes", d)
+        if mode == "exact":
+            # a file opens on the first fetch that reads it
+            assert _rows(pr.fetch(["a"], ["k", "v"]), ["a"]) == [("a", 0)]
         with pytest.raises(ValueError, match=r"'prefixes'.*b\.parquet"):
-            pr.fetch(["a"], ["k", "v"])
+            pr.fetch(["a", "c"], ["k", "v"])
 
 
 def test_close_restores_budget(kp_dir, monkeypatch):
@@ -246,6 +258,7 @@ def test_inexact_reader_keeps_footer_intervals(kp_dir):
     reader's."""
     probes = ["k000", "k051", "k099", "kzzz"]
     want = _rows(_reader("tbl", kp_dir).fetch(probes, ["k", "v"]), probes)
+    os.remove(key_dict_path(kp_dir))  # read by exact-mode readers only
     pr = _KeyedPointReader("tbl", kp_dir, "k", lambda: _READ_POOL, exact=False)
     pr.load()
     assert all(e[2] is None for e in pr._groups[0])

@@ -3,46 +3,65 @@
 A present but unreadable table is a corrupt index, not a layout to
 degrade for: cutting one file of a point-read table in half must make
 the open, prewarm_postings_meta() or the first lookup that reads that
-table raise, with a message naming the table. The query package must
-also hold no catch-all handler that could turn such a failure into a
-silent scan or a half-loaded answer map."""
+file raise, with a message naming the table. So must a key dictionary
+(build/keydict.py) that is missing, cut, or disagrees with its table's
+files. The query package must also hold no catch-all handler that could
+turn such a failure into a silent scan or a half-loaded answer map."""
 
 from __future__ import annotations
 
 import ast
 import glob
+import json
 import os
 import shutil
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from infidex_spark.build.keydict import key_dict_path
 from infidex_spark.query.executor import IndexReader
 
-# stage by which a cut file of the table must have raised
+# stage by which a cut file of the table must have raised. The
+# exact-mode point-read tables open a data file on the first lookup
+# that reads it (their keys come from the mapped key dictionary), so a
+# cut file there raises at that lookup, no longer at prewarm.
 STAGES = ("open", "prewarm", "lookup")
 RAISES_BY = {
-    "postings": "prewarm",
-    "prefixes": "prewarm",
-    "wm_words": "prewarm",
-    "variants": "prewarm",
+    "postings": "lookup",
+    "prefixes": "lookup",
+    "wm_words": "lookup",
+    "variants": "lookup",
     "prefix_postings": "lookup",
     "champions": "lookup",
     "term_dict": "lookup",
     "sq_topk": "lookup",
     "doc_stats": "open",
 }
-LOOKUPS = {
-    "postings": lambda r: r.fetch_terms(["the", "and", "fox"]),
-    "prefixes": lambda r: [r.fetch_prefix(p) for p in ("t", "th", "a")],
-    "wm_words": lambda r: r.wm_word_docs(["the", "and"]),
-    "variants": lambda r: r.fetch_variant_terms("teh"),
-    "prefix_postings": lambda r: [r.short_query_rows(p) for p in ("t", "q", "z")],
-    "champions": lambda r: [r.champion_list(p) for p in ("t", "a")],
-    "term_dict": lambda r: r.sorted_terms(),
-    "sq_topk": lambda r: r.sq_topk("th"),
-    "doc_stats": lambda r: r.doc_lengths(np.arange(3)),
+# lookups of a point-read table probe a key of the file that was cut
+KEY_COLS = {
+    "postings": "term",
+    "prefixes": "prefix",
+    "wm_words": "word",
+    "variants": "variant",
+    "prefix_postings": "prefix",
+    "champions": "prefix",
 }
+LOOKUPS = {
+    "postings": lambda r, k: r.fetch_terms([k]),
+    "prefixes": lambda r, k: r.fetch_prefix(k),
+    "wm_words": lambda r, k: r.wm_word_docs([k]),
+    "variants": lambda r, k: r.fetch_variant_terms(k),
+    "prefix_postings": lambda r, k: r.short_query_rows(k),
+    "champions": lambda r, k: r.champion_list(k),
+    "term_dict": lambda r, k: r.sorted_terms(),
+    "sq_topk": lambda r, k: r.sq_topk("th"),
+    "doc_stats": lambda r, k: r.doc_lengths(np.arange(3)),
+}
+# the exact-mode point-read tables, each with a key dictionary
+KEY_DICT_TABLES = ("postings", "prefixes", "wm_words", "variants", "champions")
 
 
 @pytest.fixture(scope="module")
@@ -79,6 +98,9 @@ def test_truncated_file_raises_naming_its_table(precompute_index, tmp_path, tabl
     # first one, so the cut is met by the table's own read path
     files = sorted(glob.glob(os.path.join(idx, table, "**", "*.parquet"), recursive=True))
     assert len(files) >= 2, table
+    key = None
+    if table in KEY_COLS:
+        key = pq.read_table(files[-1], columns=[KEY_COLS[table]])[0][0].as_py()
     with open(files[-1], "r+b") as f:
         f.truncate(os.path.getsize(files[-1]) // 2)
     reached: list[str] = []
@@ -87,15 +109,121 @@ def test_truncated_file_raises_naming_its_table(precompute_index, tmp_path, tabl
         reached.append("open")
         r.prewarm_postings_meta()
         reached.append("prewarm")
-        LOOKUPS[table](r)
+        LOOKUPS[table](r, key)
         reached.append("lookup")
     assert len(reached) <= STAGES.index(RAISES_BY[table]), (reached, err.value)
 
 
+def _cut(path: str) -> None:
+    with open(path, "r+b") as f:
+        f.truncate(os.path.getsize(path) // 2)
+
+
+def _halve_rows(path: str) -> None:
+    """Rewrite a data file with its first half of rows: its footer then
+    disagrees with the key dictionary's row counts."""
+    tbl = pq.read_table(path)
+    pq.write_table(tbl.slice(0, tbl.num_rows // 2), path)
+
+
+# a broken key dictionary or table file, and the stage by which the
+# reader must have raised
+DICT_FAULTS = {
+    "cut dictionary": ("prewarm", lambda d, files: _cut(d)),
+    "missing dictionary": ("prewarm", lambda d, files: os.remove(d)),
+    "absent file": ("prewarm", lambda d, files: os.remove(files[-1])),
+    "row counts": ("lookup", lambda d, files: _halve_rows(files[-1])),
+}
+
+
+@pytest.mark.parametrize("fault", sorted(DICT_FAULTS))
+@pytest.mark.parametrize("table", KEY_DICT_TABLES)
+def test_broken_key_dictionary_raises_naming_its_table(precompute_index, tmp_path, table, fault):
+    """A key dictionary that is missing or cut, lists a data file the
+    table no longer holds, or records other row counts than a file's
+    footer (checked when the lookup opens that file) raises ValueError
+    naming the table."""
+    idx = str(tmp_path / "idx")
+    shutil.copytree(precompute_index, idx)
+    files = sorted(glob.glob(os.path.join(idx, table, "**", "*.parquet"), recursive=True))
+    assert len(files) >= 2, table
+    key = pq.read_table(files[-1], columns=[KEY_COLS[table]])[0][0].as_py()
+    stage, breaks = DICT_FAULTS[fault]
+    if table == "champions":  # read by 1-char queries only: not prewarmed
+        stage = "lookup"
+    breaks(key_dict_path(os.path.join(idx, table)), files)
+    reached: list[str] = []
+    with pytest.raises(ValueError, match=f"'{table}'") as err:
+        r = IndexReader(idx)
+        reached.append("open")
+        r.prewarm_postings_meta()
+        reached.append("prewarm")
+        LOOKUPS[table](r, key)
+        reached.append("lookup")
+    assert len(reached) <= STAGES.index(stage), (reached, err.value)
+
+
+def test_key_dictionaries_equal_table_key_columns(precompute_index, built, two_delta_index):
+    """Every key dictionary holds its table's key column in file and row
+    order, each file's key count and each row group's row count (and
+    prefixes' n_docs), files in the reader's listing order."""
+    from infidex_spark.build.keydict import table_files
+    from infidex_spark.streaming.incremental import _segment_dirs
+
+    segments = [precompute_index, built, *_segment_dirs(two_delta_index)]
+    assert len(segments) == 5
+    for seg in segments:
+        with open(os.path.join(seg, "MANIFEST.json")) as f:
+            manifest = json.load(f)
+        buckets = {"postings": manifest["n_buckets"], "wm_words": manifest["layout"]["wm_words"]}
+        for table in KEY_DICT_TABLES:
+            path = os.path.join(seg, table)
+            kd = pa.ipc.open_file(pa.memory_map(key_dict_path(path))).read_all()
+            listed = table_files(table, path, buckets.get(table, 0))
+            files = [(g, p) for g, ps in listed.items() for p in ps]
+            assert kd["bucket"].to_pylist() == [g for g, _ in files], (seg, table)
+            key = KEY_COLS[table]
+            for i, (_, p) in enumerate(files):
+                pf = pq.ParquetFile(p)
+                md = pf.metadata
+                cols = [key, "n_docs"] if table == "prefixes" else [key]
+                got = pf.read(columns=cols)
+                assert kd["keys"][i].as_py() == got[key].to_pylist(), (seg, table, p)
+                assert kd["row_groups"][i].as_py() == [
+                    md.row_group(j).num_rows for j in range(md.num_row_groups)
+                ], (seg, table, p)
+                if table == "prefixes":
+                    assert kd["n_docs"][i].as_py() == got["n_docs"].to_pylist()
+            assert sum(len(k) for k in kd["keys"].to_pylist()) == pq.ParquetDataset(path).read(
+                columns=[key]
+            ).num_rows, (seg, table)
+
+
+def test_prewarm_opens_no_parquet_of_exact_tables(precompute_index, monkeypatch):
+    """prewarm_postings_meta maps the key dictionaries: it opens no
+    parquet file of postings, wm_words, prefixes or variants; the first
+    lookup opens only the files it reads."""
+    opened: list[str] = []
+    real = pq.ParquetFile
+
+    class Spy(real):
+        def __init__(self, source, *a, **kw):
+            opened.append(str(source))
+            super().__init__(source, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", Spy)
+    r = IndexReader(precompute_index)
+    r.prewarm_postings_meta()
+    assert opened == [], opened
+    r.fetch_terms(["the"])
+    assert len(opened) == 1 and f"{os.sep}postings{os.sep}" in opened[0], opened
+
+
 def test_open_discovers_only_required_tables(precompute_index, monkeypatch):
     """Opening a reader discovers doc_stats and stop_terms only: the
-    point-read tables list their files on prewarm or first lookup, and
-    the scanned optional tables on first use."""
+    point-read tables list their files on prewarm or first lookup
+    (without dataset discovery), and the scanned optional tables on
+    first use."""
     import pyarrow.dataset as ds
 
     seen: list[str] = []
@@ -108,8 +236,10 @@ def test_open_discovers_only_required_tables(precompute_index, monkeypatch):
     monkeypatch.setattr(ds, "dataset", spy)
     r = IndexReader(precompute_index)
     assert set(seen) <= {"doc_stats", "stop_terms"}, seen
+    # prewarm lists the point-read tables' files itself and maps their
+    # key dictionaries: no dataset discovery
     r.prewarm_postings_meta()
-    assert {"postings", "prefixes", "variants"} <= set(seen), seen
+    assert set(seen) <= {"doc_stats", "stop_terms"}, seen
 
 
 def test_query_package_has_no_catch_all_handler():
