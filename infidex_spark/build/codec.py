@@ -19,7 +19,7 @@ BLOCK_SIZE = 128
 # On-disk index layout version: build_index writes it into MANIFEST.json
 # and IndexReader refuses any other value. Bump it whenever build_index
 # changes a table's layout, so readers never carry old-layout branches.
-FORMAT_VERSION = 5
+FORMAT_VERSION = 6
 
 
 def encode_varints(values: np.ndarray) -> bytes:

@@ -11,7 +11,8 @@ Dataflow:
               doc sidecar(doc_ids, doc_keys, dls): one per partition
               and, with aux, per input batch: (word, doc ids) partials of
               the deduped (doc, word) pairs, (prefix, doc) positional
-              pairs, doc_meta rows (+ doc_key)
+              pairs, per-doc meta rows (doc_key, n_tokens, the 1-3
+              char title, text, first3, first_word3)
     every other job filters the stream by kind; docs is scanned once
     input_agg = doc count / id range / dl total from the sidecars, by
                 the query that materializes the stream (gates every job
@@ -34,9 +35,11 @@ Dataflow:
             or 'build-aux' (side jobs whose stages fill scheduler gaps):
             from the stream, once tokenize has materialized it:
             prefix_lists and champions (prefix pairs; champions also
-            the doc_meta rows), doc_meta -> doc_store, and the word
-            family (word partials -> wm_words, sq_words1, words ->
-            words_rev/word_variants)
+            the meta rows), doc_rows (the meta rows' one toArrow()
+            collect), and the word family (word partials -> wm_words,
+            sq_words1, words -> words_rev/word_variants)
+            doc_store once doc_stats and (aux) doc_rows are done: the
+            per-doc store, written by build_index's own process
             from the postings: variants (gram symmetric-delete),
             term_dict (sorted dictionary for prefix-range scans),
             char_terms, pattern_scores (short-query aggregates),
@@ -48,9 +51,11 @@ Dataflow:
             bucket counts (layout_buckets: 32/4/16 from 20k docs up),
             declared in the manifest's `layout` for the readers
     writes: the INDEX_TABLES under out_dir — postings/ (parquet,
-            partitioned by term bucket), doc_stats/, stop_terms/,
-            prefixes/, champions/, prefix_postings/, doc_meta/ (+
-            doc_store.arrow), wm_words/, sq_words1/, words/, words_rev/,
+            partitioned by term bucket), doc_stats/ (read by the Spark
+            jobs of query/batch.py and streaming/incremental.py),
+            doc_store.arrow (every reader's per-doc columns), stop_terms/,
+            prefixes/, champions/, prefix_postings/, wm_words/,
+            sq_words1/, words/, words_rev/,
             word_variants/, variants/, term_dict/, with short_precompute
             char_terms/, pattern_scores/ (+ .arrow) and sq_topk/ — plus
             the key dictionaries <table>.keys.arrow of postings,
@@ -141,16 +146,17 @@ POSTINGS_SCHEMA = T.StructType(
 
 
 # every table (directory or sidecar file) build_index writes under its
-# out_dir, and sq_fuzzy, which format-3 builds wrote; a non-resume build
-# removes them all first. deltas/ and tombstones belong to the streaming
-# layer and are never removed.
+# out_dir, and the tables older formats wrote (sq_fuzzy: format 3;
+# doc_meta: format 5); a non-resume build removes them all first.
+# deltas/ and tombstones belong to the streaming layer and are never
+# removed.
 INDEX_TABLES = (
     "postings", "doc_stats", "stop_terms", "checkpoints", "tokens",
-    "prefixes", "prefix_postings", "champions", "doc_meta", "doc_store.arrow",
+    "prefixes", "prefix_postings", "champions", "doc_store.arrow",
     "wm_words", "sq_words1", "words", "words_rev", "word_variants",
     "variants", "term_dict", "char_terms", "pattern_scores",
     *(t + KEY_DICT_SUFFIX for t in ("postings", "wm_words", "prefixes", "variants", "champions")),
-    "pattern_scores.arrow", "sq_topk", "sq_fuzzy",
+    "pattern_scores.arrow", "sq_topk", "sq_fuzzy", "doc_meta",
 )
 
 
@@ -182,8 +188,8 @@ KIND_WORD = 2  # word, doc_ids: the deduped (doc, word) pairs as one
 #               (word, sorted doc ids) partial per word and input batch
 KIND_PREFIX = 3  # prefix, doc_id, first_pos, n_ws, n_exact, first_exact:
 #                  per (1..3-char prefix, doc) positional aggregates
-KIND_META = 4  # doc_id, doc_key, n_tokens, tiny_text, text, words_text,
-#                first3, first_word3: the doc_meta rows (+ doc_key)
+KIND_META = 4  # doc_id, doc_key, n_tokens, tiny_text, text, first3,
+#                first_word3: the per-doc meta rows (DOC_META_COLS)
 FUSED_SCHEMA = T.StructType(
     [T.StructField("kind", T.IntegerType(), False)]
     + [
@@ -208,7 +214,6 @@ FUSED_SCHEMA = T.StructType(
             ("n_tokens", T.LongType()),
             ("tiny_text", T.StringType()),
             ("text", T.StringType()),
-            ("words_text", T.StringType()),
             ("first3", T.StringType()),
             ("first_word3", T.StringType()),
         )
@@ -217,11 +222,9 @@ FUSED_SCHEMA = T.StructType(
 
 
 # the column order of the prefix pairs (prefix_postings' layout) and of
-# the doc_meta table
+# the meta rows the driver collects
 PREFIX_PAIR_COLS = ("prefix", "doc_id", "first_pos", "n_ws", "n_exact", "first_exact")
-DOC_META_COLS = (
-    "doc_id", "n_tokens", "tiny_text", "text", "words_text", "first3", "first_word3",
-)
+DOC_META_COLS = ("doc_id", "doc_key", "n_tokens", "tiny_text", "text", "first3", "first_word3")
 
 # Bucket counts of the crc32-bucketed word and pattern tables at and above
 # LAYOUT_FULL_DOCS input docs; smaller inputs get proportionally fewer.
@@ -281,7 +284,7 @@ def _tagged_batch(kind: int, n: int, cols: dict) -> pa.RecordBatch:
 
 def _doc_rows(ids: np.ndarray, keys: np.ndarray, texts: pd.Series) -> Iterator[pa.RecordBatch]:
     """The per-doc kinds of one input batch from its normalized texts:
-    (word, doc ids) partials, (prefix, doc) aggregates and doc_meta rows.
+    (word, doc ids) partials, (prefix, doc) aggregates and meta rows.
 
     Words are maximal non-delimiter runs over the space-joined codepoint
     array (space is a delimiter, so the join separator breaks runs at
@@ -348,23 +351,18 @@ def _doc_rows(ids: np.ndarray, keys: np.ndarray, texts: pd.Series) -> Iterator[p
                 "n_exact": np.add.reduceat(exact_sel, gstart).astype(np.int64),
                 "first_exact": np.add.reduceat(exact_sel * (pos_sel == 0), gstart) > 0,
             })
-    # doc_meta (B8), all .str-vectorized
+    # doc metadata (B8), all .str-vectorized
     stripped = texts.str.strip()
-    # space-joined word stream with sentinel spaces: turns the
-    # short-query word-boundary checks into plain substring searches
-    # (' q ' in words_text == q in word_tokens(text)). Vectorized:
-    # collapse delimiter runs to single spaces, strip, re-wrap.
+    # the words space-joined: delimiter runs collapsed to one space
     joined = texts.str.replace(_DELIM_SPLIT, " ", regex=True).str.strip()
-    words_text = (" " + joined + " ").where(joined != "", " ")
     yield _tagged_batch(KIND_META, len(texts), {
         "doc_id": ids,
         "doc_key": keys,
-        "n_tokens": words_text.str.count(" ").to_numpy(np.int64) - 1,
+        "n_tokens": np.where(joined != "", joined.str.count(" ").to_numpy(np.int64) + 1, 0),
         "tiny_text": stripped.where(stripped.str.len() <= 3),
         # prepped text retained for the coverage rerank (the reference
         # likewise keeps IndexedText in memory)
         "text": texts,
-        "words_text": words_text,
         # short-query precedence columns (D10 fast path): raw prepped
         # prefix + first word's 3-char prefix — equality against a
         # <=2-char query reproduces startswith / first-word-exact exactly
@@ -668,7 +666,6 @@ def build_index(
     fields: list[tuple[str, int]] | None = None,
     html_col: str | None = None,
     short_precompute: bool | None = None,
-    slim_doc_meta: bool = True,
 ) -> dict:
     """Build the full index under out_dir. Returns the manifest dict.
 
@@ -683,8 +680,10 @@ def build_index(
     DocumentFields/VectorModel semantics.
 
     aux=False skips the auxiliary structures (prefix postings for the
-    short-query path, LD1 variant dictionary for fuzzy expansion) — the
-    BM25 core (postings + doc stats + stop terms) is always built.
+    short-query path, LD1 variant dictionary for fuzzy expansion, the
+    doc store's text and short-query columns) — the BM25 core (postings
+    + doc stats + the doc store's doc_id/doc_key/dl + stop terms) is
+    always built.
 
     The fused tokenize stage's partials table is materialized once and
     read by the term_df, doc_stats and postings jobs: as parquet under
@@ -782,7 +781,7 @@ def build_index(
             from infidex_spark.kernel.engine import FIELD_DELIM
 
             # derive the '§'-concatenated text (raw values) for doc stats,
-            # prefixes, doc_meta, and the coverage rerank
+            # prefixes, the doc store, and the coverage rerank
             parts = []
             for i, (c, _w) in enumerate(fields):
                 if i:
@@ -796,7 +795,7 @@ def build_index(
         # the ONE document pass: the materialized table is the tagged
         # stream — vocabulary-granular compressed partials (+ per-partition
         # doc sidecars), not posting-granular token rows, plus (aux) the
-        # word partials, prefix pairs and doc_meta rows the aux jobs read
+        # word partials, prefix pairs and meta rows the aux jobs read
         sel_cols = ["doc_id", "doc_key", "text"] + (
             [c for c, _ in fields] if fields is not None else []
         )
@@ -1092,7 +1091,7 @@ def build_index(
                     F.coalesce(c, F.lit(zero.get(c, 0))).alias(c) for c in PREFIX_PAIR_COLS))
 
             def meta_rows(tok: DataFrame) -> DataFrame:
-                return _of_kind(tok, KIND_META, "doc_id", "doc_key", *DOC_META_COLS[1:])
+                return _of_kind(tok, KIND_META, *DOC_META_COLS)
 
             def word_lists(table: str, len_filter):
                 return lambda tok, agg: _write_word_lists(
@@ -1108,15 +1107,16 @@ def build_index(
             j_words = graph.add("word_tables", lambda tok: _write_words(words(tok), out_dir), (j_tok,))
             graph.add("word_tables", lambda _: _write_words_rev(spark, out_dir), (j_words,))
             graph.add("word_tables", lambda _: _write_word_variants(spark, out_dir), (j_words,))
-            j_meta = graph.add("doc_meta", lambda tok: _write_doc_meta(meta_rows(tok), out_dir), (j_tok,))
+            # the meta rows reach this process by one collect, read by
+            # the doc store and the champions sidecar
+            j_rows = graph.add("doc_rows", lambda tok: meta_rows(tok).toArrow(), (j_tok,))
             for write in (_write_prefixes, _write_prefix_postings):
                 j_pre = graph.add("prefix_lists", lambda tok, agg, write=write: write(
                     prefix_pairs(tok), out_dir, max_prefix_docs, agg["n"]), (j_tok, j_agg))
                 if write is _write_prefixes:
                     graph.add("key_dicts", key_dict("prefixes", "prefix", extra=("n_docs",)), (j_pre, j_agg))
-            j_store = graph.add("doc_store", lambda _: _write_doc_store(out_dir), (j_meta,))
-            j_champ = graph.add("champions", lambda tok, agg: _build_champions(
-                prefix_pairs(tok), meta_rows(tok), agg, out_dir), (j_tok, j_agg))
+            j_champ = graph.add("champions", lambda tok, agg, rows: _build_champions(
+                prefix_pairs(tok), meta_rows(tok), rows, agg, out_dir), (j_tok, j_agg, j_rows))
             graph.add("key_dicts", key_dict("champions", "prefix"), (j_champ, j_agg))
             # postings-derived jobs overlap the doc-derived jobs' tails
             j_var = graph.add("variants_dict", lambda _: _build_variants(
@@ -1136,10 +1136,10 @@ def build_index(
             graph.add("pattern_store_write", lambda agg, _: _write_pattern_store(
                 out_dir, max_doc_id=agg["mx"]) if want_ps(agg) else None,
                 (j_agg, j_ps), chain=True)
-            if slim_doc_meta:
-                # drops doc_meta's text columns once the doc_store holds
-                # the texts
-                graph.add("slim_doc_meta", lambda _: _slim_doc_meta(out_dir), (j_store,))
+        # every build writes the per-doc store readers map: doc_stats'
+        # columns, plus the meta rows with aux
+        graph.add("doc_store", lambda _, rows=None: _write_doc_store(out_dir, rows),
+                  (j_stats, j_rows) if aux else (j_stats,))
         step_secs, step_starts = graph.join()
     finally:
         for df in persisted:
@@ -1210,8 +1210,7 @@ def build_index(
         # stored short-query answers: distributed evaluation of the
         # engine's own live short-query path over the COMPLETE index —
         # its workers open IndexReader(out_dir), so it must run after
-        # the manifest lands (and after the doc_meta slim rewrite, whose
-        # in-place file replacement would race the workers' reads)
+        # the manifest lands
         graph.add("sq_topk", lambda: _build_sq_answers(spark, out_dir, sizes), chain=True)
         manifest = write_manifest(*graph.join())
     return manifest
@@ -1432,35 +1431,26 @@ def _str_eq(strings: pa.Array, idx: np.ndarray, other) -> np.ndarray:
     return eq.fill_null(False).to_numpy(zero_copy_only=False)
 
 
-def _champions_sidecar(meta_rows: DataFrame, agg):
+def _champions_sidecar(rows: pa.Table, agg):
     """Per-doc arrays for the champions map-side top-k: doc_id-indexed
     n_tokens / tiny_text (Arrow, NULL where absent) / doc_key (~24
-    B/doc), collected from the stream's doc_meta rows. Returns None when
-    the corpus exceeds the broadcast cap or the id space is grossly
-    sparse (both known from input_agg before anything is collected) —
-    the caller then uses the fully distributed join+window plan."""
+    B/doc), from the collected meta rows. Returns None when the corpus
+    exceeds the broadcast cap or the id space is grossly sparse (both
+    known from input_agg) — the caller then uses the fully distributed
+    join+window plan."""
     n_rows = agg["n"]
     if n_rows == 0 or n_rows > CHAMPIONS_BROADCAST_DOCS:
         return None
     n = int(agg["mx"]) + 1
     if n > max(16 * n_rows, 1_000_000):
         return None
-    tb = meta_rows.select("doc_id", "n_tokens", "tiny_text", "doc_key").toArrow()
-    ids = tb["doc_id"].to_numpy()
+    ids = rows["doc_id"].to_numpy()
     ntok = np.zeros(n, dtype=np.int64)
-    ntok[ids] = tb["n_tokens"].to_numpy()
+    ntok[ids] = rows["n_tokens"].to_numpy()
     key = np.zeros(n, dtype=np.int64)
-    key[ids] = tb["doc_key"].to_numpy()
-    tiny = _dense_strings(tb["tiny_text"].combine_chunks(), ids, n)
+    key[ids] = rows["doc_key"].to_numpy()
+    tiny = _dense_strings(rows["tiny_text"].combine_chunks(), ids, n)
     return {"ntok": ntok, "tiny": tiny, "key": key}
-
-
-def _write_doc_meta(meta_rows: DataFrame, out_dir: str) -> None:
-    """Doc metadata cache (B8): the stream's doc_meta rows, doc_id-sorted
-    within each partition."""
-    meta_rows.select(*DOC_META_COLS).sortWithinPartitions("doc_id").write.mode(
-        "overwrite"
-    ).options(**POINT_READ_WRITE_OPTS).parquet(os.path.join(out_dir, "doc_meta"))
 
 
 def _prefix_counts(pairs: DataFrame) -> DataFrame:
@@ -1539,7 +1529,7 @@ def _write_prefix_postings(
 
 
 def _build_champions(
-    pairs: DataFrame, meta_rows: DataFrame, agg, out_dir: str
+    pairs: DataFrame, meta_rows: DataFrame, rows: pa.Table, agg, out_dir: str
 ) -> None:
     """Champion lists (B7): top-64 docs per prefix by the short-query
     score (covers hot prefixes, whose full rows are not stored).
@@ -1547,11 +1537,11 @@ def _build_champions(
     Top-k is associative, so below the sidecar cap the heavy work runs
     MAP-SIDE (guide §2.3 "aggregate before you shuffle"): each Arrow
     batch of prefix pairs is scored against a broadcast per-doc sidecar
-    (n_tokens / tiny text / doc_key, a bounded ~24 B/doc) and emits only
-    its local per-prefix top-64 (+ boundary ties), so the window's
-    shuffle+sort sees a small
+    (n_tokens / tiny text / doc_key, a bounded ~24 B/doc, from the
+    collected meta rows) and emits only its local per-prefix top-64 (+
+    boundary ties), so the window's shuffle+sort sees a small
     candidate superset instead of every (prefix, doc) pair joined
-    against the doc_meta rows. The window then produces exactly the rows
+    against the meta rows. The window then produces exactly the rows
     the single-stage plan would (same ordering keys; local winners are a
     superset of the global top-64 because a row outside its batch's
     top-64-with-ties is dominated by 64 rows that also reach the
@@ -1563,7 +1553,7 @@ def _build_champions(
     spark = pairs.sparkSession
 
     w = Window.partitionBy("prefix").orderBy(F.desc("sq_score"), F.asc("doc_key"))
-    side = _champions_sidecar(meta_rows, agg)
+    side = _champions_sidecar(rows, agg)
     if side is not None:
         bc = spark.sparkContext.broadcast(side)
         k_champ = _CHAMPION_LIST_SIZE
@@ -1659,65 +1649,54 @@ def _build_champions(
     champions.sortWithinPartitions("prefix").write.mode("overwrite").options(**POINT_READ_WRITE_OPTS).parquet(os.path.join(out_dir, "champions"))
 
 
-DOC_STORE_CAP = 20_000_000  # rows; above this, query nodes use the
-# parquet point-fetch path (a real deployment at that scale serves doc
-# text from a distributed store, not a single mmap file)
-
-
-def _fixed_u3(col: pa.ChunkedArray) -> pa.Array:
+def _fixed_u3(col: pa.ChunkedArray) -> tuple[pa.Array, pa.Array]:
     """A string column of <= 3-char values as numpy '<U3' bytes (UTF-32,
     12 bytes a value) in a fixed_size_binary(12) column, which a reader
-    views without a copy; a null stays null (validity bitmap, zeroed
-    bytes)."""
+    views without a copy, and each value's length in chars (uint8, 0
+    where null). A null stays null (validity bitmap, zeroed bytes).
+    numpy's fixed-width compare ignores trailing NULs ("a\x00" == "a"
+    there), so a reader compares the lengths too."""
     col = col.combine_chunks()
     u3 = col.fill_null("").to_numpy(zero_copy_only=False).astype("<U3")
     valid = None
     if col.null_count:
         valid = pa.py_buffer(np.packbits(col.is_valid().to_numpy(zero_copy_only=False), bitorder="little"))
-    return pa.FixedSizeBinaryArray.from_buffers(
+    fixed = pa.FixedSizeBinaryArray.from_buffers(
         pa.binary(12), len(u3), [valid, pa.py_buffer(u3.tobytes())], col.null_count
     )
+    return fixed, pc.utf8_length(col).fill_null(0).cast(pa.uint8())
 
 
-def _write_doc_store(out_dir: str) -> None:
-    """Uncompressed Arrow IPC file (doc_id-sorted, one record batch) next
-    to doc_meta: the query node memory-maps it and random-accesses
-    candidate texts with .take() — the columnar analogue of the
-    reference's mmap'd IndexedText segments (point parquet fetches
-    re-scan row groups; the rerank's ~500-candidate text fetch was its
-    largest cold cost). It also holds the short-query precedence
+def _write_doc_store(out_dir: str, rows: pa.Table | None) -> None:
+    """doc_store.arrow, every reader's per-doc store: one uncompressed
+    Arrow IPC file, doc_id-sorted in one record batch, that the reader
+    memory-maps at open and reads positionally (the columnar analogue
+    of the reference's mmap'd document store). Columns: doc_id, doc_key
+    and dl (float32, stop terms subtracted) from the doc_stats output;
+    with the collected meta rows (aux builds) also the prepped text
+    (the rerank's candidate texts) and the short-query precedence
     columns as fixed-width values (n_tokens int64; tiny, first3 and
-    first_word3 as '<U3' bytes, tiny null where tiny_text is), so a
-    reader's sq_meta() is views over the map, not a doc_meta read."""
+    first_word3 as '<U3' bytes with their lengths, tiny null where
+    tiny_text is), so a reader's sq_meta() is views over the map."""
     import pyarrow.parquet as pq
 
-    meta_path = os.path.join(out_dir, "doc_meta")
-    # cap check from parquet footers BEFORE reading any data — at the
-    # scale the cap guards against, materializing first would be the
-    # exact driver-memory blowout it exists to prevent (ADVICE r3 #2)
-    n_rows = sum(
-        pq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
-        for dp, _, fs in os.walk(meta_path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    if n_rows > DOC_STORE_CAP:
-        return
-    tbl = pq.read_table(
-        meta_path, columns=["doc_id", "text", "n_tokens", "tiny_text", "first3", "first_word3"]
-    )
-    # sorted by doc_id so the reader's open is a plain mmap (it would
-    # otherwise pay an O(n log n) argsort per fresh executor — ~100 ms
-    # at 1M docs on the rerank cold path)
-    tbl = tbl.sort_by("doc_id")
-    tbl = pa.table({
-        "doc_id": tbl["doc_id"],
-        "text": tbl["text"],
-        "n_tokens": tbl["n_tokens"],
-        "tiny": _fixed_u3(tbl["tiny_text"]),
-        "first3": _fixed_u3(tbl["first3"]),
-        "first_word3": _fixed_u3(tbl["first_word3"]),
-    }).combine_chunks()
+    stats = pq.read_table(
+        os.path.join(out_dir, "doc_stats"), columns=["doc_id", "doc_key", "dl"]
+    ).sort_by("doc_id")
+    cols = {
+        "doc_id": stats["doc_id"],
+        "doc_key": stats["doc_key"],
+        "dl": stats["dl"].cast(pa.float32()),
+    }
+    if rows is not None:
+        rows = rows.sort_by("doc_id")
+        if not rows["doc_id"].equals(stats["doc_id"]):
+            raise ValueError(f"{out_dir}: the meta rows' doc ids are not doc_stats'")
+        cols["text"] = rows["text"]
+        cols["n_tokens"] = rows["n_tokens"]
+        for src, name in (("tiny_text", "tiny"), ("first3", "first3"), ("first_word3", "first_word3")):
+            cols[name], cols[name + "_len"] = _fixed_u3(rows[src])
+    tbl = pa.table(cols).combine_chunks()
     with pa.OSFile(os.path.join(out_dir, "doc_store.arrow"), "wb") as sink:
         with pa.ipc.new_file(sink, tbl.schema) as writer:
             writer.write_table(tbl)
@@ -2218,53 +2197,6 @@ def _build_sq_answers(
         .write.mode("overwrite")
         .parquet(out_path)
     )
-
-
-def _slim_doc_meta(out_dir: str) -> bool:
-    """Drop the two full-text-sized columns (text, words_text) from
-    doc_meta once the doc_store sidecar holds the texts — the round-3
-    index stored every document's text three times (doc_meta.text,
-    doc_meta.words_text, doc_store.arrow). Readers serve texts from the
-    doc_store and re-derive words_text with the build's own delimiter
-    collapse (doc_title_rows), so nothing is lost. Runs only when
-    doc_store.arrow exists (the text columns stay authoritative above
-    DOC_STORE_CAP) and rewrites file-by-file with zstd."""
-    import pyarrow.parquet as pq
-
-    if not os.path.exists(os.path.join(out_dir, "doc_store.arrow")):
-        return False
-    meta_dir = os.path.join(out_dir, "doc_meta")
-    if not os.path.isdir(meta_dir):
-        return False
-    for dp, _, fs in os.walk(meta_dir):
-        for f in fs:
-            if not f.endswith(".parquet"):
-                continue
-            path = os.path.join(dp, f)
-            pf = pq.ParquetFile(path)
-            names = pf.schema_arrow.names
-            keep = [c for c in names if c not in ("text", "words_text")]
-            if len(keep) == len(names):
-                continue
-            tbl = pq.read_table(path, columns=keep)
-            tmp = path + ".slim"
-            # preserve point-read row-group granularity (doc_id lookups
-            # prune on row-group stats; one giant group would force a
-            # whole-file decode per lookup)
-            rg0 = (
-                pf.metadata.row_group(0).num_rows
-                if pf.metadata.num_row_groups
-                else 1024
-            )
-            pq.write_table(
-                tbl, tmp, compression="zstd", row_group_size=max(1024, rg0)
-            )
-            os.replace(tmp, path)
-            # drop the Hadoop client-side checksum sidecar (now stale)
-            crc = os.path.join(dp, "." + f + ".crc")
-            if os.path.exists(crc):
-                os.remove(crc)
-    return True
 
 
 CHAR_TERMS_CAP = 2_000_000  # terms per char; reader falls back to scan

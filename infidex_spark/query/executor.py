@@ -11,9 +11,9 @@ scoring as the kernel oracle. WAND-style block skipping (block_max_w
 metadata) is applied on the disjunctive path; it is lossless, so results
 are rank-identical with or without it.
 
-Scale: nothing here depends on corpus size except doc-length lookups,
-which switch from a cached array to per-candidate predicate-pushdown
-fetches above a configurable threshold.
+Per-doc columns (dl, doc_key, the rerank's texts, the short-query
+precedence columns) come from one memory-mapped store, doc_store.arrow,
+read positionally: a query touches only the pages of its candidates.
 """
 
 from __future__ import annotations
@@ -898,6 +898,21 @@ class _ReadPool:
             self._pool = None
 
 
+def _map_doc_store(index_dir: str, n_docs: int) -> pa.Table:
+    """doc_store.arrow memory-mapped (written doc_id-sorted in one
+    record batch): its columns are zero-copy views over the map.
+    ValueError naming the table when it is missing or cut, or holds
+    another row count than the manifest's total_docs."""
+    path = os.path.join(index_dir, "doc_store.arrow")
+    try:
+        tbl = pa.ipc.open_file(pa.memory_map(path)).read_all()
+    except (OSError, pa.ArrowException) as exc:
+        raise corrupt("doc_store.arrow", path, exc) from exc
+    if tbl.num_rows != n_docs:
+        raise corrupt("doc_store.arrow", path, f"{tbl.num_rows} rows, not total_docs {n_docs}")
+    return tbl
+
+
 class IndexReader:
     """Random access into one on-disk index segment.
 
@@ -907,8 +922,14 @@ class IndexReader:
     - Attributes: total_docs, avgdl, sizes, start_pad, stop_terms,
       stop_term_limit, synonym_map, tombstones (doc_keys dropped from
       every result; empty unless assigned) and one capability bool,
-      has_short_query_tables: term_dict and doc_meta are both present,
-      so multi-char short queries can take the FST-expansion path.
+      has_short_query_tables: term_dict is present and the doc store
+      holds the short-query columns, so multi-char short queries can
+      take the FST-expansion path.
+    - Per-doc columns (doc_lengths, ids_for_keys, doc_texts,
+      doc_title_rows, sq_meta, short_query_rows) are views over
+      doc_store.arrow, mapped at open: doc_id, doc_key, dl in every
+      build; text and the short-query columns with aux. A missing or
+      cut store raises at open.
     - A missing optional table (aux=False builds, delta segments,
       tables withheld above a build cap) is reported only by a method's
       return value: pattern_scores, char_terms, sq_meta, sq_topk,
@@ -931,8 +952,6 @@ class IndexReader:
     reader carries no branches for layouts older versions wrote. The
     bucket counts of wm_words, sq_words1 and pattern_scores are the ones
     the manifest's layout declares."""
-
-    DOC_CACHE_LIMIT = 50_000_000  # cache dl/doc_key arrays below this size
 
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
@@ -987,19 +1006,19 @@ class IndexReader:
         self._variant_point = point("variants", "variant", cache=self._rg_cache)
         self._pp_point = point("prefix_postings", "prefix", exact=False)
         self._champion_point = point("champions", "prefix")
-        self.has_short_query_tables = all(
-            os.path.isdir(os.path.join(index_dir, t)) for t in ("term_dict", "doc_meta")
+        self._store = _map_doc_store(index_dir, self.total_docs)
+        self.has_short_query_tables = (
+            os.path.isdir(os.path.join(index_dir, "term_dict"))
+            and "n_tokens" in self._store.column_names
         )
         self._prefix_fetch_cache: dict[str, tuple] = {}
         self._variant_cache: dict[str, list[str]] = {}
         self._sq_meta: dict | None = None  # lazy short-query meta cache
-        self._doc_store: tuple | None = None  # lazy mmap'd text store
         self._ps_store: tuple | None = None  # lazy mmap'd pattern store
         self._sq_topk_map: dict | None = None  # lazy champion lists
         self._sq_complete: set[str] = set()  # champion rows = full answer
         self._char_terms_cache: dict[str, tuple | None] = {}
         self._all_terms: list[str] | None = None  # lazy fallback dictionary
-        self._doc_stats = ds.dataset(os.path.join(index_dir, "doc_stats"))
         # stop terms: df was driven past the limit; they must neither score
         # nor fuzzy-expand (reference keeps them as df=-1 tombstones)
         stop_path = os.path.join(index_dir, "stop_terms")
@@ -1008,27 +1027,15 @@ class IndexReader:
             self.stop_terms = frozenset(
                 ds.dataset(stop_path).to_table()["term"].to_pylist()
             )
-        self._dl_cache: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
+        # (doc_id, doc_key, dl): zero-copy views over the mapped store
+        self._dl_cache = tuple(_one_chunk(self._store[c]).to_numpy() for c in ("doc_id", "doc_key", "dl"))
         self._key_order: np.ndarray | None = None  # lazy argsort by doc_key
         self._keys_sorted: np.ndarray | None = None  # dkeys[_key_order]
         self._term_cache: dict[str, TermPostings | object] = {}
         self._term_cache_size = 0
-        if self.total_docs <= self.DOC_CACHE_LIMIT:
-            tbl = self._doc_stats.to_table(columns=["doc_id", "doc_key", "dl"])
-            doc_id = tbl["doc_id"].to_numpy()
-            order = np.argsort(doc_id)
-            self._dl_cache = (
-                doc_id[order],
-                tbl["doc_key"].to_numpy()[order],
-                tbl["dl"].to_numpy().astype(np.float32)[order],
-            )
-        ids0 = self._dl_cache[0] if self._dl_cache is not None else None
+        ids0 = self._dl_cache[0]
         # dense iff the sorted id column is exactly [base, base+n)
-        self._dl_dense = bool(
-            ids0 is not None
-            and ids0.size
-            and int(ids0[-1]) - int(ids0[0]) + 1 == ids0.size
-        )
+        self._dl_dense = bool(ids0.size and int(ids0[-1]) - int(ids0[0]) + 1 == ids0.size)
 
     # optional scanned tables, discovered on first use: a dataset
     # discovery reads a footer, and most queries touch none of them.
@@ -1039,10 +1046,6 @@ class IndexReader:
         if not os.path.isdir(path):
             return None
         return ds.dataset(path, partitioning="hive" if hive else None)
-
-    @cached_property
-    def _doc_meta(self):
-        return self._dataset("doc_meta")
 
     @cached_property
     def _term_dict(self):
@@ -1137,8 +1140,8 @@ class IndexReader:
         point-read tables (postings, wm_words, prefixes, variants) and
         turn their keys into sorted arrays (within the point readers'
         budget; a group past it opens its files for footer intervals),
-        spawn the read pool and map the doc and pattern stores, whose
-        columns are also the short-query meta. This is store-open work,
+        spawn the read pool, map the pattern store and view the doc
+        store's short-query meta columns. This is store-open work,
         as the reference maps its FST term dictionary at segment open;
         it opens no parquet file of those tables: a data file opens on
         the first lookup that reads it. prefix_postings and champions,
@@ -1152,11 +1155,10 @@ class IndexReader:
         # pre-spawn the read pool's threads: lazy creation would land
         # ~10 ms of thread.start() on the first cold query
         list(self._read_pool.get().map(int, range(16)))
-        # open the remaining lazy one-time stores here too — mmap'd
-        # doc/pattern stores and the short-query meta columns are
-        # store-open costs (the reference mmaps its segments at index
-        # open), not part of any query's latency
-        self._open_doc_store()
+        # open the remaining lazy one-time stores here too — the mmap'd
+        # pattern store and the short-query meta columns are store-open
+        # costs (the reference mmaps its segments at index open), not
+        # part of any query's latency
         self._open_ps_store()
         self.sq_meta()
 
@@ -1235,12 +1237,11 @@ class IndexReader:
 
     def short_query_rows(self, prefix: str):
         """(doc_id, first_pos, n_ws, n_exact, first_exact, n_tokens,
-        tiny_text, tiny_valid, doc_key) arrays for short-query
+        tiny_text, tiny_valid, tiny_len, doc_key) arrays for short-query
         resolution, or None when only the champion list is stored (hot
-        prefix). n_tokens and tiny_text come from the mapped sq_meta
-        columns (tiny_text '<U3'), else from a doc_meta read (object,
-        None where null); tiny_valid is False where tiny_text is
-        null."""
+        prefix). n_tokens and tiny_text ('<U3') come from the mapped
+        sq_meta columns; tiny_valid is False where tiny_text is null,
+        tiny_len is its length in chars."""
         if self._pp_point is None:
             return None
         cols = ["doc_id", "first_pos", "n_ws", "n_exact", "first_exact"]
@@ -1252,21 +1253,7 @@ class IndexReader:
         tbl = pa.concat_tables(tbls)
         doc_ids = tbl["doc_id"].to_numpy()
         meta = self.sq_meta()
-        if meta is not None:
-            pos = np.searchsorted(meta["ids"], doc_ids)
-            n_tokens, tiny = meta["n_tokens"][pos], meta["tiny"][pos]
-            tiny_valid = meta["tiny_valid"][pos]
-        else:
-            got = self._doc_meta.to_table(
-                columns=["doc_id", "n_tokens", "tiny_text"],
-                filter=ds.field("doc_id").isin(doc_ids.tolist()),
-            )
-            m_ids = got["doc_id"].to_numpy()
-            order = np.argsort(m_ids)
-            pos = order[np.searchsorted(m_ids[order], doc_ids)]
-            n_tokens = got["n_tokens"].to_numpy()[pos]
-            tiny = np.array(got["tiny_text"].to_pylist(), dtype=object)[pos]
-            tiny_valid = np.array([t is not None for t in tiny], dtype=bool)
+        pos = np.searchsorted(meta["ids"], doc_ids)
         _, keys = self.doc_lengths(doc_ids)
         return {
             "doc_id": doc_ids,
@@ -1274,9 +1261,10 @@ class IndexReader:
             "n_ws": tbl["n_ws"].to_numpy(),
             "n_exact": tbl["n_exact"].to_numpy(),
             "first_exact": tbl["first_exact"].to_numpy(zero_copy_only=False),
-            "n_tokens": n_tokens,
-            "tiny_text": tiny,
-            "tiny_valid": tiny_valid,
+            "n_tokens": meta["n_tokens"][pos],
+            "tiny_text": meta["tiny"][pos],
+            "tiny_valid": meta["tiny_valid"][pos],
+            "tiny_len": meta["tiny_len"][pos],
             "doc_key": keys,
         }
 
@@ -1294,34 +1282,19 @@ class IndexReader:
 
     def doc_lengths(self, doc_ids: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(dl float32, doc_key int64) for given sorted doc_ids."""
-        if self._dl_cache is not None:
-            ids, keys, dls = self._dl_cache
-            if self._dl_dense and ids.size:
-                # contiguous id space [base, base+n): position IS the
-                # offset — no per-candidate binary search (the common
-                # case; build ids are dense by contract)
-                base = int(ids[0])
-                pos = doc_ids - base
-                if pos.size and (int(pos.min()) < 0 or int(pos.max()) >= ids.size):
-                    raise KeyError("unknown doc_ids in index")
-                return dls[pos], keys[pos]
-            pos = np.searchsorted(ids, doc_ids)
-            pos = np.clip(pos, 0, ids.size - 1)
-            ok = ids[pos] == doc_ids
-            if not ok.all():
+        ids, keys, dls = self._dl_cache
+        if self._dl_dense:
+            # contiguous id space [base, base+n): position IS the
+            # offset — no per-candidate binary search (the common
+            # case; build ids are dense by contract)
+            pos = doc_ids - int(ids[0])
+            if pos.size and (int(pos.min()) < 0 or int(pos.max()) >= ids.size):
                 raise KeyError("unknown doc_ids in index")
             return dls[pos], keys[pos]
-        tbl = self._doc_stats.to_table(
-            columns=["doc_id", "doc_key", "dl"],
-            filter=ds.field("doc_id").isin(doc_ids.tolist()),
-        )
-        got_ids = tbl["doc_id"].to_numpy()
-        order = np.argsort(got_ids)
-        pos = np.searchsorted(got_ids[order], doc_ids)
-        return (
-            tbl["dl"].to_numpy().astype(np.float32)[order][pos],
-            tbl["doc_key"].to_numpy()[order][pos],
-        )
+        pos = np.clip(np.searchsorted(ids, doc_ids), 0, max(ids.size - 1, 0))
+        if doc_ids.size and (not ids.size or not np.array_equal(ids[pos], doc_ids)):
+            raise KeyError("unknown doc_ids in index")
+        return dls[pos], keys[pos]
 
     TERM_LIST_CAP = 5_000_000
 
@@ -1586,35 +1559,29 @@ class IndexReader:
     def sq_meta(self) -> dict | None:
         """Short-query precedence columns, doc-id sorted: zero-copy numpy
         views of the mapped doc store (ids, n_tokens int64,
-        tiny/first3/first_word3 '<U3', first2 '<U2' over first3's bytes)
-        plus tiny_valid, the tiny column's validity mask (a null
-        tiny_text is no in-band value: it matches no query). None when
-        the build wrote no doc store (no doc_meta, or over
-        DOC_STORE_CAP docs); callers then use the per-candidate doc_meta
-        point-fetch path."""
+        tiny/first3/first_word3 '<U3' with their lengths in chars
+        *_len uint8) plus tiny_valid, the tiny column's validity mask (a
+        null tiny_text is no in-band value: it matches no query). numpy
+        compares '<U3' values ignoring trailing NULs, so an exact
+        comparison also checks the length. None when the store holds no
+        short-query columns (aux=False builds)."""
         if self._sq_meta is None:
-            store = self._open_doc_store()
+            tbl = self._store
             self._sq_meta = {}
-            if store is not None:
-                tbl = store[2]
+            if "n_tokens" in tbl.column_names:
 
-                def u3(name: str, dtype: str = "<U3") -> np.ndarray:
+                def u3(name: str) -> np.ndarray:
                     col = _one_chunk(tbl[name])
-                    return np.ndarray(
-                        len(col), dtype, col.buffers()[1], col.offset * 12, (12,)
-                    )
+                    return np.ndarray(len(col), "<U3", col.buffers()[1], col.offset * 12, (12,))
 
-                tiny = _one_chunk(tbl["tiny"])
                 self._sq_meta = {
-                    "ids": store[0],
-                    "n_tokens": tbl["n_tokens"].to_numpy(),
-                    "tiny": u3("tiny"),
-                    "tiny_valid": tiny.is_valid().to_numpy(zero_copy_only=False),
-                    "first3": u3("first3"),
-                    # startswith(q) for len-2 q is equality on it
-                    "first2": u3("first3", "<U2"),
-                    "first_word3": u3("first_word3"),
+                    "ids": self._dl_cache[0],
+                    "n_tokens": _one_chunk(tbl["n_tokens"]).to_numpy(),
+                    "tiny_valid": _one_chunk(tbl["tiny"]).is_valid().to_numpy(zero_copy_only=False),
                 }
+                for name in ("tiny", "first3", "first_word3"):
+                    self._sq_meta[name] = u3(name)
+                    self._sq_meta[name + "_len"] = _one_chunk(tbl[name + "_len"]).to_numpy()
         return self._sq_meta or None
 
     def _open_ps_store(self):
@@ -1661,116 +1628,70 @@ class IndexReader:
                 )
         return self._ps_store or None
 
-    def _open_doc_store(self):
-        """Memory-map doc_store.arrow once (written doc_id-sorted in one
-        record batch). Returns (doc_id ndarray, text column, the whole
-        mapped table) or None when absent."""
-        if self._doc_store is None:
-            path = os.path.join(self.index_dir, "doc_store.arrow")
-            if not os.path.isfile(path):
-                self._doc_store = ()
-            else:
-                reader = pa.ipc.open_file(pa.memory_map(path))
-                tbl = reader.read_all()  # zero-copy views over the mmap
-                self._doc_store = (tbl["doc_id"].to_numpy(), tbl["text"], tbl)
-        return self._doc_store or None
-
     def doc_texts(self, doc_ids: list[int]) -> dict[int, str]:
-        """Prepped text per internal doc id. Served from the mmap'd
-        doc_store (random .take — O(candidates) page touches, the
-        reference's mmap'd IndexedText analogue) when present; falls
-        back to a doc_meta parquet point fetch."""
-        if not doc_ids:
+        """Prepped text per internal doc id held by this segment, from
+        the mapped doc store (random .take — O(candidates) page touches,
+        the reference's mmap'd IndexedText analogue); empty when the
+        store holds no texts (aux=False builds)."""
+        ids_sorted = self._dl_cache[0]
+        if not doc_ids or not ids_sorted.size or "text" not in self._store.column_names:
             return {}
-        store = self._open_doc_store()
-        if store is not None:
-            ids_sorted, texts, _ = store
-            want = np.asarray(doc_ids, dtype=np.int64)
-            pos = np.searchsorted(ids_sorted, want)
-            pos_c = np.clip(pos, 0, max(ids_sorted.size - 1, 0))
-            ok = ids_sorted.size > 0
-            hit = (ids_sorted[pos_c] == want) if ok else np.zeros(want.size, bool)
-            got = texts.take(pos_c[hit]).to_pylist()
-            return dict(zip(want[hit].tolist(), got))
-        if self._doc_meta is None:
-            return {}
-        tbl = self._doc_meta.to_table(
-            columns=["doc_id", "text"], filter=ds.field("doc_id").isin(doc_ids)
-        )
-        return dict(zip(tbl["doc_id"].to_pylist(), tbl["text"].to_pylist()))
+        want = np.asarray(doc_ids, dtype=np.int64)
+        pos = np.clip(np.searchsorted(ids_sorted, want), 0, ids_sorted.size - 1)
+        hit = ids_sorted[pos] == want
+        got = self._store["text"].take(pos[hit]).to_pylist()
+        return dict(zip(want[hit].tolist(), got))
 
     def doc_title_rows(
         self, doc_ids: list[int]
     ) -> tuple[dict[int, str], dict[int, str]]:
-        """(text, words_text) per internal doc id held by this segment.
-        words_text is the space-joined word stream with sentinel spaces.
-        Slim indexes (doc_meta without the text columns — _slim_doc_meta)
-        serve texts from the doc_store and re-derive words_text with the
-        build's exact delimiter collapse."""
-        if self._doc_meta is None or not doc_ids:
+        """(text, words_text) per internal doc id held by this segment:
+        texts from the doc store, and words_text, the space-joined word
+        stream with sentinel spaces (' q ' in words_text == q in
+        word_tokens(text)), derived with the build's exact delimiter
+        collapse."""
+        texts = self.doc_texts(doc_ids)
+        if not texts:
             return {}, {}
-        if "text" not in self._doc_meta.schema.names:
-            texts = self.doc_texts(doc_ids)
-            if not texts:
-                return {}, {}
-            import pandas as pd
+        import pandas as pd
 
-            from infidex_spark.build.tokenizer import _DELIM_SPLIT
+        from infidex_spark.build.tokenizer import _DELIM_SPLIT
 
-            ser = pd.Series(list(texts.values()))
-            joined = ser.str.replace(_DELIM_SPLIT, " ", regex=True).str.strip()
-            wt = (" " + joined + " ").where(joined != "", " ")
-            return texts, dict(zip(texts.keys(), wt.tolist()))
-        tbl = self._doc_meta.to_table(
-            columns=["doc_id", "text", "words_text"],
-            filter=ds.field("doc_id").isin(doc_ids),
-        )
-        ids = tbl["doc_id"].to_pylist()
-        return (
-            dict(zip(ids, tbl["text"].to_pylist())),
-            dict(zip(ids, tbl["words_text"].to_pylist())),
-        )
+        ser = pd.Series(list(texts.values()))
+        joined = ser.str.replace(_DELIM_SPLIT, " ", regex=True).str.strip()
+        wt = (" " + joined + " ").where(joined != "", " ")
+        return texts, dict(zip(texts.keys(), wt.tolist()))
 
     def ids_for_keys(self, keys: list[int]) -> dict[int, list[int]]:
         """doc_key -> sorted internal doc_ids (all segments of the doc).
-        Bounded by |keys|: served from the in-memory doc_stats cache via a
-        once-built key-sorted permutation, else a doc_key pushdown scan."""
+        Bounded by |keys|: served from the store's doc_key column via a
+        once-built key-sorted permutation."""
         if not keys:
             return {}
-        if self._dl_cache is not None:
-            ids, dkeys, _ = self._dl_cache
-            if self._key_order is None:
-                # doc_stats is doc_id-ordered and keys ascend with ids in
-                # the common dense mapping — an O(n) check dodges the
-                # O(n log n) argsort on the cold path (~150 ms at 1M)
-                if dkeys.size < 2 or np.all(dkeys[:-1] <= dkeys[1:]):
-                    self._key_order = np.arange(dkeys.size, dtype=np.int64)
-                else:
-                    self._key_order = np.argsort(dkeys, kind="stable")
-                # cache the key-sorted projection: an n_docs-sized gather
-                # per call is new-page allocation on every search (8 MB at
-                # 1M docs — first-touch faults dominate under memory
-                # pressure); build it once with the permutation
-                self._keys_sorted = dkeys[self._key_order]
-            order = self._key_order
-            keys_sorted = self._keys_sorted
-            want = np.asarray(sorted(set(keys)), dtype=np.int64)
-            lo = np.searchsorted(keys_sorted, want, "left")
-            hi = np.searchsorted(keys_sorted, want, "right")
-            out: dict[int, list[int]] = {}
-            for k, a, b in zip(want.tolist(), lo.tolist(), hi.tolist()):
-                if b > a:
-                    # stable sort by key keeps doc_id ascending within key
-                    out[k] = ids[order[a:b]].tolist()
-            return out
-        tbl = self._doc_stats.to_table(
-            columns=["doc_id", "doc_key"], filter=ds.field("doc_key").isin(keys)
-        )
-        out = {}
-        for k, i in sorted(
-            zip(tbl["doc_key"].to_pylist(), tbl["doc_id"].to_pylist())
-        ):
-            out.setdefault(k, []).append(i)
+        ids, dkeys, _ = self._dl_cache
+        if self._key_order is None:
+            # the store is doc_id-ordered and keys ascend with ids in
+            # the common dense mapping — an O(n) check dodges the
+            # O(n log n) argsort on the cold path (~150 ms at 1M)
+            if dkeys.size < 2 or np.all(dkeys[:-1] <= dkeys[1:]):
+                self._key_order = np.arange(dkeys.size, dtype=np.int64)
+            else:
+                self._key_order = np.argsort(dkeys, kind="stable")
+            # cache the key-sorted projection: an n_docs-sized gather
+            # per call is new-page allocation on every search (8 MB at
+            # 1M docs — first-touch faults dominate under memory
+            # pressure); build it once with the permutation
+            self._keys_sorted = dkeys[self._key_order]
+        order = self._key_order
+        keys_sorted = self._keys_sorted
+        want = np.asarray(sorted(set(keys)), dtype=np.int64)
+        lo = np.searchsorted(keys_sorted, want, "left")
+        hi = np.searchsorted(keys_sorted, want, "right")
+        out: dict[int, list[int]] = {}
+        for k, a, b in zip(want.tolist(), lo.tolist(), hi.tolist()):
+            if b > a:
+                # stable sort by key keeps doc_id ascending within key
+                out[k] = ids[order[a:b]].tolist()
         return out
 
 
@@ -1880,8 +1801,6 @@ class MultiReader:
         keys = np.empty(doc_ids.size, dtype=np.int64)
         done = np.zeros(doc_ids.size, dtype=bool)
         for r in self.readers:
-            if r._dl_cache is None:
-                continue
             ids, rkeys, rdls = r._dl_cache
             pos = np.searchsorted(ids, doc_ids)
             pos_c = np.clip(pos, 0, max(ids.size - 1, 0))
@@ -2091,8 +2010,9 @@ class QueryExecutor:
         if not can_ngrams:
             # 1-char: positional-prefix champion path; longer non-ngram
             # queries: the FST-expansion short-query processor (D10),
-            # falling back to the resolver when term_dict/doc_meta are
-            # absent (aux=False builds; delta segments have both)
+            # falling back to the resolver when term_dict and the doc
+            # store's short-query columns are absent (aux=False builds;
+            # delta segments have both)
             ck = (q, k)
             got = self._short_cache.get(ck)
             if got is None:
@@ -2248,9 +2168,9 @@ class QueryExecutor:
         - pattern contributions come from the precomputed pattern_scores
           aggregates (a point fetch per pattern) when the table exists,
           else from live term_dict expansion + postings decode;
-        - precedence bits come from the in-memory sq_meta columns +
-          wm/sq1 word postings (pure numpy) when available, else from
-          doc_meta point fetches over the representative docs."""
+        - precedence bits come from the mapped sq_meta columns + wm/sq1
+          word postings (pure numpy) when they can answer the query,
+          else from the representative docs' texts (doc_title_rows)."""
         from infidex_spark.kernel.engine import (
             MAX_FST_TERMS_PER_PREFIX,
             build_prefix_patterns,
@@ -2439,7 +2359,7 @@ class QueryExecutor:
         """Internal doc-id lists per query token for the fast precedence
         path (sq_words1 for 1-char, wm_words for >= 2-char words). None
         when either table is absent or a list may be truncated (build
-        cap reached) — callers then use the doc_meta point-fetch path."""
+        cap reached) — callers then use the doc_title_rows path."""
         r = self.r
         t1 = sorted({t for t in tokens if len(t) == 1})
         t2 = sorted({t for t in tokens if len(t) >= 2})
@@ -2458,9 +2378,10 @@ class QueryExecutor:
 
     def _short_precedence(self, q: str, rep: np.ndarray) -> np.ndarray:
         """ComputePrecedence over the representative docs. Fast path:
-        pure numpy over the in-memory sq_meta columns + word postings
-        (no per-query doc_meta fetch); falls back to the doc_meta
-        point-fetch pandas path bit-identically."""
+        pure numpy over the mapped sq_meta columns + word postings;
+        single-token queries over 3 chars and possibly truncated word
+        lists take the pandas path over the docs' texts
+        (doc_title_rows), bit-identically."""
         import pandas as pd
 
         from infidex_spark.kernel.tokenize import DELIMITERS, word_tokens
@@ -2512,20 +2433,19 @@ class QueryExecutor:
                     8 | np.where(n_words <= len(qtokens) + 1, 2, 0),
                     np.where(n_match > 0, 4, 0),
                 ).astype(np.int64)
+            # '<U3' compares ignore trailing NULs: equal values of equal
+            # length are equal strings
+            n = len(q)
             prec = np.zeros(rep.size, dtype=np.int64)
             if q_is_word:
                 any_exact = _member(word_docs[q], rep)
-                first_exact = meta["first_word3"][pos] == q
+                first_exact = (meta["first_word3"][pos] == q) & (meta["first_word3_len"][pos] == n)
                 prec += any_exact * 1 + first_exact * 4
-            # startswith(q) == equality on the len(q)-char prefix column
-            if len(q) == 2:
-                starts = meta["first2"][pos] == q
-            elif len(q) == 3:
-                starts = meta["first3"][pos] == q
-            else:
-                starts = np.char.startswith(meta["first3"][pos], q)
-            prec += starts * 2
-            prec += ((meta["tiny"][pos] == q) & meta["tiny_valid"][pos]) * 8
+            # startswith(q): the first n chars of first3 equal q
+            first3 = meta["first3"][pos]
+            head = np.ndarray(first3.shape, f"<U{n}", first3, 0, (first3.itemsize,))
+            prec += ((head == q) & (meta["first3_len"][pos] >= n)) * 2
+            prec += ((meta["tiny"][pos] == q) & meta["tiny_valid"][pos] & (meta["tiny_len"][pos] == n)) * 8
             return prec
         texts_map, wtexts_map = r.doc_title_rows(sorted(set(rep.tolist())))
         rep_list = rep.tolist()
@@ -2562,7 +2482,9 @@ class QueryExecutor:
             | np.where(first_pos == 0, 64, 0)
             | np.where((rows["n_exact"][live] > 0) | (rows["n_tokens"][live] <= 3), 32, 0)
             | np.where(first_exact, 16, 0)
-            | np.where(rows["tiny_valid"][live] & (rows["tiny_text"][live] == q), 8, 0)
+            | np.where(
+                rows["tiny_valid"][live] & (rows["tiny_text"][live] == q) & (rows["tiny_len"][live] == len(q)), 8, 0
+            )
         )
         pos_component = 255 - np.minimum(first_pos * 16, 240)
         density = np.minimum(rows["n_ws"][live].astype(np.int64) * 8, 32)

@@ -3,9 +3,9 @@ counterpart of kernel.engine.FullSearch (same pipeline: stage-1 BM25 ->
 WordMatcher lookup -> per-candidate LCS + coverage features + fusion ->
 consolidation -> truncation -> TF-IDF safety net).
 
-Candidate texts come from the index's doc_meta table (point fetch with
-predicate pushdown — candidates are <= coverage_depth + WordMatcher
-docs); word-level IDF and the WordMatcher vocabulary come from the words
+Candidate texts come from the index's memory-mapped doc store
+(doc_store.arrow, a positional take — candidates are <= coverage_depth
++ WordMatcher docs); word-level IDF and the WordMatcher vocabulary come from the words
 table (loaded in memory below a size cap; affix/LD1 word scans are
 skipped above it, matching how hot structures degrade elsewhere).
 """

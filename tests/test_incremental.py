@@ -83,15 +83,15 @@ def test_multi_segment_short_query_matches_kernel(
         assert QueryExecutor(slow).search(query, 10) == got, (index, query)
 
 
-def _one_char_oracle(reader, q: str, k: int) -> list[tuple[int, float]]:
+def _one_char_oracle(reader, kidx, q: str, k: int) -> list[tuple[int, float]]:
     """The scalar 1-char path: kernel short_query_score per
     prefix_postings row, then segmenter.consolidate, over rows whose
-    n_tokens/tiny_text come from doc_meta reads (no sq_meta)."""
+    n_tokens/tiny_text come from kidx, a KernelIndex over the same docs
+    (KernelIndex.doc_meta), not from the reader."""
     from infidex_spark.build.segmenter import consolidate
     from infidex_spark.kernel.engine import short_query_score
 
-    for r in getattr(reader, "readers", [reader]):
-        r._sq_meta = {}  # sq_meta() -> None: the doc_meta read
+    meta = dict(zip(kidx.doc_keys, kidx.doc_meta))
     rows = reader.short_query_rows(q)
     if not rows:
         return []
@@ -106,8 +106,7 @@ def _one_char_oracle(reader, q: str, k: int) -> list[tuple[int, float]]:
             int(rows["n_ws"][i]),
             int(rows["n_exact"][i]),
             bool(rows["first_exact"][i]),
-            int(rows["n_tokens"][i]),
-            rows["tiny_text"][i],
+            *meta[key],
         )
         hits.append((key, float(score)))
     return consolidate(hits, k)
@@ -123,8 +122,7 @@ def test_one_char_scoring_matches_scalar_oracle(spark, tmp_path, built, two_delt
     1-char prefix of the corpus (and a few absent chars), at k = 1, 10
     and 100, on one segment, on main + two deltas with a tombstone in
     each, and on one segment of 1-3 char titles with a tombstone,
-    equals the scalar oracle, on both the sq_meta and the doc_meta
-    data path."""
+    equals the scalar oracle."""
     from tests.conftest import REFERENCE_DOCS
 
     tiny = str(tmp_path / "tiny")
@@ -135,19 +133,22 @@ def test_one_char_scoring_matches_scalar_oracle(spark, tmp_path, built, two_delt
     build_index(spark, df, tiny, n_buckets=2)
     chars = sorted({c for _, t in REFERENCE_DOCS + BATCH3 for c in t.lower() if c.isalnum()})
     assert len(chars) > 20
-    cases = ((built, IndexReader, ()), (two_delta_index, MultiReader, ()), (tiny, IndexReader, (8,)))
-    for index, reader_cls, tomb in cases:
+    cases = (
+        (built, IndexReader, REFERENCE_DOCS, ()),
+        (two_delta_index, MultiReader, BATCH1 + BATCH2 + BATCH3, ()),
+        (tiny, IndexReader, TINY_DOCS, (8,)),
+    )
+    for index, reader_cls, docs, tomb in cases:
         fast = reader_cls(index)
         assert fast.sq_meta() is not None
-        slow = reader_cls(index)
         if tomb:
-            fast.tombstones = slow.tombstones = frozenset(tomb)
+            fast.tombstones = frozenset(tomb)
+        kidx = _kernel_all(docs)
         for q in chars + ["0", "q", "x", "é"]:
             for k in (1, 10, 100):
-                want = _one_char_oracle(slow, q, k)
+                want = _one_char_oracle(fast, kidx, q, k)
                 got = QueryExecutor(fast)._short_query(q, k)
                 assert got == want, (index, q, k)
-                assert QueryExecutor(slow)._short_query(q, k) == want, (index, q, k)
                 assert QueryExecutor(fast).search(q, k) == want, (index, q, k)
     # the title == query bit (8 << 8) fired, and the tombstoned key is gone
     top = QueryExecutor(IndexReader(tiny))._short_query("b", 10)
@@ -203,8 +204,9 @@ def test_old_format_version_is_refused(incremental_index, tmp_path, stale):
         manifest = json.load(f)
     # 2: before the manifest declared its layout; 3: before one sq_topk
     # table held every stored short-query answer; 4: before the key
-    # dictionaries and the doc store's short-query columns
-    for version in (1, 2, 3, 4):
+    # dictionaries and the doc store's short-query columns; 5: before the
+    # doc store held every per-doc column (and doc_meta was deleted)
+    for version in (1, 2, 3, 4, 5):
         manifest["format_version"] = version
         with open(path, "w") as f:
             json.dump(manifest, f)

@@ -5,7 +5,9 @@
 - A reader dropped without close() is freed by reference counting, not
   by a cyclic GC pass: its point readers hold no reference back to it.
 - The short-query meta columns mapped from the doc store mark a null
-  tiny_text with a validity mask: a null never equals a query.
+  tiny_text with a validity mask: a null never equals a query. Their
+  '<U3' values compare with their lengths, so a trailing NUL is not
+  ignored: the fast paths answer as the kernel's Python == does.
 """
 
 from __future__ import annotations
@@ -14,10 +16,10 @@ import gc
 import weakref
 
 import numpy as np
-import pyarrow.dataset as ds
 import pytest
 
 from infidex_spark.kernel.bm25 import compute_idf, compute_idf_array
+from infidex_spark.kernel.engine import KernelIndex
 from infidex_spark.query.executor import IndexReader, MultiReader, QueryExecutor
 from infidex_spark.streaming.incremental import _segment_dirs
 
@@ -96,19 +98,23 @@ def tiny_index(spark, tmp_path_factory):
 
 
 def test_null_tiny_text_never_equals_a_query(tiny_index, built):
-    """tiny_valid is doc_meta's tiny_text validity; a doc whose
-    tiny_text is null matches no 1-3 char query, "\\x00" included (the
-    zeroed bytes of a null slot read as '' in '<U3', which numpy would
-    call equal to "\\x00"), on the meta columns and on the 1-char
-    scoring path."""
-    for index in (tiny_index, built):
+    """tiny_valid is the validity of the kernel's tiny_text
+    (KernelIndex.doc_meta); a doc whose tiny_text is null matches no
+    1-3 char query, "\\x00" included (the zeroed bytes of a null slot
+    read as '' in '<U3', which numpy would call equal to "\\x00"), on
+    the meta columns and on the 1-char scoring path."""
+    from tests.conftest import REFERENCE_DOCS
+
+    for index, docs in ((tiny_index, TINY_DOCS), (built, REFERENCE_DOCS)):
         r = IndexReader(index)
         meta = r.sq_meta()
-        dm = ds.dataset(f"{index}/doc_meta").to_table(columns=["doc_id", "tiny_text"])
-        tiny = dict(zip(dm["doc_id"].to_pylist(), dm["tiny_text"].to_pylist()))
+        kidx = KernelIndex()
+        kidx.index_documents(docs)
+        # internal doc ids are the docs' positions in both indexes
+        tiny = {i: t for i, (_, t) in enumerate(kidx.doc_meta)}
         assert meta["tiny_valid"].tolist() == [tiny[i] is not None for i in meta["ids"].tolist()]
         for q in ("\x00", "a", "ab", "abc", "t", "the"):
-            hit = (meta["tiny"] == q) & meta["tiny_valid"]
+            hit = (meta["tiny"] == q) & meta["tiny_valid"] & (meta["tiny_len"] == len(q))
             assert meta["ids"][hit].tolist() == [i for i, t in sorted(tiny.items()) if t == q], q
         rows = r.short_query_rows("a")
         assert rows["tiny_valid"].tolist() == [tiny[i] is not None for i in rows["doc_id"].tolist()]
@@ -116,3 +122,29 @@ def test_null_tiny_text_never_equals_a_query(tiny_index, built):
     # the title == query bit fires for key 1 ("a") only
     top = QueryExecutor(IndexReader(tiny_index))._short_query("a", 10)
     assert [d for d, s in top if int(s) & (8 << 8)] == [1]
+
+
+NUL_DOCS = [(1, "a\x00"), (2, "a"), (3, "ab\x00 c"), (4, "ab c"), (5, "a\x00b")]
+
+
+def test_trailing_nul_titles_answer_as_the_kernel(spark, tmp_path):
+    """A title "a\\x00" does not equal the query "a", nor "a" the query
+    "a\\x00" (numpy's '<U3' == says both do): the 1-char path
+    (_short_query) and the _short_precedence path give the kernel's
+    answers, scores included."""
+    from infidex_spark.build.indexer import build_index
+
+    out = str(tmp_path / "idx")
+    df = spark.createDataFrame(
+        [(i, k, t) for i, (k, t) in enumerate(NUL_DOCS)], "doc_id long, doc_key long, text string"
+    )
+    build_index(spark, df, out, n_buckets=2)
+    kidx = KernelIndex()
+    kidx.index_documents(NUL_DOCS)
+    ex = QueryExecutor(IndexReader(out))
+    for q in ("a", "a\x00", "ab", "ab\x00"):
+        got, want = ex.search(q, 10), kidx.search(q, 10)
+        assert [d for d, _ in got] == [d for d, _ in want], (q, got, want)
+        assert [s for _, s in got] == pytest.approx([s for _, s in want], rel=1e-6), (q, got, want)
+    top = ex._short_query("a", 10)
+    assert [d for d, s in top if int(s) & (8 << 8)] == [2]

@@ -109,18 +109,21 @@ def test_rebuild_removes_every_earlier_table(spark, sq_index, tmp_path):
     """A non-resume build into a directory that holds an earlier index
     removes every table that build wrote: a default (no short-query
     precompute) rebuild over a short_precompute index must not serve
-    the old corpus' stored answers or read its pattern tables."""
+    the old corpus' stored answers or read its pattern tables, and a
+    rebuild over a format-5 index removes its doc_meta."""
     import shutil
 
     from infidex_spark.webtext import generate_webtext, with_doc_ids
 
     out = str(tmp_path / "idx")
     shutil.copytree(sq_index, out)
+    # format 5 also wrote a doc_meta table
+    shutil.copytree(os.path.join(out, "doc_stats"), os.path.join(out, "doc_meta"))
     docs = with_doc_ids(generate_webtext(spark, 300, seed=5)).selectExpr(
         "doc_id", "doc_id + 1000000 as doc_key", "text"
     )
     build_index(spark, docs, out, n_buckets=8)
-    for table in ("sq_topk", "char_terms", "pattern_scores", "pattern_scores.arrow"):
+    for table in ("sq_topk", "char_terms", "pattern_scores", "pattern_scores.arrow", "doc_meta"):
         assert not os.path.exists(os.path.join(out, table)), table
     r = IndexReader(out)
     assert r.sq_topk("th") is None
@@ -275,30 +278,23 @@ def test_tombstones_fall_back_when_row_exhausted(sq_index):
     assert got == QueryExecutor(live_reader).search(q, 10)
 
 
-def test_slim_doc_meta_title_rows(sq_index):
-    """Slim indexes (doc_meta without text/words_text) must serve
-    doc_title_rows from the doc_store with an exactly re-derived
-    words_text, and the slow precedence path must equal the fast one."""
-    import numpy as np
-    import pyarrow.parquet as pq
+def test_title_rows_words_text_equals_word_tokens(sq_index):
+    """doc_title_rows serves every doc's text from the doc store with a
+    words_text re-derived from it that is exactly the kernel's
+    word_tokens, space-joined between sentinel spaces; and the
+    precedence path over those rows equals the sq_meta fast path."""
+    from infidex_spark.kernel.tokenize import word_tokens
 
     r = IndexReader(sq_index)
-    names = pq.ParquetDataset(os.path.join(sq_index, "doc_meta")).schema.names
-    assert "text" not in names and "words_text" not in names, "not slim"
-    texts, wtexts = r.doc_title_rows([0, 1, 2, 3, 4])
-    assert len(texts) == 5 and wtexts is not None
+    ids = list(range(r.total_docs))
+    texts, wtexts = r.doc_title_rows(ids)
+    assert sorted(texts) == sorted(wtexts) == ids
     for i, t in texts.items():
-        w = wtexts[i]
-        assert w.startswith(" ") and w.endswith(" ")
-        # every word of the text appears wrapped in sentinels
-        from infidex_spark.kernel.tokenize import word_tokens
-
-        for tok in word_tokens(t, min_size=1):
-            assert f" {tok} " in w, (tok, w)
+        toks = word_tokens(t, min_size=1)
+        assert wtexts[i] == (f" {' '.join(toks)} " if toks else " "), (t, wtexts[i])
     # slow-path precedence (uses doc_title_rows) == fast-path (sq_meta)
-    ex_fast = QueryExecutor(IndexReader(sq_index))
     slow_r = IndexReader(sq_index)
-    slow_r._sq_meta = {}  # force the doc_title_rows point-fetch path
+    slow_r._sq_meta = {}  # force the doc_title_rows path
     slow_r._sq_topk_map = {}  # and the live short-query path
     ex_slow = QueryExecutor(slow_r)
     fast_r = IndexReader(sq_index)

@@ -5,8 +5,11 @@ degrade for: cutting one file of a point-read table in half must make
 the open, prewarm_postings_meta() or the first lookup that reads that
 file raise, with a message naming the table. So must a key dictionary
 (build/keydict.py) that is missing, cut, or disagrees with its table's
-files. The query package must also hold no catch-all handler that could
-turn such a failure into a silent scan or a half-loaded answer map."""
+files, and so must a missing or cut doc store (doc_store.arrow), which
+every reader maps at open. The query package must also hold no
+catch-all handler that could turn such a failure into a silent scan or
+a half-loaded answer map, and its dataset filter scans are counted: no
+per-doc lookup is a scan."""
 
 from __future__ import annotations
 
@@ -14,6 +17,7 @@ import ast
 import glob
 import json
 import os
+import re
 import shutil
 
 import numpy as np
@@ -38,7 +42,7 @@ RAISES_BY = {
     "champions": "lookup",
     "term_dict": "lookup",
     "sq_topk": "lookup",
-    "doc_stats": "open",
+    "doc_store.arrow": "open",
 }
 # lookups of a point-read table probe a key of the file that was cut
 KEY_COLS = {
@@ -58,7 +62,7 @@ LOOKUPS = {
     "champions": lambda r, k: r.champion_list(k),
     "term_dict": lambda r, k: r.sorted_terms(),
     "sq_topk": lambda r, k: r.sq_topk("th"),
-    "doc_stats": lambda r, k: r.doc_lengths(np.arange(3)),
+    "doc_store.arrow": lambda r, k: r.doc_lengths(np.arange(3)),
 }
 # the exact-mode point-read tables, each with a key dictionary
 KEY_DICT_TABLES = ("postings", "prefixes", "wm_words", "variants", "champions")
@@ -94,9 +98,13 @@ def precompute_index(spark, tmp_path_factory):
 def test_truncated_file_raises_naming_its_table(precompute_index, tmp_path, table):
     idx = str(tmp_path / "idx")
     shutil.copytree(precompute_index, idx)
+    path = os.path.join(idx, table)
+    if os.path.isfile(path):  # a one-file table
+        _assert_cut_raises_at_open(idx, path)
+        return
     # the last data file: dataset discovery infers the schema from the
     # first one, so the cut is met by the table's own read path
-    files = sorted(glob.glob(os.path.join(idx, table, "**", "*.parquet"), recursive=True))
+    files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
     assert len(files) >= 2, table
     key = None
     if table in KEY_COLS:
@@ -117,6 +125,33 @@ def test_truncated_file_raises_naming_its_table(precompute_index, tmp_path, tabl
 def _cut(path: str) -> None:
     with open(path, "r+b") as f:
         f.truncate(os.path.getsize(path) // 2)
+
+
+def _assert_cut_raises_at_open(idx: str, path: str) -> None:
+    """Opening a reader on idx raises ValueError naming path's table,
+    with path cut in half and with path removed."""
+    table = re.escape(os.sep + os.path.basename(path))
+    _cut(path)
+    with pytest.raises(ValueError, match=table):
+        IndexReader(idx)
+    os.remove(path)
+    with pytest.raises(ValueError, match=table):
+        IndexReader(idx)
+
+
+@pytest.mark.parametrize("aux", [True, False])
+def test_cut_or_missing_doc_store_raises_at_open(spark, tmp_path, aux):
+    """The doc store is every build's per-doc source, aux=False
+    included: cut or missing, a reader open raises naming it."""
+    from infidex_spark.build.indexer import build_index
+
+    idx = str(tmp_path / "idx")
+    docs = spark.createDataFrame([(0, 7, "quick fox"), (1, 8, "lazy dog")], "doc_id long, doc_key long, text string")
+    build_index(spark, docs, idx, n_buckets=2, aux=aux)
+    r = IndexReader(idx)
+    assert r.doc_lengths(np.arange(2))[1].tolist() == [7, 8]
+    assert r.has_short_query_tables is aux
+    _assert_cut_raises_at_open(idx, os.path.join(idx, "doc_store.arrow"))
 
 
 def _halve_rows(path: str) -> None:
@@ -220,10 +255,10 @@ def test_prewarm_opens_no_parquet_of_exact_tables(precompute_index, monkeypatch)
 
 
 def test_open_discovers_only_required_tables(precompute_index, monkeypatch):
-    """Opening a reader discovers doc_stats and stop_terms only: the
-    point-read tables list their files on prewarm or first lookup
-    (without dataset discovery), and the scanned optional tables on
-    first use."""
+    """Opening a reader discovers stop_terms only: the per-doc columns
+    are the mapped doc store, the point-read tables list their files on
+    prewarm or first lookup (without dataset discovery), and the scanned
+    optional tables on first use."""
     import pyarrow.dataset as ds
 
     seen: list[str] = []
@@ -235,11 +270,11 @@ def test_open_discovers_only_required_tables(precompute_index, monkeypatch):
 
     monkeypatch.setattr(ds, "dataset", spy)
     r = IndexReader(precompute_index)
-    assert set(seen) <= {"doc_stats", "stop_terms"}, seen
+    assert set(seen) <= {"stop_terms"}, seen
     # prewarm lists the point-read tables' files itself and maps their
     # key dictionaries: no dataset discovery
     r.prewarm_postings_meta()
-    assert set(seen) <= {"doc_stats", "stop_terms"}, seen
+    assert set(seen) <= {"stop_terms"}, seen
 
 
 def test_query_package_has_no_catch_all_handler():
@@ -261,3 +296,28 @@ def test_query_package_has_no_catch_all_handler():
             ):
                 found.append(f"{os.path.basename(path)}:{node.lineno}")
     assert not found, found
+
+
+# dataset filter scans left in query/executor.py; the count only falls
+FILTER_SCANS = 7
+
+
+def test_executor_filter_scans_are_counted():
+    """`to_table(... filter=...)` and `scanner(... filter=...)` calls in
+    query/executor.py: FILTER_SCANS of them, and none reads a per-doc
+    table (doc_stats, or format 5's doc_meta): per-doc columns come
+    from the mapped doc store."""
+    import infidex_spark.query.executor as executor
+
+    with open(executor.__file__) as f:
+        src = f.read()
+    scans = [
+        ast.get_source_segment(src, node)
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("to_table", "scanner")
+        and any(kw.arg == "filter" for kw in node.keywords)
+    ]
+    assert len(scans) == FILTER_SCANS, scans
+    assert not [s for s in scans if "doc_stats" in s or "doc_meta" in s], scans
